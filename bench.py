@@ -572,7 +572,7 @@ def main() -> int:
     # measurement and restored after (they are artifact-scoped).
     saved_fp = {
         k_: g_art.params.pop(k_, None)
-        for k_ in ("_shard_bc", "_shard_bc_key", "_shard_pids", "_shm_shards")
+        for k_ in ("_shard_bc", "_shm_shards")
     }
     res_nofp, t_nofp = timed_search(
         GraphANNSearcher(

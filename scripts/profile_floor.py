@@ -80,8 +80,7 @@ def main() -> int:
     # C. driver-side kernel time for ONE 2048-query task body
     searcher = IVFSearcher(nprobe=24).attach(art)
     materialize(searcher.search(big, 20, qid_col="qid", vec_col="vec"))
-    bc = art.params.get("_serving_bc")
-    idx = bc.value
+    idx = art.params["_serving_bc"].bc.value
     qpdf = q16.limit(2048).toPandas()
     qids = qpdf["qid"].to_numpy(np.int64)
     qmat = np.ascontiguousarray(np.vstack(qpdf["vec"].to_numpy()), dtype=np.float32)

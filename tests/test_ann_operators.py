@@ -446,7 +446,6 @@ def test_ivf_broadcast_path_equals_partitioned_path(dfs):
             .select("qid", "id", "rank")
             .collect()
         )
-        art.params.pop("_serving_bc", None)
         shm = (
             IVFSearcher(nprobe=4, broadcast_threshold=0)
             .attach(art)
@@ -455,7 +454,6 @@ def test_ivf_broadcast_path_equals_partitioned_path(dfs):
             .collect()
         )
         assert art.params.get("_packed_shm") is not None  # shm plan ran
-        art.params.pop("_serving_bc", None)
         slow = (
             IVFSearcher(
                 nprobe=4, broadcast_threshold=0, node_local_cache=False
@@ -484,7 +482,6 @@ def test_pq_broadcast_path_equals_scan_path(dfs):
         .select("qid", "id", "rank")
         .collect()
     )
-    art.params.pop("_serving_bc", None)
     slow = (
         PQADCSearcher(broadcast_threshold=0)
         .attach(art)
@@ -621,7 +618,6 @@ def test_cluster_pruned_broadcast_path_equals_partitioned_path(dfs):
         .select("qid", "id", "rank")
         .collect()
     )
-    art.params.pop("_serving_bc", None)
     shm = (
         ClusterPrunedExactSearcher(nprobe=2, broadcast_threshold=0)
         .attach(art)
@@ -630,7 +626,6 @@ def test_cluster_pruned_broadcast_path_equals_partitioned_path(dfs):
         .collect()
     )
     assert art.params.get("_packed_shm") is not None  # shm plan ran
-    art.params.pop("_serving_bc", None)
     slow = (
         ClusterPrunedExactSearcher(
             nprobe=2, broadcast_threshold=0, node_local_cache=False
@@ -658,7 +653,6 @@ def test_cluster_pruned_broadcast_path_equals_partitioned_path(dfs):
     saved = cp_mod.CP_FUSE_EXTRA_FLOPS
     cp_mod.CP_FUSE_EXTRA_FLOPS = float("-inf")
     try:
-        art.params.pop("_serving_bc", None)
         two_phase = (
             ClusterPrunedExactSearcher(
                 nprobe=2, broadcast_threshold=0, node_local_cache=False
@@ -704,7 +698,6 @@ def test_lsh_broadcast_path_equals_pipeline_path(dfs):
             .search(query_df, K)
             .collect()
         )
-        art.params.pop("_serving_bc", None)
         slow = (
             LSHSearcher(broadcast_threshold=0, **search_kw)
             .attach(art)
@@ -894,25 +887,95 @@ def test_persisted_packed_partition_pruning(dfs, tmp_path):
     assert int(metrics.apply("numFiles").value()) == len(probed), plan_str
 
 
-def test_packed_shm_republish_after_sweep(dfs, tmp_path):
-    """If the TTL sweep collects a published packed-blob dir while the
-    artifact is idle, the next search must republish and return
-    identical results (the memo may not go stale-poisoned)."""
-    import shutil
+SHM_FAMILIES = ("ivf", "cluster_pruned", "graph")
 
+
+def _shm_family(name, base_df):
+    """(artifact, searcher factory taking constructor kwargs, node-local
+    memo param) for each family with a /dev/shm plan."""
+    from vectordb_retrieval_spark.operators.cluster_pruned import (
+        ClusterPrunedExactIndexer,
+        ClusterPrunedExactSearcher,
+    )
+    from vectordb_retrieval_spark.operators.graph_ann import (
+        GraphANNIndexer,
+        GraphANNSearcher,
+    )
     from vectordb_retrieval_spark.operators.ivf import IVFIndexer, IVFSearcher
 
+    if name == "ivf":
+        art = IVFIndexer(nlist=8, seed=4).build(base_df)
+        return art, lambda **kw: IVFSearcher(nprobe=3, **kw), "_packed_shm"
+    if name == "cluster_pruned":
+        art = ClusterPrunedExactIndexer(nlist=8, seed=4, max_iter=5).build(base_df)
+        return (
+            art,
+            lambda **kw: ClusterPrunedExactSearcher(nprobe=2, **kw),
+            "_packed_shm",
+        )
+    art = GraphANNIndexer(m=6, num_partitions=4, seed=5).build(base_df)
+    return art, lambda **kw: GraphANNSearcher(ef_search=24, **kw), "_shm_shards"
+
+
+def _rows(res):
+    return sorted(map(tuple, res.select("qid", "id", "rank").collect()))
+
+
+@pytest.mark.parametrize("family", SHM_FAMILIES)
+def test_shm_republish_after_sweep(dfs, family):
+    """If the TTL sweep collects a published node-local dir while the
+    artifact is idle, the next search must republish and return
+    identical results (neither the artifact memo nor the plan memo may
+    go stale-poisoned)."""
+    import shutil
+
     base_df, query_df = dfs
-    art = IVFIndexer(nlist=8, seed=4).build(base_df)
-    searcher = IVFSearcher(nprobe=3, broadcast_threshold=0).attach(art)
-    first = searcher.search(query_df, K).select("qid", "id", "rank").collect()
-    shm = art.params.get("_packed_shm")
+    art, make, param = _shm_family(family, base_df)
+    searcher = make(broadcast_threshold=0).attach(art)
+    first = _rows(searcher.search(query_df, K))
+    shm = art.params.get(param)
     assert shm is not None
     shutil.rmtree(shm[0], ignore_errors=True)  # simulate the sweep
-    second = searcher.search(query_df, K).select("qid", "id", "rank").collect()
-    shm2 = art.params.get("_packed_shm")
+    second = _rows(searcher.search(query_df, K))
+    shm2 = art.params.get(param)
     assert shm2 is not None and shm2[0] != shm[0]  # republished fresh
-    assert sorted(map(tuple, first)) == sorted(map(tuple, second))
+    assert first == second
+
+
+@pytest.mark.parametrize("family", SHM_FAMILIES)
+def test_shm_root_kept_alive_on_plan_memo_hit(dfs, family):
+    """A memoized plan reads the node-local root it was built on, so a
+    memo hit must refresh the root's mtime — otherwise the TTL sweep a
+    later publish runs could reap blobs the plan still reads."""
+    import os
+    import time
+
+    base_df, query_df = dfs
+    art, make, param = _shm_family(family, base_df)
+    searcher = make(broadcast_threshold=0).attach(art)
+    first = _rows(searcher.search(query_df, K))
+    searcher.search(query_df, K)  # the plan is memoized by now
+    root = art.params[param][0]
+    old = time.time() - 7200
+    os.utime(root, (old, old))
+    again = searcher.search(query_df, K)  # same frame: plan-memo hit
+    assert os.path.getmtime(root) > old + 3600
+    assert art.params[param][0] == root
+    assert _rows(again) == first
+
+
+@pytest.mark.parametrize("family", SHM_FAMILIES)
+def test_broadcast_decision_follows_each_searchers_threshold(dfs, family):
+    """The packed-broadcast memo is per artifact, but the broadcast-or-
+    not decision is per searcher: a threshold-0 searcher after a
+    default one must still run the over-threshold (node-local) plan."""
+    base_df, query_df = dfs
+    art, make, param = _shm_family(family, base_df)
+    fast = _rows(make().attach(art).search(query_df, K))
+    assert art.params.get(param) is None  # default searcher broadcast
+    shm = _rows(make(broadcast_threshold=0).attach(art).search(query_df, K))
+    assert art.params.get(param) is not None  # shm plan ran
+    assert fast == shm
 
 
 def test_compact_partitions_selective_rewrite(spark, tmp_path):

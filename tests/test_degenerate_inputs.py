@@ -4,6 +4,8 @@ serving deployment will see all of these."""
 
 from __future__ import annotations
 
+import pytest
+
 from vectordb_retrieval_spark.operators.exact import exact_knn, exact_range_search
 from vectordb_retrieval_spark.operators.temporal import asof_join, sessionize
 
@@ -93,6 +95,72 @@ def test_all_searchers_handle_empty_query_batch(spark):
     ]
     for s in searchers:
         assert s.search(q0, 5).count() == 0, type(s).__name__
+
+
+def _family(name):
+    """(indexer, searcher) factories for one ANN family."""
+    from vectordb_retrieval_spark.operators.cluster_pruned import (
+        ClusterPrunedExactIndexer,
+        ClusterPrunedExactSearcher,
+    )
+    from vectordb_retrieval_spark.operators.graph_ann import (
+        GraphANNIndexer,
+        GraphANNSearcher,
+    )
+    from vectordb_retrieval_spark.operators.ivf import IVFIndexer, IVFSearcher
+    from vectordb_retrieval_spark.operators.lsh import LSHIndexer, LSHSearcher
+    from vectordb_retrieval_spark.operators.pq import PQIndexer, PQADCSearcher
+
+    return {
+        "lsh": (
+            lambda: LSHIndexer(dimension=8, num_tables=2, hash_size=6, seed=1),
+            lambda: LSHSearcher(max_candidates=50),
+        ),
+        "pq": (lambda: PQIndexer(m=4, ksub=16, seed=1), PQADCSearcher),
+        "cluster_pruned": (
+            lambda: ClusterPrunedExactIndexer(nlist=8, seed=1),
+            ClusterPrunedExactSearcher,
+        ),
+        "graph": (
+            lambda: GraphANNIndexer(num_partitions=2, m=6, seed=1),
+            lambda: GraphANNSearcher(ef_search=10),
+        ),
+        "ivf": (lambda: IVFIndexer(nlist=8, seed=1), lambda: IVFSearcher(nprobe=3)),
+    }[name]
+
+
+@pytest.mark.parametrize(
+    "family", ["lsh", "pq", "cluster_pruned", "graph", "ivf"]
+)
+def test_searcher_attach_contract(spark, family):
+    """Every family: searching before ``attach`` raises the one
+    not-attached error, and re-attaching to another artifact never
+    serves a plan memoized against the old one."""
+    import numpy as np
+
+    make_indexer, make_searcher = _family(family)
+    rng = np.random.RandomState(0)
+    rows = [[float(x) for x in rng.randn(8)] for _ in range(300)]
+    base_a = spark.createDataFrame(
+        list(enumerate(rows)), "id long, vec array<float>"
+    )
+    base_b = spark.createDataFrame(
+        [(10_000 + i, v) for i, v in enumerate(rows)], "id long, vec array<float>"
+    )
+    q = spark.createDataFrame(
+        [(i, [float(x) for x in rng.randn(8)]) for i in range(6)],
+        "qid long, vec array<float>",
+    )
+    searcher = make_searcher()
+    with pytest.raises(RuntimeError, match="searcher not attached"):
+        searcher.search(q, 5)
+    searcher.attach(make_indexer().build(base_a))
+    ids_a = {r.id for r in searcher.search(q, 5).collect()}
+    assert ids_a and max(ids_a) < 10_000
+    # same query frame: a plan memoized against artifact a must miss
+    searcher.attach(make_indexer().build(base_b))
+    ids_b = {r.id for r in searcher.search(q, 5).collect()}
+    assert ids_b and min(ids_b) >= 10_000
 
 
 def test_pipeline_ops_empty_corpus(spark):

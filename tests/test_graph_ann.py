@@ -262,10 +262,6 @@ def test_graph_ann_partitioned_path_equals_broadcast(spark):
         long_links=4,
     ).build(base, id_col="id", vec_col="vec")
 
-    def reset():
-        for key in ("_shard_bc", "_shard_pids", "_shm_shards"):
-            art.params.pop(key, None)
-
     for probe in (None, 2):
         rows_bc = {
             tuple(r)
@@ -274,7 +270,6 @@ def test_graph_ann_partitioned_path_equals_broadcast(spark):
             .search(queries, 5, qid_col="qid", vec_col="vec")
             .collect()
         }
-        reset()
         shm_searcher = GraphANNSearcher(
             ef_search=32, probe_partitions=probe, broadcast_threshold=0
         ).attach(art)
@@ -285,7 +280,6 @@ def test_graph_ann_partitioned_path_equals_broadcast(spark):
             ).collect()
         }
         assert art.params.get("_shm_shards") is not None  # shm plan ran
-        reset()
         rows_part = {
             tuple(r)
             for r in GraphANNSearcher(
@@ -299,33 +293,6 @@ def test_graph_ann_partitioned_path_equals_broadcast(spark):
             .collect()
         }
         assert rows_bc == rows_shm == rows_part
-        # reset the memoized over-threshold decision for the next loop
-        reset()
-
-
-def test_graph_shm_republish_after_sweep(spark):
-    """Swept shard cache ⇒ next search republishes, identical results."""
-    import shutil
-
-    import numpy as np
-
-    from tests.conftest import make_vector_df
-
-    rng = np.random.RandomState(5)
-    base = make_vector_df(spark, rng.randn(1200, 12).astype(np.float32))
-    queries = make_vector_df(
-        spark, rng.randn(32, 12).astype(np.float32), id_name="qid"
-    )
-    art = GraphANNIndexer(m=6, num_partitions=4, seed=5).build(base)
-    searcher = GraphANNSearcher(ef_search=24, broadcast_threshold=0).attach(art)
-    first = searcher.search(queries, 5).select("qid", "id", "rank").collect()
-    shm = art.params.get("_shm_shards")
-    assert shm is not None
-    shutil.rmtree(shm[0], ignore_errors=True)
-    second = searcher.search(queries, 5).select("qid", "id", "rank").collect()
-    shm2 = art.params.get("_shm_shards")
-    assert shm2 is not None and shm2[0] != shm[0]
-    assert sorted(map(tuple, first)) == sorted(map(tuple, second))
 
 
 def test_graph_append_hash_equals_full_rebuild(spark):

@@ -99,3 +99,22 @@ def test_benchmark_svg_written(spark, tmp_path):
     assert svg.startswith("<svg") and "circle" in svg and "d/a" in svg
     empty = qps_recall_svg({})
     assert empty.startswith("<svg")
+
+
+def test_parquet_schema_memo_sees_rewrite_at_same_path(spark, tmp_path):
+    """The catalogue's schema memo is keyed on the path's stat stamp: a
+    table rewritten at the same path with a new schema is inferred
+    again instead of being read through the stale schema."""
+    from vectordb_retrieval_spark.driver_queries.common import (
+        read_parquet_cached_schema,
+    )
+
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1, "a")], "x long, y string").write.parquet(path)
+    assert read_parquet_cached_schema(spark, path).columns == ["x", "y"]
+    spark.createDataFrame([(2.5, 3)], "z double, w int").write.mode(
+        "overwrite"
+    ).parquet(path)
+    df = read_parquet_cached_schema(spark, path)
+    assert df.columns == ["z", "w"]
+    assert [tuple(r) for r in df.collect()] == [(2.5, 3)]

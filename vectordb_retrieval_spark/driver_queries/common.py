@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -20,17 +22,27 @@ _SCAN_NPARTS: dict = {}
 # runs a 1-task footer-inference JOB per call, and the catalogue pays it
 # once per table reference per query invocation (the r14 job breakdown
 # showed it as the first 1-task job of every headline query).  The
-# schema is a pure function of the committed file, so infer once per
-# process and hand it to the reader explicitly afterwards — schema
+# schema is a pure function of the file, so infer once per (path,
+# mtime, size) and hand it to the reader explicitly afterwards — schema
 # metadata only, never data (every invocation still scans the parquet).
+# A table rewritten at the same path changes its stat stamp and is
+# inferred again; a path os.stat cannot see is inferred on every read.
 _SCHEMA_MEMO: dict = {}
 
 
 def read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
-    s = _SCHEMA_MEMO.get(path)
-    if s is None:
+    try:
+        st = os.stat(path)
+        stamp = (st.st_mtime_ns, st.st_size)
+    except OSError:
+        stamp = None
+    hit = _SCHEMA_MEMO.get(path)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        s = hit[1]
+    else:
         s = spark.read.parquet(path).schema
-        _SCHEMA_MEMO[path] = s
+        if stamp is not None:
+            _SCHEMA_MEMO[path] = (stamp, s)
     return spark.read.schema(s).parquet(path)
 
 

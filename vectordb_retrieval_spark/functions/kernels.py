@@ -9,6 +9,7 @@ row-wise computation per Arrow batch, JVM→Arrow→NumPy→Arrow.
 
 from __future__ import annotations
 
+import os
 import weakref
 from typing import Iterator
 
@@ -17,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectordb_retrieval_spark import transport
 from vectordb_retrieval_spark.functions.distance import normalize_rows
 
 
@@ -318,7 +320,7 @@ def topk_cols_tiebreak(
 
 
 class SearchPlanMemo:
-    """WeakKey search-plan memo (the IVFSearcher pattern, shared):
+    """WeakKey search-plan memo (the searcher skeleton's and exact_knn's):
     repeated searches of the same query frame rebuild an identical lazy
     plan — ~60 ms of driver-side pyspark object construction per call
     at serving rates, plus any per-plan broadcasts.  Results are
@@ -411,23 +413,14 @@ def rowwise_distance(
     raise ValueError(f"unknown metric {metric!r}")
 
 
-# read-only mmaps of published packed blobs, memoized per process (the
-# mmap object must outlive every frombuffer view taken on it)
-_BLOB_MMAPS: dict = {}
-# decoded-scan-form cache (see _decoded_shm): per-root disable flag set
-# when /dev/shm can't hold the decoded index — fall back to per-call
-# decode rather than fail the search
-_DEC_DISABLED: set = set()
-
-
 def _decoded_shm(root: str, cid: int, sub: int, raw, cdc, metric: str):
-    """The float64 scan form of one packed blob, shm-cached: the
-    partitioned kernel used to re-decode codes → f64 and recompute row
-    norms on EVERY search (at 150k×384-d that is ~0.5 GB of decode +
-    norm traffic per search; 3 GB at 1M).  The decode is deterministic,
-    so the first task to need a (cluster, sub, metric) publishes its
-    scan form to /dev/shm (tmp + atomic rename) and everyone mmaps one
-    shared copy.  Returns (mat64, aux):
+    """The float64 scan form of one packed blob, shared node-locally
+    (``transport.share``): the partitioned kernel used to re-decode
+    codes → f64 and recompute row norms on EVERY search (at 150k×384-d
+    that is ~0.5 GB of decode + norm traffic per search; 3 GB at 1M).
+    The decode is deterministic, so the first task to need a (cluster,
+    sub, metric) publishes its scan form next to the blob and everyone
+    maps one shared copy.  Returns (mat64, aux):
 
     - l2:     mat64 = decoded f64 rows, aux = their squared norms —
               exactly the ``(b*b).sum(axis=1)`` pairwise_distances
@@ -435,63 +428,35 @@ def _decoded_shm(root: str, cid: int, sub: int, raw, cdc, metric: str):
     - cosine: mat64 = normalize_rows(decoded), aux = None
     - ip:     mat64 = decoded f64 rows, aux = None
 
-    Returns None when caching is disabled for this root (publish
-    failed: tmpfs full) — caller decodes per call."""
-    import mmap as _mmap
-    import os
-    import tempfile
-
-    from vectordb_retrieval_spark.functions.distance import normalize_rows
-
-    if root in _DEC_DISABLED:
-        return None
-    path = os.path.join(root, f"{cid}-{sub}.{metric}.dec64")
-    mm = _BLOB_MMAPS.get(path)
-    if mm is None:
-        if not os.path.exists(path):
-            b64 = (
-                np.asarray(raw.astype(np.float32), dtype=np.float64)
-                if cdc is None
-                else np.asarray(cdc.decode(raw), dtype=np.float64)
-            )
-            if metric == "cosine":
-                payload = np.ascontiguousarray(normalize_rows(b64)).tobytes()
-            elif metric == "l2":
-                payload = (
-                    np.ascontiguousarray(b64).tobytes()
-                    + (b64 * b64).sum(axis=1).tobytes()
-                )
-            else:
-                payload = np.ascontiguousarray(b64).tobytes()
-            try:
-                fd, tmp = tempfile.mkstemp(dir=root, prefix=".dec-")
-                with os.fdopen(fd, "wb") as fh:
-                    fh.write(payload)
-                os.replace(tmp, path)
-            except OSError:
-                _DEC_DISABLED.add(root)
-                return None
-        try:
-            with open(path, "rb") as fh:
-                mm = _mmap.mmap(fh.fileno(), 0, prot=_mmap.PROT_READ)
-        except OSError:
-            _DEC_DISABLED.add(root)
-            return None
-        if len(_BLOB_MMAPS) >= 65536:
-            _BLOB_MMAPS.clear()
-        _BLOB_MMAPS[path] = mm
-    # decoded width comes from the PUBLISHED blob, not raw.shape[1]:
-    # width-changing codecs (PCA reduced coordinates, PQ codes) decode
-    # to the full dimension, so the code width would mis-reshape the
-    # cached float64 payload
+    Returns None when the store cannot hold it (publish failed: tmpfs
+    full) — caller decodes per call."""
     n = raw.shape[0]
     if n == 0:
         # pack_assignment/pack_clusters never emit empty clusters, but
         # this function guards its own input: a zero-row blob must not
         # reach the width division below
         return None
-    total = len(mm) // 8
-    width = total // n - (1 if metric == "l2" else 0)
+
+    def build():
+        b64 = (
+            np.asarray(raw.astype(np.float32), dtype=np.float64)
+            if cdc is None
+            else np.asarray(cdc.decode(raw), dtype=np.float64)
+        )
+        if metric == "cosine":
+            return [normalize_rows(b64)]
+        if metric == "l2":
+            return [b64, (b64 * b64).sum(axis=1)]
+        return [b64]
+
+    mm = transport.share(root, f"{cid}-{sub}.{metric}.dec64", build)
+    if mm is None:
+        return None
+    # decoded width comes from the PUBLISHED blob, not raw.shape[1]:
+    # width-changing codecs (PCA reduced coordinates, PQ codes) decode
+    # to the full dimension, so the code width would mis-reshape the
+    # cached float64 payload
+    width = len(mm) // 8 // n - (1 if metric == "l2" else 0)
     mat64 = np.frombuffer(mm, dtype=np.float64, count=n * width).reshape(
         n, width
     )
@@ -502,21 +467,6 @@ def _decoded_shm(root: str, cid: int, sub: int, raw, cdc, metric: str):
     else:
         aux = None
     return mat64, aux
-
-
-def _mmap_blob(root: str, cid: int, sub: int):
-    import mmap as _mmap
-    import os
-
-    path = os.path.join(root, f"{cid}-{sub}.bin")
-    mm = _BLOB_MMAPS.get(path)
-    if mm is None:
-        if len(_BLOB_MMAPS) >= 65536:
-            _BLOB_MMAPS.clear()
-        with open(path, "rb") as fh:
-            mm = _mmap.mmap(fh.fileno(), 0, prot=_mmap.PROT_READ)
-        _BLOB_MMAPS[path] = mm
-    return mm
 
 
 def pack_assignment(
@@ -746,91 +696,39 @@ def packed_assignment_cached(art, table: str = "assignment") -> DataFrame:
 
 
 def packed_shm_cached(art, table: str = "assignment"):
-    """Node-local shared-memory form of the packed assignment (the same
-    serving architecture as graph_ann's shard cache): on a single-node
-    master, each (cluster_id, sub) blob is published ONCE to /dev/shm
-    (one distributed pass over the packed table; ids bytes + payload
-    bytes per file, tmp + atomic rename) and searches then scan a
-    blob-free METADATA table — per-search Arrow traffic drops from the
-    probed payload bytes to a few hundred metadata ints, and the page
-    cache holds one physical copy of the index per node.  The metadata
-    DataFrame is a narrow projection of the placed packed table, so it
-    inherits the load-balanced task placement.
+    """Node-local form of the packed assignment (``transport.published``
+    under ``_packed_shm``, the same serving architecture as graph_ann's
+    shard store): on a single-node master each (cluster_id, sub) blob is
+    published ONCE as ids bytes + payload bytes (one distributed pass
+    over the packed table), and searches then scan a blob-free METADATA
+    table — per-search Arrow traffic drops from the probed payload bytes
+    to a few hundred metadata ints, and the page cache holds one
+    physical copy of the index per node.  The metadata DataFrame is a
+    narrow projection of the placed packed table, so it inherits the
+    load-balanced task placement.
 
     Returns (shm_root, metadata DataFrame) or None when gated off
-    (multi-executor master, no /dev/shm, publish failure).  Memoized on
-    the artifact (runtime-only ``_`` param)."""
-    import os
-    import shutil
-    import tempfile
-    import time
-    import uuid
+    (multi-executor master, no /dev/shm, publish failure)."""
 
-    memo = art.params.get("_packed_shm", "unset")
-    if memo is None:
-        return None
-    if memo != "unset" and os.path.isdir(memo[0]):
-        try:
-            os.utime(memo[0])  # keep the TTL sweep at bay while in use
-        except OSError:
-            pass
-        return memo
-    packed = packed_assignment_cached(art, table)
-    spark = packed.sparkSession
-    if not (
-        spark.sparkContext.master.startswith("local")
-        and os.path.isdir("/dev/shm")
-    ):
-        art.params["_packed_shm"] = None
-        return None
-    shm_base = "/dev/shm/vr_spark_shm"
-    root = os.path.join(shm_base, f"packed-{uuid.uuid4().hex}")
-    try:
-        os.makedirs(shm_base, exist_ok=True)
-        now = time.time()
-        for entry in os.listdir(shm_base):
-            p = os.path.join(shm_base, entry)
-            try:
-                if now - os.path.getmtime(p) > 3600.0:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                continue
-
-        def pub(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            os.makedirs(root, exist_ok=True)
-            n_done = 0
-            for pdf in batches:
-                for cid, sub, ids, payload in zip(
-                    pdf["cluster_id"], pdf["sub"], pdf["ids"], pdf["payload"]
-                ):
-                    final = os.path.join(root, f"{int(cid)}-{int(sub)}.bin")
-                    if not os.path.exists(final):
-                        fd, tmp = tempfile.mkstemp(dir=root, prefix=".pub-")
-                        with os.fdopen(fd, "wb") as fh:
-                            fh.write(ids)
-                            fh.write(payload)
-                        os.replace(tmp, final)
-                    n_done += 1
-            yield pd.DataFrame({"n": [n_done]})
-
+    def fill(root: str) -> DataFrame:
+        packed = packed_assignment_cached(art, table)
         total_rows = packed.count()
-        published = sum(
-            r["n"]
-            for r in packed.select("cluster_id", "sub", "ids", "payload")
-            .mapInPandas(pub, schema="n long")
-            .collect()
+        keys = transport.publish(
+            packed.select(
+                F.format_string("%d-%d", "cluster_id", "sub").alias("key"),
+                "ids",
+                "payload",
+            ),
+            root,
         )
-        if published != total_rows:
-            raise OSError(f"published {published} of {total_rows} blobs")
+        if len(keys) != total_rows:
+            raise OSError(f"published {len(keys)} of {total_rows} blobs")
         meta = packed.select("cluster_id", "n", "width", "dt", "sub").cache()
         meta.count()
-        got = (root, meta)
-        art.params["_packed_shm"] = got
-        return got
-    except OSError:
-        shutil.rmtree(root, ignore_errors=True)
-        art.params["_packed_shm"] = None
-        return None
+        return meta
+
+    spark = art.tables[table].sparkSession
+    return transport.published(art, "_packed_shm", spark, "packed", fill)
 
 
 def cluster_scan_topk(
@@ -928,7 +826,11 @@ def cluster_scan_topk(
                     # node-local blob: two frombuffer views on a shared
                     # read-only mmap (see packed_shm_cached) — zero
                     # per-search blob bytes through Arrow
-                    mm = _mmap_blob(shm_root, int(cids[i]), int(subs[i]))
+                    mm = transport.mmap_file(
+                        os.path.join(
+                            shm_root, f"{int(cids[i])}-{int(subs[i])}.bin"
+                        )
+                    )
                     n_i = int(ns[i])
                     ids = np.frombuffer(mm, dtype=np.int64, count=n_i)
                     raw = np.frombuffer(

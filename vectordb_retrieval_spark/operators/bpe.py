@@ -67,30 +67,6 @@ def _initial_symbols(words: DataFrame) -> DataFrame:
     )
 
 
-def _apply_merge_kernel(a: str, b: str):
-    merged = a + b
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_syms = []
-            for syms in pdf["syms"]:
-                syms = list(syms)
-                res = []
-                i = 0
-                n = len(syms)
-                while i < n:
-                    if i + 1 < n and syms[i] == a and syms[i + 1] == b:
-                        res.append(merged)
-                        i += 2
-                    else:
-                        res.append(syms[i])
-                        i += 1
-                out_syms.append(res)
-            yield pd.DataFrame({"syms": out_syms, "count": pdf["count"]})
-
-    return kernel
-
-
 def _merge_word(syms: list[str], a: str, b: str) -> list[str]:
     res, i, n = [], 0, len(syms)
     merged = a + b

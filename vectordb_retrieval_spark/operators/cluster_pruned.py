@@ -22,8 +22,6 @@ counter (base_algorithm.py:91-96, covertree_v2_2.py:510-517).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -38,6 +36,8 @@ from vectordb_retrieval_spark.functions.kernels import (
     packed_shm_cached,
 )
 from vectordb_retrieval_spark.operators.ivf import IVFIndexer
+from vectordb_retrieval_spark.operators import serving
+from vectordb_retrieval_spark.operators.searcher import Searcher
 from vectordb_retrieval_spark.operators.topk import topk_per_query
 
 
@@ -52,9 +52,7 @@ from vectordb_retrieval_spark.operators.topk import topk_per_query
 # engine targets; at real corpus sizes the admitted work blows past
 # the budget and the two-phase pruning plan is chosen — the decision
 # scales with the data, not with local[32].
-CP_FUSE_EXTRA_FLOPS = float(
-    os.environ.get("SPARK_GRAFT_CP_FUSE_FLOPS", 1e10)
-)
+CP_FUSE_EXTRA_FLOPS = 1e10
 
 
 def _scan_tasks(n_queries: int) -> int | None:
@@ -119,7 +117,7 @@ class ClusterPrunedExactIndexer(IVFIndexer):
         return art
 
 
-class ClusterPrunedExactSearcher:
+class ClusterPrunedExactSearcher(Searcher):
     """Two-phase exact search with triangle-inequality cluster pruning.
 
     Only supports L2 (the bound is metric-specific; cosine reduces to L2
@@ -134,7 +132,12 @@ class ClusterPrunedExactSearcher:
     no driver round-trip.  Over the threshold, the partitioned-scan
     path runs phase 1, collects the (one row per query, bounded) T_q
     thresholds, and launches the pruned phase-2 scan — the 100 TB plan,
-    where the T_q collect is the only driver traffic."""
+    where the T_q collect is the only driver traffic.
+
+    Plan memo: the broadcast plan and the FUSED partitioned plan (no
+    eager action) are memoized per query frame; the TWO-PHASE
+    partitioned plan is not (its phase-1 T_q collect is an eager
+    per-search action)."""
 
     def __init__(
         self,
@@ -142,130 +145,112 @@ class ClusterPrunedExactSearcher:
         broadcast_threshold: int = 128 << 20,
         node_local_cache: bool = True,
     ):
+        super().__init__()
         self.nprobe = nprobe
         self.broadcast_threshold = broadcast_threshold
         # see IVFSearcher: /dev/shm blob transport on single-node
         # masters; False forces the blob-shipping partitioned plan
         self.node_local_cache = node_local_cache
-        self.artifact: IndexArtifact | None = None
-        self.ndis_accum = None  # LongAccumulator, set on first search
-        from vectordb_retrieval_spark.functions.kernels import (
-            SearchPlanMemo,
-        )
-
-        # per-frame plan reuse: the broadcast path and the FUSED
-        # partitioned plan (no eager action) are memoized; the TWO-PHASE
-        # partitioned plan is not (its phase-1 T_q collect is an eager
-        # per-search action).  A fused-plan memo hit under
-        # node_local_cache re-touches the /dev/shm root first (see
-        # ``search``) so the TTL sweep cannot reap blobs the memoized
-        # plan still references.
-        self._plans = SearchPlanMemo()
-
-    def attach(self, artifact: IndexArtifact) -> "ClusterPrunedExactSearcher":
-        self.artifact = artifact
-        return self
 
     def _search_broadcast(
         self, bc_index, query_df, k, qid_col, vec_col, accum
     ) -> DataFrame:
         """Both phases in one kernel over the broadcast packed index."""
         from vectordb_retrieval_spark.functions.distance import normalize_rows
-        from vectordb_retrieval_spark.operators.serving import topk_rows
+        from vectordb_retrieval_spark.operators.serving import (
+            query_driven_job,
+            topk_rows,
+        )
 
         art = self.artifact
         radii = np.asarray(art.params["radii"], dtype=np.float64)
         metric = art.params["metric"]
         nprobe = self.nprobe
-        from vectordb_retrieval_spark.operators.serving import (
-            query_driven_job,
-        )
 
         def batch_fn(qids: np.ndarray, qmat: np.ndarray):
             idx = bc_index.value
             cents = idx.centroids
-            if True:
-                if metric == "cosine":
-                    qmat = normalize_rows(qmat.astype(np.float64)).astype(
-                        np.float32
+            if metric == "cosine":
+                qmat = normalize_rows(qmat.astype(np.float64)).astype(
+                    np.float32
+                )
+            n_q = len(qids)
+            qc = pairwise_distances(qmat, cents, "l2")
+            npb = min(nprobe, qc.shape[1])
+            order = np.lexsort(
+                (np.broadcast_to(np.arange(qc.shape[1]), qc.shape), qc),
+                axis=1,
+            )
+            probed = order[:, :npb]
+
+            def scan(flat_q, flat_c, acc_q, acc_i, acc_d):
+                so = np.argsort(flat_c, kind="stable")
+                fc, fq = flat_c[so], flat_q[so]
+                ucs, starts = np.unique(fc, return_index=True)
+                bounds = np.r_[starts, len(fc)]
+                for j, c in enumerate(ucs):
+                    bi = idx.index.get(int(c))
+                    if bi is None:
+                        continue
+                    qrows = fq[bounds[j] : bounds[j + 1]]
+                    d = pairwise_distances(
+                        qmat[qrows], idx.decoded(bi), metric="l2"
                     )
-                n_q = len(qids)
-                qc = pairwise_distances(qmat, cents, "l2")
-                npb = min(nprobe, qc.shape[1])
-                order = np.lexsort(
-                    (np.broadcast_to(np.arange(qc.shape[1]), qc.shape), qc),
-                    axis=1,
-                )
-                probed = order[:, :npb]
+                    if accum is not None:
+                        accum.add(int(d.size))
+                    kk = min(k, d.shape[1])
+                    od, oi = topk_rows(d, idx.ids[bi], kk)
+                    acc_q.append(np.repeat(qrows, kk))
+                    acc_i.append(oi.ravel())
+                    acc_d.append(od.ravel())
 
-                def scan(flat_q, flat_c, acc_q, acc_i, acc_d):
-                    so = np.argsort(flat_c, kind="stable")
-                    fc, fq = flat_c[so], flat_q[so]
-                    ucs, starts = np.unique(fc, return_index=True)
-                    bounds = np.r_[starts, len(fc)]
-                    for j, c in enumerate(ucs):
-                        bi = idx.index.get(int(c))
-                        if bi is None:
-                            continue
-                        qrows = fq[bounds[j] : bounds[j + 1]]
-                        d = pairwise_distances(
-                            qmat[qrows], idx.decoded(bi), metric="l2"
-                        )
-                        if accum is not None:
-                            accum.add(int(d.size))
-                        kk = min(k, d.shape[1])
-                        od, oi = topk_rows(d, idx.ids[bi], kk)
-                        acc_q.append(np.repeat(qrows, kk))
-                        acc_i.append(oi.ravel())
-                        acc_d.append(od.ravel())
-
-                acc_q: list[np.ndarray] = []
-                acc_i: list[np.ndarray] = []
-                acc_d: list[np.ndarray] = []
-                scan(
-                    np.repeat(np.arange(n_q), npb),
-                    probed.reshape(-1),
-                    acc_q,
-                    acc_i,
-                    acc_d,
-                )
-                # per-query exact upper bound T_q = kth-best so far
-                t_arr = np.full(n_q, np.inf)
-                if acc_q:
-                    aq = np.concatenate(acc_q)
-                    ad = np.concatenate(acc_d)
-                    so = np.lexsort((ad, aq))
-                    aq_s, ad_s = aq[so], ad[so]
-                    starts = np.r_[0, np.nonzero(np.diff(aq_s))[0] + 1]
-                    counts = np.diff(np.r_[starts, len(aq_s)])
-                    full = counts >= k
-                    t_arr[aq_s[starts[full]]] = ad_s[starts[full] + k - 1]
-                # lower bound d(q, c) − r_c: clusters above T_q provably
-                # hold no better neighbor (triangle inequality)
-                need = qc - radii[None, :] <= t_arr[:, None]
-                need[np.arange(n_q)[:, None], probed] = False
-                extra_q, extra_c = np.nonzero(need)
-                if len(extra_q):
-                    scan(extra_q, extra_c, acc_q, acc_i, acc_d)
-                if not acc_q:
-                    return None
+            acc_q: list[np.ndarray] = []
+            acc_i: list[np.ndarray] = []
+            acc_d: list[np.ndarray] = []
+            scan(
+                np.repeat(np.arange(n_q), npb),
+                probed.reshape(-1),
+                acc_q,
+                acc_i,
+                acc_d,
+            )
+            # per-query exact upper bound T_q = kth-best so far
+            t_arr = np.full(n_q, np.inf)
+            if acc_q:
                 aq = np.concatenate(acc_q)
-                ai = np.concatenate(acc_i)
                 ad = np.concatenate(acc_d)
-                so = np.lexsort((ai, ad, aq))
-                aq, ai, ad = aq[so], ai[so], ad[so]
-                starts = np.r_[0, np.nonzero(np.diff(aq))[0] + 1]
-                counts = np.diff(np.r_[starts, len(aq)])
-                rank = np.arange(len(aq)) - np.repeat(starts, counts)
-                keep = rank < k
-                return pd.DataFrame(
-                    {
-                        "qid": qids[aq[keep]],
-                        "id": ai[keep],
-                        "dist": ad[keep],
-                        "rank": (rank[keep] + 1).astype(np.int32),
-                    }
-                )
+                so = np.lexsort((ad, aq))
+                aq_s, ad_s = aq[so], ad[so]
+                starts = np.r_[0, np.nonzero(np.diff(aq_s))[0] + 1]
+                counts = np.diff(np.r_[starts, len(aq_s)])
+                full = counts >= k
+                t_arr[aq_s[starts[full]]] = ad_s[starts[full] + k - 1]
+            # lower bound d(q, c) − r_c: clusters above T_q provably
+            # hold no better neighbor (triangle inequality)
+            need = qc - radii[None, :] <= t_arr[:, None]
+            need[np.arange(n_q)[:, None], probed] = False
+            extra_q, extra_c = np.nonzero(need)
+            if len(extra_q):
+                scan(extra_q, extra_c, acc_q, acc_i, acc_d)
+            if not acc_q:
+                return None
+            aq = np.concatenate(acc_q)
+            ai = np.concatenate(acc_i)
+            ad = np.concatenate(acc_d)
+            so = np.lexsort((ai, ad, aq))
+            aq, ai, ad = aq[so], ai[so], ad[so]
+            starts = np.r_[0, np.nonzero(np.diff(aq))[0] + 1]
+            counts = np.diff(np.r_[starts, len(aq)])
+            rank = np.arange(len(aq)) - np.repeat(starts, counts)
+            keep = rank < k
+            return pd.DataFrame(
+                {
+                    "qid": qids[aq[keep]],
+                    "id": ai[keep],
+                    "dist": ad[keep],
+                    "rank": (rank[keep] + 1).astype(np.int32),
+                }
+            )
 
         # both phases run inside the generic query-driven job: gate-
         # passing frames slice a broadcast query matrix (no per-search
@@ -289,85 +274,38 @@ class ClusterPrunedExactSearcher:
     def search(
         self, query_df: DataFrame, k: int, qid_col: str = "qid", vec_col: str = "vec"
     ) -> DataFrame:
-        art = self.artifact
+        art = self._attached()
+        mk = (k, qid_col, vec_col, self.nprobe)
+        plan = self._plan_get(query_df, mk)
+        if plan is not None:
+            return plan
         cents = art.params["centroids"]
         radii = art.params["radii"]
         metric = art.params["metric"]
         spark = query_df.sparkSession
-        if self.ndis_accum is None:
-            self.ndis_accum = spark.sparkContext.accumulator(0)
-        accum = self.ndis_accum
+        accum = self._ndis(spark)
 
-        from vectordb_retrieval_spark.operators.serving import (
-            artifact_serving_broadcast,
-        )
-
-        bc_index = artifact_serving_broadcast(
+        bc_index = serving.artifact_serving_broadcast(
             art, spark, self.broadcast_threshold
         )
         if bc_index is not None:
-            mk = (k, qid_col, vec_col, self.nprobe, id(art))
-            memo = self._plans.get(query_df, mk, guard=art)
-            if memo is not None:
-                return memo
-            return self._plans.put(
+            return self._plan_put(
                 query_df,
                 mk,
                 self._search_broadcast(
                     bc_index, query_df, k, qid_col, vec_col, accum
                 ),
-                guard=art,
             )
 
-        from vectordb_retrieval_spark.functions.kernels import (
-            collect_or_chunk,
-        )
-
-        # the FUSED single-job partitioned plan has no eager action, so
-        # it is memoizable exactly like the broadcast plan: a repeat
-        # search of the same frame reuses the plan DataFrame (skipping
-        # the per-search qc GEMM, bound computation and probe-map
-        # broadcast) while every materialization still recomputes the
-        # scan from the index.  The two-phase plan stays unmemoized
-        # (its T_q collect is an eager per-search action).
-        mk_part = (k, qid_col, vec_col, self.nprobe, id(art), "fused")
-        if self.node_local_cache:
-            # the memoized fused plan may embed a /dev/shm packed root
-            # (advisor r13).  IVFSearcher's contract: a TTL-swept root
-            # invalidates the memo (a republish gets a NEW root, so the
-            # old plan would read dead paths); a live root is re-touched
-            # (packed_shm_cached's memo hit does os.utime) so the sweep
-            # a later publish triggers cannot reap blobs a live plan
-            # still reads.  Cheap: dict lookup + one utime per search.
-            import os as _os
-
-            shm_memo = art.params.get("_packed_shm")
-            if isinstance(shm_memo, tuple):
-                if _os.path.isdir(shm_memo[0]):
-                    packed_shm_cached(art)
-                else:
-                    art.params.pop("_packed_shm", None)
-                    self._plans = type(self._plans)()
-        memo = self._plans.get(query_df, mk_part, guard=art)
-        if memo is not None:
-            return memo
-
-        qids, qmat, chunked = collect_or_chunk(
+        qids, qmat, done = self._queries(
             query_df,
             qid_col,
             vec_col,
             lambda c: self.search(c, k, qid_col, vec_col),
+            normalize=metric == "cosine",
         )
-        if chunked is not None:  # past-gate frame: chunked union
-            return chunked
-        if len(qids) == 0:  # empty serving batch: empty result
-            return spark.createDataFrame(
-                [], "qid long, id long, dist double, rank int"
-            )
-        if metric == "cosine":
-            from vectordb_retrieval_spark.functions.distance import normalize_rows
-
-            qmat = normalize_rows(qmat.astype(np.float64)).astype(np.float32)
+        if done is not None:
+            return done
         qc = pairwise_distances(qmat, cents, "l2")  # (n_q, nlist)
 
         nprobe = min(self.nprobe, qc.shape[1])
@@ -441,11 +379,11 @@ class ClusterPrunedExactSearcher:
                 # clip fragment emission at T'_q: ≥ k members sit at or
                 # under it, so dropped rows cannot reach the top-k
                 scanned = scan(to_map(fq, fc), bounds=t_prime)
-                return self._plans.put(
+                return self._plan_put(
                     query_df,
-                    mk_part,
+                    mk,
                     merge_fragment_topk(scanned, k, n_queries=len(qids)),
-                    guard=art,
+                    shm_root,
                 )
 
         # phase 1 emission clipped at T'_q too (when available): a

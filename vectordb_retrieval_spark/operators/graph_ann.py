@@ -71,7 +71,6 @@ from __future__ import annotations
 
 import os
 import uuid
-import weakref
 from typing import Iterator
 
 import numpy as np
@@ -79,6 +78,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectordb_retrieval_spark import transport
 from vectordb_retrieval_spark.artifacts import IndexArtifact
 from vectordb_retrieval_spark.functions.distance import (
     normalize_rows,
@@ -89,89 +89,8 @@ from vectordb_retrieval_spark.functions.hashing import (
     make_projections,
     sign_buckets,
 )
+from vectordb_retrieval_spark.operators.searcher import Searcher
 from vectordb_retrieval_spark.operators.topk import topk_per_query
-
-
-# Node-local shard cache (see also serving._SHM_ROOT): above the
-# broadcast threshold the partitioned path used to ship every probed
-# shard blob through Arrow into the python workers ON EVERY SEARCH —
-# at 1M×384-d that is ~GBs of blob traffic per 1024-query batch and it
-# dominated the search wall.  On a single-node master (local[...]) the
-# shards are instead PUBLISHED once to /dev/shm by a one-off job and
-# every search maps them read-only by pid: tasks carry only (pid,
-# chunk) ints, the page cache holds one physical copy per node, and
-# per-search blob traffic drops to zero.  This is the index-replica
-# serving architecture (the reference's in-RAM index, FAISS serving
-# fleets): the cluster distributes QUERIES, not index bytes.  On a
-# multi-executor master the publish would land each shard on one node
-# only, so the gate keeps the blob-shipping path there; a cluster
-# deployment replicates the artifact per node the same way (node-local
-# SSD/ramdisk) before flipping this on.
-_SHM_SHARD_ROOT = "/dev/shm/vr_spark_shm"
-_SHM_SHARD_TTL_S = 3600.0
-_SHARD_MMAPS: dict = {}
-
-
-def _mmap_shard(root: str, pid: int):
-    """Read-only mmap of a published shard blob, memoized per process
-    (the mmap object must outlive every frombuffer view taken on it)."""
-    import mmap as _mmap
-    import os
-
-    path = os.path.join(root, f"{pid}.bin")
-    mm = _SHARD_MMAPS.get(path)
-    if mm is None:
-        if len(_SHARD_MMAPS) >= 8192:
-            _SHARD_MMAPS.clear()
-        with open(path, "rb") as fh:
-            mm = _mmap.mmap(fh.fileno(), 0, prot=_mmap.PROT_READ)
-        _SHARD_MMAPS[path] = mm
-    return mm
-
-
-def _publish_shards(graph_df: DataFrame, key: str) -> tuple[str, list[int]]:
-    """One distributed pass over the graph table writing each (pid,
-    blob) to /dev/shm (tmp file + atomic rename; re-publish of an
-    existing pid is a no-op).  Returns (root, sorted pids).  Stale
-    sibling entries are age-swept first."""
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
-    os.makedirs(_SHM_SHARD_ROOT, exist_ok=True)
-    now = _time.time()
-    for entry in os.listdir(_SHM_SHARD_ROOT):
-        p = os.path.join(_SHM_SHARD_ROOT, entry)
-        try:
-            if now - os.path.getmtime(p) > _SHM_SHARD_TTL_S:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            continue
-    root = os.path.join(_SHM_SHARD_ROOT, f"shards-{key}")
-
-    def pub(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        os.makedirs(root, exist_ok=True)
-        done = []
-        for pdf in batches:
-            for pid, blob in zip(pdf["pid"], pdf["blob"]):
-                pid = int(pid)
-                final = os.path.join(root, f"{pid}.bin")
-                if not os.path.exists(final):
-                    fd, tmp = tempfile.mkstemp(dir=root, prefix=".pub-")
-                    with os.fdopen(fd, "wb") as fh:
-                        fh.write(blob)
-                    os.replace(tmp, final)
-                done.append(pid)
-        yield pd.DataFrame({"pid": np.asarray(done, dtype=np.int64)})
-
-    pids = sorted(
-        int(r["pid"])
-        for r in graph_df.select("pid", "blob")
-        .mapInPandas(pub, schema="pid long")
-        .collect()
-    )
-    return root, pids
 
 
 def _pad_adjacency(adj: list[np.ndarray]) -> np.ndarray:
@@ -1080,7 +999,7 @@ def graph_delete(
     return _refresh_artifact(artifact, merged, "deleted")
 
 
-class GraphANNSearcher:
+class GraphANNSearcher(Searcher):
     """Broadcast queries; one batched beam search per partition graph;
     global top-k merge.
 
@@ -1104,91 +1023,95 @@ class GraphANNSearcher:
         force_beam: bool = False,
         node_local_cache: bool = True,
     ):
+        super().__init__()
         self.ef_search = ef_search
         self.probe_partitions = probe_partitions
         self.broadcast_threshold = broadcast_threshold
         self.force_beam = force_beam
         # over-threshold indexes on a single-node master: publish shard
         # blobs to /dev/shm once and serve through mmaps (see
-        # _publish_shards).  False forces the blob-shipping partitioned
+        # _shard_store).  False forces the blob-shipping partitioned
         # plan — the multi-executor path, kept testable.
         self.node_local_cache = node_local_cache
-        self.artifact: IndexArtifact | None = None
-        self.ndis_accum = None
-        # search-plan memo (the IVFSearcher pattern): repeated searches
-        # of the same query frame rebuild an identical lazy plan AND a
-        # fresh query broadcast + driver-side routing pass per call at
-        # serving rates.  Keyed weakly on the query DataFrame; values
-        # carry the plan's shm root so a TTL-swept publish invalidates.
-        self._plan_memo: "weakref.WeakKeyDictionary" = (
-            weakref.WeakKeyDictionary()
+
+    def _shard_broadcast(self, spark):
+        """Memoized shard-blob broadcast entry (``_shard_bc``; ``meta``
+        = (state-memo token, sorted pids)), or None over the threshold.
+        The blob-length aggregate sizes the index before any collect."""
+        graph = self.artifact.tables["graph"]
+
+        def estimate() -> int:
+            total = graph.agg(F.sum(F.length("blob")).alias("b")).collect()[0]["b"]
+            return total or 0
+
+        def pack(_threshold):
+            rows = graph.select("pid", "blob").collect()
+            shards = {int(r["pid"]): bytes(r["blob"]) for r in rows}
+            nbytes = sum(len(b) for b in shards.values())
+            return shards, nbytes, (uuid.uuid4().hex, sorted(shards))
+
+        return transport.broadcast_cached(
+            self.artifact, "_shard_bc", spark, self.broadcast_threshold,
+            pack, estimate,
         )
 
-    def attach(self, artifact: IndexArtifact) -> "GraphANNSearcher":
-        self.artifact = artifact
-        return self
+    def _shard_store(self, spark):
+        """(root, sorted pids) of the node-local shard store
+        (``transport.published``), or None.  Above the broadcast threshold
+        the partitioned path used to ship every probed shard blob through
+        Arrow into the python workers ON EVERY SEARCH — at 1M×384-d that is
+        ~GBs of blob traffic per 1024-query batch and it dominated the
+        search wall.  On a single-node master (local[...]) the shards are
+        instead PUBLISHED once to /dev/shm by a one-off job and every search
+        maps them read-only by pid: tasks carry only (pid, chunk) ints, the
+        page cache holds one physical copy per node, and per-search blob
+        traffic drops to zero.  This is the index-replica serving
+        architecture (the reference's in-RAM index, FAISS serving fleets):
+        the cluster distributes QUERIES, not index bytes.  On a multi-
+        executor master the publish would land each shard on one node only,
+        so the gate keeps the blob-shipping path there; a cluster deployment
+        replicates the artifact per node the same way (node-local
+        SSD/ramdisk) before flipping this on."""
 
-    def _memo_store(self, query_df, mk, result, shm_root):
-        try:
-            per_df = self._plan_memo.get(query_df)
-            if per_df is None:
-                per_df = {}
-                self._plan_memo[query_df] = per_df
-            # artifact weakref: mk embeds id(artifact), and CPython can
-            # recycle the id after GC — a hit must prove the plan was
-            # built against the LIVE artifact (advisor r11; mirrors the
-            # exact.py guard)
-            per_df[mk] = (weakref.ref(self.artifact), result, shm_root)
-        except TypeError:
-            pass
-        return result
+        def fill(root: str) -> list[int]:
+            keys = transport.publish(
+                self.artifact.tables["graph"].select(
+                    F.col("pid").cast("string").alias("key"), "blob"
+                ),
+                root,
+            )
+            return sorted(int(k) for k in keys)
+
+        return transport.published(
+            self.artifact, "_shm_shards", spark, "shards", fill
+        )
 
     def search(
         self, query_df: DataFrame, k: int, qid_col: str = "qid", vec_col: str = "vec"
     ) -> DataFrame:
-        art = self.artifact
-        if art is None:
-            raise RuntimeError("searcher not attached to an index artifact")
+        art = self._attached()
         metric = art.params["metric"]
         ef = max(self.ef_search, k)
-        spark = query_df.sparkSession
-        if self.ndis_accum is None:
-            self.ndis_accum = spark.sparkContext.accumulator(0)
-        accum = self.ndis_accum
         force_beam = self.force_beam
         mk = (
             k, qid_col, vec_col, self.ef_search, self.probe_partitions,
-            force_beam, id(art),
+            force_beam,
         )
-        try:
-            per_df = self._plan_memo.get(query_df)
-        except TypeError:
-            per_df = None
-        if per_df is not None and mk in per_df:
-            art_ref, res, shm_root = per_df[mk]
-            if art_ref() is art and (
-                shm_root is None or os.path.isdir(shm_root)
-            ):
-                return res
+        plan = self._plan_get(query_df, mk)
+        if plan is not None:
+            return plan
+        spark = query_df.sparkSession
+        accum = self._ndis(spark)
 
-        from vectordb_retrieval_spark.functions.kernels import (
-            collect_or_chunk,
-        )
-
-        qids, qmat, chunked = collect_or_chunk(
+        qids, qmat, done = self._queries(
             query_df,
             qid_col,
             vec_col,
             lambda c: self.search(c, k, qid_col, vec_col),
+            normalize=metric == "cosine",
         )
-        if chunked is not None:  # past-gate frame: chunked union
-            return chunked
-        if len(qids) == 0:  # empty serving batch: empty result
-            return spark.createDataFrame(
-                [], "qid long, id long, dist double, rank int"
-            )
-        if metric == "cosine":
-            qmat = normalize_rows(qmat.astype(np.float64)).astype(np.float32)
+        if done is not None:
+            return done
 
         # centroid routing: pid → indices of the queries probing it
         route: dict[int, np.ndarray] | None = None
@@ -1231,56 +1154,21 @@ class GraphANNSearcher:
         # from an exact 1-row-per-partition RDD — perfectly even tasks,
         # no blob shuffle at all.  Large index ⇒ shuffle-replicate the
         # blob rows per chunk (shard_count × chunks rows — still the
-        # index, never the base data).
-        # shard-blob broadcast, built ONCE per artifact and reused by
-        # every subsequent search (leading "_": runtime-only, skipped
-        # by persistence).  A None entry remembers the over-threshold
-        # decision so the size probe doesn't re-run per search either.
-        # Probed BEFORE the chunk sizing below: on a first search the
-        # missing memo used to read as "partitioned path" and set
-        # chunks=1 even when the index was about to be broadcast.
-        if "_shard_bc" not in art.params:
-            total = art.tables["graph"].agg(
-                F.sum(F.length("blob")).alias("b")
-            ).collect()[0]["b"]
-            if total is not None and total <= self.broadcast_threshold:
-                rows = art.tables["graph"].select("pid", "blob").collect()
-                shards = {int(r["pid"]): bytes(r["blob"]) for r in rows}
-                art.params["_shard_bc"] = spark.sparkContext.broadcast(shards)
-                art.params["_shard_bc_key"] = uuid.uuid4().hex
-                art.params["_shard_pids"] = sorted(shards)
-            else:
-                art.params["_shard_bc"] = None
-        bc_shards = art.params["_shard_bc"]
-        # over-threshold on a single-node master: publish the shards to
-        # node-local shared memory once and serve every search through
-        # read-only mmaps (see _publish_shards) — same query-partitioned
-        # plan as the broadcast path, zero per-search blob traffic
+        # index, never the base data).  Decided BEFORE the chunk sizing
+        # below: on a first search a missing memo used to read as
+        # "partitioned path" and set chunks=1 even when the index was
+        # about to be broadcast.
+        shard_bc = self._shard_broadcast(spark)
+        bc_shards = None if shard_bc is None else shard_bc.bc
+        # over-threshold on a single-node master: serve every search
+        # through read-only mmaps of the node-local shard store — same
+        # query-partitioned plan as the broadcast path, zero per-search
+        # blob traffic
         shm_shards = (
-            art.params.get("_shm_shards") if self.node_local_cache else None
+            self._shard_store(spark)
+            if bc_shards is None and self.node_local_cache
+            else None
         )
-        if shm_shards is not None and not os.path.isdir(shm_shards[0]):
-            shm_shards = None  # swept while idle: republish below
-        if (
-            bc_shards is None
-            and shm_shards is None
-            and self.node_local_cache
-            and spark.sparkContext.master.startswith("local")
-            and os.path.isdir("/dev/shm")
-        ):
-            try:
-                shm_shards = _publish_shards(
-                    art.tables["graph"], uuid.uuid4().hex
-                )
-            except OSError:
-                shm_shards = None
-        if self.node_local_cache:
-            art.params["_shm_shards"] = shm_shards
-        if shm_shards is not None:
-            try:
-                os.utime(shm_shards[0])  # keep the TTL sweep at bay
-            except OSError:
-                pass
 
         # fan the query batch out across (shard × chunk) tasks: the
         # per-task kernel is CPU-bound NumPy, so shard count alone
@@ -1392,12 +1280,11 @@ class GraphANNSearcher:
                 1,
                 min(-(-n_q // 32), 2 * par if route is not None else par),
             )
-            shard_pids = (
-                art.params["_shard_pids"]
-                if bc_shards is not None
-                else shm_shards[1]
-            )
-            shm_root = None if bc_shards is not None else shm_shards[0]
+            if bc_shards is not None:
+                state_token, shard_pids = shard_bc.meta
+                shm_root = None
+            else:
+                shm_root, shard_pids = shm_shards
             # spark.range is a JVM-native scan with exactly one row per
             # task; a parallelize-backed DataFrame inserts an EXTRA
             # python stage (pickled-row scan → InternalRow conversion)
@@ -1408,18 +1295,17 @@ class GraphANNSearcher:
                 0, n_tasks, 1, numPartitions=n_tasks
             ).selectExpr("cast(id as int) qchunk")
 
-            bc_id = art.params.get("_shard_bc_key")
-
             def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 q_ids, q_mat, rt, _, _ = bc.value
                 if shm_root is None:
-                    shards = bc_shards.value
-                    get_blob = shards.__getitem__
-                    # no key => no memo (a pre-key artifact's broadcasts
-                    # would otherwise collide on the None key)
-                    key_base = ("bc", bc_id) if bc_id is not None else None
+                    get_blob = bc_shards.value.__getitem__
+                    key_base = ("bc", state_token)
                 else:
-                    get_blob = lambda p: _mmap_shard(shm_root, p)  # noqa: E731
+                    def get_blob(p):
+                        return transport.mmap_file(
+                            os.path.join(shm_root, f"{p}.bin")
+                        )
+
                     key_base = ("shm", shm_root)
                 for pdf in batches:
                     for qc_ix in pdf["qchunk"]:
@@ -1438,13 +1324,7 @@ class GraphANNSearcher:
                             if not len(sel):
                                 continue
                             lr, ci, cd = shard_cands(
-                                q_mat[sel],
-                                get_blob(pid),
-                                skey=(
-                                    None
-                                    if key_base is None
-                                    else key_base + (pid,)
-                                ),
+                                q_mat[sel], get_blob(pid), skey=key_base + (pid,)
                             )
                             acc_q.append(sel[lr])
                             acc_i.append(ci)
@@ -1469,14 +1349,14 @@ class GraphANNSearcher:
                             }
                         )
 
-            return self._memo_store(
+            return self._plan_put(
                 query_df,
                 mk,
                 tasks.mapInPandas(
                     kernel,
                     schema="qid long, id long, dist double, rank int",
                 ),
-                None if bc_shards is not None else shm_shards[0],
+                shm_root,
             )
 
         def search_shard(
@@ -1518,4 +1398,4 @@ class GraphANNSearcher:
         cands = tasks.mapInPandas(
             kernel, schema="qid long, id long, dist double"
         )
-        return self._memo_store(query_df, mk, topk_per_query(cands, k), None)
+        return self._plan_put(query_df, mk, topk_per_query(cands, k))

@@ -49,6 +49,8 @@ from vectordb_retrieval_spark.functions.kernels import (
     packed_assignment_cached,
     packed_shm_cached,
 )
+from vectordb_retrieval_spark.operators import serving
+from vectordb_retrieval_spark.operators.searcher import Searcher
 from vectordb_retrieval_spark.operators.topk import topk_per_query
 
 
@@ -549,7 +551,7 @@ def ivf_delete(
     )
 
 
-class IVFSearcher:
+class IVFSearcher(Searcher):
     """nprobe-pruned candidate scan + exact (or decoded) rerank.
 
     Two physical plans, selected by index size (the same decision rule
@@ -573,6 +575,7 @@ class IVFSearcher:
         broadcast_threshold: int = 128 << 20,
         node_local_cache: bool = True,
     ):
+        super().__init__()
         self.nprobe = nprobe
         self.broadcast_threshold = broadcast_threshold
         # over-threshold indexes on a single-node master: publish packed
@@ -580,33 +583,6 @@ class IVFSearcher:
         # (kernels.packed_shm_cached).  False forces the blob-shipping
         # partitioned plan — the multi-executor path, kept testable.
         self.node_local_cache = node_local_cache
-        self.artifact: IndexArtifact | None = None
-        # distance-computation counter, parity with the reference's
-        # ``ndis`` record_operation (base_algorithm.py:91-96)
-        self.ndis_accum = None
-        # search-plan memo: repeated searches of the same query table
-        # rebuild an identical lazy plan (~60 ms of driver-side pyspark
-        # object construction per call at serving rates).  Keyed weakly
-        # on the query DataFrame — results are deterministic per
-        # (artifact, query table, k), and execution still runs in full
-        # on every materialization; only the plan object is reused.
-        import weakref
-
-        self._plan_memo: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-    def attach(self, artifact: IndexArtifact) -> "IVFSearcher":
-        self.artifact = artifact
-        self._plan_memo = type(self._plan_memo)()
-        return self
-
-    def _serving_broadcast(self, spark):
-        from vectordb_retrieval_spark.operators.serving import (
-            artifact_serving_broadcast,
-        )
-
-        return artifact_serving_broadcast(
-            self.artifact, spark, self.broadcast_threshold
-        )
 
     def probe_clusters(self, qids: np.ndarray, qmat: np.ndarray) -> pd.DataFrame:
         """(qid, cluster_id) pairs: nprobe nearest centroids per query
@@ -652,19 +628,7 @@ class IVFSearcher:
         ~1/selectivity — the candidate volume then matches the
         unfiltered search and recall recovers, while the masked scan
         still reads only the allowed slice."""
-        art = self.artifact
-        if art is None:
-            raise RuntimeError("searcher not attached to an index artifact")
-        # memoized plans bake in the shm blob root; a TTL-swept root
-        # must invalidate them (and the artifact memo, so the plan
-        # build below republishes) instead of serving dead file paths
-        import os
-
-        shm_memo = art.params.get("_packed_shm")
-        if isinstance(shm_memo, tuple) and not os.path.isdir(shm_memo[0]):
-            art.params.pop("_packed_shm", None)
-            self._plan_memo = type(self._plan_memo)()
-            shm_memo = None
+        art = self._attached()
         allowed = allowed_bc = None
         filt_key = None
         if allowed_df is not None:
@@ -680,36 +644,23 @@ class IVFSearcher:
             # content key, not object identity: a recycled id() after GC
             # must not serve a stale plan for a different filter
             filt_key = (len(allowed), hashlib.md5(allowed.tobytes()).hexdigest())
-        memo_key = (
-            k,
-            qid_col,
-            vec_col,
-            shm_memo[0] if isinstance(shm_memo, tuple) else None,
-            filt_key,
-        )
-        try:
-            per_df = self._plan_memo.get(query_df)
-        except TypeError:
-            per_df = None
-        if per_df is not None and memo_key in per_df:
-            return per_df[memo_key]
+        memo_key = (k, qid_col, vec_col, self.nprobe, filt_key)
+        plan = self._plan_get(query_df, memo_key)
+        if plan is not None:
+            return plan
         metric = art.params["metric"]
         codec = art.params["codec"]
         spark = query_df.sparkSession
-        if self.ndis_accum is None:
-            self.ndis_accum = spark.sparkContext.accumulator(0)
-        accum = self.ndis_accum
+        accum = self._ndis(spark)
 
-        bc_index = self._serving_broadcast(spark)
+        bc_index = serving.artifact_serving_broadcast(
+            art, spark, self.broadcast_threshold
+        )
         if bc_index is not None:
-            from vectordb_retrieval_spark.operators.serving import (
-                broadcast_probe_search,
-            )
-
-            return self._memoize_plan(
+            return self._plan_put(
                 query_df,
                 memo_key,
-                broadcast_probe_search(
+                serving.broadcast_probe_search(
                     query_df,
                     bc_index,
                     self.nprobe,
@@ -722,29 +673,17 @@ class IVFSearcher:
                 ),
             )
 
-        # query-collect gate (same contract as exact_knn / the
-        # broadcast-query serving plan): past-gate frames chunk by qid
-        # hash and union, never an unbounded driver collect
-        from vectordb_retrieval_spark.functions.kernels import (
-            collect_or_chunk,
-        )
-
-        qids, qmat, chunked = collect_or_chunk(
+        qids, qmat, done = self._queries(
             query_df,
             qid_col,
             vec_col,
             lambda c: self.search(
                 c, k, qid_col, vec_col, allowed_df, allowed_id_col
             ),
+            normalize=metric == "cosine",
         )
-        if chunked is not None:  # past-gate frame: chunked union
-            return chunked
-        if len(qids) == 0:  # empty serving batch: empty result
-            return spark.createDataFrame(
-                [], "qid long, id long, dist double, rank int"
-            )
-        if metric == "cosine":
-            qmat = normalize_rows(qmat.astype(np.float64)).astype(np.float32)
+        if done is not None:
+            return done
         probe = self.probe_clusters(qids, qmat)
 
         # No per-query fan-out join: cluster_scan_topk scores each
@@ -776,20 +715,12 @@ class IVFSearcher:
             shm_root=None if shm is None else shm[0],
             allowed=allowed,
         )
-        return self._memoize_plan(
-            query_df, memo_key, merge_fragment_topk(scored, k, n_queries=len(qids))
+        return self._plan_put(
+            query_df,
+            memo_key,
+            merge_fragment_topk(scored, k, n_queries=len(qids)),
+            None if shm is None else shm[0],
         )
-
-    def _memoize_plan(self, query_df, memo_key, result):
-        try:
-            per_df = self._plan_memo.get(query_df)
-            if per_df is None:
-                per_df = {}
-                self._plan_memo[query_df] = per_df
-            per_df[memo_key] = result
-        except TypeError:
-            pass
-        return result
 
     @staticmethod
     def _probe_rows(probe: pd.DataFrame, n_queries: int) -> dict[int, np.ndarray]:

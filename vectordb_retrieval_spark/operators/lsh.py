@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from vectordb_retrieval_spark import transport
 from vectordb_retrieval_spark.artifacts import IndexArtifact
 from vectordb_retrieval_spark.functions.hashing import (
     e2lsh_buckets,
@@ -39,6 +40,7 @@ from vectordb_retrieval_spark.functions.kernels import (
     attach_query_distance,
 )
 from vectordb_retrieval_spark.operators.exact import exact_knn
+from vectordb_retrieval_spark.operators.searcher import Searcher
 from vectordb_retrieval_spark.operators.topk import topk_per_query
 
 
@@ -151,7 +153,7 @@ def _ranked_prefix(keys: tuple, limit: int) -> np.ndarray:
     return rank < limit
 
 
-class LSHSearcher:
+class LSHSearcher(Searcher):
     """Vote-and-cap candidate selection with exact rerank.
 
     Small-index fast path (same inversion as ``operators/serving.py``):
@@ -174,6 +176,7 @@ class LSHSearcher:
         n_probes: int = 1,
         broadcast_threshold: int = 128 << 20,
     ):
+        super().__init__()
         self.candidate_multiplier = candidate_multiplier
         self.max_candidates = max_candidates
         self.exact_fallback = exact_fallback
@@ -187,19 +190,6 @@ class LSHSearcher:
         # fallback is unaffordable (the 100 TB operating point).
         self.n_probes = n_probes
         self.broadcast_threshold = broadcast_threshold
-        self.artifact: IndexArtifact | None = None
-        from vectordb_retrieval_spark.functions.kernels import (
-            SearchPlanMemo,
-        )
-
-        # repeated searches of one query frame: reuse the whole plan —
-        # including the persisted candidate frame and the already-run
-        # zero-candidate fallback check (an eager action per build)
-        self._plans = SearchPlanMemo()
-
-    def attach(self, artifact: IndexArtifact) -> "LSHSearcher":
-        self.artifact = artifact
-        return self
 
     def _serving_broadcast(self, spark):
         """Memoized PackedLSH broadcast, or None over the threshold.
@@ -207,9 +197,14 @@ class LSHSearcher:
         vectors + int64 ids; rerank upcasts are per-batch transients,
         so unlike the IVF family there is no persistent decode cache to
         account for)."""
+        got = transport.broadcast_cached(
+            self.artifact, "_serving_bc", spark, self.broadcast_threshold,
+            self._pack,
+        )
+        return None if got is None else got.bc
+
+    def _pack(self, threshold: int):
         art = self.artifact
-        if "_serving_bc" in art.params:
-            return art.params["_serving_bc"]
         indexer: LSHIndexer = art.params["indexer"]
         # ONE action total (r13): collect the vectors row-capped (an
         # over-threshold index never materializes on the driver — the
@@ -230,10 +225,9 @@ class LSHSearcher:
         # cross-check the recomputed dict against the build's buckets
         # table on first attach (one extra collect, debug only).
         per_row = 4 * indexer.dimension + 8 + indexer.num_tables * 8
-        cap = max(1, self.broadcast_threshold // per_row)
+        cap = max(1, threshold // per_row)
         vp = art.tables["vectors"].limit(cap + 1).toPandas()
         if len(vp) == 0 or len(vp) > cap:
-            art.params["_serving_bc"] = None
             return None
         ids = vp["id"].to_numpy(dtype=np.int64)
         order = np.argsort(ids, kind="stable")
@@ -279,12 +273,7 @@ class LSHSearcher:
                     "(broadcast_threshold=0) or rebuild on matching BLAS"
                 )
         packed = PackedLSH(buckets, ids, vecs, indexer)
-        if packed.nbytes() > self.broadcast_threshold:
-            art.params["_serving_bc"] = None
-            return None
-        bc = spark.sparkContext.broadcast(packed)
-        art.params["_serving_bc"] = bc
-        return bc
+        return packed, packed.nbytes(), None
 
     def _broadcast_search(
         self, query_df: DataFrame, bc_index, k: int, qid_col: str, vec_col: str
@@ -313,121 +302,120 @@ class LSHSearcher:
 
             idx: PackedLSH = bc_index.value
             indexer = idx.indexer
-            if True:
-                n_q = len(qids)
-                if n_probes > 1:
-                    if metric == "l2":
-                        probes = e2lsh_multiprobe_buckets(
-                            qmat,
-                            indexer.projections,
-                            indexer.offsets,
-                            indexer.bucket_width,
-                            n_probes,
-                        )
-                    else:
-                        probes = sign_multiprobe_buckets(
-                            qmat, indexer.projections, n_probes
-                        )
+            n_q = len(qids)
+            if n_probes > 1:
+                if metric == "l2":
+                    probes = e2lsh_multiprobe_buckets(
+                        qmat,
+                        indexer.projections,
+                        indexer.offsets,
+                        indexer.bucket_width,
+                        n_probes,
+                    )
                 else:
-                    probes = indexer.bucket_of(qmat)[:, :, None]
-                n_tables = probes.shape[1]
-                # probe buckets; ascending-probe iteration + a seen-set
-                # per (query, table) implements the pipeline's
-                # min-probe-per-bucket dedup exactly
-                hit_q: list[int] = []
-                hit_p: list[int] = []
-                hit_ids: list[np.ndarray] = []
-                for r in range(n_q):
-                    for t in range(n_tables):
-                        seen: set = set()
-                        for p in range(probes.shape[2]):
-                            bkt = str(probes[r, t, p])
-                            if bkt in seen:
-                                continue
-                            seen.add(bkt)
-                            ids_arr = idx.buckets.get((t, bkt))
-                            if ids_arr is not None:
-                                hit_q.append(r)
-                                hit_p.append(p)
-                                hit_ids.append(ids_arr)
-                out_frames: list[pd.DataFrame] = []
-                have_cand = np.zeros(n_q, dtype=bool)
-                if hit_ids:
-                    sizes = np.fromiter(
-                        (len(a) for a in hit_ids), dtype=np.int64
+                    probes = sign_multiprobe_buckets(
+                        qmat, indexer.projections, n_probes
                     )
-                    cq = np.repeat(np.asarray(hit_q, dtype=np.int64), sizes)
-                    cp = np.repeat(np.asarray(hit_p, dtype=np.int64), sizes)
-                    ci = np.concatenate(hit_ids)
-                    # votes per (query, id) + min probe: sort by
-                    # (q, id, probe) and reduce on group boundaries
-                    o = np.lexsort((cp, ci, cq))
-                    cq, ci, cp = cq[o], ci[o], cp[o]
-                    new = np.r_[
-                        True, (cq[1:] != cq[:-1]) | (ci[1:] != ci[:-1])
-                    ]
-                    starts = np.nonzero(new)[0]
-                    bounds = np.r_[starts, len(cq)]
-                    votes = np.diff(bounds)
-                    uq, ui, ubp = cq[starts], ci[starts], cp[starts]
-                    # cap: (votes desc, best_probe asc, id asc) per query
-                    o2 = np.lexsort((ui, ubp, -votes, uq))
-                    uq, ui = uq[o2], ui[o2]
-                    keep = _ranked_prefix((uq,), cap)
-                    uq, ui = uq[keep], ui[keep]
-                    have_cand[uq] = True
-                    # exact rerank — same float64 row-wise arithmetic as
-                    # attach_query_distance
-                    rows = np.searchsorted(idx.ids, ui)
-                    dist = rowwise_distance(qmat[uq], idx.vecs[rows], metric)
-                    o3 = np.lexsort((ui, dist, uq))
-                    uq, ui, dist = uq[o3], ui[o3], dist[o3]
-                    topk = _ranked_prefix((uq,), k)
-                    tq, ti, td = uq[topk], ui[topk], dist[topk]
-                    starts = np.r_[0, np.nonzero(np.diff(tq))[0] + 1]
-                    counts = np.diff(np.r_[starts, len(tq)])
-                    rank = (
-                        np.arange(len(tq)) - np.repeat(starts, counts) + 1
+            else:
+                probes = indexer.bucket_of(qmat)[:, :, None]
+            n_tables = probes.shape[1]
+            # probe buckets; ascending-probe iteration + a seen-set
+            # per (query, table) implements the pipeline's
+            # min-probe-per-bucket dedup exactly
+            hit_q: list[int] = []
+            hit_p: list[int] = []
+            hit_ids: list[np.ndarray] = []
+            for r in range(n_q):
+                for t in range(n_tables):
+                    seen: set = set()
+                    for p in range(probes.shape[2]):
+                        bkt = str(probes[r, t, p])
+                        if bkt in seen:
+                            continue
+                        seen.add(bkt)
+                        ids_arr = idx.buckets.get((t, bkt))
+                        if ids_arr is not None:
+                            hit_q.append(r)
+                            hit_p.append(p)
+                            hit_ids.append(ids_arr)
+            out_frames: list[pd.DataFrame] = []
+            have_cand = np.zeros(n_q, dtype=bool)
+            if hit_ids:
+                sizes = np.fromiter(
+                    (len(a) for a in hit_ids), dtype=np.int64
+                )
+                cq = np.repeat(np.asarray(hit_q, dtype=np.int64), sizes)
+                cp = np.repeat(np.asarray(hit_p, dtype=np.int64), sizes)
+                ci = np.concatenate(hit_ids)
+                # votes per (query, id) + min probe: sort by
+                # (q, id, probe) and reduce on group boundaries
+                o = np.lexsort((cp, ci, cq))
+                cq, ci, cp = cq[o], ci[o], cp[o]
+                new = np.r_[
+                    True, (cq[1:] != cq[:-1]) | (ci[1:] != ci[:-1])
+                ]
+                starts = np.nonzero(new)[0]
+                bounds = np.r_[starts, len(cq)]
+                votes = np.diff(bounds)
+                uq, ui, ubp = cq[starts], ci[starts], cp[starts]
+                # cap: (votes desc, best_probe asc, id asc) per query
+                o2 = np.lexsort((ui, ubp, -votes, uq))
+                uq, ui = uq[o2], ui[o2]
+                keep = _ranked_prefix((uq,), cap)
+                uq, ui = uq[keep], ui[keep]
+                have_cand[uq] = True
+                # exact rerank — same float64 row-wise arithmetic as
+                # attach_query_distance
+                rows = np.searchsorted(idx.ids, ui)
+                dist = rowwise_distance(qmat[uq], idx.vecs[rows], metric)
+                o3 = np.lexsort((ui, dist, uq))
+                uq, ui, dist = uq[o3], ui[o3], dist[o3]
+                topk = _ranked_prefix((uq,), k)
+                tq, ti, td = uq[topk], ui[topk], dist[topk]
+                starts = np.r_[0, np.nonzero(np.diff(tq))[0] + 1]
+                counts = np.diff(np.r_[starts, len(tq)])
+                rank = (
+                    np.arange(len(tq)) - np.repeat(starts, counts) + 1
+                )
+                out_frames.append(
+                    pd.DataFrame(
+                        {
+                            "qid": qids[tq],
+                            "id": ti,
+                            "dist": td,
+                            "rank": rank.astype(np.int32),
+                        }
                     )
-                    out_frames.append(
-                        pd.DataFrame(
-                            {
-                                "qid": qids[tq],
-                                "id": ti,
-                                "dist": td,
-                                "rank": rank.astype(np.int32),
-                            }
-                        )
-                    )
-                miss = np.nonzero(~have_cand)[0]
-                if fallback and len(miss):
-                    # zero-candidate queries brute-scan the base — the
-                    # same pairwise_distances form exact_knn uses, so
-                    # fallback distances match the pipeline bit-for-bit
-                    from vectordb_retrieval_spark.operators.serving import (
-                        topk_block,
-                    )
+                )
+            miss = np.nonzero(~have_cand)[0]
+            if fallback and len(miss):
+                # zero-candidate queries brute-scan the base — the
+                # same pairwise_distances form exact_knn uses, so
+                # fallback distances match the pipeline bit-for-bit
+                from vectordb_retrieval_spark.operators.serving import (
+                    topk_block,
+                )
 
-                    d = pairwise_distances(qmat[miss], idx.vecs, metric)
-                    kk = min(k, d.shape[1])
-                    od, oi = topk_block(
-                        d, np.broadcast_to(idx.ids, d.shape), kk
+                d = pairwise_distances(qmat[miss], idx.vecs, metric)
+                kk = min(k, d.shape[1])
+                od, oi = topk_block(
+                    d, np.broadcast_to(idx.ids, d.shape), kk
+                )
+                out_frames.append(
+                    pd.DataFrame(
+                        {
+                            "qid": np.repeat(qids[miss], kk),
+                            "id": oi.ravel(),
+                            "dist": od.ravel(),
+                            "rank": np.tile(
+                                np.arange(1, kk + 1, dtype=np.int32),
+                                len(miss),
+                            ),
+                        }
                     )
-                    out_frames.append(
-                        pd.DataFrame(
-                            {
-                                "qid": np.repeat(qids[miss], kk),
-                                "id": oi.ravel(),
-                                "dist": od.ravel(),
-                                "rank": np.tile(
-                                    np.arange(1, kk + 1, dtype=np.int32),
-                                    len(miss),
-                                ),
-                            }
-                        )
-                    )
-                if out_frames:
-                    return pd.concat(out_frames, ignore_index=True)
+                )
+            if out_frames:
+                return pd.concat(out_frames, ignore_index=True)
             return None
 
         # the whole hash→probe→vote→cap→rerank pipeline runs inside the
@@ -442,45 +430,34 @@ class LSHSearcher:
         qid_col: str = "qid",
         vec_col: str = "vec",
     ) -> DataFrame:
-        art = self.artifact
-        if art is None:
-            raise RuntimeError("searcher not attached to an index artifact")
+        art = self._attached()
         indexer: LSHIndexer = art.params["indexer"]
         metric = indexer.metric
         spark = query_df.sparkSession
         mk = (
             k, qid_col, vec_col, self.n_probes, self.candidate_multiplier,
-            self.max_candidates, self.exact_fallback, id(art),
+            self.max_candidates, self.exact_fallback,
         )
-        memo = self._plans.get(query_df, mk, guard=art)
-        if memo is not None:
-            return memo
+        plan = self._plan_get(query_df, mk)
+        if plan is not None:
+            return plan
 
         bc_index = self._serving_broadcast(spark)
         if bc_index is not None:
-            return self._plans.put(
+            return self._plan_put(
                 query_df,
                 mk,
                 self._broadcast_search(query_df, bc_index, k, qid_col, vec_col),
-                guard=art,
             )
 
-        from vectordb_retrieval_spark.functions.kernels import (
-            collect_or_chunk,
-        )
-
-        qids, qmat, chunked = collect_or_chunk(
+        qids, qmat, done = self._queries(
             query_df,
             qid_col,
             vec_col,
             lambda c: self.search(c, k, qid_col, vec_col),
         )
-        if chunked is not None:  # past-gate frame: chunked union
-            return chunked
-        if len(qids) == 0:  # empty serving batch: empty result
-            return spark.createDataFrame(
-                [], "qid long, id long, dist double, rank int"
-            )
+        if done is not None:
+            return done
         if self.n_probes > 1:
             from vectordb_retrieval_spark.functions.hashing import (
                 e2lsh_multiprobe_buckets,

@@ -18,8 +18,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectordb_retrieval_spark import transport
 from vectordb_retrieval_spark.artifacts import IndexArtifact
 from vectordb_retrieval_spark.operators.quant import PQCodec
+from vectordb_retrieval_spark.operators.searcher import Searcher
 from vectordb_retrieval_spark.operators.topk import topk_per_query
 
 
@@ -76,64 +78,55 @@ class PQIndexer:
         )
 
 
-class PQADCSearcher:
+class PQADCSearcher(Searcher):
     """Exhaustive decoded-ADC scan; like IVFSearcher, a code table that
     packs under ``broadcast_threshold`` is served via the broadcast-
     index path (operators/serving.py): one shuffle-free job over the
     query table, decoded codes memoized per worker across searches."""
 
     def __init__(self, broadcast_threshold: int = 128 << 20):
+        super().__init__()
         self.broadcast_threshold = broadcast_threshold
-        self.artifact: IndexArtifact | None = None
-        from vectordb_retrieval_spark.functions.kernels import (
-            SearchPlanMemo,
-        )
-
-        self._plans = SearchPlanMemo()  # per-frame plan reuse
-
-    def attach(self, artifact: IndexArtifact) -> "PQADCSearcher":
-        self.artifact = artifact
-        return self
 
     def _serving_broadcast(self, spark):
         from vectordb_retrieval_spark.operators.serving import pack_clusters
 
         art = self.artifact
-        if "_serving_bc" in art.params:
-            return art.params["_serving_bc"]
         codec: PQCodec = art.params["codec"]
-        n = art.tables["codes"].count()
-        width = codec.m * (1 if codec.ksub <= 256 else 2)
-        # packed codes + ids PLUS the per-worker float64 decode cache
-        # (8 bytes x dim per row) — same gate as
-        # serving.artifact_serving_broadcast
-        decoded = 8 * codec.codebooks.shape[0] * codec.codebooks.shape[2]
-        if n * (width + decoded + 8) > self.broadcast_threshold:
-            art.params["_serving_bc"] = None
-            return None
-        packed = pack_clusters(
-            art.tables["codes"].withColumn("cluster_id", F.lit(0)),
-            "codes",
-            None,
-            codec,
+
+        def estimate() -> int:
+            n = art.tables["codes"].count()
+            width = codec.m * (1 if codec.ksub <= 256 else 2)
+            # packed codes + ids PLUS the per-worker float64 decode cache
+            # (8 bytes x dim per row) — same gate as
+            # serving.artifact_serving_broadcast
+            decoded = 8 * codec.codebooks.shape[0] * codec.codebooks.shape[2]
+            return n * (width + decoded + 8)
+
+        def pack(_threshold):
+            packed = pack_clusters(
+                art.tables["codes"].withColumn("cluster_id", F.lit(0)),
+                "codes",
+                None,
+                codec,
+            )
+            return packed, packed.nbytes(), None
+
+        got = transport.broadcast_cached(
+            art, "_serving_bc", spark, self.broadcast_threshold, pack, estimate
         )
-        if packed.nbytes() > self.broadcast_threshold:
-            art.params["_serving_bc"] = None
-            return None
-        bc = spark.sparkContext.broadcast(packed)
-        art.params["_serving_bc"] = bc
-        return bc
+        return None if got is None else got.bc
 
     def search(
         self, query_df: DataFrame, k: int, qid_col: str = "qid", vec_col: str = "vec"
     ) -> DataFrame:
-        art = self.artifact
+        art = self._attached()
         codec: PQCodec = art.params["codec"]
         spark = query_df.sparkSession
-        mk = (k, qid_col, vec_col, id(art))
-        memo = self._plans.get(query_df, mk, guard=art)
-        if memo is not None:
-            return memo
+        mk = (k, qid_col, vec_col)
+        plan = self._plan_get(query_df, mk)
+        if plan is not None:
+            return plan
 
         bc_index = self._serving_broadcast(spark)
         if bc_index is not None:
@@ -144,7 +137,7 @@ class PQADCSearcher:
             # ADC runs in L2 over decoded vectors; cosine is absorbed
             # by the codec's normalize flag, so the queries normalize
             # exactly when the codec does
-            return self._plans.put(
+            return self._plan_put(
                 query_df,
                 mk,
                 broadcast_probe_search(
@@ -157,26 +150,20 @@ class PQADCSearcher:
                     vec_col=vec_col,
                     normalize_queries=codec.normalize,
                 ),
-                guard=art,
             )
 
         from vectordb_retrieval_spark.functions.kernels import (
-            collect_or_chunk,
             topk_cols_tiebreak,
         )
 
-        qids, qmat, chunked = collect_or_chunk(
+        qids, qmat, done = self._queries(
             query_df,
             qid_col,
             vec_col,
             lambda c: self.search(c, k, qid_col, vec_col),
         )
-        if chunked is not None:  # past-gate frame: chunked union
-            return chunked
-        if len(qids) == 0:  # empty serving batch: empty result
-            return spark.createDataFrame(
-                [], "qid long, id long, dist double, rank int"
-            )
+        if done is not None:
+            return done
         q64 = qmat.astype(np.float64)
         if codec.normalize:
             from vectordb_retrieval_spark.functions.distance import normalize_rows
@@ -288,6 +275,4 @@ class PQADCSearcher:
         scored = art.tables["codes"].select("id", "codes").mapInPandas(
             kernel, schema="qid long, id long, dist double"
         )
-        return self._plans.put(
-            query_df, mk, topk_per_query(scored, k), guard=art
-        )
+        return self._plan_put(query_df, mk, topk_per_query(scored, k))

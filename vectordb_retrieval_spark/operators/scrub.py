@@ -15,7 +15,7 @@ a ``mapInPandas`` stage like sources/embedder.py's model path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Order matters: SSN before phone (a bare 123-45-6789 must not be
@@ -39,13 +39,6 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
         "<PHONE>",
     ),
 ]
-
-
-def _scrubbed(col: Column) -> Column:
-    out = col
-    for _, pat, token in PII_PATTERNS:
-        out = F.regexp_replace(out, pat, token)
-    return out
 
 
 def pii_scrub(

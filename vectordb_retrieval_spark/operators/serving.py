@@ -30,10 +30,6 @@ reference's in-memory throughput.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-import time
 import uuid
 from typing import Iterator
 
@@ -42,23 +38,16 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectordb_retrieval_spark import transport
 from vectordb_retrieval_spark.functions.distance import (
     normalize_rows,
     pairwise_distances,
 )
 
 
-# node-local shared home for decoded packed-scan arrays: every python
-# worker on an executor deserializes its OWN copy of the broadcast, so
-# at 32 workers the decoded index was resident 32× and the GEMM wave
-# thrashed L3.  The first worker to build a (key, metric) scan state
-# publishes it under /dev/shm (atomic dir rename); everyone else mmaps
-# it read-only, so the whole node shares ONE physical copy through the
-# page cache.  Entries are content-addressed by the bundle's share_key
-# (assigned once, driver-side) and swept by age on each publish.
-_SHM_ROOT = "/dev/shm/vr_spark_shm"
-_SHM_MIN_BYTES = 4 << 20  # below this, per-worker copies are cheap
-_SHM_TTL_S = 3600.0
+# below this many packed-scan bytes, per-worker copies are cheap: the
+# scan state stays private instead of going through the node-local store
+_SHM_MIN_BYTES = 4 << 20
 
 
 class PackedClusters:
@@ -198,68 +187,25 @@ class PackedClusters:
         return got
 
     def _share_scan(self, got, metric: str):
-        """Publish/attach the packed scan arrays through node-local
-        shared memory (see ``_SHM_ROOT``).  Returns the same tuple with
-        the big arrays replaced by read-only mmaps of one shared copy,
-        or ``got`` unchanged when sharing is off (no share_key, tiny
-        index, no /dev/shm, any I/O error).  Every worker computes
-        byte-identical arrays from the same broadcast, so whichever
-        publish wins the atomic rename is equivalent."""
+        """Swap the packed scan arrays for read-only views of one
+        node-local copy (``transport.share_arrays``): every python
+        worker on an executor deserializes its OWN copy of the
+        broadcast, so at 32 workers the decoded index was resident 32×
+        and the GEMM wave thrashed L3.  Entries are keyed by the
+        bundle's share_key (assigned once, driver-side).  Returns ``got``
+        unchanged when sharing is off (no share_key, tiny index, no
+        /dev/shm, any I/O error).  Every worker computes byte-identical
+        arrays from the same broadcast, so whichever publish wins is
+        equivalent."""
         F, sq, F32, sq32, gids, offs, norm_max = got
-        if (
-            self.share_key is None
-            or F.nbytes + F32.nbytes < _SHM_MIN_BYTES
-            or not os.path.isdir("/dev/shm")
-        ):
+        if self.share_key is None or F.nbytes + F32.nbytes < _SHM_MIN_BYTES:
             return got
-        final = os.path.join(_SHM_ROOT, f"{self.share_key}-{metric}")
-
-        def attach():
-            parts = []
-            for name in ("F64", "sq64", "F32", "sq32", "gids"):
-                path = os.path.join(final, f"{name}.npy")
-                if os.path.exists(path):
-                    mm = np.load(path, mmap_mode="r")
-                    # serve a plain-ndarray VIEW of the mmap (zero-copy,
-                    # base keeps the mapping alive): np.memmap's
-                    # __array_finalize__/__array_wrap__ subclass dispatch
-                    # fires on EVERY slice/ufunc in the scan hot loop —
-                    # profiled at ~10% of the whole serving kernel
-                    parts.append(mm.view(np.ndarray))
-                else:
-                    parts.append(None)
-            return (*parts, offs, norm_max)
-
-        try:
-            if not os.path.isdir(final):
-                os.makedirs(_SHM_ROOT, exist_ok=True)
-                # age sweep keeps abandoned entries from pinning tmpfs
-                now = time.time()
-                for entry in os.listdir(_SHM_ROOT):
-                    p = os.path.join(_SHM_ROOT, entry)
-                    try:
-                        if now - os.path.getmtime(p) > _SHM_TTL_S:
-                            shutil.rmtree(p, ignore_errors=True)
-                    except OSError:
-                        continue
-                tmp = tempfile.mkdtemp(prefix=".pub-", dir=_SHM_ROOT)
-                try:
-                    np.save(os.path.join(tmp, "F64.npy"), F)
-                    np.save(os.path.join(tmp, "F32.npy"), F32)
-                    np.save(os.path.join(tmp, "gids.npy"), gids)
-                    if sq is not None:
-                        np.save(os.path.join(tmp, "sq64.npy"), sq)
-                        np.save(os.path.join(tmp, "sq32.npy"), sq32)
-                    os.rename(tmp, final)
-                except OSError:
-                    # lost the publish race (or tmpfs full): attach to
-                    # the winner if there is one, else stay private
-                    shutil.rmtree(tmp, ignore_errors=True)
-                    if not os.path.isdir(final):
-                        return got
-            return attach()
-        except (OSError, ValueError):
+        shared = transport.share_arrays(
+            f"scan-{self.share_key}", f"{metric}.bin", [F, sq, F32, sq32, gids]
+        )
+        if shared is None:
             return got
+        return (*shared, offs, norm_max)
 
     def __getstate__(self):
         state = self.__dict__.copy()
@@ -382,80 +328,80 @@ def artifact_serving_broadcast(
     threshold: int,
     table: str = "assignment",
 ):
-    """Memoized packed-index broadcast for an IVF-family artifact
-    (flat, SQ8 or PQ payload).  Returns None when the packed index
+    """Packed-index broadcast for an IVF-family artifact (flat, SQ8 or
+    PQ payload), memoized under ``_serving_bc`` by
+    ``transport.broadcast_cached``.  Returns None when the packed index
     would exceed ``threshold`` — size is ESTIMATED from row count ×
     payload width before any collect, so the driver never materializes
-    an over-threshold index.  Underscore params are runtime-only: never
-    persisted, never inherited by append/delete derivatives."""
+    an over-threshold index."""
     from vectordb_retrieval_spark.operators.quant import (
         PCACodec,
         PQCodec,
         SQfp16Codec,
     )
 
-    if "_serving_bc" in art.params:
-        return art.params["_serving_bc"]
     codec = art.params.get("codec")
     cents = art.params["centroids"]
-    n = art.tables[table].count()
-    if codec is None:
-        width = 4 * cents.shape[1]
-    elif isinstance(codec, PQCodec):
-        width = codec.m * (1 if codec.ksub <= 256 else 2)
-    elif isinstance(codec, PCACodec):
-        width = 4 * codec.dim_out  # float32 reduced coordinates
-    elif isinstance(codec, SQfp16Codec):
-        width = 2 * cents.shape[1]  # fp16 bit patterns
-    else:
-        width = cents.shape[1]  # SQ8: one byte per dim packed
-    # gate on what a worker actually holds: packed payload + ids PLUS
-    # the packed scan state (float64 matrix + float32 downcast + norms,
-    # ~12 bytes × dim per row).  Gating on packed bytes alone let a
-    # 57 MB SQ8 index through whose decode is 460 MB — every worker
-    # then pays a one-shot full-index decode and the "fast path" ran
-    # 30x slower than the partitioned scan.
-    decoded = 12 * cents.shape[1] + 12
-    if n * (width + decoded + 8) > threshold:
-        art.params["_serving_bc"] = None
-        return None
-    if (
-        art.tables.get("packed") is not None
-        or art.params.get("_packed_df") is not None
-    ):
-        from vectordb_retrieval_spark.functions.kernels import (
-            packed_assignment_cached,
-        )
 
-        packed = pack_clusters_from_packed(
-            packed_assignment_cached(art, table), cents, codec
-        )
-    else:
-        # fixed-centroid / derived artifacts carry no prebuilt blob
-        # table: collect the assignment rows directly — ONE action —
-        # instead of first materializing a packed blob DataFrame the
-        # broadcast immediately collects anyway (the lazy
-        # pack_assignment route costs a sizes aggregate + the pack
-        # shuffle + a cache count + the blob collect: four driver
-        # round-trips; r13 measured them as most of the fixed-centroid
-        # search wall at catalogue scale).  Bundle contents are
-        # identical (same dtypes, ascending cluster ids; within-cluster
-        # row order is irrelevant to results — distances are per-row
-        # and selection ties break on (dist, id)).  The over-threshold
-        # partitioned scan still packs lazily via
-        # packed_assignment_cached.
-        packed = pack_clusters(
-            art.tables[table],
-            "vec" if codec is None else "codes",
-            cents,
-            codec,
-        )
-    if packed.nbytes() > threshold:
-        art.params["_serving_bc"] = None
-        return None
-    bc = spark.sparkContext.broadcast(packed)
-    art.params["_serving_bc"] = bc
-    return bc
+    def estimate() -> int:
+        n = art.tables[table].count()
+        if codec is None:
+            width = 4 * cents.shape[1]
+        elif isinstance(codec, PQCodec):
+            width = codec.m * (1 if codec.ksub <= 256 else 2)
+        elif isinstance(codec, PCACodec):
+            width = 4 * codec.dim_out  # float32 reduced coordinates
+        elif isinstance(codec, SQfp16Codec):
+            width = 2 * cents.shape[1]  # fp16 bit patterns
+        else:
+            width = cents.shape[1]  # SQ8: one byte per dim packed
+        # gate on what a worker actually holds: packed payload + ids PLUS
+        # the packed scan state (float64 matrix + float32 downcast +
+        # norms, ~12 bytes × dim per row).  Gating on packed bytes alone
+        # let a 57 MB SQ8 index through whose decode is 460 MB — every
+        # worker then pays a one-shot full-index decode and the "fast
+        # path" ran 30x slower than the partitioned scan.
+        decoded = 12 * cents.shape[1] + 12
+        return n * (width + decoded + 8)
+
+    def pack(_threshold):
+        if (
+            art.tables.get("packed") is not None
+            or art.params.get("_packed_df") is not None
+        ):
+            from vectordb_retrieval_spark.functions.kernels import (
+                packed_assignment_cached,
+            )
+
+            packed = pack_clusters_from_packed(
+                packed_assignment_cached(art, table), cents, codec
+            )
+        else:
+            # fixed-centroid / derived artifacts carry no prebuilt blob
+            # table: collect the assignment rows directly — ONE action —
+            # instead of first materializing a packed blob DataFrame the
+            # broadcast immediately collects anyway (the lazy
+            # pack_assignment route costs a sizes aggregate + the pack
+            # shuffle + a cache count + the blob collect: four driver
+            # round-trips; r13 measured them as most of the fixed-
+            # centroid search wall at catalogue scale).  Bundle contents
+            # are identical (same dtypes, ascending cluster ids; within-
+            # cluster row order is irrelevant to results — distances are
+            # per-row and selection ties break on (dist, id)).  The
+            # over-threshold partitioned scan still packs lazily via
+            # packed_assignment_cached.
+            packed = pack_clusters(
+                art.tables[table],
+                "vec" if codec is None else "codes",
+                cents,
+                codec,
+            )
+        return packed, packed.nbytes(), None
+
+    got = transport.broadcast_cached(
+        art, "_serving_bc", spark, threshold, pack, estimate
+    )
+    return None if got is None else got.bc
 
 
 # slice-grouping threshold for _broadcast_query_plan: past this many
