@@ -507,6 +507,17 @@ def test_bm25_degenerate_and_tricky_terms(spark):
     assert mixed == want
 
 
+def test_bm25_rank_rejects_streaming_docs(spark, tmp_path):
+    """The corpus statistics are one eager job at construction, which
+    cannot run on a stream: the guard names the contract instead of
+    Spark's 'queries with streaming sources' error."""
+    stream = spark.readStream.schema("doc_id long, text string").parquet(
+        str(tmp_path)
+    )
+    with pytest.raises(ValueError, match="eagerly"):
+        bm25_rank(stream, ["spark"])
+
+
 def test_term_match_pattern_edges():
     from vectordb_retrieval_spark.operators.text_retrieval import (
         _term_match_pattern,

@@ -56,13 +56,30 @@ def tokens_expr(col: Column) -> Column:
 
 def word_shingles(col: Column, n: int = 3) -> Column:
     """Distinct n-word shingles of the token list (empty if < n tokens)."""
-    toks = tokens_expr(col)
+    return token_shingles(tokens_expr(col), n)
+
+
+def token_shingles(toks: Column, n: int = 3) -> Column:
+    """word_shingles over an already-split token array.  ``toks`` is
+    evaluated once per shingle inside the transform lambda, so pass a
+    bound column (see _tokenized), not an expression."""
     idx = F.sequence(F.lit(0), F.size(toks) - n)
     shingles = F.transform(
         idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))
     )
     return F.when(F.size(toks) >= n, F.array_distinct(shingles)).otherwise(
         F.array().cast("array<string>")
+    )
+
+
+def _tokenized(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, _toks): each document split ONCE behind a Generate barrier.
+    explode(array(x)) keeps Projects from collapsing through it, so the
+    shingle transforms above read ``_toks`` as an attribute instead of
+    re-running the split per shingle (textops.chunk_documents, curate)."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.explode(F.array(tokens_expr(F.col(text_col)))).alias("_toks"),
     )
 
 
@@ -118,13 +135,14 @@ def _minhash_wide(
     remove shuffles outright).  The short-doc filter tests token count
     (cheap) rather than size(sh) so Catalyst's filter pushdown cannot
     duplicate the shingle+hash pipeline below the exchange."""
-    toks_ok = F.size(tokens_expr(F.col(text_col))) >= shingle_n
     hs = F.transform(
-        word_shingles(F.col(text_col), shingle_n),
+        token_shingles(F.col("_toks"), shingle_n),
         lambda s: hash60(s) % MERSENNE_P,
     )
-    wide = df.filter(toks_ok).select(
-        F.col(id_col).alias("id"), hs.alias("hs")
+    wide = (
+        _tokenized(df, id_col, text_col)
+        .filter(F.size("_toks") >= shingle_n)
+        .select("id", hs.alias("hs"))
     )
     coeffs = perm_coeffs(n_perm)
     mins = [
@@ -232,9 +250,8 @@ def minhash_verified_pairs(
     # DUPLICATED the whole shingle transform (once in the pushed filter,
     # once in the projection — the §4.4 double-evaluation shape, with
     # JVM expressions instead of a UDF; seen in the r13 before-plan).
-    t = df.select(
-        F.col(id_col).alias("id"),
-        word_shingles(F.col(text_col), shingle_n).alias("sh"),
+    t = _tokenized(df, id_col, text_col).select(
+        "id", token_shingles(F.col("_toks"), shingle_n).alias("sh")
     )
     # one join against the shingle table, not two: melt each candidate
     # pair to (a, b, id) rows, attach shingles by id, fold back.  The

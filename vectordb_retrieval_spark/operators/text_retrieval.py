@@ -124,6 +124,15 @@ def bm25_rank(
 ) -> DataFrame:
     """BM25 document ranking for a bag of query terms.
 
+    Eager at construction: the corpus statistics (document count,
+    average length, per-term document frequencies) are computed by one
+    Spark job while this call builds the DataFrame, and inlined into the
+    returned plan as literals.  The scored rows are read from ``docs``
+    again when the result runs, so ``docs`` must be a stable source: a
+    source that changes in between scores against stale statistics.
+    A streaming ``docs`` raises ``ValueError`` (the job cannot run on
+    it); rank each micro-batch instead.
+
     ``round_scores`` rounds the score to that many decimals BEFORE
     ranking: summation order across partitions is engine-specific, so
     raw float scores can differ at the last ulp between runs/engines
@@ -151,6 +160,11 @@ def bm25_rank(
       (the old groupBy sum accumulated in shuffle-arrival order; both
       land on the same 6-dp grid the callers round to).
     """
+    if docs.isStreaming:
+        raise ValueError(
+            "bm25_rank computes its corpus statistics eagerly and cannot run "
+            "on a streaming DataFrame; call it on each micro-batch instead"
+        )
     nt = len(query_terms)
     toks_expr = F.filter(
         F.split(F.col(text_col), TOKEN_PATTERN),
@@ -199,10 +213,9 @@ def bm25_rank(
     # and inline as literals (r14): the broadcast-join form paid a
     # separate broadcast-build job plus a BroadcastNestedLoopJoin node
     # per invocation just to attach 7 constants to every row.  The
-    # collect is the same single aggregate job, Catalyst constant-folds
-    # the literal idf arithmetic with the same JVM double semantics the
-    # per-row columns had, and every invocation still recomputes the
-    # stats from the input (eager-at-construction, like global_rank).
+    # collect is the same single aggregate job, and Catalyst
+    # constant-folds the literal idf arithmetic with the same JVM double
+    # semantics the per-row columns had (contract in the docstring).
     srow = per.agg(
         F.count("*").alias("n_docs"),
         F.avg("dl").alias("avgdl"),

@@ -12,6 +12,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding this package: Python workers need it on their
+# path to start the daemon module below, wherever the driver started
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "vectordb_retrieval_spark",
@@ -24,7 +28,12 @@ def get_spark(
     Defaults: ``local[$SPARK_GRAFT_CPUS]`` (falls back to ``local[*]``),
     shuffle partitions ~= cores (not the 200 default, which
     over-parallelizes local runs), AQE + skew-join handling enabled so
-    the same plans re-optimize at cluster scale.
+    the same plans re-optimize at cluster scale.  Python workers start
+    from :mod:`vectordb_retrieval_spark.pyworker`, which stops each task
+    re-reading Spark's zip archives; ``extra_conf`` can set
+    ``spark.python.daemon.module`` back to ``pyspark.daemon``, and a
+    ``spark.executorEnv.PYTHONPATH`` it gives is kept after this
+    package's directory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -68,8 +77,12 @@ def get_spark(
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
+        .config("spark.python.daemon.module", "vectordb_retrieval_spark.pyworker")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    worker_path = [_PACKAGE_PARENT, extra_conf.pop("spark.executorEnv.PYTHONPATH", "")]
+    builder = builder.config("spark.executorEnv.PYTHONPATH", os.pathsep.join(filter(None, worker_path)))
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
