@@ -91,6 +91,32 @@ def test_multi_k_sweep(spark):
     assert rows[2]["recall"] == 1.0
 
 
+@pytest.mark.parametrize("labeled", [False, True], ids=["generic", "labeled"])
+def test_duplicate_gt_id_takes_lowest_rank(spark, labeled):
+    """A ground-truth id listed twice matches at its LOWEST rank,
+    whatever order the rows reach the per-query collect: here one
+    partition holds the rank-2 duplicate first, so an unsorted gt list
+    would judge the top-1 prediction outside gt@1."""
+    from pyspark.sql import functions as F
+
+    from vectordb_retrieval_spark.metrics import (
+        retrieval_metrics_multi,
+        retrieval_metrics_multi_labeled,
+    )
+
+    gt = make_ranked(spark, [(0, 5, 2), (0, 5, 1)])
+    pred = make_ranked(spark, [(0, 5, 1)])
+    if labeled:
+        ranked = (
+            gt.withColumn("which", F.lit(0))
+            .unionByName(pred.withColumn("which", F.lit(1)))
+            .coalesce(1)
+        )
+        rows = retrieval_metrics_multi_labeled(ranked, [1]).collect()
+    else:
+        rows = retrieval_metrics_multi(pred, gt.coalesce(1), [1]).collect()
+    assert rows[0]["recall"] == 1.0
+
 def test_serving_latency_stats_matches_numpy(spark):
     """serving_latency_stats ≡ the reference arithmetic: per-query
     times = wall/n per repeat (experiment_runner.py:434-437), stats =

@@ -257,25 +257,23 @@ def query_chunks(
 def collect_or_chunk(
     query_df: DataFrame, qid_col: str, vec_col: str, recurse
 ):
-    """The shared searcher-side query-collect gate: returns
-    ``(qids, qmat, None)`` when the frame fits the broadcast gate
-    (memoized single-job collect), else ``(None, None, result)`` where
-    result is the union of ``recurse(chunk)`` over qid-hash chunks —
-    so no serving path ever materializes an unbounded query frame on
-    the driver."""
+    """The shared query-collect gate of every search path: returns
+    ``(bcq, None)`` when the frame fits the broadcast gate — ``bcq`` is
+    the memoized ``(qids, qmat)`` query broadcast — else
+    ``(None, result)`` where result is the union of ``recurse(chunk)``
+    over qid-hash chunks, so no serving path ever materializes an
+    unbounded query frame on the driver.  ``recurse`` keeps the gate
+    enabled: a hash-skewed chunk that still exceeds it re-chunks under
+    a fresh salt, and ≤1-row frames always broadcast, so the recursion
+    terminates."""
     bcq = query_broadcast_cached(query_df, qid_col, vec_col)
     if bcq is not None:
-        qids, qmat = bcq.value
-        return qids, qmat, None
+        return bcq, None
     from functools import reduce
 
-    return (
-        None,
-        None,
-        reduce(
-            DataFrame.unionByName,
-            [recurse(c) for c in query_chunks(query_df, qid_col, vec_col)],
-        ),
+    return None, reduce(
+        DataFrame.unionByName,
+        [recurse(c) for c in query_chunks(query_df, qid_col, vec_col)],
     )
 
 

@@ -110,7 +110,12 @@ def retrieval_metrics_multi(pred: DataFrame, gt: DataFrame, ks: list[int]) -> Da
     Single pass: the ranked rows are exploded over the cutoff list and
     every metric aggregates by (k, qid) — the expensive upstream plans
     (usually exact-kNN crossJoins) execute once for ALL cutoffs, not
-    once per cutoff as a per-k union would."""
+    once per cutoff as a per-k union would.
+
+    Precondition: ``(qid, id)`` is unique in ``gt`` (and in ``pred``),
+    as every ranked result this engine emits is.  A duplicated gt id
+    counts twice in the gt set sizes; its matched rank is the lowest
+    of its ranks."""
     ks = sorted({int(k) for k in ks})
     kmax = ks[-1]
     # r14 (guide §2.4): the per-(k, qid) work is candidate-bounded
@@ -134,9 +139,14 @@ def retrieval_metrics_multi(pred: DataFrame, gt: DataFrame, ks: list[int]) -> Da
             F.collect_list(F.struct(F.col("rank"), F.col("id")))
         ).alias("pl")
     )
+    # sorted like pl: the fold reads a pred id's FIRST gt match, so an
+    # id listed twice must resolve to its lowest rank, not to whichever
+    # row the shuffle delivered first
     gl = g.groupBy("qid").agg(
-        F.collect_list(
-            F.struct(F.col("gt_rank").alias("rank"), F.col("id"))
+        F.sort_array(
+            F.collect_list(
+                F.struct(F.col("gt_rank").alias("rank"), F.col("id"))
+            )
         ).alias("gl")
     )
     # right-anchored on the ground-truth query set: queries with no
@@ -172,10 +182,13 @@ def retrieval_metrics_multi_labeled(
                     )
                 )
             ).alias("pl"),
-            F.collect_list(
-                F.when(
-                    F.col("which") == gt_which,
-                    F.struct(F.col("rank"), F.col("id")),
+            # sorted for the same first-gt-match rule as the generic path
+            F.sort_array(
+                F.collect_list(
+                    F.when(
+                        F.col("which") == gt_which,
+                        F.struct(F.col("rank"), F.col("id")),
+                    )
                 )
             ).alias("gl"),
         )
@@ -193,7 +206,7 @@ def _metrics_from_lists(
     tail of ``retrieval_metrics_multi`` / ``..._labeled``.  ``joined``
     carries (qid, pl, gl): pl = rank-ascending predicted (rank, id)
     structs truncated at kmax (null or empty when the query predicted
-    nothing), gl = the full ground-truth (rank, id) set.
+    nothing), gl = the full rank-ascending ground-truth (rank, id) set.
 
     Every per-(k, qid) quantity is a higher-order fold over those tiny
     candidate-bounded arrays, so the whole tail is one projection —

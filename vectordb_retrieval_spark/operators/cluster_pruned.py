@@ -57,10 +57,9 @@ CP_FUSE_EXTRA_FLOPS = 1e10
 
 def _scan_tasks(n_queries: int) -> int | None:
     """Partitioned-scan stage width for a serving batch — module-level
-    so the policy is A/B-able per kernel (cf. serving's
-    _SLICE_GROUP_THRESHOLD).  Small batches shrink the stage so
-    per-task python dispatch doesn't dominate; past 4096 queries the
-    scan keeps the index's own partitioning."""
+    so the policy is A/B-able per kernel.  Small batches shrink the
+    stage so per-task python dispatch doesn't dominate; past 4096
+    queries the scan keeps the index's own partitioning."""
     return max(8, n_queries // 64) if n_queries <= 4096 else None
 
 

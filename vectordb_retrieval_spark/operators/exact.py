@@ -63,8 +63,8 @@ SCORE_TILE_ELEMS = 2_000_000
 # right plan for serving-sized batches but OOMs the driver on a
 # 100×-scale query frame.  The gate, the memoized single-probe-job
 # collect+broadcast, and the salted qid-hash chunking are the shared
-# serving machinery in functions/kernels.py (query_broadcast_cached /
-# query_chunks): gate-passing frames collect and broadcast ONCE per
+# serving machinery in functions/kernels.py (collect_or_chunk, the gate
+# every searcher uses): gate-passing frames collect and broadcast ONCE per
 # frame and every subsequent exact_knn call over the same frame reuses
 # both; past-gate frames chunk and union (each chunk re-broadcasts;
 # the base table is scanned once per chunk — the scale-correct trade
@@ -111,10 +111,7 @@ def exact_knn(
     spark = base_df.sparkSession
     import weakref
 
-    from vectordb_retrieval_spark.functions.kernels import (
-        query_broadcast_cached,
-        query_chunks,
-    )
+    from vectordb_retrieval_spark.functions.kernels import collect_or_chunk
 
     mk = (
         "knn", k, metric, id_col, vec_col, qid_col, qvec_col, pad,
@@ -125,36 +122,23 @@ def exact_knn(
     # the plan's base frame (and custom metric) are the same objects
     if hit is not None and hit[0]() is base_df:
         return hit[1]
-    bc = query_broadcast_cached(query_df, qid_col, qvec_col)
-    if bc is None:
-        # past-threshold batch: never materialize the full query frame
-        # on the driver — chunk by qid hash and union the chunk top-ks.
-        # The recursion keeps the gate ENABLED (advisor r11): a hash-
-        # skewed chunk that still exceeds the gate re-chunks under a
-        # fresh salt instead of collecting anyway; ≤1-row frames always
-        # broadcast, so the recursion terminates.
-        from functools import reduce
-
-        parts = [
-            exact_knn(
-                base_df,
-                chunk,
-                k,
-                metric,
-                id_col,
-                vec_col,
-                qid_col,
-                qvec_col,
-                pad=False,
-            )
-            for chunk in query_chunks(query_df, qid_col, qvec_col)
-        ]
-        result = reduce(DataFrame.unionByName, parts)
+    # past-threshold batch: never materialize the full query frame on
+    # the driver — the chunk top-ks are unpadded and the union is padded
+    # once
+    bc, chunked = collect_or_chunk(
+        query_df,
+        qid_col,
+        qvec_col,
+        lambda c: exact_knn(
+            base_df, c, k, metric, id_col, vec_col, qid_col, qvec_col
+        ),
+    )
+    if chunked is not None:
         if pad:
-            result = pad_topk(
-                result, query_df.select(F.col(qid_col).alias("qid")), k
+            chunked = pad_topk(
+                chunked, query_df.select(F.col(qid_col).alias("qid")), k
             )
-        return result
+        return chunked
     qids, qmat = bc.value
     if len(qids) == 0:  # empty serving batch: empty result, same schema
         return spark.createDataFrame([], _CAND_SCHEMA + ", rank int")
@@ -252,10 +236,7 @@ def exact_range_search(
     spark = base_df.sparkSession
     import weakref
 
-    from vectordb_retrieval_spark.functions.kernels import (
-        query_broadcast_cached,
-        query_chunks,
-    )
+    from vectordb_retrieval_spark.functions.kernels import collect_or_chunk
 
     mk = (
         "range", radius, metric, id_col, vec_col, qid_col, qvec_col,
@@ -264,28 +245,16 @@ def exact_range_search(
     hit = _plans().get(query_df, mk)
     if hit is not None and hit[0]() is base_df:
         return hit[1]
-    bc = query_broadcast_cached(query_df, qid_col, qvec_col)
-    if bc is None:
-        # gate stays enabled in the recursion (see exact_knn): skewed
-        # chunks re-chunk under a fresh salt, never a forced collect
-        from functools import reduce
-
-        return reduce(
-            DataFrame.unionByName,
-            [
-                exact_range_search(
-                    base_df,
-                    chunk,
-                    radius,
-                    metric,
-                    id_col,
-                    vec_col,
-                    qid_col,
-                    qvec_col,
-                )
-                for chunk in query_chunks(query_df, qid_col, qvec_col)
-            ],
-        )
+    bc, chunked = collect_or_chunk(
+        query_df,
+        qid_col,
+        qvec_col,
+        lambda c: exact_range_search(
+            base_df, c, radius, metric, id_col, vec_col, qid_col, qvec_col
+        ),
+    )
+    if chunked is not None:
+        return chunked
     qids, qmat = bc.value
     if len(qids) == 0:  # empty serving batch: empty result, same schema
         return spark.createDataFrame([], _CAND_SCHEMA)

@@ -74,11 +74,12 @@ class Searcher:
         (no serving path holds an unbounded query frame on the driver),
         or the empty result for an empty batch.  ``normalize``
         L2-normalizes the query rows (cosine)."""
-        qids, qmat, chunked = kernels.collect_or_chunk(
+        bcq, chunked = kernels.collect_or_chunk(
             query_df, qid_col, vec_col, recurse
         )
         if chunked is not None:
             return None, None, chunked
+        qids, qmat = bcq.value
         if len(qids) == 0:
             empty = query_df.sparkSession.createDataFrame([], RESULT_SCHEMA)
             return None, None, empty

@@ -14,7 +14,9 @@ broadcast-join threshold encodes and the same one graph_ann.py applies
 to its shard blobs (graph_ann.py:507-518): broadcast the packed index
 once, scan the QUERY table, and run each query's entire
 probe → decode → scan → top-k pipeline inside a single task.  One
-narrow mapInPandas job, zero shuffle, exactly k rows out per query.
+narrow mapInArrow job driven by the query batch (``query_driven_job``,
+which the LSH and cluster-pruned kernels share), zero shuffle, exactly
+k rows out per query.
 
 Result parity: probe selection (nprobe nearest centroids, ties by
 cluster id), decode, float64 distance arithmetic, and (dist, id)
@@ -404,13 +406,6 @@ def artifact_serving_broadcast(
     return None if got is None else got.bc
 
 
-# slice-grouping threshold for _broadcast_query_plan: past this many
-# query slices, two slices share one python task on a 2-thread pool
-# (GIL-free NumPy kernels overlap; dispatch tail halves).  Module-level
-# so the policy is A/B-able per kernel — r13 re-measured the r12 pq/lsh
-# serving rows under both settings (see OPTIMIZATION_r13.md).
-_SLICE_GROUP_THRESHOLD = 16
-
 # padding sentinel for ragged candidate blocks: sorts after every real
 # id at equal (infinite) distance, filtered from the emitted rows
 _PAD_ID = np.int64(1) << 62
@@ -571,10 +566,11 @@ def search_batch(
     exact: bool = False,
 ) -> pd.DataFrame | None:
     """One query batch's probe → scan → top-k against a packed index —
-    the whole per-task body of ``broadcast_probe_search``, module-level
-    so it can be unit-tested and profiled outside Spark.  ``qmat`` is
-    float32, already normalized when the metric requires it.  Returns
-    the (qid, id, dist, rank) frame, or None for an empty batch.
+    the kernel ``broadcast_probe_search`` hands to ``query_driven_job``,
+    module-level so it can be unit-tested and profiled outside Spark.
+    ``qmat`` is float32, already normalized when the metric requires
+    it.  Returns the (qid, id, dist, rank) frame, or None for an empty
+    batch.
 
     Two implementations with IDENTICAL results:
 
@@ -1084,6 +1080,24 @@ def _search_batch_exact(
     )
 
 
+def _arrow_result(out) -> Iterator:
+    """A kernel's (qid, id, dist, rank) frame as one Arrow batch —
+    zero-copy over its NumPy columns; nothing for an empty result."""
+    import pyarrow as pa
+
+    if out is None or not len(out):
+        return
+    yield pa.RecordBatch.from_arrays(
+        [
+            pa.array(out["qid"].to_numpy()),
+            pa.array(out["id"].to_numpy()),
+            pa.array(out["dist"].to_numpy()),
+            pa.array(out["rank"].to_numpy().astype(np.int32, copy=False)),
+        ],
+        names=["qid", "id", "dist", "rank"],
+    )
+
+
 def query_driven_job(
     query_df: DataFrame,
     qid_col: str,
@@ -1091,26 +1105,27 @@ def query_driven_job(
     batch_fn,
     rows_per_task: int = 512,
 ) -> DataFrame:
-    """Generic serving-job driver for kernels of the shape
-    ``batch_fn(qids, float32 qmat) -> pd.DataFrame(qid,id,dist,rank)``:
-    gate-passing query frames broadcast their collected matrix once
-    (WeakKey memo) and the job is a range frame whose tasks slice the
-    broadcast — no query bytes cross the JVM→Python boundary per
-    search; past-gate frames scan the query table.  Per-query results
-    must be batch-independent (every searcher kernel here is).
+    """The serving-job driver for every broadcast-index kernel, of the
+    shape ``batch_fn(qids, float32 qmat) -> pd.DataFrame(qid,id,dist,rank)``
+    (or None): gate-passing query frames broadcast their collected
+    matrix once (WeakKey memo) and the job is a range frame whose tasks
+    slice the broadcast — no query bytes cross the JVM→Python boundary
+    per search (an identity mapInArrow over a 65k-query batch measured
+    0.36 s of its 0.56 s search wall); past-gate frames scan the query
+    table.  Per-query results must be batch-independent (every
+    searcher kernel here is), so both plans return identical rows
+    (pinned in tests/test_ann_operators.py).
 
     ``rows_per_task`` sets the per-task query-slice floor for the
     broadcast plan — an int, or a callable ``n_queries -> int`` so a
     kernel can pick the floor per batch size (the collected count is
     only known here).  The 512 default amortizes Python-worker dispatch
-    for CHEAP kernels (probe-few-clusters: sq8/IVF/LSH); compute-heavy
+    for CHEAP kernels (probe-few-clusters: sq8/IVF/PQ/LSH); compute-heavy
     kernels whose per-query work rivals an exact scan (cluster-pruned's
     two-phase bound search) pass a smaller floor so mid-size batches
     still spread across the executor pool — the r11 routing left the
     2048-query cluster-pruned batch on 4 of 32 cores and halved its
     serving QPS (r11 judge "what's wrong" #1)."""
-    import pyarrow as pa
-
     from vectordb_retrieval_spark.functions.kernels import (
         num_partitions_cached,
         query_broadcast_cached,
@@ -1118,10 +1133,10 @@ def query_driven_job(
 
     spark = query_df.sparkSession
     schema = "qid long, id long, dist double, rank int"
+    par = spark.sparkContext.defaultParallelism
     bcq = query_broadcast_cached(query_df, qid_col, vec_col)
     if bcq is not None:
-        n = len(bcq.value[0])
-        par = spark.sparkContext.defaultParallelism
+        n = len(bcq.value[0])  # driver-side broadcast read: no job
         rpt = rows_per_task(n) if callable(rows_per_task) else rows_per_task
         n_tasks = max(1, min(par, -(-n // max(1, rpt))))
         rng = spark.range(0, n_tasks, 1, n_tasks)
@@ -1132,20 +1147,9 @@ def query_driven_job(
                 for c in rb.column(0).to_pylist():
                     s = (c * n) // n_tasks
                     e = ((c + 1) * n) // n_tasks
-                    if e <= s:
-                        continue
-                    out = batch_fn(qids_all[s:e], qmat_all[s:e])
-                    if out is not None and len(out):
-                        yield pa.RecordBatch.from_arrays(
-                            [
-                                pa.array(out["qid"].to_numpy()),
-                                pa.array(out["id"].to_numpy()),
-                                pa.array(out["dist"].to_numpy()),
-                                pa.array(
-                                    out["rank"].to_numpy().astype("int32")
-                                ),
-                            ],
-                            names=["qid", "id", "dist", "rank"],
+                    if e > s:
+                        yield from _arrow_result(
+                            batch_fn(qids_all[s:e], qmat_all[s:e])
                         )
 
         return rng.mapInArrow(kernel, schema=schema)
@@ -1153,111 +1157,33 @@ def query_driven_job(
     q = query_df.select(
         F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec")
     )
-    par = spark.sparkContext.defaultParallelism
+    # past-gate query frames keep the distributed scan: spreading the
+    # frame across the executor pool costs one round-robin exchange and
+    # sets the search's whole parallelism.  The partition count is read
+    # via a WeakKey memo on the caller's frame: a narrow select preserves
+    # partitioning, and the plain .rdd.getNumPartitions() is a
+    # DataFrame→RDD plan conversion paid per SEARCH otherwise
     if num_partitions_cached(query_df) < par:
         q = q.repartition(par)
 
-    def kernel_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = batch_fn(
-                pdf["qid"].to_numpy(dtype=np.int64),
-                np.vstack(pdf["vec"].to_numpy()).astype(np.float32),
-            )
-            if out is not None and len(out):
-                yield out
-
-    return q.mapInPandas(kernel_scan, schema=schema)
-
-
-def _broadcast_query_plan(
-    spark,
-    bcq,
-    bc_index,
-    nprobe: int | None,
-    k: int,
-    metric: str,
-    norm_q: bool,
-    accum,
-    allowed_bc,
-    block_rows: int,
-    rows_per_task: int = 512,
-) -> DataFrame:
-    """Serving job over a broadcast query matrix: ``spark.range`` of
-    chunk indices drives ``search_batch`` calls per task, each slicing
-    its queries from the broadcast — no query bytes cross the
-    JVM→Python boundary per search.  The query-slice grid targets one
-    ≥``rows_per_task``-row slice per core; when that needs more than 16
-    python tasks, slices are grouped TWO per task and run on a 2-thread
-    pool inside the task.  Rationale (measured on this pool): python
-    task dispatch is flat to ~16 in-flight tasks then costs ~5 ms/task
-    — a 32-task stage pays ~85 ms of dispatch tail, most of the fixed
-    cost of a 65k-query sq8 batch.  ``search_batch`` is NumPy
-    GEMM/ufunc/argpartition work that releases the GIL, so two slices
-    genuinely overlap in one worker (A/B: 158.5k → 175.2k QPS at 65k
-    queries; 4 threads/task regressed — GIL contention).  The slice
-    grid is UNCHANGED, so per-slice GEMM shapes — and therefore results
-    — are identical to the one-slice-per-task plan."""
-    import pyarrow as pa
-
-    n = len(bcq.value[0])  # driver-side broadcast read: no job
-    par = spark.sparkContext.defaultParallelism
-    n_slices = max(1, min(par, -(-n // max(1, rows_per_task))))
-    threads_per_task = 2 if n_slices > _SLICE_GROUP_THRESHOLD else 1
-    n_tasks = -(-n_slices // threads_per_task)
-    rng = spark.range(0, n_tasks, 1, n_tasks)
-
-    def kernel(batches):
-        idx: PackedClusters = bc_index.value
-        if allowed_bc is not None:
-            idx = idx.filtered(allowed_bc.value)
-        qids_all, qmat_all = bcq.value
-
-        def one(slice_i: int):
-            s = (slice_i * n) // n_slices
-            e = ((slice_i + 1) * n) // n_slices
-            if e <= s:
-                return None
-            qmat = qmat_all[s:e]
-            if norm_q:
-                qmat = normalize_rows(
-                    qmat.astype(np.float64)
-                ).astype(np.float32)
-            return search_batch(
-                idx, qids_all[s:e], qmat, nprobe, k, metric,
-                accum=accum, block_rows=block_rows,
-            )
-
+    def kernel_scan(batches):
+        # the query vectors arrive as one flat float buffer per Arrow
+        # batch — reshape instead of the per-row vstack a pandas list
+        # column forces (~20% of the fixed per-job cost at serving
+        # batch sizes)
         for rb in batches:
-            for c in rb.column(0).to_pylist():
-                slices = range(
-                    c * threads_per_task,
-                    min((c + 1) * threads_per_task, n_slices),
-                )
-                if threads_per_task == 1:
-                    outs = [one(i) for i in slices]
-                else:
-                    from concurrent.futures import ThreadPoolExecutor
+            if rb.num_rows == 0:
+                continue
+            qids = rb.column(0).to_numpy(zero_copy_only=False).astype(
+                np.int64, copy=False
+            )
+            vals = rb.column(1).flatten().to_numpy(zero_copy_only=False)
+            qmat = np.ascontiguousarray(
+                vals.reshape(rb.num_rows, -1), dtype=np.float32
+            )
+            yield from _arrow_result(batch_fn(qids, qmat))
 
-                    with ThreadPoolExecutor(len(slices)) as ex:
-                        outs = list(ex.map(one, slices))
-                for out in outs:
-                    if out is None:
-                        continue
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(out["qid"].to_numpy()),
-                            pa.array(out["id"].to_numpy()),
-                            pa.array(out["dist"].to_numpy()),
-                            pa.array(out["rank"].to_numpy()),
-                        ],
-                        names=["qid", "id", "dist", "rank"],
-                    )
-
-    return rng.mapInArrow(
-        kernel, schema="qid long, id long, dist double, rank int"
-    )
+    return q.mapInArrow(kernel_scan, schema=schema)
 
 
 def broadcast_probe_search(
@@ -1276,7 +1202,7 @@ def broadcast_probe_search(
     """Search a broadcast PackedClusters index: each task probes and
     scans for its own queries and emits their final (qid, id, dist,
     rank) top-k — rank 1..k ascending by (dist, id), the same contract
-    as ``topk_per_query``.
+    as ``topk_per_query``.  The job itself is ``query_driven_job``.
 
     ``nprobe=None`` (or >= nlist, or no centroids) scans every cluster
     — the exhaustive form standalone PQ uses.  ``normalize_queries``
@@ -1285,79 +1211,19 @@ def broadcast_probe_search(
     ``allowed_bc`` (a broadcast sorted int64 id array) turns the search
     into a PRE-filtered one via ``PackedClusters.filtered``.
     """
-    spark = query_df.sparkSession
-    if normalize_queries is None:
-        normalize_queries = metric == "cosine"
-    norm_q = normalize_queries
-    # broadcast-query fast plan (r10 judge "next round" #2): the one
-    # recurring per-search input cost of this serving plan was shipping
-    # the query vectors JVM→Arrow→Python on every job — an identity
-    # mapInArrow over the 65k-query bench batch measures 0.36 s of its
-    # 0.56 s wall.  Gate-passing frames broadcast their collected
-    # (qids, qmat) ONCE (WeakKey memo, reused across searches and
-    # reps); the search job is then a tiny range frame whose tasks
-    # slice their queries from the broadcast.  Per-query results are
-    # chunk-independent, so output is identical to the scan plan
-    # (pinned in tests/test_ann_operators.py).
-    from vectordb_retrieval_spark.functions.kernels import (
-        num_partitions_cached,
-        query_broadcast_cached,
+    norm_q = (
+        metric == "cosine" if normalize_queries is None else normalize_queries
     )
 
-    bcq = query_broadcast_cached(query_df, qid_col, vec_col)
-    if bcq is not None:
-        return _broadcast_query_plan(
-            spark, bcq, bc_index, nprobe, k, metric, norm_q,
-            accum, allowed_bc, block_rows,
-        )
-    q = query_df.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
-    # past-gate query frames keep the distributed scan: spreading the
-    # frame across the executor pool costs one round-robin exchange and
-    # sets the search's whole parallelism
-    par = spark.sparkContext.defaultParallelism
-    # partition count read via a WeakKey memo on the caller's frame: a
-    # narrow select preserves partitioning, and the plain
-    # .rdd.getNumPartitions() is a DataFrame→RDD plan conversion paid
-    # per SEARCH otherwise (serving batches reuse the same query frame)
-    if num_partitions_cached(query_df) < par:
-        q = q.repartition(par)
-
-    def kernel(batches):
-        # Arrow-native (mapInArrow): the query vectors arrive as one
-        # flat float buffer per batch — reshape instead of the per-row
-        # vstack a pandas list column forces, and results go back as
-        # zero-copy Arrow arrays.  Worth ~20% of the fixed per-job cost
-        # at serving batch sizes.
-        import pyarrow as pa
-
+    def batch_fn(qids: np.ndarray, qmat: np.ndarray):
         idx: PackedClusters = bc_index.value
         if allowed_bc is not None:
             idx = idx.filtered(allowed_bc.value)
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            qids = rb.column(0).to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-            vals = rb.column(1).flatten().to_numpy(zero_copy_only=False)
-            qmat = np.ascontiguousarray(
-                vals.reshape(rb.num_rows, -1), dtype=np.float32
-            )
-            if norm_q:
-                qmat = normalize_rows(qmat.astype(np.float64)).astype(np.float32)
-            out = search_batch(
-                idx, qids, qmat, nprobe, k, metric,
-                accum=accum, block_rows=block_rows,
-            )
-            if out is not None:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(out["qid"].to_numpy()),
-                        pa.array(out["id"].to_numpy()),
-                        pa.array(out["dist"].to_numpy()),
-                        pa.array(out["rank"].to_numpy()),
-                    ],
-                    names=["qid", "id", "dist", "rank"],
-                )
+        if norm_q:
+            qmat = normalize_rows(qmat.astype(np.float64)).astype(np.float32)
+        return search_batch(
+            idx, qids, qmat, nprobe, k, metric,
+            accum=accum, block_rows=block_rows,
+        )
 
-    return q.mapInArrow(kernel, schema="qid long, id long, dist double, rank int")
+    return query_driven_job(query_df, qid_col, vec_col, batch_fn)
