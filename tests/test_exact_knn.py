@@ -194,3 +194,31 @@ def test_query_collect_gate_chunks_past_threshold(spark, tiny_vectors, monkeypat
         map(tuple, exact_range_search(base_df, q2.select("qid", "vec"), 2.0).collect())
     )
     assert got_rs == want_rs
+
+
+@pytest.mark.parametrize("metric", ["l2", "cosine", "tie_l1"])
+def test_exact_knn_boundary_ties_resolve_by_id(spark, metric):
+    """Every base vector is identical, so every distance ties and the
+    (dist, id) top-5 is ids 0-4.  Ids are shuffled over 2 partitions:
+    a per-batch selection that keeps an arbitrary member of the tie
+    group drops the low ids before the window ever ranks them."""
+    from vectordb_retrieval_spark.functions.distance import register_metric
+
+    def l1_kernel(q, b):  # local: cloudpickle ships it by value
+        return np.abs(q[:, None, :] - b[None, :, :]).sum(-1)
+
+    register_metric("tie_l1", l1_kernel)
+    ids = np.random.RandomState(11).permutation(4000)
+    vec = [0.5, -1.0, 2.0, 0.25]
+    base_df = spark.createDataFrame(
+        spark.sparkContext.parallelize([(int(i), vec) for i in ids], 2),
+        "id long, vec array<float>",
+    )
+    query_df = make_vector_df(
+        spark, np.array([[1.0, 0.0, 0.5, 2.0], [-3.0, 1.0, 0.0, 1.0]], np.float32),
+        id_name="qid",
+    )
+    got = exact_knn(base_df, query_df, 5, metric).orderBy("qid", "rank").collect()
+    assert [(r["qid"], r["id"], r["rank"]) for r in got] == [
+        (q, i, i + 1) for q in (0, 1) for i in range(5)
+    ]

@@ -303,3 +303,37 @@ def test_labeled_single_k_matches_retrieval_metrics(spark):
     ]
     b = [tuple(r) for r in retrieval_metrics_multi_labeled(labeled, [2]).collect()]
     assert a == b
+
+
+def test_fused_pred_gt_boundary_ties_resolve_by_id(spark, tmp_path, monkeypatch):
+    """The fused metrics kernel (one scan, gt + truncated pred views)
+    and its past-gate ``exact_knn`` fallback keep the (dist, id) top-K
+    under total ties: identical vectors with shuffled ids over several
+    partitions must rank ids 0..K-1 for every query, on both paths."""
+    import numpy as np
+
+    from vectordb_retrieval_spark.driver_queries import metricsq
+    from vectordb_retrieval_spark.driver_queries.common import K
+    from vectordb_retrieval_spark.functions import kernels as K_mod
+
+    ids = np.random.RandomState(12).permutation(400)
+    vec = [0.5, -1.0, 2.0, 0.25] * 3
+    spark.createDataFrame(
+        [(int(i), vec) for i in ids], "vec_id long, embedding array<float>"
+    ).repartition(3).write.parquet(str(tmp_path / "embeddings.parquet"))
+    want = [(q, i, i + 1) for q in range(0, 400, 10) for i in range(K)]
+
+    def ranked(frame):
+        return [
+            (r["qid"], r["id"], r["rank"])
+            for r in frame.orderBy("qid", "rank").collect()
+        ]
+
+    fused, pred, gt = metricsq._pred_gt_labeled(spark, str(tmp_path))
+    assert fused is not None
+    assert ranked(pred) == want and ranked(gt) == want
+    # 40 queries past a 39-row gate: the two-plan exact_knn fallback
+    monkeypatch.setattr(K_mod, "QUERY_BC_MAX_ROWS", 39)
+    fallback, pred, gt = metricsq._pred_gt_labeled(spark, str(tmp_path))
+    assert fallback is None
+    assert ranked(pred) == want and ranked(gt) == want

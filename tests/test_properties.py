@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from hypothesis.extra.numpy import arrays
 
@@ -581,23 +581,89 @@ def test_substring_ops_match_python_model(spark, n_docs, doc_len, vocab, k, seed
     k=st.integers(1, 12),
     n_vals=st.integers(1, 4),
     seed=st.integers(0, 10_000),
+    ids_2d=st.booleans(),
+    n_pad=st.integers(0, 40),
+    fixed=st.none(),
+)
+# a boundary tie: the argpartition fast path alone would keep an
+# arbitrary member of the 0.5 group instead of ids 4 and 5
+@example(
+    n_rows=1, n_cols=6, k=4, n_vals=1, seed=0, ids_2d=False, n_pad=0,
+    fixed=(
+        np.array([[0.5, 0.2, 0.5, 0.1, 0.5, 0.9]]),
+        np.array([10, 20, 5, 30, 4, 40], dtype=np.int64),
+    ),
 )
 @settings(max_examples=120, deadline=None)
-def test_topk_cols_tiebreak_matches_full_sort(n_rows, n_cols, k, n_vals, seed):
-    """topk_cols_tiebreak == per-row full (dist, id) lexsort prefix for
-    any shape, margin saturation, and tie density (few distinct values
-    force massive boundary tie groups — the hard case)."""
-    import numpy as np
-
-    from vectordb_retrieval_spark.functions.kernels import topk_cols_tiebreak
+def test_topk_rows_matches_full_sort(
+    n_rows, n_cols, k, n_vals, seed, ids_2d, n_pad, fixed
+):
+    """topk_rows == per-row full (dist, id) lexsort prefix for any
+    shape, with shared (1-D) or per-row (2-D) ids, and tie density (few
+    distinct values force massive boundary tie groups — the hard case).
+    Up to ``n_pad`` trailing columns of each row are inf padding: every
+    finite candidate must still come out in (dist, id) order, ahead of
+    the padding."""
+    from vectordb_retrieval_spark.operators.topk import topk_rows
 
     rng = np.random.RandomState(seed)
-    vals = np.sort(rng.randn(n_vals))
-    dmat = vals[rng.randint(0, n_vals, size=(n_rows, n_cols))]
-    ids = rng.permutation(n_cols * 3)[:n_cols].astype(np.int64)
-    got_d, got_i = topk_cols_tiebreak(dmat, ids, k, margin=4)
-    kk = min(k, n_cols)
-    for r in range(n_rows):
-        order = np.lexsort((ids, dmat[r]))[:kk]
+    if fixed is not None:
+        dmat, ids = fixed
+    else:
+        vals = np.sort(rng.randn(n_vals))
+        dmat = vals[rng.randint(0, n_vals, size=(n_rows, n_cols))]
+        for r in range(n_rows):
+            dmat[r, n_cols - rng.randint(0, min(n_pad, n_cols) + 1) :] = np.inf
+        ids = np.stack(
+            [rng.permutation(n_cols * 3)[:n_cols] for _ in range(n_rows)]
+        ).astype(np.int64)
+        if not ids_2d:
+            ids = ids[0]
+    got_d, got_i = topk_rows(dmat, ids, k)
+    kk = min(k, dmat.shape[1])
+    assert got_d.shape == got_i.shape == (len(dmat), kk)
+    for r in range(len(dmat)):
+        row_ids = ids[r] if ids.ndim == 2 else ids
+        order = np.lexsort((row_ids, dmat[r]))[:kk]
+        fin = np.isfinite(dmat[r][order])
         assert (got_d[r] == dmat[r][order]).all(), r
-        assert (got_i[r] == ids[order]).all(), r
+        assert (got_i[r][fin] == row_ids[order][fin]).all(), r
+        # padding ids fill the tail but must be ids of padded columns
+        assert set(got_i[r][~fin]) <= set(row_ids[~np.isfinite(dmat[r])]), r
+    if fixed is not None:
+        # top-4 by (dist, id): 0.1/30, 0.2/20, then the 0.5 tie -> ids 4, 5
+        assert got_i.tolist() == [[30, 20, 4, 5]]
+        assert got_d.tolist() == [[0.1, 0.2, 0.5, 0.5]]
+
+
+@given(
+    n=st.integers(0, 200),
+    n_q=st.integers(1, 8),
+    n_vals=st.integers(1, 5),
+    k=st.integers(1, 12),
+    seed=st.integers(0, 10_000),
+)
+@settings(max_examples=100, deadline=None)
+def test_topk_groups_matches_pandas(n, n_q, n_vals, k, seed):
+    """topk_groups == sort by (q, d, id), keep the first k per q, with
+    1-based ranks — on unsorted input with dense distance ties."""
+    import pandas as pd
+
+    from vectordb_retrieval_spark.operators.topk import topk_groups
+
+    rng = np.random.RandomState(seed)
+    q = rng.randint(0, n_q, n).astype(np.int64)
+    ids = rng.permutation(3 * n + 1)[:n].astype(np.int64)
+    d = rng.randint(0, n_vals, n).astype(np.float64)
+    want = (
+        pd.DataFrame({"q": q, "id": ids, "d": d})
+        .sort_values(["q", "d", "id"])
+        .groupby("q")
+        .head(k)
+    )
+    want_rank = want.groupby("q").cumcount().to_numpy() + 1
+    gq, gi, gd, rank = topk_groups(q, ids, d, k)
+    assert gq.tolist() == want["q"].tolist()
+    assert gi.tolist() == want["id"].tolist()
+    assert gd.tolist() == want["d"].tolist()
+    assert rank.dtype == np.int32 and rank.tolist() == want_rank.tolist()

@@ -6,7 +6,7 @@ Spark jobs each invocation launches (job-group scoped), and optionally
 writes ``.explain('formatted')`` plans to plans/<tag>/.
 
 Usage:
-    python tools/measure_headline.py [--plans plans/r13 --suffix _before]
+    python tools/measure_headline.py [--plans plans/r14 --suffix _before]
                                      [--reps 3] [query ...]
 
 Prints one JSON line: {"queries": {name: sec}, "jobs": {name: n}, ...}

@@ -61,7 +61,11 @@ def _pred_gt_labeled(
     from vectordb_retrieval_spark.functions.kernels import (
         query_broadcast_cached,
     )
-    from vectordb_retrieval_spark.operators.exact import SCORE_TILE_ELEMS
+    from vectordb_retrieval_spark.operators.exact import (
+        SCORE_TILE_ELEMS,
+        block_topk,
+    )
+    from vectordb_retrieval_spark.operators.topk import topk_rows
 
     base = emb(spark, sf_dir)
     qs = emb_queries(spark, sf_dir)
@@ -82,52 +86,36 @@ def _pred_gt_labeled(
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q_ids, q_mat = bc.value
-        n_q = len(q_ids)
-        views = ((0, q_mat), (1, q_mat[:, :td]))
+        # view 0 = full vectors (gt), view 1 = first td dims (pred)
         cand: dict[int, tuple[list, list]] = {0: ([], []), 1: ([], [])}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             block = np.vstack(pdf["embedding"].to_numpy()).astype(np.float32)
-            for which, qm in views:
-                blk = block if which == 0 else block[:, :td]
-                n_block = blk.shape[0]
-                # same per-batch shape as exact_knn's kernel: query
-                # tiling is row-independent, per-partition argpartition
-                # keeps k per query, the window below breaks ties
-                q_step = max(1, tile_elems // max(n_block, 1))
-                bd, bi = [], []
-                for s in range(0, n_q, q_step):
-                    dmat = pairwise_distances(qm[s : s + q_step], blk, "l2")
-                    if n_block > k:
-                        part = np.argpartition(dmat, k - 1, axis=1)[:, :k]
-                        bd.append(np.take_along_axis(dmat, part, axis=1))
-                        bi.append(ids[part])
-                    else:
-                        bd.append(dmat)
-                        bi.append(
-                            np.broadcast_to(
-                                ids, (dmat.shape[0], len(ids))
-                            ).copy()
-                        )
-                cand[which][0].append(np.concatenate(bd, axis=0))
-                cand[which][1].append(np.concatenate(bi, axis=0))
+            for which, (ds, is_) in cand.items():
+                dims = None if which == 0 else td
+                bd, bi = block_topk(
+                    q_mat[:, :dims],
+                    block[:, :dims],
+                    ids,
+                    k,
+                    pairwise_distances,  # default metric: l2
+                    tile_elems,
+                )
+                ds.append(bd)
+                is_.append(bi)
         for which, (ds, is_) in cand.items():
             if not ds:
                 continue
-            dall = np.concatenate(ds, axis=1)
-            iall = np.concatenate(is_, axis=1)
-            kk = min(k, dall.shape[1])
-            if dall.shape[1] > kk:
-                part = np.argpartition(dall, kk - 1, axis=1)[:, :kk]
-                dall = np.take_along_axis(dall, part, axis=1)
-                iall = np.take_along_axis(iall, part, axis=1)
-            q_ids2 = bc.value[0]
+            dall, iall = topk_rows(
+                np.concatenate(ds, axis=1), np.concatenate(is_, axis=1), k
+            )
+            kk = dall.shape[1]
             yield pd.DataFrame(
                 {
-                    "which": np.full(len(q_ids2) * kk, which, dtype=np.int32),
-                    "qid": np.repeat(q_ids2, kk),
+                    "which": np.full(len(q_ids) * kk, which, dtype=np.int32),
+                    "qid": np.repeat(q_ids, kk),
                     "id": iall.reshape(-1),
                     "dist": dall.reshape(-1),
                 }

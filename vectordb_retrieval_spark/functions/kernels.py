@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from vectordb_retrieval_spark import transport
 from vectordb_retrieval_spark.functions.distance import normalize_rows
+from vectordb_retrieval_spark.operators.topk import topk_groups, topk_rows
 
 
 def collect_vectors(
@@ -275,46 +276,6 @@ def collect_or_chunk(
         DataFrame.unionByName,
         [recurse(c) for c in query_chunks(query_df, qid_col, vec_col)],
     )
-
-
-def topk_cols_tiebreak(
-    dmat: np.ndarray, ids: np.ndarray, k: int, margin: int = 16
-):
-    """Per-row top-k column selection by (dist, id) — the serving tie
-    contract, enforced at CANDIDATE level: a plain argpartition keeps an
-    arbitrary subset of boundary-tied candidates, so which ids survive
-    per-partition pruning depends on batch shape (quantized codecs
-    produce exact distance ties routinely).  Fast path: argpartition to
-    k+margin, exact (dist, id) lexsort inside the slice; rows whose
-    boundary ties saturate the margin fall back to a full row sort.
-    ``ids`` may be 1-D (shared columns) or 2-D (per-row candidate ids).
-    Returns (dists, ids), each (n_rows, min(k, n_cols))."""
-    n_q, n = dmat.shape
-    kk = min(k, n)
-    ids_mat = ids if ids.ndim == 2 else np.broadcast_to(ids, dmat.shape)
-    if n <= k + margin:
-        order = np.lexsort((ids_mat, dmat), axis=1)[:, :kk]
-        return (
-            np.take_along_axis(dmat, order, axis=1),
-            np.take_along_axis(ids_mat, order, axis=1),
-        )
-    m = min(n - 1, k + margin)
-    part = np.argpartition(dmat, m - 1, axis=1)[:, :m]
-    pdm = np.take_along_axis(dmat, part, axis=1)
-    pim = np.take_along_axis(ids_mat, part, axis=1)
-    sub = np.lexsort((pim, pdm), axis=1)
-    pdm = np.take_along_axis(pdm, sub, axis=1)
-    pim = np.take_along_axis(pim, sub, axis=1)
-    out_d = pdm[:, :kk].copy()
-    out_i = pim[:, :kk].copy()
-    sat = pdm[:, m - 1] <= out_d[:, kk - 1]
-    for r in np.nonzero(sat)[0]:
-        row = dmat[r]
-        cols = np.nonzero(row <= out_d[r, kk - 1])[0]
-        order = np.lexsort((ids_mat[r][cols], row[cols]))[:kk]
-        out_d[r] = row[cols][order]
-        out_i[r] = ids_mat[r][cols][order]
-    return out_d, out_i
 
 
 class SearchPlanMemo:
@@ -789,11 +750,7 @@ def cluster_scan_topk(
         # Arrow-native: blob cells are read as zero-copy buffer views
         # (mapInPandas would copy every blob into Python bytes during
         # the pandas conversion — ~the whole index per search).
-        # local import: operators.serving depends on functions.*, so the
-        # reverse import stays out of module scope
         import pyarrow as pa
-
-        from vectordb_retrieval_spark.operators.serving import topk_rows
 
         q_ids, q_mat, cdc, probes, allow, qb = bc.value
         acc_q: list[np.ndarray] = []
@@ -899,9 +856,6 @@ def cluster_scan_topk(
                 if accum is not None:
                     accum.add(int(d.size))
                 kk = min(k, d.shape[1])
-                # tie-safe partial selection (argpartition + boundary
-                # re-rank) instead of a full per-row lexsort — identical
-                # lexicographic (dist, id) output, O(n) per row
                 od, oi = topk_rows(d, ids, kk)
                 rq = np.repeat(qrows, kk)
                 fi = oi.ravel()
@@ -917,16 +871,12 @@ def cluster_scan_topk(
                 acc_d.append(fd)
         if not acc_q:
             return
-        aq = np.concatenate(acc_q)
-        ai = np.concatenate(acc_i)
-        ad = np.concatenate(acc_d)
-        order = np.lexsort((ai, ad, aq))
-        aq, ai, ad = aq[order], ai[order], ad[order]
-        starts = np.r_[0, np.nonzero(np.diff(aq))[0] + 1]
-        counts = np.diff(np.r_[starts, len(aq)])
-        rank = np.arange(len(aq)) - np.repeat(starts, counts)
-        keep = rank < k
-        aq, ai, ad = aq[keep], ai[keep], ad[keep]
+        aq, ai, ad, _ = topk_groups(
+            np.concatenate(acc_q),
+            np.concatenate(acc_i),
+            np.concatenate(acc_d),
+            k,
+        )
         # one LIST row per (task, query): the downstream merge shuffle
         # then moves ~n_q × tasks rows instead of n_q × tasks × k —
         # at 150k×384-d the flat form's 300k-row window merge cost more
@@ -1059,22 +1009,14 @@ def merge_fragment_topk(
             acc_d.append(ds_l.flatten().to_numpy(zero_copy_only=False))
         if not acc_q:
             return
-        aq = np.concatenate(acc_q)
-        ai = np.concatenate(acc_i)
-        ad = np.concatenate(acc_d)
-        order = np.lexsort((ai, ad, aq))
-        aq, ai, ad = aq[order], ai[order], ad[order]
-        starts = np.r_[0, np.nonzero(np.diff(aq))[0] + 1]
-        counts = np.diff(np.r_[starts, len(aq)])
-        rank = np.arange(len(aq)) - np.repeat(starts, counts)
-        keep = rank < k
+        aq, ai, ad, rank = topk_groups(
+            np.concatenate(acc_q),
+            np.concatenate(acc_i),
+            np.concatenate(acc_d),
+            k,
+        )
         yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(aq[keep]),
-                pa.array(ai[keep]),
-                pa.array(ad[keep]),
-                pa.array((rank[keep] + 1).astype(np.int32)),
-            ],
+            [pa.array(aq), pa.array(ai), pa.array(ad), pa.array(rank)],
             names=["qid", "id", "dist", "rank"],
         )
 

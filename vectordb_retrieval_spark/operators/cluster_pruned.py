@@ -38,7 +38,11 @@ from vectordb_retrieval_spark.functions.kernels import (
 from vectordb_retrieval_spark.operators.ivf import IVFIndexer
 from vectordb_retrieval_spark.operators import serving
 from vectordb_retrieval_spark.operators.searcher import Searcher
-from vectordb_retrieval_spark.operators.topk import topk_per_query
+from vectordb_retrieval_spark.operators.topk import (
+    topk_groups,
+    topk_per_query,
+    topk_rows,
+)
 
 
 # Fused-plan admission budget for the PARTITIONED search (guide §1.2
@@ -156,10 +160,7 @@ class ClusterPrunedExactSearcher(Searcher):
     ) -> DataFrame:
         """Both phases in one kernel over the broadcast packed index."""
         from vectordb_retrieval_spark.functions.distance import normalize_rows
-        from vectordb_retrieval_spark.operators.serving import (
-            query_driven_job,
-            topk_rows,
-        )
+        from vectordb_retrieval_spark.operators.serving import query_driven_job
 
         art = self.artifact
         radii = np.asarray(art.params["radii"], dtype=np.float64)
@@ -176,11 +177,7 @@ class ClusterPrunedExactSearcher(Searcher):
             n_q = len(qids)
             qc = pairwise_distances(qmat, cents, "l2")
             npb = min(nprobe, qc.shape[1])
-            order = np.lexsort(
-                (np.broadcast_to(np.arange(qc.shape[1]), qc.shape), qc),
-                axis=1,
-            )
-            probed = order[:, :npb]
+            probed = topk_rows(qc, np.arange(qc.shape[1]), npb)[1]
 
             def scan(flat_q, flat_c, acc_q, acc_i, acc_d):
                 so = np.argsort(flat_c, kind="stable")
@@ -216,14 +213,14 @@ class ClusterPrunedExactSearcher(Searcher):
             # per-query exact upper bound T_q = kth-best so far
             t_arr = np.full(n_q, np.inf)
             if acc_q:
-                aq = np.concatenate(acc_q)
-                ad = np.concatenate(acc_d)
-                so = np.lexsort((ad, aq))
-                aq_s, ad_s = aq[so], ad[so]
-                starts = np.r_[0, np.nonzero(np.diff(aq_s))[0] + 1]
-                counts = np.diff(np.r_[starts, len(aq_s)])
-                full = counts >= k
-                t_arr[aq_s[starts[full]]] = ad_s[starts[full] + k - 1]
+                gq, _, gd, rank = topk_groups(
+                    np.concatenate(acc_q),
+                    np.concatenate(acc_i),
+                    np.concatenate(acc_d),
+                    k,
+                )
+                kth = rank == k
+                t_arr[gq[kth]] = gd[kth]
             # lower bound d(q, c) − r_c: clusters above T_q provably
             # hold no better neighbor (triangle inequality)
             need = qc - radii[None, :] <= t_arr[:, None]
@@ -233,22 +230,14 @@ class ClusterPrunedExactSearcher(Searcher):
                 scan(extra_q, extra_c, acc_q, acc_i, acc_d)
             if not acc_q:
                 return None
-            aq = np.concatenate(acc_q)
-            ai = np.concatenate(acc_i)
-            ad = np.concatenate(acc_d)
-            so = np.lexsort((ai, ad, aq))
-            aq, ai, ad = aq[so], ai[so], ad[so]
-            starts = np.r_[0, np.nonzero(np.diff(aq))[0] + 1]
-            counts = np.diff(np.r_[starts, len(aq)])
-            rank = np.arange(len(aq)) - np.repeat(starts, counts)
-            keep = rank < k
+            aq, ai, ad, rank = topk_groups(
+                np.concatenate(acc_q),
+                np.concatenate(acc_i),
+                np.concatenate(acc_d),
+                k,
+            )
             return pd.DataFrame(
-                {
-                    "qid": qids[aq[keep]],
-                    "id": ai[keep],
-                    "dist": ad[keep],
-                    "rank": (rank[keep] + 1).astype(np.int32),
-                }
+                {"qid": qids[aq], "id": ai, "dist": ad, "rank": rank}
             )
 
         # both phases run inside the generic query-driven job: gate-
@@ -308,8 +297,7 @@ class ClusterPrunedExactSearcher(Searcher):
         qc = pairwise_distances(qmat, cents, "l2")  # (n_q, nlist)
 
         nprobe = min(self.nprobe, qc.shape[1])
-        order = np.lexsort((np.broadcast_to(np.arange(qc.shape[1]), qc.shape), qc), axis=1)
-        probed = order[:, :nprobe]
+        probed = topk_rows(qc, np.arange(qc.shape[1]), nprobe)[1]
 
         shm = packed_shm_cached(art) if self.node_local_cache else None
         packed = packed_assignment_cached(art) if shm is None else shm[1]

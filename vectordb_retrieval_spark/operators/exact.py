@@ -50,11 +50,15 @@ from vectordb_retrieval_spark.functions.distance import (
     pairwise_distances,
     valid_metric,
 )
-from vectordb_retrieval_spark.operators.topk import pad_topk, topk_per_query
+from vectordb_retrieval_spark.operators.topk import (
+    pad_topk,
+    topk_per_query,
+    topk_rows,
+)
 
 _CAND_SCHEMA = "qid long, id long, dist double"
 
-# score tile cap in float64 elements (see kernel comment); module-level
+# score tile cap in float64 elements (see block_topk); module-level
 # so a profiling harness can A/B tile sizes in one session
 SCORE_TILE_ELEMS = 2_000_000
 
@@ -71,6 +75,35 @@ SCORE_TILE_ELEMS = 2_000_000
 # vs a driver OOM).  Plans are memoized per (base, query frame, key)
 # so serving-rate callers pay plan construction once.
 _EXACT_PLANS = None  # lazy SearchPlanMemo (module import order)
+
+
+def block_topk(
+    q_mat: np.ndarray,
+    block: np.ndarray,
+    ids: np.ndarray,
+    k: int,
+    score,
+    tile_elems: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """(dist, id) top-k of one base block for every query: ``score(q,
+    block)`` → (len(q), n_block) distances, selected by ``topk_rows``.
+    Returns (dists, ids), each (n_q, min(k, n_block)).
+
+    Queries are tiled so each score matrix stays under ``tile_elems``
+    float64 elements: an untiled (n_q × arrow_batch) matrix is ~330 MB
+    at 4096 queries, and 32 workers streaming that from DRAM saturate
+    memory bandwidth (same fix as serving.py's exhaustive scan).
+    Tiling is bit-identical: each query row's distances and selection
+    are row-independent."""
+    q_step = max(1, tile_elems // max(len(ids), 1))
+    tiles = [
+        topk_rows(score(q_mat[s : s + q_step], block), ids, k)
+        for s in range(0, len(q_mat), q_step)
+    ]
+    return (
+        np.concatenate([d for d, _ in tiles]),
+        np.concatenate([i for _, i in tiles]),
+    )
 
 
 def _plans():
@@ -144,53 +177,36 @@ def exact_knn(
         return spark.createDataFrame([], _CAND_SCHEMA + ", rank int")
     tile_elems = SCORE_TILE_ELEMS  # driver-time capture, A/B-able
 
+    def score(qc: np.ndarray, block: np.ndarray) -> np.ndarray:
+        if custom is not None:
+            return np.asarray(
+                custom(qc.astype(np.float64), block.astype(np.float64))
+            )
+        return pairwise_distances(qc, block, metric)
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q_ids, q_mat = bc.value
-        n_q = len(q_ids)
         cand_d: list[np.ndarray] = []
         cand_i: list[np.ndarray] = []
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            block = np.vstack(pdf[vec_col].to_numpy()).astype(np.float32)
-            n_block = block.shape[0]
-            # score tile cap (~2M float64 elements): an untiled
-            # (n_q × arrow_batch) matrix is ~330 MB at 4096 queries —
-            # 32 workers streaming that from DRAM saturate memory
-            # bandwidth (same fix as serving.py's exhaustive scan).
-            # Chunking queries is bit-identical: each query row's
-            # distances and argpartition are row-independent.
-            q_step = max(1, tile_elems // max(n_block, 1))
-            bd: list[np.ndarray] = []
-            bi: list[np.ndarray] = []
-            for s in range(0, n_q, q_step):
-                qc = q_mat[s : s + q_step]
-                dmat = (
-                    np.asarray(
-                        custom(qc.astype(np.float64), block.astype(np.float64))
-                    )
-                    if custom is not None
-                    else pairwise_distances(qc, block, metric)
-                )  # (chunk, n_block)
-                if n_block > k:
-                    part = np.argpartition(dmat, k - 1, axis=1)[:, :k]
-                    bd.append(np.take_along_axis(dmat, part, axis=1))
-                    bi.append(ids[part])
-                else:
-                    bd.append(dmat)
-                    bi.append(np.broadcast_to(ids, (len(qc), len(ids))).copy())
-            cand_d.append(np.concatenate(bd, axis=0))
-            cand_i.append(np.concatenate(bi, axis=0))
+            bd, bi = block_topk(
+                q_mat,
+                np.vstack(pdf[vec_col].to_numpy()).astype(np.float32),
+                pdf[id_col].to_numpy(dtype=np.int64),
+                k,
+                score,
+                tile_elems,
+            )
+            cand_d.append(bd)
+            cand_i.append(bi)
         if not cand_d:
             return
-        dall = np.concatenate(cand_d, axis=1)
-        iall = np.concatenate(cand_i, axis=1)
-        kk = min(k, dall.shape[1])
-        if dall.shape[1] > kk:
-            part = np.argpartition(dall, kk - 1, axis=1)[:, :kk]
-            dall = np.take_along_axis(dall, part, axis=1)
-            iall = np.take_along_axis(iall, part, axis=1)
+        dall, iall = topk_rows(
+            np.concatenate(cand_d, axis=1), np.concatenate(cand_i, axis=1), k
+        )
+        kk = dall.shape[1]
         yield pd.DataFrame(
             {
                 "qid": np.repeat(q_ids, kk),

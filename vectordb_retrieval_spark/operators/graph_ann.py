@@ -90,7 +90,11 @@ from vectordb_retrieval_spark.functions.hashing import (
     sign_buckets,
 )
 from vectordb_retrieval_spark.operators.searcher import Searcher
-from vectordb_retrieval_spark.operators.topk import topk_per_query
+from vectordb_retrieval_spark.operators.topk import (
+    topk_groups,
+    topk_per_query,
+    topk_rows,
+)
 
 
 def _pad_adjacency(adj: list[np.ndarray]) -> np.ndarray:
@@ -212,8 +216,9 @@ def _batched_beam(
     the whole connected graph and the result is provably exact — the
     property graph_ann_exhaustive's oracle check relies on.
 
-    Distances run in float32 (ranking only — the exact path and final
-    global ranking use ``_brute_topk`` / ``topk_per_query``); per wave
+    Distances run in float32 (ranking only — the exact path
+    ``_brute_topk`` and the final ranking, ``topk_groups`` per task
+    then ``topk_per_query`` across tasks, rank by (dist, id)); per wave
     they come from one GEMM against the wave's unique frontier
     neighbors when that is cheaper than the scattered per-pair gather
     (small shards), else from the gather (large shards, where the
@@ -222,7 +227,7 @@ def _batched_beam(
     Returns (dists, nodes): (n_q, ef) ascending by dist per query,
     padded with (inf, -1).  Within-wave ties keep beam-arrival order —
     tie ranking is NOT id-canonical here; callers that need a total
-    order (they all do) re-rank via ``topk_per_query``.
+    order (they all do) re-rank via ``topk_groups`` / ``topk_per_query``.
     """
     n = len(mat)
     n_q = len(qmat)
@@ -394,13 +399,7 @@ def _brute_topk(
     """ef ≥ graph size ⇒ the beam would absorb every node anyway; one
     GEMM top-k is the same answer without the walk."""
     d = pairwise_distances(qmat, mat, metric)
-    ef = min(ef, d.shape[1])
-    idx = np.argpartition(d, ef - 1, axis=1)[:, :ef]
-    pd_ = np.take_along_axis(d, idx, axis=1)
-    order = np.lexsort((idx, pd_), axis=1)
-    return np.take_along_axis(pd_, order, axis=1), np.take_along_axis(
-        idx, order, axis=1
-    ).astype(np.int64)
+    return topk_rows(d, np.arange(d.shape[1]), ef)
 
 
 def _build_nsw(
@@ -445,11 +444,7 @@ def _build_nsw(
                 # cosine rows are pre-normalized; ip = negated dot
                 d = -(m64[s:e] @ m64.T)
             d[np.arange(s, e) - s, np.arange(s, e)] = np.inf
-            kk = min(m, n - 1)
-            part = np.argpartition(d, kk - 1, axis=1)[:, :kk]
-            pd_ = np.take_along_axis(d, part, axis=1)
-            order = np.lexsort((part, pd_), axis=1)
-            nbrs = np.take_along_axis(part, order, axis=1)
+            nbrs = topk_rows(d, np.arange(n), min(m, n - 1))[1]
             for r in range(e - s):
                 i = s + r
                 for j in nbrs[r]:
@@ -1136,13 +1131,7 @@ class GraphANNSearcher(Searcher):
                 shard_d[:, j] = cd[:, cpids == p_].min(axis=1)
             probe = min(probe, len(upids))
             # deterministic routing: ties broken by shard index
-            nearest = np.lexsort(
-                (
-                    np.broadcast_to(np.arange(shard_d.shape[1]), shard_d.shape),
-                    shard_d,
-                ),
-                axis=1,
-            )[:, :probe]
+            nearest = topk_rows(shard_d, np.arange(len(upids)), probe)[1]
             route = {}
             for j in range(len(upids)):
                 sel = np.nonzero((nearest == j).any(axis=1))[0]
@@ -1331,22 +1320,14 @@ class GraphANNSearcher(Searcher):
                             acc_d.append(cd)
                         if not acc_q:
                             continue
-                        gq = np.concatenate(acc_q)
-                        gi = np.concatenate(acc_i)
-                        gd = np.concatenate(acc_d)
-                        order = np.lexsort((gi, gd, gq))
-                        gq, gi, gd = gq[order], gi[order], gd[order]
-                        starts = np.r_[0, np.nonzero(np.diff(gq))[0] + 1]
-                        counts = np.diff(np.r_[starts, len(gq)])
-                        rank = np.arange(len(gq)) - np.repeat(starts, counts)
-                        keep = rank < k
+                        gq, gi, gd, rank = topk_groups(
+                            np.concatenate(acc_q),
+                            np.concatenate(acc_i),
+                            np.concatenate(acc_d),
+                            k,
+                        )
                         yield pd.DataFrame(
-                            {
-                                "qid": q_ids[gq[keep]],
-                                "id": gi[keep],
-                                "dist": gd[keep],
-                                "rank": (rank[keep] + 1).astype(np.int32),
-                            }
+                            {"qid": q_ids[gq], "id": gi, "dist": gd, "rank": rank}
                         )
 
             return self._plan_put(

@@ -51,7 +51,7 @@ from vectordb_retrieval_spark.functions.kernels import (
 )
 from vectordb_retrieval_spark.operators import serving
 from vectordb_retrieval_spark.operators.searcher import Searcher
-from vectordb_retrieval_spark.operators.topk import topk_per_query
+from vectordb_retrieval_spark.operators.topk import topk_per_query, topk_rows
 
 
 def _norm_df(df: DataFrame, vec_col: str) -> DataFrame:
@@ -591,9 +591,7 @@ class IVFSearcher(Searcher):
         cents = art.params["centroids"]
         d = pairwise_distances(qmat, cents, "l2")
         nprobe = min(self.nprobe, d.shape[1])
-        order = np.lexsort(
-            (np.broadcast_to(np.arange(d.shape[1]), d.shape), d), axis=1
-        )[:, :nprobe]
+        order = topk_rows(d, np.arange(d.shape[1]), nprobe)[1]
         return pd.DataFrame(
             {
                 "qid": np.repeat(qids, nprobe),

@@ -41,7 +41,11 @@ from vectordb_retrieval_spark.functions.kernels import (
 )
 from vectordb_retrieval_spark.operators.exact import exact_knn
 from vectordb_retrieval_spark.operators.searcher import Searcher
-from vectordb_retrieval_spark.operators.topk import topk_per_query
+from vectordb_retrieval_spark.operators.topk import (
+    topk_groups,
+    topk_per_query,
+    topk_rows,
+)
 
 
 class LSHIndexer:
@@ -140,17 +144,6 @@ class PackedLSH:
     def nbytes(self) -> int:
         b = self.ids.nbytes + self.vecs.nbytes
         return b + sum(v.nbytes for v in self.buckets.values())
-
-
-def _ranked_prefix(keys: tuple, limit: int) -> np.ndarray:
-    """Boolean mask keeping rows whose rank within their (already
-    contiguous-sorted) group is < limit.  ``keys[0]`` must be the
-    group column of the lexsorted rows."""
-    g = keys[0]
-    starts = np.r_[0, np.nonzero(np.diff(g))[0] + 1]
-    counts = np.diff(np.r_[starts, len(g)])
-    rank = np.arange(len(g)) - np.repeat(starts, counts)
-    return rank < limit
 
 
 class LSHSearcher(Searcher):
@@ -357,34 +350,25 @@ class LSHSearcher(Searcher):
                 starts = np.nonzero(new)[0]
                 bounds = np.r_[starts, len(cq)]
                 votes = np.diff(bounds)
-                uq, ui, ubp = cq[starts], ci[starts], cp[starts]
-                # cap: (votes desc, best_probe asc, id asc) per query
-                o2 = np.lexsort((ui, ubp, -votes, uq))
-                uq, ui = uq[o2], ui[o2]
-                keep = _ranked_prefix((uq,), cap)
-                uq, ui = uq[keep], ui[keep]
+                # cap: (votes desc, best_probe asc, id asc) per query —
+                # best_probe < n_probe_cols, so one integer key
+                # -votes·n_probe_cols + best_probe orders exactly as
+                # the (votes desc, best_probe asc) pair
+                uq, ui, _, _ = topk_groups(
+                    cq[starts],
+                    ci[starts],
+                    cp[starts] - votes * probes.shape[2],
+                    cap,
+                )
                 have_cand[uq] = True
                 # exact rerank — same float64 row-wise arithmetic as
                 # attach_query_distance
                 rows = np.searchsorted(idx.ids, ui)
                 dist = rowwise_distance(qmat[uq], idx.vecs[rows], metric)
-                o3 = np.lexsort((ui, dist, uq))
-                uq, ui, dist = uq[o3], ui[o3], dist[o3]
-                topk = _ranked_prefix((uq,), k)
-                tq, ti, td = uq[topk], ui[topk], dist[topk]
-                starts = np.r_[0, np.nonzero(np.diff(tq))[0] + 1]
-                counts = np.diff(np.r_[starts, len(tq)])
-                rank = (
-                    np.arange(len(tq)) - np.repeat(starts, counts) + 1
-                )
+                tq, ti, td, rank = topk_groups(uq, ui, dist, k)
                 out_frames.append(
                     pd.DataFrame(
-                        {
-                            "qid": qids[tq],
-                            "id": ti,
-                            "dist": td,
-                            "rank": rank.astype(np.int32),
-                        }
+                        {"qid": qids[tq], "id": ti, "dist": td, "rank": rank}
                     )
                 )
             miss = np.nonzero(~have_cand)[0]
@@ -392,15 +376,9 @@ class LSHSearcher(Searcher):
                 # zero-candidate queries brute-scan the base — the
                 # same pairwise_distances form exact_knn uses, so
                 # fallback distances match the pipeline bit-for-bit
-                from vectordb_retrieval_spark.operators.serving import (
-                    topk_block,
-                )
-
                 d = pairwise_distances(qmat[miss], idx.vecs, metric)
                 kk = min(k, d.shape[1])
-                od, oi = topk_block(
-                    d, np.broadcast_to(idx.ids, d.shape), kk
-                )
+                od, oi = topk_rows(d, idx.ids, kk)
                 out_frames.append(
                     pd.DataFrame(
                         {

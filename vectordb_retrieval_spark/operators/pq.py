@@ -22,7 +22,7 @@ from vectordb_retrieval_spark import transport
 from vectordb_retrieval_spark.artifacts import IndexArtifact
 from vectordb_retrieval_spark.operators.quant import PQCodec
 from vectordb_retrieval_spark.operators.searcher import Searcher
-from vectordb_retrieval_spark.operators.topk import topk_per_query
+from vectordb_retrieval_spark.operators.topk import topk_per_query, topk_rows
 
 
 class PQIndexer:
@@ -152,10 +152,6 @@ class PQADCSearcher(Searcher):
                 ),
             )
 
-        from vectordb_retrieval_spark.functions.kernels import (
-            topk_cols_tiebreak,
-        )
-
         qids, qmat, done = self._queries(
             query_df,
             qid_col,
@@ -203,7 +199,7 @@ class PQADCSearcher(Searcher):
                 # reduction over dim — bitwise shape-independent — so
                 # the kept candidates and their dists are stable, and
                 # ties resolve by the (dist, id) contract
-                # (kernels.topk_cols_tiebreak).
+                # (topk.topk_rows).
                 def det_rows(qrows: np.ndarray, cand: np.ndarray) -> np.ndarray:
                     # (len(qrows), cand.shape[1]) deterministic dists;
                     # tiled so the (q, cand, dim) cube stays ~40 MB
@@ -220,11 +216,15 @@ class PQADCSearcher(Searcher):
                 if n_b > k + margin:
                     dmat = pairwise_distances(qm, dec, "l2")  # prune scores
                     m_sl = k + margin
-                    pp = np.partition(dmat, m_sl, axis=1)
-                    excl_min = pp[:, m_sl]  # smallest EXCLUDED prune score
-                    part = np.argpartition(dmat, m_sl - 1, axis=1)[:, :m_sl]
+                    # one selection: columns [:m_sl] are kept, column
+                    # m_sl is the smallest EXCLUDED prune score
+                    part = np.argpartition(dmat, m_sl, axis=1)
+                    excl_min = np.take_along_axis(
+                        dmat, part[:, m_sl : m_sl + 1], axis=1
+                    )[:, 0]
+                    part = part[:, :m_sl]
                     det = det_rows(all_rows, part)
-                    bd, bi = topk_cols_tiebreak(det, ids[part], k)
+                    bd, bi = topk_rows(det, ids[part], k)
                     # certify the prune: an excluded candidate could only
                     # beat the kth refined dist if the boundary gap is
                     # inside GEMM's fp noise — those rows re-rank against
@@ -239,7 +239,7 @@ class PQADCSearcher(Searcher):
                                 np.arange(n_b), (len(unsafe), n_b)
                             ),
                         )
-                        fd, fi = topk_cols_tiebreak(full, ids, k)
+                        fd, fi = topk_rows(full, ids, k)
                         bd[unsafe], bi[unsafe] = fd, fi
                     cand_d.append(bd)
                     cand_i.append(bi)
@@ -248,22 +248,15 @@ class PQADCSearcher(Searcher):
                         all_rows,
                         np.broadcast_to(np.arange(n_b), (n_q, n_b)),
                     )
-                    if n_b > k:
-                        bd, bi = topk_cols_tiebreak(det, ids, k)
-                        cand_d.append(bd)
-                        cand_i.append(bi)
-                    else:
-                        cand_d.append(det)
-                        cand_i.append(
-                            np.broadcast_to(ids, (n_q, n_b)).copy()
-                        )
+                    bd, bi = topk_rows(det, ids, k)
+                    cand_d.append(bd)
+                    cand_i.append(bi)
             if not cand_d:
                 return
-            dall = np.concatenate(cand_d, axis=1)
-            iall = np.concatenate(cand_i, axis=1)
-            kk = min(k, dall.shape[1])
-            if dall.shape[1] > kk:
-                dall, iall = topk_cols_tiebreak(dall, iall, kk)
+            dall, iall = topk_rows(
+                np.concatenate(cand_d, axis=1), np.concatenate(cand_i, axis=1), k
+            )
+            kk = dall.shape[1]
             yield pd.DataFrame(
                 {
                     "qid": np.repeat(q_ids, kk),

@@ -21,7 +21,9 @@ k rows out per query.
 Result parity: probe selection (nprobe nearest centroids, ties by
 cluster id), decode, float64 distance arithmetic, and (dist, id)
 tie-breaks replicate ``cluster_scan_topk`` + ``topk_per_query``
-exactly, so the oracle hash checks hold on either path.
+exactly, so the oracle hash checks hold on either path: every
+selection here runs through ``topk.topk_rows``, the numpy form of the
+window's (dist, id) contract.
 
 Per-worker warm cache: the broadcast value lives inside each reused
 Python worker across jobs, and decoded float64 cluster matrices memoize
@@ -45,6 +47,7 @@ from vectordb_retrieval_spark.functions.distance import (
     normalize_rows,
     pairwise_distances,
 )
+from vectordb_retrieval_spark.operators.topk import topk_rows
 
 
 # below this many packed-scan bytes, per-worker copies are cheap: the
@@ -413,78 +416,6 @@ _PAD_ID = np.int64(1) << 62
 _PAD_POS = np.int32(np.iinfo(np.int32).max)
 
 
-def topk_block(
-    D: np.ndarray, I: np.ndarray, kk: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Row-wise smallest-kk over a padded (n_q, c) candidate block with
-    PER-ROW id arrays, ties by ascending id — the ragged-width sibling
-    of ``topk_rows``.  Padding entries are (inf, _PAD_ID): they sort
-    after every real candidate, so rows with fewer than kk real
-    candidates surface them at the tail for the caller to filter.
-    Boundary ties (kth == (k+1)th distance) re-rank the affected rows
-    with a full (dist, id) lexsort, so the kept set is always the
-    lexicographic top-kk.
-
-    Measured dead end (do not re-attempt without new evidence): an
-    exact subsample-bound prune before the selection (kk-th smallest
-    of a 1-in-8 column strided copy as an upper bound on the true
-    kk-th, mask + nonzero + narrow re-select) benchmarked NEUTRAL to
-    slightly negative at serving widths (12.5 vs 11.1 ms on
-    512×1872 fp32) — the mask/count/nonzero passes cost as much as
-    the introselect they avoid."""
-    n = D.shape[1]
-    if n <= kk:
-        order = np.lexsort((I, D), axis=1)
-        return np.take_along_axis(D, order, axis=1), np.take_along_axis(
-            I, order, axis=1
-        )
-    part = np.argpartition(D, kk - 1, axis=1)[:, :kk]
-    pdist = np.take_along_axis(D, part, axis=1)
-    pids = np.take_along_axis(I, part, axis=1)
-    order = np.lexsort((pids, pdist), axis=1)
-    out_d = np.take_along_axis(pdist, order, axis=1)
-    out_i = np.take_along_axis(pids, order, axis=1)
-    thresh = out_d[:, -1]
-    # rows whose kk-th kept value is inf hold FEWER than kk finite
-    # candidates: every finite candidate is already kept (and sorted by
-    # the lexsort above), so the pad-induced inf ties can't change the
-    # kept set — skip them instead of lexsorting each such row
-    ambiguous = np.nonzero(
-        np.isfinite(thresh) & ((D <= thresh[:, None]).sum(axis=1) > kk)
-    )[0]
-    for r in ambiguous:
-        full = np.lexsort((I[r], D[r]))[:kk]
-        out_d[r] = D[r][full]
-        out_i[r] = I[r][full]
-    return out_d, out_i
-
-
-def topk_rows(d: np.ndarray, ids: np.ndarray, kk: int) -> tuple[np.ndarray, np.ndarray]:
-    """Per-row smallest-kk selection over a (n_q, n_b) distance block,
-    ties by ascending id — exact: boundary ties (kth == (k+1)th value)
-    are re-ranked with a full (dist, id) lexsort for the affected rows,
-    so the kept SET always equals the lexicographic top-k.  The
-    vectorized argpartition path covers the (overwhelmingly common)
-    tie-free case."""
-    n = d.shape[1]
-    if n <= kk:
-        order = np.lexsort((np.broadcast_to(ids, d.shape), d), axis=1)
-        return np.take_along_axis(d, order, axis=1), ids[order]
-    part = np.argpartition(d, kk - 1, axis=1)[:, :kk]
-    pdist = np.take_along_axis(d, part, axis=1)
-    pids = ids[part]
-    order = np.lexsort((pids, pdist), axis=1)
-    out_d = np.take_along_axis(pdist, order, axis=1)
-    out_i = np.take_along_axis(pids, order, axis=1)
-    thresh = out_d[:, -1]
-    ambiguous = np.nonzero((d <= thresh[:, None]).sum(axis=1) > kk)[0]
-    for r in ambiguous:
-        full = np.lexsort((ids, d[r]))[:kk]
-        out_d[r] = d[r][full]
-        out_i[r] = ids[full]
-    return out_d, out_i
-
-
 def _probe_plan(
     idx: PackedClusters,
     qmat: np.ndarray,
@@ -508,28 +439,9 @@ def _probe_plan(
     # identical probe selection to IVFSearcher.probe_clusters:
     # nprobe nearest centroids by float64 L2, ties by cluster id
     d2c = pairwise_distances(qmat, cents, "l2")
-    nc = d2c.shape[1]
-    npb = min(nprobe, nc)
-    if nc > 2 * npb:
-        # argpartition + small per-row sort instead of a full-width
-        # lexsort; boundary ties (kth == (k+1)th centroid distance)
-        # re-rank with the exact full lexsort — same (dist, cluster id)
-        # selection, a fraction of the sort traffic
-        part = np.argpartition(d2c, npb - 1, axis=1)[:, :npb]
-        pdist = np.take_along_axis(d2c, part, axis=1)
-        lo = np.lexsort((part, pdist), axis=1)
-        order = np.take_along_axis(part, lo, axis=1)
-        thresh = np.take_along_axis(pdist, lo[:, -1:], axis=1)[:, 0]
-        ambiguous = np.nonzero((d2c <= thresh[:, None]).sum(axis=1) > npb)[0]
-        if len(ambiguous):
-            cid_row = np.arange(nc)
-            for r in ambiguous:
-                order[r] = np.lexsort((cid_row, d2c[r]))[:npb]
-    else:
-        order = np.lexsort(
-            (np.broadcast_to(np.arange(nc), d2c.shape), d2c),
-            axis=1,
-        )[:, :npb]
+    npb = min(nprobe, d2c.shape[1])
+    order = topk_rows(d2c, np.arange(d2c.shape[1]), npb)[1]
+
     def build(flat_c: np.ndarray, flat_q: np.ndarray) -> list:
         so = np.argsort(flat_c, kind="stable")
         fc, fq = flat_c[so], flat_q[so]
@@ -756,10 +668,10 @@ def _search_batch_fast(
 
     # --- primary pre-pass: one dense (covered-queries × max-width)
     # score matrix filled per cluster, then ONE vectorized top-m
-    # (topk_block) initializes R and the thresholds.  plan0 lists each
-    # query at most once, so cluster scatters land on disjoint rows;
-    # per-entry cost collapses to the GEMM + a row scatter (the
-    # per-entry topk_rows this replaces spent ~100 µs/call on
+    # (topk_rows over the padded block) initializes R and the
+    # thresholds.  plan0 lists each query at most once, so cluster
+    # scatters land on disjoint rows; per-entry cost collapses to the
+    # GEMM + a row scatter (a topk_rows call per entry spent ~100 µs on
     # argpartition/lexsort dispatch overhead alone).  Sound for the
     # guard: dropped candidates score ≥ the m-th kept of their own
     # primary block, which is ≥ the final boundary since R only
@@ -784,9 +696,9 @@ def _search_batch_fast(
             tot[qrows] += w
         sel = np.nonzero(covered)[0]
         if len(sel) == n_q:
-            od, op = topk_block(D0, P0, m)
+            od, op = topk_rows(D0, P0, m)
         else:
-            od, op = topk_block(D0[sel], P0[sel], m)
+            od, op = topk_rows(D0[sel], P0[sel], m)
         width = min(m, od.shape[1])
         R_d[sel[:, None], np.arange(width)[None, :]] = od[:, :width]
         pw = op[:, :width]
@@ -1036,7 +948,7 @@ def _search_batch_exact(
             D[rows[:, None], cols] = d
             I[rows[:, None], cols] = idx.ids[bi][s:e]
             fill[rows] += e - s
-        od, oi = topk_block(D, I, min(k, width))
+        od, oi = topk_rows(D, I, min(k, width))
         seg_d.append(od)
         seg_i.append(oi)
 
@@ -1064,7 +976,7 @@ def _search_batch_exact(
     else:
         fd = np.concatenate(seg_d, axis=1)
         fi = np.concatenate(seg_i, axis=1)
-        fd, fi = topk_block(fd, fi, min(k, fd.shape[1]))
+        fd, fi = topk_rows(fd, fi, min(k, fd.shape[1]))
     kk = fd.shape[1]
     valid = (fi != _PAD_ID).ravel()
     ranks = np.broadcast_to(
