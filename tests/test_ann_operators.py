@@ -590,6 +590,19 @@ def test_search_batch_fast_equals_exact_all_metrics():
         np.testing.assert_allclose(got, ref_topk, atol=1e-9, rtol=0)
 
 
+def test_serving_topk_rows_tie_safety():
+    """Boundary ties (kth == (k+1)th distance) must resolve by id — the
+    argpartition fast path alone would keep an arbitrary tied member."""
+    from vectordb_retrieval_spark.operators.topk import topk_rows
+
+    d = np.array([[0.5, 0.2, 0.5, 0.1, 0.5, 0.9]])
+    ids = np.array([10, 20, 5, 30, 4, 40], dtype=np.int64)
+    od, oi = topk_rows(d, ids, 4)
+    # top-4 by (dist, id): 0.1/30, 0.2/20, then the 0.5 tie -> ids 4, 5
+    assert oi.tolist() == [[30, 20, 4, 5]]
+    assert od.tolist() == [[0.1, 0.2, 0.5, 0.5]]
+
+
 def test_cluster_pruned_broadcast_path_equals_partitioned_path(dfs):
     from vectordb_retrieval_spark.operators.cluster_pruned import (
         ClusterPrunedExactIndexer,
