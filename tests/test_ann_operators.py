@@ -726,7 +726,7 @@ def test_packed_subblob_split_matches_unsplit(dfs):
     from vectordb_retrieval_spark.functions.distance import normalize_rows
     from vectordb_retrieval_spark.functions.kernels import (
         cluster_scan_topk,
-        collect_vectors_cached,
+        collect_vectors,
         merge_fragment_topk,
         pack_assignment,
     )
@@ -737,7 +737,7 @@ def test_packed_subblob_split_matches_unsplit(dfs):
     for codec in (None, SQ8Codec()):
         art = IVFIndexer(nlist=8, seed=3, codec=codec).build(base_df)
         searcher = IVFSearcher(nprobe=3).attach(art)
-        qids, qmat = collect_vectors_cached(query_df, "qid", "vec")
+        qids, qmat = collect_vectors(query_df, "qid", "vec")
         probe = searcher.probe_clusters(qids, qmat)
         pmap = searcher._probe_rows(probe, len(qids))
         results = []
@@ -1321,6 +1321,8 @@ PLAN_CASES = [
     "pq",
     "cluster_pruned",
     "lsh",
+    "graph",
+    "graph-routed",
 ]
 
 
@@ -1332,11 +1334,26 @@ def _plan_case(case, base_df):
         ClusterPrunedExactIndexer,
         ClusterPrunedExactSearcher,
     )
+    from vectordb_retrieval_spark.operators.graph_ann import (
+        GraphANNIndexer,
+        GraphANNSearcher,
+    )
     from vectordb_retrieval_spark.operators.ivf import IVFIndexer, IVFSearcher
     from vectordb_retrieval_spark.operators.lsh import LSHIndexer, LSHSearcher
     from vectordb_retrieval_spark.operators.pq import PQADCSearcher, PQIndexer
     from vectordb_retrieval_spark.operators.quant import SQ8Codec
 
+    if case == "graph":
+        art = GraphANNIndexer(m=6, ef_construction=24, num_partitions=2).build(
+            base_df
+        )
+        return art, GraphANNSearcher(ef_search=32), {}
+    if case == "graph-routed":
+        art = GraphANNIndexer(
+            m=6, ef_construction=24, num_partitions=4, partition_by="kmeans",
+            seed=1,
+        ).build(base_df)
+        return art, GraphANNSearcher(ef_search=32, probe_partitions=2), {}
     if case.startswith("ivf"):
         metric = case.split("-")[1]
         art = IVFIndexer(
@@ -1438,7 +1455,9 @@ def test_partitioned_paths_chunk_past_gate(dfs, monkeypatch):
             GraphANNIndexer(m=6, ef_construction=24, num_partitions=2).build(
                 base_df
             ),
-            GraphANNSearcher(ef_search=32, broadcast_threshold=0),
+            GraphANNSearcher(
+                ef_search=32, broadcast_threshold=0, node_local_cache=False
+            ),
         ),
         (
             LSHIndexer(dimension=dim, num_tables=2, hash_size=4, seed=1).build(

@@ -118,3 +118,18 @@ def test_parquet_schema_memo_sees_rewrite_at_same_path(spark, tmp_path):
     df = read_parquet_cached_schema(spark, path)
     assert df.columns == ["z", "w"]
     assert [tuple(r) for r in df.collect()] == [(2.5, 3)]
+
+    # the scan partition count shares the stamp: a table rewritten with
+    # fewer files than cores is spread again, not read through the count
+    # memoized for its many-file predecessor
+    from vectordb_retrieval_spark.driver_queries.common import docs
+
+    def spread(d):  # did the catalogue add its up-partition exchange?
+        return "Repartition" in d._jdf.queryExecution().logical().toString()
+
+    par = spark.sparkContext.defaultParallelism
+    dpath = str(tmp_path / "documents.parquet")
+    spark.range(64 * par).repartition(4 * par).write.parquet(dpath)
+    assert not spread(docs(spark, str(tmp_path)))
+    spark.range(8).coalesce(1).write.mode("overwrite").parquet(dpath)
+    assert spread(docs(spark, str(tmp_path)))

@@ -12,61 +12,59 @@ K = 10
 QUERY_FILTER = "vec_id % 10 = 0"
 
 
-# scan partition counts per (path, parallelism): the count is a pure
-# function of the file layout and session conf, but reading it costs a
-# DataFrame→RDD plan conversion in the driver on EVERY catalogue-query
-# construction — memoized since r13
-_SCAN_NPARTS: dict = {}
-
-# inferred parquet schemas per path: a bare ``spark.read.parquet(path)``
-# runs a 1-task footer-inference JOB per call, and the catalogue pays it
-# once per table reference per query invocation (the r14 job breakdown
-# showed it as the first 1-task job of every headline query).  The
-# schema is a pure function of the file, so infer once per (path,
-# mtime, size) and hand it to the reader explicitly afterwards — schema
-# metadata only, never data (every invocation still scans the parquet).
-# A table rewritten at the same path changes its stat stamp and is
-# inferred again; a path os.stat cannot see is inferred on every read.
+# per parquet path: (stat stamp, inferred schema, {parallelism: scan
+# partition count}).  A bare ``spark.read.parquet(path)`` runs a 1-task
+# footer-inference JOB per call, and the catalogue pays it once per
+# table reference per query invocation (the r14 job breakdown showed it
+# as the first 1-task job of every headline query); the partition count
+# costs a DataFrame→RDD plan conversion in the driver on every
+# catalogue-query construction.  Both are pure functions of the files
+# (and, for the count, the session's parallelism), so they are read once
+# per (path, mtime, size) — metadata only, never data (every invocation
+# still scans the parquet).  A table rewritten at the same path changes
+# its stat stamp and is read again; a path os.stat cannot see is read on
+# every call.
 _SCHEMA_MEMO: dict = {}
 
 
-def read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
+def _scan_meta(spark: SparkSession, path: str) -> tuple:
     try:
         st = os.stat(path)
         stamp = (st.st_mtime_ns, st.st_size)
     except OSError:
         stamp = None
     hit = _SCHEMA_MEMO.get(path)
-    if stamp is not None and hit is not None and hit[0] == stamp:
-        s = hit[1]
-    else:
-        s = spark.read.parquet(path).schema
+    if stamp is None or hit is None or hit[0] != stamp:
+        hit = (stamp, spark.read.parquet(path).schema, {})
         if stamp is not None:
-            _SCHEMA_MEMO[path] = (stamp, s)
-    return spark.read.schema(s).parquet(path)
+            _SCHEMA_MEMO[path] = hit
+    return hit
 
 
-def _spread(df: DataFrame, memo_key=None) -> DataFrame:
-    """Repartition a scan UP to the session's parallelism when the file
-    layout gives fewer partitions than cores (a small local file is one
-    row-group → one task, serializing every downstream expression and
-    Arrow kernel).  At cluster scale the scan already has ≥ cores
-    partitions and this is a no-op — never a down-shuffle of a big scan."""
-    p = df.sparkSession.sparkContext.defaultParallelism
-    key = (memo_key, p) if memo_key is not None else None
-    n = _SCAN_NPARTS.get(key)
+def read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.schema(_scan_meta(spark, path)[1]).parquet(path)
+
+
+def _spread(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet scan at ``path``, repartitioned UP to the session's
+    parallelism when the file layout gives fewer partitions than cores
+    (a small local file is one row-group → one task, serializing every
+    downstream expression and Arrow kernel).  At cluster scale the scan
+    already has ≥ cores partitions and this is a no-op — never a
+    down-shuffle of a big scan."""
+    _, schema, nparts = _scan_meta(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    p = spark.sparkContext.defaultParallelism
+    n = nparts.get(p)
     if n is None:
-        n = df.rdd.getNumPartitions()
-        if key is not None:
-            _SCAN_NPARTS[key] = n
+        n = nparts[p] = df.rdd.getNumPartitions()
     if n < p:
         return df.repartition(p)
     return df
 
 
 def emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = f"{sf_dir}/embeddings.parquet"
-    return _spread(read_parquet_cached_schema(spark, path), memo_key=path)
+    return _spread(spark, f"{sf_dir}/embeddings.parquet")
 
 
 def emb_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,8 +83,7 @@ def emb_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = f"{sf_dir}/documents.parquet"
-    return _spread(read_parquet_cached_schema(spark, path), memo_key=path)
+    return _spread(spark, f"{sf_dir}/documents.parquet")
 
 
 # events.parquet has stored ts as parquet TIMESTAMP(NANOS) in some data

@@ -43,45 +43,6 @@ def collect_vectors(
     return ids, mat
 
 
-# DataFrames are immutable, so a collect keyed on DataFrame identity can
-# never serve stale data; WeakKey keeps the memo from pinning query
-# tables after callers drop them.  Serving paths collect the same query
-# batch once per SEARCH otherwise — at high search rates the repeated
-# toPandas job is pure fixed cost.
-_collect_memo: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def collect_vectors_cached(
-    df: DataFrame, id_col: str, vec_col: str
-) -> tuple[np.ndarray, np.ndarray]:
-    """``collect_vectors`` with a WeakKey memo on the DataFrame object.
-    Falls back to a plain collect for unhashable/unweakrefable frames
-    (e.g. future client implementations)."""
-    key = (id_col, vec_col)
-    try:
-        per_df = _collect_memo.get(df)
-        if per_df is not None and key in per_df:
-            return per_df[key]
-    except TypeError:
-        return collect_vectors(df, id_col, vec_col)
-    out = collect_vectors(df, id_col, vec_col)
-    try:
-        if per_df is None:
-            per_df = {}
-            _collect_memo[df] = per_df
-        per_df[key] = out
-    except TypeError:
-        pass
-    return out
-
-
-# Same immutability argument as _collect_memo: a DataFrame's partition
-# count never changes, but reading it costs a DataFrame→RDD plan
-# conversion in the driver — pure fixed cost when serving paths ask it
-# of the same cached query batch on every search call.
-_nparts_memo: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
 def _collect_sorted_ids(df: DataFrame, id_col: str) -> np.ndarray:
     pdf = df.select(id_col).toPandas()
     return np.unique(pdf[id_col].to_numpy(dtype=np.int64))
@@ -91,30 +52,17 @@ def _collect_sorted_ids(df: DataFrame, id_col: str) -> np.ndarray:
 # per (filter frame, column) — serving workloads reuse one predicate
 # across many query batches, and re-broadcasting per search would leak
 # JVM broadcast blocks at serving rates.
-_ids_memo: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
 def allowed_ids_broadcast_cached(df: DataFrame, id_col: str):
     """(sorted unique int64 ids, spark Broadcast of them) for a filter
-    frame, WeakKey-memoized on the DataFrame object."""
-    key = id_col
-    try:
-        per_df = _ids_memo.get(df)
-        if per_df is not None and key in per_df:
-            return per_df[key]
-    except TypeError:
+    frame, memoized on the DataFrame object (``_FRAME_MEMO``)."""
+    key = ("allowed_ids", id_col)
+    hit = _FRAME_MEMO.get(df, key)
+    if hit is None:
         ids = _collect_sorted_ids(df, id_col)
-        return ids, df.sparkSession.sparkContext.broadcast(ids)
-    ids = _collect_sorted_ids(df, id_col)
-    out = (ids, df.sparkSession.sparkContext.broadcast(ids))
-    try:
-        if per_df is None:
-            per_df = {}
-            _ids_memo[df] = per_df
-        per_df[key] = out
-    except TypeError:
-        pass
-    return out
+        hit = _FRAME_MEMO.put(
+            df, key, (ids, df.sparkSession.sparkContext.broadcast(ids))
+        )
+    return hit
 
 
 # Serving query frames as a broadcast matrix: the broadcast-index
@@ -279,10 +227,12 @@ def collect_or_chunk(
 
 
 class SearchPlanMemo:
-    """WeakKey search-plan memo (the searcher skeleton's and exact_knn's):
-    repeated searches of the same query frame rebuild an identical lazy
-    plan — ~60 ms of driver-side pyspark object construction per call
-    at serving rates, plus any per-plan broadcasts.  Results are
+    """WeakKey memo on DataFrame objects — the search-plan memo of the
+    searcher skeleton and exact_knn, and ``_FRAME_MEMO``'s per-frame
+    values; unweakrefable frames are never memoized.  Repeated searches
+    of the same query frame rebuild an identical lazy plan — ~60 ms of
+    driver-side pyspark object construction per call at serving rates,
+    plus any per-plan broadcasts.  Results are
     deterministic per (artifact, query frame, key); execution still
     runs in full on every materialization.
 
@@ -332,10 +282,17 @@ class SearchPlanMemo:
         return value
 
 
+# Values derived from a DataFrame, memoized on the frame object (when an
+# entry can go stale, its function's docstring says so); the WeakKey
+# memo never pins a frame its callers dropped.
+_FRAME_MEMO = SearchPlanMemo()
+
+
 def num_partitions_cached(df: DataFrame) -> int:
-    """``df.rdd.getNumPartitions()`` with a WeakKey memo on the
-    DataFrame object; falls back to the plain call for unweakrefable
-    frames.
+    """``df.rdd.getNumPartitions()`` memoized on the DataFrame object
+    (``_FRAME_MEMO``): reading it costs a DataFrame→RDD plan conversion
+    in the driver, pure fixed cost when serving paths ask it of the
+    same query batch on every search.
 
     Contract: the caller passes a CACHED / physically stable frame
     (the serving paths memoize the same query frame across searches).
@@ -343,16 +300,9 @@ def num_partitions_cached(df: DataFrame) -> int:
     it (shuffle-partition conf edits, AQE re-plans) the memo can go
     stale — the consequence is perf-only (a skipped repartition →
     reduced search parallelism), never wrong results."""
-    try:
-        n = _nparts_memo.get(df)
-    except TypeError:
-        return df.rdd.getNumPartitions()
+    n = _FRAME_MEMO.get(df, "num_partitions")
     if n is None:
-        n = df.rdd.getNumPartitions()
-        try:
-            _nparts_memo[df] = n
-        except TypeError:
-            pass
+        n = _FRAME_MEMO.put(df, "num_partitions", df.rdd.getNumPartitions())
     return n
 
 

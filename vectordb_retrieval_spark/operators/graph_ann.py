@@ -10,12 +10,14 @@ candidates with one global top-k — the same shape as the reference's
 per-shard HNSW + merge pattern in distributed FAISS deployments.
 
 Scale properties: build is embarrassingly parallel (one graph per
-partition, bounded by rows_per_partition); search broadcasts the query
-batch and fans out one BATCHED beam search per partition —
-``_batched_beam`` advances all routed queries through the graph
-together, every beam step one vectorized NumPy gather + einsum across
-queries instead of a per-query Python loop — with NO shuffle until the
-final candidates→top-k merge (probed_partitions × k rows per query).
+partition, bounded by rows_per_partition); search runs one BATCHED beam
+search per (query batch, partition) — ``_batched_beam`` advances all
+routed queries through the graph together, every beam step one
+vectorized NumPy gather + einsum across queries instead of a per-query
+Python loop.  When the shard blobs are broadcast or node-local the
+search is the shared query-driven serving job with no shuffle at all;
+otherwise the only shuffle is the final candidates→top-k merge
+(probed_partitions × k rows per query).
 When ``ef_search`` ≥ partition size the kernel short-circuits to
 ``_brute_topk`` (one GEMM), which is the same answer the saturated beam
 would produce.
@@ -90,6 +92,7 @@ from vectordb_retrieval_spark.functions.hashing import (
     sign_buckets,
 )
 from vectordb_retrieval_spark.operators.searcher import Searcher
+from vectordb_retrieval_spark.operators.serving import query_driven_job
 from vectordb_retrieval_spark.operators.topk import (
     topk_groups,
     topk_per_query,
@@ -400,6 +403,31 @@ def _brute_topk(
     GEMM top-k is the same answer without the walk."""
     d = pairwise_distances(qmat, mat, metric)
     return topk_rows(d, np.arange(d.shape[1]), ef)
+
+
+def _route_shards(qmat: np.ndarray, cent, cpids, probe, metric: str):
+    """Centroid routing: shard pid → the rows of ``qmat`` that probe it,
+    each row probing its ``probe`` nearest shards (ties to the lower
+    shard index); None (probe every shard) when ``cent`` is None.  A
+    shard's distance is the min over its routing centroids (kmeans
+    shards are bin-packed balls), so ``probe`` always counts SHARDS.
+    Rows route independently: a query slice routes as the whole batch."""
+    if cent is None:
+        return None
+    cd = pairwise_distances(qmat, cent, metric)
+    upids = np.unique(cpids)
+    shard_d = np.empty((cd.shape[0], len(upids)), dtype=cd.dtype)
+    for j, p_ in enumerate(upids):
+        shard_d[:, j] = cd[:, cpids == p_].min(axis=1)
+    nearest = topk_rows(
+        shard_d, np.arange(len(upids)), min(probe, len(upids))
+    )[1]
+    route = {}
+    for j in range(len(upids)):
+        sel = np.nonzero((nearest == j).any(axis=1))[0]
+        if len(sel):
+            route[int(upids[j])] = sel.astype(np.int64)
+    return route
 
 
 def _build_nsw(
@@ -995,8 +1023,19 @@ def graph_delete(
 
 
 class GraphANNSearcher(Searcher):
-    """Broadcast queries; one batched beam search per partition graph;
-    global top-k merge.
+    """Batched beam search per shard graph, merged into a global top-k,
+    under one of two plans:
+
+    - **query-driven** (shard blobs broadcast under
+      ``broadcast_threshold``, or published to the node-local store over
+      it when ``node_local_cache``): ``serving.query_driven_job`` — each
+      task takes a slice of the query batch, routes it, beams it through
+      its routed shards and merges in-task;
+    - **partitioned** (over the threshold when the node-local store is
+      off or unavailable — the multi-executor plan): the driver routes
+      the collected batch and broadcasts it with the routing; each
+      (shard, query chunk) task beams its shard's queries, and the window
+      top-k merges the candidates.
 
     ``probe_partitions=p`` routes each query to its p nearest shards by
     centroid distance — for kmeans artifacts a shard's distance is the
@@ -1098,19 +1137,8 @@ class GraphANNSearcher(Searcher):
         spark = query_df.sparkSession
         accum = self._ndis(spark)
 
-        qids, qmat, done = self._queries(
-            query_df,
-            qid_col,
-            vec_col,
-            lambda c: self.search(c, k, qid_col, vec_col),
-            normalize=metric == "cosine",
-        )
-        if done is not None:
-            return done
-
-        # centroid routing: pid → indices of the queries probing it
-        route: dict[int, np.ndarray] | None = None
         probe = self.probe_partitions
+        cent = cpids = None
         if probe is not None:
             cent = art.params.get("centroids")
             if cent is None:
@@ -1120,77 +1148,6 @@ class GraphANNSearcher(Searcher):
                     "per-shard centroids)"
                 )
             cpids = art.params["centroid_pids"]
-            cd = pairwise_distances(qmat, cent, metric)
-            # a shard may own several routing centroids (kmeans shards
-            # are bin-packed balls); its distance to a query is the min
-            # over them, so probe_partitions always counts SHARDS.
-            # With one centroid per shard (lsh) this is the identity.
-            upids = np.unique(cpids)
-            shard_d = np.empty((cd.shape[0], len(upids)), dtype=cd.dtype)
-            for j, p_ in enumerate(upids):
-                shard_d[:, j] = cd[:, cpids == p_].min(axis=1)
-            probe = min(probe, len(upids))
-            # deterministic routing: ties broken by shard index
-            nearest = topk_rows(shard_d, np.arange(len(upids)), probe)[1]
-            route = {}
-            for j in range(len(upids)):
-                sel = np.nonzero((nearest == j).any(axis=1))[0]
-                if len(sel):
-                    route[int(upids[j])] = sel.astype(np.int64)
-
-        # Small index ⇒ broadcast the packed shards (same decision
-        # Spark makes for broadcast joins): (shard, chunk) tasks come
-        # from an exact 1-row-per-partition RDD — perfectly even tasks,
-        # no blob shuffle at all.  Large index ⇒ shuffle-replicate the
-        # blob rows per chunk (shard_count × chunks rows — still the
-        # index, never the base data).  Decided BEFORE the chunk sizing
-        # below: on a first search a missing memo used to read as
-        # "partitioned path" and set chunks=1 even when the index was
-        # about to be broadcast.
-        shard_bc = self._shard_broadcast(spark)
-        bc_shards = None if shard_bc is None else shard_bc.bc
-        # over-threshold on a single-node master: serve every search
-        # through read-only mmaps of the node-local shard store — same
-        # query-partitioned plan as the broadcast path, zero per-search
-        # blob traffic
-        shm_shards = (
-            self._shard_store(spark)
-            if bc_shards is None and self.node_local_cache
-            else None
-        )
-
-        # fan the query batch out across (shard × chunk) tasks: the
-        # per-task kernel is CPU-bound NumPy, so shard count alone
-        # under-uses a wide executor pool on big batches.  Chunk count
-        # targets ~2 tasks per core with ≥128 queries per task.
-        # When routing is active, the chunk count is sized from the
-        # ACTIVE shard count and per-shard routed query counts (both
-        # known on the driver), and each task takes a stride of its
-        # shard's own routed list — otherwise probing 2 of 32 shards
-        # would leave 15/16 of the task slots as no-ops and the routed
-        # search could never beat probe-all on wall clock.
-        n_q = len(qids)
-        n_parts = art.params["num_partitions"]
-        par = spark.sparkContext.defaultParallelism
-        if route is not None:
-            avg = max(1, int(np.mean([len(v) for v in route.values()])))
-            n_active = max(1, len(route))
-            chunks = max(1, min(-(-avg // 64), -(-2 * par // n_active)))
-        else:
-            chunks = max(1, min(-(-n_q // 128), -(-2 * par // n_parts)))
-        # chunk fan-out on the PARTITIONED path pays a shuffle that
-        # replicates every shard blob per chunk; when the shard count
-        # already covers the executor pool, chunks=1 keeps the search a
-        # narrow zero-shuffle scan of the cached graph table instead
-        # (for a 150k x 384-d 32-shard index, chunks=2 was moving
-        # ~560 MB of blobs per search to cut task count from 32 to 64)
-        if bc_shards is None and (
-            n_active if route is not None else n_parts
-        ) >= par:
-            chunks = 1
-        bounds = np.linspace(0, n_q, chunks + 1).astype(np.int64)
-
-        bc = spark.sparkContext.broadcast((qids, qmat, route, bounds, chunks))
 
         def shard_cands(
             q_sub: np.ndarray, blob: bytes, skey=None
@@ -1243,49 +1200,33 @@ class GraphANNSearcher(Searcher):
                 np.concatenate(out_d),
             )
 
-        if bc_shards is not None or shm_shards is not None:
-            # Query-partitioned serving (the zero-shuffle inversion of
-            # operators/serving.py): every shard blob is already on
-            # every executor (broadcast) or node (shm publish), so each
-            # task takes a STRIDE of the query
-            # batch, beams it through all of its queries' (routed)
-            # shards in-kernel, merges the per-shard candidates with
-            # one lexicographic (dist, id) prefix pass, and emits the
-            # final (qid, id, dist, rank) rows directly.  This removes
-            # the candidates exchange (n_q × probed_shards × k rows)
-            # and the window top-k stage the partitioned path needs —
-            # the merge that used to be a shuffle is a NumPy pass over
-            # data the task already holds.
-            # quota of 32 queries per task: at 1024-query serving
-            # batches a 64-query quota left half a 32-core pool idle;
-            # per-task beam compute (tens of ms) still dwarfs task
-            # overhead at 32.  Unrouted tasks are EQUAL work (every
-            # task beams its stride through every shard), so cap at
-            # one task per core — a 2·par fan-out ran as two waves
-            # whose straggler tails cost ~30% of the search wall;
-            # routed tasks stay at 2·par so uneven routing loads can
-            # rebalance across the pool.
-            n_tasks = max(
-                1,
-                min(-(-n_q // 32), 2 * par if route is not None else par),
-            )
-            if bc_shards is not None:
+        # Small index ⇒ broadcast the packed shards (same decision
+        # Spark makes for broadcast joins); over the threshold on a
+        # single-node master, the node-local shard store.  Either way
+        # every shard blob is already where the tasks run, so the
+        # search is the query-driven serving job: each task takes a
+        # slice of the query batch, routes it, beams it through its
+        # routed shards and merges the per-shard candidates with one
+        # (dist, id) pass — no candidates exchange, no window top-k.
+        shard_bc = self._shard_broadcast(spark)
+        shm_shards = (
+            self._shard_store(spark)
+            if shard_bc is None and self.node_local_cache
+            else None
+        )
+        if shard_bc is not None or shm_shards is not None:
+            if shard_bc is not None:
+                bc_shards = shard_bc.bc
                 state_token, shard_pids = shard_bc.meta
                 shm_root = None
             else:
                 shm_root, shard_pids = shm_shards
-            # spark.range is a JVM-native scan with exactly one row per
-            # task; a parallelize-backed DataFrame inserts an EXTRA
-            # python stage (pickled-row scan → InternalRow conversion)
-            # ahead of the serving kernel — measured ~+0.2 s per search
-            # job on a 32-core local pool (vs ~0.07 s for the whole
-            # JVM-only job floor)
-            tasks = spark.range(
-                0, n_tasks, 1, numPartitions=n_tasks
-            ).selectExpr("cast(id as int) qchunk")
 
-            def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                q_ids, q_mat, rt, _, _ = bc.value
+            def batch_fn(qids: np.ndarray, qmat: np.ndarray):
+                if metric == "cosine":
+                    qmat = normalize_rows(qmat.astype(np.float64)).astype(
+                        np.float32
+                    )
                 if shm_root is None:
                     get_blob = bc_shards.value.__getitem__
                     key_base = ("bc", state_token)
@@ -1296,49 +1237,90 @@ class GraphANNSearcher(Searcher):
                         )
 
                     key_base = ("shm", shm_root)
-                for pdf in batches:
-                    for qc_ix in pdf["qchunk"]:
-                        qc_ix = int(qc_ix)
-                        acc_q: list[np.ndarray] = []
-                        acc_i: list[np.ndarray] = []
-                        acc_d: list[np.ndarray] = []
-                        for pid in shard_pids:
-                            if rt is not None:
-                                members = rt.get(int(pid))
-                                if members is None:
-                                    continue
-                                sel = members[members % n_tasks == qc_ix]
-                            else:
-                                sel = np.arange(qc_ix, len(q_ids), n_tasks)
-                            if not len(sel):
-                                continue
-                            lr, ci, cd = shard_cands(
-                                q_mat[sel], get_blob(pid), skey=key_base + (pid,)
-                            )
-                            acc_q.append(sel[lr])
-                            acc_i.append(ci)
-                            acc_d.append(cd)
-                        if not acc_q:
-                            continue
-                        gq, gi, gd, rank = topk_groups(
-                            np.concatenate(acc_q),
-                            np.concatenate(acc_i),
-                            np.concatenate(acc_d),
-                            k,
-                        )
-                        yield pd.DataFrame(
-                            {"qid": q_ids[gq], "id": gi, "dist": gd, "rank": rank}
-                        )
+                route = _route_shards(qmat, cent, cpids, probe, metric)
+                every = np.arange(len(qids))
+                acc_q: list[np.ndarray] = []
+                acc_i: list[np.ndarray] = []
+                acc_d: list[np.ndarray] = []
+                for pid in shard_pids:
+                    sel = every if route is None else route.get(int(pid))
+                    if sel is None:
+                        continue
+                    lr, ci, cd = shard_cands(
+                        qmat[sel], get_blob(pid), skey=key_base + (pid,)
+                    )
+                    acc_q.append(sel[lr])
+                    acc_i.append(ci)
+                    acc_d.append(cd)
+                if not acc_q:
+                    return None
+                gq, gi, gd, rank = topk_groups(
+                    np.concatenate(acc_q),
+                    np.concatenate(acc_i),
+                    np.concatenate(acc_d),
+                    k,
+                )
+                return pd.DataFrame(
+                    {"qid": qids[gq], "id": gi, "dist": gd, "rank": rank}
+                )
 
+            # 32-query slices: per-slice beam compute (tens of ms)
+            # still dwarfs task overhead, and a 1024-query batch fills
+            # a 32-core pool
             return self._plan_put(
                 query_df,
                 mk,
-                tasks.mapInPandas(
-                    kernel,
-                    schema="qid long, id long, dist double, rank int",
+                query_driven_job(
+                    query_df, qid_col, vec_col, batch_fn, rows_per_task=32
                 ),
                 shm_root,
             )
+
+        # Blob-shipping partitioned plan (multi-executor master, or
+        # node_local_cache=False): shuffle-replicate the blob rows per
+        # query chunk (shard_count × chunks rows — still the index,
+        # never the base data) and merge with the window top-k.
+        qids, qmat, done = self._queries(
+            query_df,
+            qid_col,
+            vec_col,
+            lambda c: self.search(c, k, qid_col, vec_col),
+            normalize=metric == "cosine",
+        )
+        if done is not None:
+            return done
+        route = _route_shards(qmat, cent, cpids, probe, metric)
+
+        # fan the query batch out across (shard × chunk) tasks: the
+        # per-task kernel is CPU-bound NumPy, so shard count alone
+        # under-uses a wide executor pool on big batches.  Chunk count
+        # targets ~2 tasks per core with ≥128 queries per task.
+        # When routing is active, the chunk count is sized from the
+        # ACTIVE shard count and per-shard routed query counts (both
+        # known on the driver), and each task takes a stride of its
+        # shard's own routed list — otherwise probing 2 of 32 shards
+        # would leave 15/16 of the task slots as no-ops.
+        n_q = len(qids)
+        n_parts = art.params["num_partitions"]
+        par = spark.sparkContext.defaultParallelism
+        if route is not None:
+            avg = max(1, int(np.mean([len(v) for v in route.values()])))
+            n_active = max(1, len(route))
+            chunks = max(1, min(-(-avg // 64), -(-2 * par // n_active)))
+        else:
+            n_active = n_parts
+            chunks = max(1, min(-(-n_q // 128), -(-2 * par // n_parts)))
+        # chunk fan-out pays a shuffle that replicates every shard blob
+        # per chunk; when the shard count already covers the executor
+        # pool, chunks=1 keeps the search a narrow zero-shuffle scan of
+        # the cached graph table instead (for a 150k x 384-d 32-shard
+        # index, chunks=2 was moving ~560 MB of blobs per search to cut
+        # task count from 32 to 64)
+        if n_active >= par:
+            chunks = 1
+        bounds = np.linspace(0, n_q, chunks + 1).astype(np.int64)
+
+        bc = spark.sparkContext.broadcast((qids, qmat, route, bounds, chunks))
 
         def search_shard(
             pid: int, qc_ix: int, blob: bytes

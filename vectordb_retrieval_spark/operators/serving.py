@@ -11,12 +11,11 @@ cluster scale for compressed codes over sharded or per-tenant corpora —
 that dataflow is upside down: the index is smaller than the candidate
 traffic it generates.  This module flips it, the same inversion Spark's
 broadcast-join threshold encodes and the same one graph_ann.py applies
-to its shard blobs (graph_ann.py:507-518): broadcast the packed index
-once, scan the QUERY table, and run each query's entire
-probe → decode → scan → top-k pipeline inside a single task.  One
-narrow mapInArrow job driven by the query batch (``query_driven_job``,
-which the LSH and cluster-pruned kernels share), zero shuffle, exactly
-k rows out per query.
+to its shard blobs: broadcast the packed index once, scan the QUERY
+table, and run each query's entire probe → decode → scan → top-k
+pipeline inside a single task.  One narrow mapInArrow job driven by the
+query batch (``query_driven_job``, which the LSH, cluster-pruned and
+graph kernels share), zero shuffle, exactly k rows out per query.
 
 Result parity: probe selection (nprobe nearest centroids, ties by
 cluster id), decode, float64 distance arithmetic, and (dist, id)
@@ -1017,8 +1016,10 @@ def query_driven_job(
     batch_fn,
     rows_per_task: int = 512,
 ) -> DataFrame:
-    """The serving-job driver for every broadcast-index kernel, of the
-    shape ``batch_fn(qids, float32 qmat) -> pd.DataFrame(qid,id,dist,rank)``
+    """The serving-job driver for every broadcast-index kernel — IVF,
+    PQ, LSH, cluster-pruned and graph (whose node-local shard plan runs
+    here too) — of the shape
+    ``batch_fn(qids, float32 qmat) -> pd.DataFrame(qid,id,dist,rank)``
     (or None): gate-passing query frames broadcast their collected
     matrix once (WeakKey memo) and the job is a range frame whose tasks
     slice the broadcast — no query bytes cross the JVM→Python boundary
@@ -1034,7 +1035,7 @@ def query_driven_job(
     only known here).  The 512 default amortizes Python-worker dispatch
     for CHEAP kernels (probe-few-clusters: sq8/IVF/PQ/LSH); compute-heavy
     kernels whose per-query work rivals an exact scan (cluster-pruned's
-    two-phase bound search) pass a smaller floor so mid-size batches
+    two-phase bound search, graph's beam) pass a smaller floor so mid-size batches
     still spread across the executor pool — the r11 routing left the
     2048-query cluster-pruned batch on 4 of 32 cores and halved its
     serving QPS (r11 judge "what's wrong" #1)."""

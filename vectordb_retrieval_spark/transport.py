@@ -41,7 +41,8 @@ republish against their own rows):
   with each caller's threshold, and a caller whose threshold admits an
   index no one has packed yet packs it then.
 - ``_shard_bc`` — the same for the graph shard blobs; ``meta`` holds
-  the sorted shard ids.
+  ``(token, sorted shard ids)``, the token keying the shard scan-state
+  memo of this broadcast's blobs (``graph_ann._shard_state``).
 - ``_packed_shm`` — ``(root, metadata DataFrame)`` of the published
   IVF-family packed blobs, or None when node-local publish is
   unavailable or failed (not retried).  A swept root is republished
