@@ -58,7 +58,7 @@ def q_graph_append_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle over ALL vectors."""
     from pyspark.sql import functions as F
 
-    from vectordb_retrieval_spark.driver_queries.common import K, QUERY_FILTER, emb_queries
+    from vectordb_retrieval_spark.driver_queries.common import K, emb_queries
     from vectordb_retrieval_spark.operators.graph_ann import (
         GraphANNIndexer,
         GraphANNSearcher,
@@ -91,7 +91,7 @@ def q_graph_delete_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     even vec_ids."""
     from pyspark.sql import functions as F
 
-    from vectordb_retrieval_spark.driver_queries.common import K, QUERY_FILTER, emb_queries
+    from vectordb_retrieval_spark.driver_queries.common import K, emb_queries
     from vectordb_retrieval_spark.operators.graph_ann import (
         GraphANNIndexer,
         GraphANNSearcher,
@@ -329,7 +329,7 @@ def q_streaming_graph_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from vectordb_retrieval_spark.driver_queries.common import K, QUERY_FILTER, emb_queries
+    from vectordb_retrieval_spark.driver_queries.common import K, emb_queries
     from vectordb_retrieval_spark.driver_queries.streamq import _state_partitions
     from vectordb_retrieval_spark.operators.graph_ann import (
         GraphANNIndexer,

@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from vectordb_retrieval_spark.driver_queries import ann
 from vectordb_retrieval_spark.driver_queries.common import (
     K,
-    QUERY_FILTER,
     emb,
     emb_queries,
     read_parquet_cached_schema,

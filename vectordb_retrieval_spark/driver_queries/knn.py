@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vectordb_retrieval_spark.driver_queries.common import K, QUERY_FILTER, emb, emb_queries
+from vectordb_retrieval_spark.driver_queries.common import K, emb, emb_queries
 from vectordb_retrieval_spark.operators.exact import exact_knn, exact_range_search
 
 RADIUS = 1.15  # ~0.5 % pair selectivity on the embeddings table

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from vectordb_retrieval_spark.driver_queries.common import (
     K,
-    QUERY_FILTER,
     emb,
     emb_queries,
     events,

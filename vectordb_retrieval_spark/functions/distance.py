@@ -9,7 +9,10 @@ src/utils/vector_utils.py:20-51 gram-matrix form):
    candidate rerank joins where each row carries both vectors.
 2. ``pairwise_distances`` — a NumPy block kernel (queries × base block)
    used inside ``mapInPandas`` partitions.  This is the hot path: one
-   BLAS matmul per Arrow batch instead of per-row array loops.
+   BLAS matmul per Arrow batch instead of per-row array loops.  Its
+   arithmetic is ``block_distances``, which scans that cache the base
+   side (serving's packed scan state, the node-local decode) call
+   directly with prepared operands.
 
 Supported metrics (same trio as the reference, base_algorithm.py /
 vector_utils.py): ``l2`` (euclidean), ``cosine`` (1 − cos sim), ``ip``
@@ -96,22 +99,45 @@ def normalize_rows(mat: np.ndarray) -> np.ndarray:
     return mat / norms
 
 
-def pairwise_distances(queries: np.ndarray, base: np.ndarray, metric: str = "l2") -> np.ndarray:
-    """(n_q, n_b) float64 distance matrix; smaller is always better.
+def block_distances(
+    q: np.ndarray,
+    qsq: np.ndarray | None,
+    b: np.ndarray,
+    bsq: np.ndarray | None,
+    metric: str,
+) -> np.ndarray:
+    """(n_q, n_b) float64 distances of one base block from PREPARED
+    operands — the float64 arithmetic every exact scan shares.
 
-    L2 uses the gram expansion ‖x‖²+‖y‖²−2x·y (one GEMM), clamped at 0
-    before sqrt (reference: vector_utils.py:32-39).
-    """
+    ``q`` and ``b`` are float64 rows, already normalized for cosine;
+    ``qsq`` / ``bsq`` are their squared row norms for l2 (``None``
+    otherwise).  Nothing is normalized or upcast here, so a caller that
+    caches the base side (decode, norms) across searches gets the same
+    bits as ``pairwise_distances``.  L2 uses the gram expansion
+    ‖x‖²+‖y‖²−2x·y (one GEMM), clamped at 0 before sqrt (reference:
+    vector_utils.py:32-39)."""
+    if metric == "l2":
+        d = qsq[:, None] + bsq[None, :] - 2.0 * (q @ b.T)
+        np.maximum(d, 0.0, out=d)
+        return np.sqrt(d, out=d)
+    if metric == "cosine":
+        return 1.0 - q @ b.T
+    if metric == "ip":
+        return -(q @ b.T)
+    raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
+
+
+def pairwise_distances(queries: np.ndarray, base: np.ndarray, metric: str = "l2") -> np.ndarray:
+    """(n_q, n_b) float64 distance matrix; smaller is always better:
+    upcast (and normalize, for cosine), then ``block_distances``."""
     q = np.asarray(queries, dtype=np.float64)
     b = np.asarray(base, dtype=np.float64)
     if metric == "l2":
-        sq = (q * q).sum(axis=1)[:, None] + (b * b).sum(axis=1)[None, :] - 2.0 * (q @ b.T)
-        np.maximum(sq, 0.0, out=sq)
-        return np.sqrt(sq)
+        return block_distances(q, (q * q).sum(axis=1), b, (b * b).sum(axis=1), metric)
     if metric == "cosine":
-        return 1.0 - normalize_rows(q) @ normalize_rows(b).T
+        return block_distances(normalize_rows(q), None, normalize_rows(b), None, metric)
     if metric == "ip":
-        return -(q @ b.T)
+        return block_distances(q, None, b, None, metric)
     if metric in CUSTOM_METRICS:
         return np.asarray(CUSTOM_METRICS[metric](q, b), dtype=np.float64)
     raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")

@@ -1,10 +1,15 @@
 """Arrow-batched NumPy kernels shared by the searchers.
 
-``attach_query_distance`` is the workhorse of every candidate-rerank
-path (LSH rerank, IVF probe scoring): given candidate rows
-(qid, id, vec) and a broadcast query matrix, it appends the exact
-distance qid↔vec without materializing a q×n matrix — one vectorized
-row-wise computation per Arrow batch, JVM→Arrow→NumPy→Arrow.
+- ``cluster_scan_topk`` + ``merge_fragment_topk``: the IVF family's
+  partitioned scan over packed per-cluster blobs (the past-gate plan;
+  the broadcast plan is ``operators/serving.py``).  Its float64
+  arithmetic is ``distance.block_distances``.
+- ``attach_query_distance``: the LSH partitioned rerank — given
+  candidate rows (qid, id, vec) and a broadcast query matrix, it
+  appends the exact distance qid↔vec without materializing a q×n
+  matrix, one vectorized row-wise computation per Arrow batch.
+- the query and frame memos (``query_broadcast_cached``,
+  ``SearchPlanMemo``) the searchers share.
 """
 
 from __future__ import annotations
@@ -19,8 +24,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vectordb_retrieval_spark import transport
-from vectordb_retrieval_spark.functions.distance import normalize_rows
-from vectordb_retrieval_spark.operators.topk import topk_groups, topk_rows
+from vectordb_retrieval_spark.functions.distance import (
+    block_distances,
+    normalize_rows,
+    pairwise_distances,
+)
+from vectordb_retrieval_spark.operators.topk import (
+    RESULT_SCHEMA,
+    topk_groups,
+    topk_rows,
+)
 
 
 def collect_vectors(
@@ -687,9 +700,6 @@ def cluster_scan_topk(
     exchange carries, which on an index-partitioned scan is the whole
     cross-task merge cost.  ``ndis`` accounting is unchanged (the clip
     applies after distances are computed)."""
-    from vectordb_retrieval_spark.functions.distance import pairwise_distances
-    from pyspark.sql import functions as F
-
     spark = packed.sparkSession
     probed_ids = sorted(int(c) for c in probe_map)
     bc = spark.sparkContext.broadcast(
@@ -769,31 +779,17 @@ def cluster_scan_topk(
                         aux[fmask] if aux is not None else None,
                     )
                 if dec is not None:
-                    # shm-cached scan form: inline the EXACT arithmetic
-                    # pairwise_distances runs, with the base-side decode
-                    # and norms read from the shared cache instead of
-                    # recomputed per search
+                    # shm-cached scan form: the base-side decode and
+                    # norms (already normalized for cosine) come from
+                    # the shared cache instead of being recomputed per
+                    # search; the query side is prepared exactly as
+                    # pairwise_distances prepares it
                     mat64, aux = dec
                     q = np.asarray(q_mat[qrows], dtype=np.float64)
-                    if metric == "l2":
-                        sq = (
-                            (q * q).sum(axis=1)[:, None]
-                            + aux[None, :]
-                            - 2.0 * (q @ mat64.T)
-                        )
-                        np.maximum(sq, 0.0, out=sq)
-                        d = np.sqrt(sq)
-                    elif metric == "cosine":
-                        # mat64 is already normalize_rows(decoded); the
-                        # query side re-normalizes exactly as
-                        # pairwise_distances does
-                        from vectordb_retrieval_spark.functions.distance import (
-                            normalize_rows,
-                        )
-
-                        d = 1.0 - normalize_rows(q) @ mat64.T
-                    else:
-                        d = -(q @ mat64.T)
+                    if metric == "cosine":
+                        q = normalize_rows(q)
+                    qsq = (q * q).sum(axis=1) if metric == "l2" else None
+                    d = block_distances(q, qsq, mat64, aux, metric)
                 else:
                     if fmask is not None:
                         raw = raw[fmask]
@@ -977,7 +973,7 @@ def merge_fragment_topk(
         max(2, min(par, -(-n_queries // 256))) if n_queries else par
     )
     return frag.repartition(n_tasks, "qid").mapInArrow(
-        kernel, schema="qid long, id long, dist double, rank int"
+        kernel, schema=RESULT_SCHEMA
     )
 
 

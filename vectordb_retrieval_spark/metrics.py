@@ -2,9 +2,10 @@
 
 Same metric family as the reference (src/evaluation/metrics.py:4-262):
 recall@k, precision@k, MAP@k, NDCG@k (binary relevance), hit_rate@k,
-MRR, latency stats — re-expressed as ONE exploded-join + window +
-groupBy pass over DataFrames instead of per-query Python loops
-(reference loops per query; here every metric is a distributed
+MRR, latency stats — re-expressed as per-query list folds over
+DataFrames (one groupBy per side collects each query's ranked lists,
+every cutoff's metrics fold over them) instead of per-query Python
+loops (reference loops per query; here every metric is a distributed
 aggregation, so the pass scales with cluster size).
 
 Input contract: ``pred`` and ``gt`` are exploded ranked results,
@@ -32,75 +33,15 @@ reference's fixed-shape result arrays.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _per_query(pred: DataFrame, gt: DataFrame, k: int) -> DataFrame:
-    p = pred.filter(F.col("rank") <= k).select("qid", "id", "rank")
-    g = gt.select("qid", "id", F.col("rank").alias("gt_rank"))
-    gt_sizes = g.groupBy("qid").agg(
-        F.count("*").alias("n_gt"),
-        F.sum((F.col("gt_rank") <= k).cast("long")).alias("n_gt_k"),
-    )
-
-    marked = p.join(g, ["qid", "id"], "left").select(
-        "qid",
-        "rank",
-        F.when(F.col("gt_rank").isNotNull(), 1).otherwise(0).alias("hit"),
-        F.when(F.col("gt_rank") <= k, 1).otherwise(0).alias("hit_k"),
-    )
-    w = Window.partitionBy("qid").orderBy("rank")
-    scored = marked.withColumn("cum_hits", F.sum("hit").over(w)).select(
-        "qid",
-        "hit",
-        "hit_k",
-        "rank",
-        (F.col("hit") * F.col("cum_hits") / F.col("rank")).alias("ap_term"),
-        (F.col("hit") / F.log2(F.col("rank") + 1)).alias("dcg_term"),
-        F.when(F.col("hit") == 1, F.col("rank")).alias("hit_rank"),
-    )
-    agg = scored.groupBy("qid").agg(
-        F.sum("hit").alias("n_hit"),
-        F.sum("hit_k").alias("n_hit_k"),
-        F.sum("ap_term").alias("ap_sum"),
-        F.sum("dcg_term").alias("dcg"),
-        F.min("hit_rank").alias("first_hit"),
-    )
-    idcg = F.aggregate(
-        F.sequence(F.lit(1), F.least(F.col("n_gt"), F.lit(k))),
-        F.lit(0.0),
-        lambda acc, i: acc + 1.0 / F.log2(i.cast("double") + 1.0),
-    )
-    return (
-        gt_sizes.join(agg, "qid", "left")
-        .fillna(0, subset=["n_hit", "n_hit_k", "ap_sum", "dcg"])
-        .select(
-            "qid",
-            (F.col("n_hit_k") / F.col("n_gt_k")).alias("recall"),
-            (F.col("n_hit") / F.lit(float(k))).alias("precision"),
-            (F.col("ap_sum") / F.col("n_gt")).alias("ap"),
-            (F.col("dcg") / idcg).alias("ndcg"),
-            (F.col("n_hit") > 0).cast("double").alias("any_hit"),
-            F.coalesce(1.0 / F.col("first_hit"), F.lit(0.0)).alias("rr"),
-        )
-    )
 
 
 def retrieval_metrics(pred: DataFrame, gt: DataFrame, k: int) -> DataFrame:
     """One-row DataFrame: k, n_queries, recall, precision, map, ndcg,
-    hit_rate, mrr (means over the ground-truth query set)."""
-    per_q = _per_query(pred, gt, k)
-    return per_q.agg(
-        F.lit(k).alias("k"),
-        F.count("*").alias("n_queries"),
-        F.avg("recall").alias("recall"),
-        F.avg("precision").alias("precision"),
-        F.avg("ap").alias("map"),
-        F.avg("ndcg").alias("ndcg"),
-        F.avg("any_hit").alias("hit_rate"),
-        F.avg("rr").alias("mrr"),
-    )
+    hit_rate, mrr (means over the ground-truth query set) — the
+    single-cutoff ``retrieval_metrics_multi``."""
+    return retrieval_metrics_multi(pred, gt, [k])
 
 
 def retrieval_metrics_multi(pred: DataFrame, gt: DataFrame, ks: list[int]) -> DataFrame:

@@ -28,7 +28,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vectordb_retrieval_spark.artifacts import IndexArtifact
-from vectordb_retrieval_spark.functions.distance import pairwise_distances
+from vectordb_retrieval_spark.functions.distance import (
+    normalize_rows,
+    pairwise_distances,
+)
 from vectordb_retrieval_spark.functions.kernels import (
     cluster_scan_topk,
     merge_fragment_topk,
@@ -38,11 +41,7 @@ from vectordb_retrieval_spark.functions.kernels import (
 from vectordb_retrieval_spark.operators.ivf import IVFIndexer
 from vectordb_retrieval_spark.operators import serving
 from vectordb_retrieval_spark.operators.searcher import Searcher
-from vectordb_retrieval_spark.operators.topk import (
-    topk_groups,
-    topk_per_query,
-    topk_rows,
-)
+from vectordb_retrieval_spark.operators.topk import topk_groups, topk_rows
 
 
 # Fused-plan admission budget for the PARTITIONED search (guide §1.2
@@ -158,9 +157,8 @@ class ClusterPrunedExactSearcher(Searcher):
     def _search_broadcast(
         self, bc_index, query_df, k, qid_col, vec_col, accum
     ) -> DataFrame:
-        """Both phases in one kernel over the broadcast packed index."""
-        from vectordb_retrieval_spark.functions.distance import normalize_rows
-        from vectordb_retrieval_spark.operators.serving import query_driven_job
+        """Both phases in one kernel over the broadcast packed index,
+        each an ``exact_block_scan`` over the packed scan state."""
 
         art = self.artifact
         radii = np.asarray(art.params["radii"], dtype=np.float64)
@@ -169,72 +167,38 @@ class ClusterPrunedExactSearcher(Searcher):
 
         def batch_fn(qids: np.ndarray, qmat: np.ndarray):
             idx = bc_index.value
-            cents = idx.centroids
             if metric == "cosine":
                 qmat = normalize_rows(qmat.astype(np.float64)).astype(
                     np.float32
                 )
             n_q = len(qids)
-            qc = pairwise_distances(qmat, cents, "l2")
+            qc = pairwise_distances(qmat, idx.centroids, "l2")
             npb = min(nprobe, qc.shape[1])
             probed = topk_rows(qc, np.arange(qc.shape[1]), npb)[1]
 
-            def scan(flat_q, flat_c, acc_q, acc_i, acc_d):
-                so = np.argsort(flat_c, kind="stable")
-                fc, fq = flat_c[so], flat_q[so]
-                ucs, starts = np.unique(fc, return_index=True)
-                bounds = np.r_[starts, len(fc)]
-                for j, c in enumerate(ucs):
-                    bi = idx.index.get(int(c))
-                    if bi is None:
-                        continue
-                    qrows = fq[bounds[j] : bounds[j + 1]]
-                    d = pairwise_distances(
-                        qmat[qrows], idx.decoded(bi), metric="l2"
-                    )
-                    if accum is not None:
-                        accum.add(int(d.size))
-                    kk = min(k, d.shape[1])
-                    od, oi = topk_rows(d, idx.ids[bi], kk)
-                    acc_q.append(np.repeat(qrows, kk))
-                    acc_i.append(oi.ravel())
-                    acc_d.append(od.ravel())
+            def scan(flat_q: np.ndarray, flat_c: np.ndarray):
+                plan = serving.probe_groups(idx, flat_q, flat_c)
+                return serving.exact_block_scan(idx, qmat, plan, k, "l2", accum)
 
-            acc_q: list[np.ndarray] = []
-            acc_i: list[np.ndarray] = []
-            acc_d: list[np.ndarray] = []
-            scan(
-                np.repeat(np.arange(n_q), npb),
-                probed.reshape(-1),
-                acc_q,
-                acc_i,
-                acc_d,
-            )
-            # per-query exact upper bound T_q = kth-best so far
+            # phase 1: the probed clusters; T_q = kth-best so far is a
+            # per-query exact upper bound on the true kth distance
+            top = scan(np.repeat(np.arange(n_q), npb), probed.reshape(-1))
             t_arr = np.full(n_q, np.inf)
-            if acc_q:
-                gq, _, gd, rank = topk_groups(
-                    np.concatenate(acc_q),
-                    np.concatenate(acc_i),
-                    np.concatenate(acc_d),
-                    k,
-                )
+            if top is not None:
+                gq, gi, gd, rank = topk_groups(*top, k)
                 kth = rank == k
                 t_arr[gq[kth]] = gd[kth]
-            # lower bound d(q, c) − r_c: clusters above T_q provably
-            # hold no better neighbor (triangle inequality)
+                top = (gq, gi, gd)
+            # phase 2: lower bound d(q, c) − r_c — clusters above T_q
+            # provably hold no better neighbor (triangle inequality)
             need = qc - radii[None, :] <= t_arr[:, None]
             need[np.arange(n_q)[:, None], probed] = False
             extra_q, extra_c = np.nonzero(need)
-            if len(extra_q):
-                scan(extra_q, extra_c, acc_q, acc_i, acc_d)
-            if not acc_q:
+            parts = [c for c in (top, scan(extra_q, extra_c)) if c is not None]
+            if not parts:
                 return None
             aq, ai, ad, rank = topk_groups(
-                np.concatenate(acc_q),
-                np.concatenate(acc_i),
-                np.concatenate(acc_d),
-                k,
+                *(np.concatenate(col) for col in zip(*parts)), k
             )
             return pd.DataFrame(
                 {"qid": qids[aq], "id": ai, "dist": ad, "rank": rank}
@@ -251,7 +215,7 @@ class ClusterPrunedExactSearcher(Searcher):
         # direct-path 4.9k) — but a small batch must NOT shred into
         # per-task dispatch (32-row tasks cost a 200-query sf0.1 batch
         # +17%: 3.86 s vs 3.22 s at 128; measured same-window, 4 reps)
-        return query_driven_job(
+        return serving.query_driven_job(
             query_df,
             qid_col,
             vec_col,

@@ -12,11 +12,15 @@ re-design (SURVEY.md §7.1 step 6):
   written Parquet-partitioned by ``cluster_id`` so probing prunes
   partitions at the scan (Catalyst partition pruning) — locally it is
   repartitioned on cluster_id, same plan shape.
-- **search**: the query→centroid scoring runs on the driver (centroids
-  are tiny); each query selects its ``nprobe`` nearest clusters; the
-  broadcast (qid, cluster_id) probe list joins the assignment table —
-  only probed clusters are scanned — and the surviving candidates get
-  exact distances via the broadcast-query kernel, then window top-k.
+- **search**: each query selects its ``nprobe`` nearest centroids
+  (float64 L2, ties by cluster id).  An index under
+  ``broadcast_threshold`` is packed and broadcast once
+  (operators/serving.py): one query-driven job, each task probing,
+  scanning and ranking its own queries' top-k.  A larger index keeps
+  the partitioned scan (``kernels.cluster_scan_topk``): the probed ids
+  prune the cluster-partitioned packed blob table, each task folds its
+  clusters into per-query top-k fragments, and
+  ``merge_fragment_topk`` merges them by (dist, id).
 
 Optional ``codec`` (SQ8/PQ from operators.quant) stores compressed codes
 in the assignment table; the searcher decodes inside the distance
@@ -51,7 +55,7 @@ from vectordb_retrieval_spark.functions.kernels import (
 )
 from vectordb_retrieval_spark.operators import serving
 from vectordb_retrieval_spark.operators.searcher import Searcher
-from vectordb_retrieval_spark.operators.topk import topk_per_query, topk_rows
+from vectordb_retrieval_spark.operators.topk import topk_rows
 
 
 def _norm_df(df: DataFrame, vec_col: str) -> DataFrame:
@@ -187,36 +191,54 @@ class IVFIndexer:
         self.init_mode = init_mode
         self.centroids: np.ndarray | None = None
 
-    def build(
-        self, base_df: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> IndexArtifact:
+    def _assignment(
+        self,
+        base_df: DataFrame,
+        id_col: str,
+        vec_col: str,
+        train: bool,
+        with_dist: bool = False,
+    ) -> DataFrame:
+        """The assignment lineage both builds share: normalize (cosine)
+        → train the centroids (``train``; else the fixed ones) → assign
+        → fit the codec if unfitted → encode.  Lazy: the caller's
+        materializing action runs it."""
         base = base_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
         if self.metric == "cosine":
             base = _norm_df(base, "vec")
-        self.centroids = _sampled_kmeans_train(
-            base, self.nlist, self.seed, self.max_iter, self.init_mode
-        )
-        with_dist = self._radii_in_assign and self.codec is None
-        assigned = _assign_df(base, self.centroids, with_dist=with_dist)
-        if self.codec is not None:
-            if not self.codec.is_fitted():
-                # plan-invariant codecs (SQ8's exact min/max) calibrate
-                # on the raw base: same vectors, same result, but the
-                # calibration pass no longer re-executes the nearest-
-                # centroid assignment GEMM buried in ``assigned``'s
-                # lineage (guide §1.2 — at corpus scale that GEMM is
-                # nlist x dim FLOPs per row, the build's priciest step).
-                # Sample-based codecs (PQ) keep the assigned input: a
-                # different plan could surface different sample rows.
-                fit_src = (
-                    base
-                    if getattr(self.codec, "fit_plan_invariant", False)
-                    else assigned
-                )
-                self.codec.fit(fit_src, vec_col="vec")
-            assigned = self.codec.encode_df(assigned, vec_col="vec").select(
-                "cluster_id", "id", "codes"
+        if train:
+            self.centroids = _sampled_kmeans_train(
+                base, self.nlist, self.seed, self.max_iter, self.init_mode
             )
+        assigned = _assign_df(base, self.centroids, with_dist=with_dist)
+        if self.codec is None:
+            return assigned
+        if not self.codec.is_fitted():
+            # plan-invariant codecs (SQ8's exact min/max) calibrate on
+            # the raw base: same vectors, same result, but the
+            # calibration pass no longer re-executes the nearest-
+            # centroid assignment GEMM buried in ``assigned``'s lineage
+            # (guide §1.2 — at corpus scale that GEMM is nlist x dim
+            # FLOPs per row, the build's priciest step).  Sample-based
+            # codecs (PQ) keep the assigned input: a different plan
+            # could surface different sample rows.
+            fit_src = (
+                base
+                if getattr(self.codec, "fit_plan_invariant", False)
+                else assigned
+            )
+            self.codec.fit(fit_src, vec_col="vec")
+        return self.codec.encode_df(assigned, vec_col="vec").select(
+            "cluster_id", "id", "codes"
+        )
+
+    def build(
+        self, base_df: DataFrame, id_col: str = "id", vec_col: str = "vec"
+    ) -> IndexArtifact:
+        with_dist = self._radii_in_assign and self.codec is None
+        assigned = self._assignment(
+            base_df, id_col, vec_col, train=True, with_dist=with_dist
+        )
         # partition by cluster so probe joins scan only probed clusters;
         # cache + eager materialization so the build lineage (normalize
         # → assign → encode) runs exactly once AT BUILD TIME (build
@@ -437,24 +459,7 @@ class FixedCentroidIVFIndexer(IVFIndexer):
     def build(
         self, base_df: DataFrame, id_col: str = "id", vec_col: str = "vec"
     ) -> IndexArtifact:
-        base = base_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-        if self.metric == "cosine":
-            base = _norm_df(base, "vec")
-        assigned = _assign_df(base, self.centroids)
-        if self.codec is not None:
-            if not self.codec.is_fitted():
-                # see IVFIndexer.build: plan-invariant codecs calibrate
-                # on the raw base so the fit pass skips the assignment
-                # GEMM in ``assigned``'s lineage
-                fit_src = (
-                    base
-                    if getattr(self.codec, "fit_plan_invariant", False)
-                    else assigned
-                )
-                self.codec.fit(fit_src, vec_col="vec")
-            assigned = self.codec.encode_df(assigned, vec_col="vec").select(
-                "cluster_id", "id", "codes"
-            )
+        assigned = self._assignment(base_df, id_col, vec_col, train=False)
         assigned = assigned.repartition("cluster_id").cache()
         return IndexArtifact(
             kind="ivf",

@@ -18,8 +18,7 @@ from vectordb_retrieval_spark import transport
 from vectordb_retrieval_spark.artifacts import IndexArtifact
 from vectordb_retrieval_spark.functions import kernels
 from vectordb_retrieval_spark.functions.distance import normalize_rows
-
-RESULT_SCHEMA = "qid long, id long, dist double, rank int"
+from vectordb_retrieval_spark.operators.topk import RESULT_SCHEMA
 
 
 class Searcher:

@@ -18,17 +18,22 @@ query batch (``query_driven_job``, which the LSH, cluster-pruned and
 graph kernels share), zero shuffle, exactly k rows out per query.
 
 Result parity: probe selection (nprobe nearest centroids, ties by
-cluster id), decode, float64 distance arithmetic, and (dist, id)
-tie-breaks replicate ``cluster_scan_topk`` + ``topk_per_query``
-exactly, so the oracle hash checks hold on either path: every
-selection here runs through ``topk.topk_rows``, the numpy form of the
-window's (dist, id) contract.
+cluster id), decode, float64 distance arithmetic
+(``distance.block_distances``), and (dist, id) tie-breaks replicate
+``cluster_scan_topk`` + ``topk_per_query`` exactly, so the oracle hash
+checks hold on either path: every selection here runs through
+``topk.topk_rows`` / ``topk.topk_groups``, the numpy form of the
+window's (dist, id) contract.  ``exact_block_scan`` is the one exact
+float64 scan of a probe plan; the serving exact path and both phases of
+cluster-pruned's broadcast kernel run on it.
 
 Per-worker warm cache: the broadcast value lives inside each reused
-Python worker across jobs, and decoded float64 cluster matrices memoize
-on it — repeated searches against the same artifact skip decode
-entirely, which is what makes repeated-artifact serving approach the
-reference's in-memory throughput.
+Python worker across jobs, and the packed scan state
+(``PackedClusters.packed_scan``: the decoded float64 matrix, its
+float32 copy and norms, one per metric) memoizes on it — repeated
+searches against the same artifact skip decode entirely, which is what
+makes repeated-artifact serving approach the reference's in-memory
+throughput.
 """
 
 from __future__ import annotations
@@ -43,10 +48,15 @@ from pyspark.sql import functions as F
 
 from vectordb_retrieval_spark import transport
 from vectordb_retrieval_spark.functions.distance import (
+    block_distances,
     normalize_rows,
     pairwise_distances,
 )
-from vectordb_retrieval_spark.operators.topk import topk_rows
+from vectordb_retrieval_spark.operators.topk import (
+    RESULT_SCHEMA,
+    topk_groups,
+    topk_rows,
+)
 
 
 # below this many packed-scan bytes, per-worker copies are cheap: the
@@ -58,8 +68,8 @@ class PackedClusters:
     """Pickled into the index broadcast: per-cluster id arrays and
     payload matrices (float32 vectors, or uint8/int16 codes when a
     codec is attached), plus the coarse centroids for in-kernel
-    probing.  The decode cache is per-process state and is excluded
-    from pickling."""
+    probing.  The scan-state and decode caches are per-process state
+    and are excluded from pickling."""
 
     def __init__(self, cids, ids, payloads, codec, centroids, share_key=None):
         self.cids = cids
@@ -74,13 +84,12 @@ class PackedClusters:
         self._filt: dict = {}
 
     def decoded(self, i: int) -> np.ndarray:
+        """Cluster ``i``'s float64 rows (float32 vectors upcast exactly;
+        codec decode is float64), cached — the operand of registered
+        custom metrics, which have no packed scan state."""
         out = self._dec.get(i)
         if out is None:
             raw = self.payloads[i]
-            # float64, matching what cluster_scan_topk hands to
-            # pairwise_distances after its internal upcast (float32
-            # raw vectors upcast exactly; codec decode is float64) —
-            # cached so repeated searches skip decode AND upcast
             out = (
                 raw.astype(np.float64)
                 if self.codec is None
@@ -89,39 +98,17 @@ class PackedClusters:
             self._dec[i] = out
         return out
 
-    def scan_state(self, i: int, metric: str):
-        """Per-cluster distance-scan state, cached like the decode it
-        derives from: (rows, row_sq_norms) for l2, (normalized rows,
-        None) for cosine, (rows, None) for ip.  The cached pieces are
-        exactly the subexpressions ``pairwise_distances`` recomputes
-        per call — same float64 arithmetic, hoisted out of the
-        per-(query-batch × cluster) hot loop."""
-        key = (i, metric)
-        out = self._scan.get(key)
-        if out is None:
-            dec = self.decoded(i)
-            if metric == "l2":
-                out = (dec, (dec * dec).sum(axis=1))
-            elif metric == "cosine":
-                out = (normalize_rows(dec), None)
-            else:
-                out = (dec, None)
-            self._scan[key] = out
-        return out
-
     def packed_scan(self, metric: str):
-        """Whole-index scan state for the fp32-selection serving path:
-        one concatenated metric-transformed float64 matrix (cluster-major,
-        same row order as the per-cluster caches), its float32 downcast,
-        squared norms in both precisions (l2), global ids, per-cluster
-        row offsets, and the max row norm (the ip error bound's scale).
+        """Whole-index scan state for l2/cosine/ip, shared by the
+        fp32-selection path and the exact block scan: one concatenated
+        metric-transformed float64 matrix (cluster-major; cluster ``i``
+        is rows ``offs[i]:offs[i+1]``), its float32 downcast, squared
+        norms in both precisions (l2), global ids, per-cluster row
+        offsets, and the max row norm (the ip error bound's scale).
 
-        Built once per (index, metric) inside each worker and memoized
-        like the decode cache.  The per-cluster ``scan_state`` entries
-        are re-pointed at VIEWS of the packed matrix, so the exact
-        fallback path shares this memory instead of duplicating it."""
-        key = ("packed", metric)
-        got = self._scan.get(key)
+        Built once per (index, metric) inside each worker and memoized;
+        above ``_SHM_MIN_BYTES`` the arrays are one node-local copy."""
+        got = self._scan.get(metric)
         if got is None:
             # decode cluster-by-cluster into the preallocated packed
             # matrix: holding every per-cluster float64 decode while
@@ -130,26 +117,20 @@ class PackedClusters:
             # state the serving size gate budgets for; this form peaks
             # at the packed matrix plus one cluster transient.  The
             # per-cluster decode cache is consumed (popped) as it goes.
-            offs0 = np.r_[
+            offs = np.r_[
                 np.int64(0),
                 np.cumsum([len(i) for i in self.ids], dtype=np.int64),
             ]
-            total = int(offs0[-1])
+            total = int(offs[-1])
             F = None
             for i in range(len(self.cids)):
-                dec = self._dec.pop(i, None)
-                if dec is None:
-                    raw = self.payloads[i]
-                    dec = (
-                        raw.astype(np.float64)
-                        if self.codec is None
-                        else self.codec.decode(raw)
-                    )
+                dec = self.decoded(i)
+                del self._dec[i]
                 if metric == "cosine":
                     dec = normalize_rows(dec)
                 if F is None:
                     F = np.empty((total, dec.shape[1]), dtype=np.float64)
-                F[offs0[i] : offs0[i + 1]] = dec
+                F[offs[i] : offs[i + 1]] = dec
             if F is None:
                 F = np.zeros((0, 0), dtype=np.float64)
             raw_sq = (F * F).sum(axis=1)
@@ -159,7 +140,6 @@ class PackedClusters:
                 if self.ids
                 else np.zeros(0, dtype=np.int64)
             )
-            offs = offs0
             norm_max = float(np.sqrt(raw_sq.max())) if len(F) else 0.0
             got = (
                 F,
@@ -171,23 +151,7 @@ class PackedClusters:
                 norm_max,
             )
             got = self._share_scan(got, metric)
-            F, sq = got[0], got[1]
-            self._scan[key] = got
-            # share memory with the exact path: per-cluster decode and
-            # scan caches become views into the packed matrix.  For
-            # cosine the packed rows are NORMALIZED, so they cannot
-            # stand in for decoded() — the decode cache stays empty
-            # (entries were consumed above, not duplicated) and
-            # decoded() rebuilds lazily from the retained codes on the
-            # rare non-fast-path consumers (custom metrics).
-            for i in range(len(self.cids)):
-                sl = slice(offs[i], offs[i + 1])
-                if metric != "cosine":
-                    self._dec[i] = F[sl]
-                self._scan[(i, metric)] = (
-                    F[sl],
-                    sq[sl] if sq is not None else None,
-                )
+            self._scan[metric] = got
         return got
 
     def _share_scan(self, got, metric: str):
@@ -413,6 +377,91 @@ def artifact_serving_broadcast(
 _PAD_ID = np.int64(1) << 62
 # int32 sibling for the fp32-selection path's position matrices
 _PAD_POS = np.int32(np.iinfo(np.int32).max)
+# scan block height: a (queries × BLOCK_ROWS) score block per GEMM keeps
+# exhaustive scans (standalone PQ, big clusters) cache-sized
+BLOCK_ROWS = 8192
+
+
+def probe_groups(
+    idx: PackedClusters, flat_q: np.ndarray, flat_c: np.ndarray
+) -> list:
+    """Flat (query row, cluster id) probe pairs grouped per cluster:
+    (cluster slot, probing query rows) items in ascending cluster-id
+    order, query rows in pair order.  Ids absent from ``idx`` (no rows
+    packed) are skipped."""
+    so = np.argsort(flat_c, kind="stable")
+    fc, fq = flat_c[so], flat_q[so]
+    ucs, starts = np.unique(fc, return_index=True)
+    bounds = np.r_[starts, len(fc)]
+    plan = []
+    for j, c in enumerate(ucs):
+        bi = idx.index.get(int(c))
+        if bi is not None:
+            plan.append((bi, fq[bounds[j] : bounds[j + 1]]))
+    return plan
+
+
+def _query_operands(qmat: np.ndarray, metric: str):
+    """(float64 queries, squared norms or None): the query side of
+    ``block_distances`` — upcast, normalized for cosine, norms for l2
+    (a plain upcast for registered metrics)."""
+    q64 = qmat.astype(np.float64)
+    if metric == "cosine":
+        q64 = normalize_rows(q64)
+    return q64, ((q64 * q64).sum(axis=1) if metric == "l2" else None)
+
+
+def exact_block_scan(
+    idx: PackedClusters,
+    qmat: np.ndarray,
+    plan: list,
+    k: int,
+    metric: str,
+    accum=None,
+):
+    """The exact float64 scan of a probe plan (``probe_groups`` items;
+    ``None`` query rows = every query).  Each (cluster, BLOCK_ROWS-row
+    block) is scored against its probing queries — ``block_distances``
+    over ``packed_scan(metric)`` slices for l2/cosine/ip, the
+    registered kernel over ``decoded()`` otherwise — and reduced to its
+    per-query ``topk_rows``.  Returns the flat (query row, id, dist)
+    candidates for one ``topk_groups`` merge, or None when nothing was
+    scanned.  ``accum`` counts every distance computed (``ndis``)."""
+    builtin = metric in ("l2", "cosine", "ip")
+    if builtin:
+        F64, sq, _, _, _, offs, _ = idx.packed_scan(metric)
+    q64, qsq = _query_operands(qmat, metric)
+    all_rows = np.arange(len(qmat), dtype=np.int64)
+    acc_q: list[np.ndarray] = []
+    acc_i: list[np.ndarray] = []
+    acc_d: list[np.ndarray] = []
+    for bi, qrows in plan:
+        rows = all_rows if qrows is None else qrows
+        qsub = q64 if qrows is None else q64[qrows]
+        qsq_sub = qsq if qsq is None or qrows is None else qsq[qrows]
+        n = len(idx.ids[bi])
+        o = int(offs[bi]) if builtin else 0
+        for s in range(0, n, BLOCK_ROWS):
+            e = min(n, s + BLOCK_ROWS)
+            if builtin:
+                d = block_distances(
+                    qsub,
+                    qsq_sub,
+                    F64[o + s : o + e],
+                    None if sq is None else sq[o + s : o + e],
+                    metric,
+                )
+            else:
+                d = pairwise_distances(qsub, idx.decoded(bi)[s:e], metric)
+            if accum is not None:
+                accum.add(int(d.size))
+            od, oi = topk_rows(d, idx.ids[bi][s:e], k)
+            acc_q.append(np.repeat(rows, od.shape[1]))
+            acc_i.append(oi.ravel())
+            acc_d.append(od.ravel())
+    if not acc_q:
+        return None
+    return np.concatenate(acc_q), np.concatenate(acc_i), np.concatenate(acc_d)
 
 
 def _probe_plan(
@@ -441,24 +490,12 @@ def _probe_plan(
     npb = min(nprobe, d2c.shape[1])
     order = topk_rows(d2c, np.arange(d2c.shape[1]), npb)[1]
 
-    def build(flat_c: np.ndarray, flat_q: np.ndarray) -> list:
-        so = np.argsort(flat_c, kind="stable")
-        fc, fq = flat_c[so], flat_q[so]
-        ucs, starts = np.unique(fc, return_index=True)
-        bounds = np.r_[starts, len(fc)]
-        plan = []
-        for j, c in enumerate(ucs):
-            bi = idx.index.get(int(c))
-            if bi is not None:
-                plan.append((bi, fq[bounds[j] : bounds[j + 1]]))
-        return plan
-
     qs = np.arange(n_q)
     if not split_primary:
-        return build(order.ravel(), np.repeat(qs, npb))
-    plan0 = build(order[:, 0].copy(), qs)
+        return probe_groups(idx, np.repeat(qs, npb), order.ravel())
+    plan0 = probe_groups(idx, qs, order[:, 0].copy())
     plan_rest = (
-        build(order[:, 1:].ravel(), np.repeat(qs, npb - 1))
+        probe_groups(idx, np.repeat(qs, npb - 1), order[:, 1:].ravel())
         if npb > 1
         else []
     )
@@ -473,7 +510,6 @@ def search_batch(
     k: int,
     metric: str,
     accum=None,
-    block_rows: int = 8192,
     exact: bool = False,
 ) -> pd.DataFrame | None:
     """One query batch's probe → scan → top-k against a packed index —
@@ -493,17 +529,16 @@ def search_batch(
       could not have excluded a true top-k member (excluded candidates
       score ≥ the selection boundary minus a rigorous fp32 forward-error
       bound); the rare uncertifiable queries re-run on the exact path.
-    - exact float64 scatter-merge (``exact=True``, custom metrics):
-      every candidate distance computed and ranked in float64."""
+    - the exact float64 block scan (``exact=True``, custom metrics):
+      every candidate distance computed in float64 and ranked by
+      (dist, id) — ``exact_block_scan``'s per-block ``topk_rows``, then
+      one ``topk_groups`` merge.  It reads the same packed scan state
+      as the fast path, so no per-cluster cache is kept beside it."""
     if len(qids) == 0:
         return None
     if exact or metric not in ("l2", "cosine", "ip"):
-        return _search_batch_exact(
-            idx, qids, qmat, nprobe, k, metric, accum, block_rows
-        )
-    return _search_batch_fast(
-        idx, qids, qmat, nprobe, k, metric, accum, block_rows
-    )
+        return _search_batch_exact(idx, qids, qmat, nprobe, k, metric, accum)
+    return _search_batch_fast(idx, qids, qmat, nprobe, k, metric, accum)
 
 
 # extra fp32 candidates kept beyond k ahead of the float64 re-rank:
@@ -521,19 +556,14 @@ def _search_batch_fast(
     k: int,
     metric: str,
     accum,
-    block_rows: int,
 ) -> pd.DataFrame | None:
     F64, sq64, F32, sq32, gids, offs, norm_max = idx.packed_scan(metric)
     if len(gids) == 0:
         return None
     n_q = len(qids)
     all_rows = np.arange(n_q, dtype=np.int64)
-    q64 = qmat.astype(np.float64)
-    if metric == "cosine":
-        q64 = normalize_rows(q64)
+    q64, qsq64 = _query_operands(qmat, metric)
     q32 = q64.astype(np.float32)
-    if metric == "l2":
-        qsq64 = (q64 * q64).sum(axis=1)
     probe_plan, n_primary = _probe_plan(
         idx, qmat, nprobe, n_q, split_primary=True
     )
@@ -566,11 +596,11 @@ def _search_batch_fast(
         # tight before the rest of the stream.  Oversized (multi-block)
         # primaries fall through to the streaming path and merge at the
         # primary boundary below.
-        if pi < n_primary and sz <= block_rows:
+        if pi < n_primary and sz <= BLOCK_ROWS:
             primaries.append((bi, qrows))
             continue
-        for s in range(0, sz, block_rows):
-            entries.append((bi, s, min(sz, s + block_rows), qrows))
+        for s in range(0, sz, BLOCK_ROWS):
+            entries.append((bi, s, min(sz, s + BLOCK_ROWS), qrows))
         if pi < n_primary:
             n_stream_primary = len(entries)
     force_merge_at = n_stream_primary if n_stream_primary else -1
@@ -655,7 +685,7 @@ def _search_batch_fast(
         npend = 0
 
     tot = np.zeros(n_q, dtype=np.int64)  # total candidates per query
-    # score-tile cap: a (queries × block_rows) GEMM output of 8192-row
+    # score-tile cap: a (queries × BLOCK_ROWS) GEMM output of 8192-row
     # exhaustive blocks against 2048-query tasks is 67 MB of fp32 per
     # block per worker — at 32 concurrent workers that is DRAM-bound
     # and made the exhaustive (standalone-PQ) path swing 2× with
@@ -856,7 +886,7 @@ def _search_batch_fast(
         )
     if bad.any():
         sub = _search_batch_exact(
-            idx, qids[bad], qmat[bad], nprobe, k, metric, accum, block_rows
+            idx, qids[bad], qmat[bad], nprobe, k, metric, accum
         )
         if sub is not None:
             frames.append(sub)
@@ -873,122 +903,16 @@ def _search_batch_exact(
     k: int,
     metric: str,
     accum=None,
-    block_rows: int = 8192,
 ) -> pd.DataFrame | None:
-    """Full-float64 scatter-merge search — every candidate distance
-    computed and ranked in float64 (see ``search_batch``)."""
-    n_q = len(qids)
-    all_rows = np.arange(n_q, dtype=np.int64)
-    # per-batch query-side scan state, hoisted out of the
-    # per-cluster loop: the float64 upcast, squared norms (l2)
-    # and row normalization (cosine) are exactly what
-    # pairwise_distances would redo on every cluster call
-    q64 = qmat.astype(np.float64)
-    if metric == "l2":
-        qsq = (q64 * q64).sum(axis=1)
-    elif metric == "cosine":
-        q64 = normalize_rows(q64)
-        qsq = None
-    else:
-        qsq = None
-    probe_plan = _probe_plan(idx, qmat, nprobe, n_q)
-    # Scatter-merge: instead of a per-cluster top-k plus one
-    # (qid, dist, id) lexsort over nq×nprobe×k rows (profiled at
-    # ~80% of warm kernel time — the GEMMs are only ~15%), write
-    # every probed cluster's full distance block into ONE padded
-    # (n_q, width) candidate matrix at per-query fill offsets,
-    # then take a single vectorized row-wise top-k.  Segments cap
-    # the padded width at ~block_rows so an exhaustive scan (the
-    # standalone-PQ probe_plan) stays cache-sized: each segment
-    # reduces to per-query winners and the winners re-merge at
-    # the end.  Exactness is preserved: all candidate distances
-    # reach a (dist, id)-lexicographic selection, same order the
-    # old two-stage merge produced.
-    entries = []  # (bi, row_start, row_end, qrows|None)
-    for bi, qrows in probe_plan:
-        sz = len(idx.ids[bi])
-        for s in range(0, sz, block_rows):
-            entries.append((bi, s, min(sz, s + block_rows), qrows))
-    cap = max(block_rows, 4 * k)
-    seg_d: list[np.ndarray] = []
-    seg_i: list[np.ndarray] = []
-
-    def flush(pend, width: int) -> None:
-        D = np.full((n_q, width), np.inf)
-        I = np.full((n_q, width), _PAD_ID)
-        fill = np.zeros(n_q, dtype=np.int64)
-        for bi, s, e, qrows in pend:
-            qsub = q64 if qrows is None else q64[qrows]
-            rows = all_rows if qrows is None else qrows
-            # same float64 arithmetic as pairwise_distances,
-            # with the cluster-side subexpressions cached on
-            # the broadcast index (scan_state) and the
-            # query-side ones hoisted per batch
-            b, bsq = idx.scan_state(bi, metric)
-            b = b[s:e]
-            if metric == "l2":
-                qs_ = qsq if qrows is None else qsq[qrows]
-                d = (
-                    qs_[:, None]
-                    + bsq[s:e][None, :]
-                    - 2.0 * (qsub @ b.T)
-                )
-                np.maximum(d, 0.0, out=d)
-                np.sqrt(d, out=d)
-            elif metric == "cosine":
-                d = 1.0 - qsub @ b.T
-            elif metric == "ip":
-                d = -(qsub @ b.T)
-            else:
-                d = pairwise_distances(qsub, idx.decoded(bi)[s:e], metric)
-            if accum is not None:
-                accum.add(int(d.size))
-            cols = fill[rows, None] + np.arange(e - s)
-            D[rows[:, None], cols] = d
-            I[rows[:, None], cols] = idx.ids[bi][s:e]
-            fill[rows] += e - s
-        od, oi = topk_rows(D, I, min(k, width))
-        seg_d.append(od)
-        seg_i.append(oi)
-
-    pend: list[tuple] = []
-    w = np.zeros(n_q, dtype=np.int64)
-    for ent in entries:
-        _, s, e, qrows = ent
-        inc = e - s
-        wmax = int(w.max() if qrows is None else w[qrows].max()) + inc
-        if pend and wmax > cap:
-            flush(pend, int(w.max()))
-            pend = []
-            w = np.zeros(n_q, dtype=np.int64)
-        pend.append(ent)
-        if qrows is None:
-            w += inc
-        else:
-            w[qrows] += inc
-    if pend:
-        flush(pend, int(w.max()))
-    if not seg_d:
-        return None
-    if len(seg_d) == 1:
-        fd, fi = seg_d[0], seg_i[0]
-    else:
-        fd = np.concatenate(seg_d, axis=1)
-        fi = np.concatenate(seg_i, axis=1)
-        fd, fi = topk_rows(fd, fi, min(k, fd.shape[1]))
-    kk = fd.shape[1]
-    valid = (fi != _PAD_ID).ravel()
-    ranks = np.broadcast_to(
-        np.arange(1, kk + 1, dtype=np.int32), fd.shape
-    ).ravel()
-    return pd.DataFrame(
-        {
-            "qid": np.repeat(qids, kk)[valid],
-            "id": fi.ravel()[valid],
-            "dist": fd.ravel()[valid],
-            "rank": ranks[valid],
-        }
+    """Full-float64 search: ``exact_block_scan`` over the probe plan,
+    one ``topk_groups`` merge (see ``search_batch``)."""
+    cand = exact_block_scan(
+        idx, qmat, _probe_plan(idx, qmat, nprobe, len(qids)), k, metric, accum
     )
+    if cand is None:
+        return None
+    aq, ai, ad, rank = topk_groups(*cand, k)
+    return pd.DataFrame({"qid": qids[aq], "id": ai, "dist": ad, "rank": rank})
 
 
 def _arrow_result(out) -> Iterator:
@@ -1045,7 +969,6 @@ def query_driven_job(
     )
 
     spark = query_df.sparkSession
-    schema = "qid long, id long, dist double, rank int"
     par = spark.sparkContext.defaultParallelism
     bcq = query_broadcast_cached(query_df, qid_col, vec_col)
     if bcq is not None:
@@ -1065,7 +988,7 @@ def query_driven_job(
                             batch_fn(qids_all[s:e], qmat_all[s:e])
                         )
 
-        return rng.mapInArrow(kernel, schema=schema)
+        return rng.mapInArrow(kernel, schema=RESULT_SCHEMA)
 
     q = query_df.select(
         F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec")
@@ -1096,7 +1019,7 @@ def query_driven_job(
             )
             yield from _arrow_result(batch_fn(qids, qmat))
 
-    return q.mapInArrow(kernel_scan, schema=schema)
+    return q.mapInArrow(kernel_scan, schema=RESULT_SCHEMA)
 
 
 def broadcast_probe_search(
@@ -1109,7 +1032,6 @@ def broadcast_probe_search(
     vec_col: str = "vec",
     accum=None,
     normalize_queries: bool | None = None,
-    block_rows: int = 8192,
     allowed_bc=None,
 ) -> DataFrame:
     """Search a broadcast PackedClusters index: each task probes and
@@ -1134,9 +1056,6 @@ def broadcast_probe_search(
             idx = idx.filtered(allowed_bc.value)
         if norm_q:
             qmat = normalize_rows(qmat.astype(np.float64)).astype(np.float32)
-        return search_batch(
-            idx, qids, qmat, nprobe, k, metric,
-            accum=accum, block_rows=block_rows,
-        )
+        return search_batch(idx, qids, qmat, nprobe, k, metric, accum=accum)
 
     return query_driven_job(query_df, qid_col, vec_col, batch_fn)

@@ -16,7 +16,6 @@ BM25 variant: Lucene's (k1=1.2, b=0.75, idf = ln(1 + (N-df+0.5)/(df+0.5)))
 
 from __future__ import annotations
 
-import re
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F

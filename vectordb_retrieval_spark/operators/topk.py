@@ -25,6 +25,10 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# the ranked-result contract every searcher emits: rank 1..k per query,
+# ascending by (dist, id)
+RESULT_SCHEMA = "qid long, id long, dist double, rank int"
+
 
 def topk_per_query(
     scored: DataFrame,
