@@ -492,6 +492,35 @@ def test_pq_broadcast_path_equals_scan_path(dfs):
     assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
 
 
+def test_pq_gate_charges_packed_scan_state(dfs):
+    """Standalone PQ gates on what a broadcast worker builds — the
+    packed scan state, 12·dim + 12 bytes per row
+    (serving.packed_index_bytes, the IVF family's gate too) — not an
+    8·dim decode: a threshold that estimate passes sends the search to
+    the past-gate plan, with unchanged results."""
+    from vectordb_retrieval_spark.operators.pq import PQADCSearcher, PQIndexer
+    from vectordb_retrieval_spark.operators.serving import packed_index_bytes
+
+    base_df, query_df = dfs
+    spark = base_df.sparkSession
+    art = PQIndexer(m=4, ksub=16, metric="l2", seed=5).build(base_df)
+    codec = art.params["codec"]
+    n = art.tables["codes"].count()
+    dim = codec.m * codec.codebooks.shape[2]
+    eight_dim = n * (codec.m + 8 * dim + 8)  # codes + ids + 8·dim decode
+    assert packed_index_bytes(n, codec, dim) > eight_dim
+    fast = PQADCSearcher().attach(art)
+    gated = PQADCSearcher(broadcast_threshold=eight_dim).attach(art)
+    assert fast._serving_broadcast(spark) is not None
+    assert gated._serving_broadcast(spark) is None
+
+    def rows(s):
+        res = s.search(query_df, K).select("qid", "id", "rank").collect()
+        return sorted(map(tuple, res))
+
+    assert rows(fast) == rows(gated)
+
+
 def test_search_batch_fast_equals_exact_all_metrics():
     """The fp32-selection serving path must emit the same (qid, id,
     rank) rows as the full-float64 path, with dists equal to float64
@@ -723,23 +752,31 @@ def test_packed_subblob_split_matches_unsplit(dfs):
     merge must produce identical results at ANY split granularity
     (fragment top-ks per (task, query) then a global merge make the
     split invisible)."""
-    from vectordb_retrieval_spark.functions.distance import normalize_rows
     from vectordb_retrieval_spark.functions.kernels import (
-        cluster_scan_topk,
-        collect_vectors,
-        merge_fragment_topk,
         pack_assignment,
+        query_broadcast_cached,
     )
-    from vectordb_retrieval_spark.operators.ivf import IVFIndexer, IVFSearcher
+    from vectordb_retrieval_spark.operators.ivf import (
+        IVFIndexer,
+        IVFSearcher,
+        packed_scan_unit,
+        packed_units,
+    )
     from vectordb_retrieval_spark.operators.quant import SQ8Codec
+    from vectordb_retrieval_spark.operators.serving import (
+        group_probes,
+        nearest_clusters,
+        partition_driven_job,
+    )
 
     base_df, query_df = dfs
     for codec in (None, SQ8Codec()):
         art = IVFIndexer(nlist=8, seed=3, codec=codec).build(base_df)
         searcher = IVFSearcher(nprobe=3).attach(art)
-        qids, qmat = collect_vectors(query_df, "qid", "vec")
-        probe = searcher.probe_clusters(qids, qmat)
-        pmap = searcher._probe_rows(probe, len(qids))
+        bcq = query_broadcast_cached(query_df, "qid", "vec")
+        qmat = bcq.value[1]
+        probed = nearest_clusters(qmat, art.params["centroids"], 3)
+        pmap = group_probes(np.repeat(np.arange(len(qmat)), 3), probed.ravel())
         results = []
         for cap in (7, 10**9):  # forced sub-blob splits vs whole clusters
             packed = pack_assignment(
@@ -748,12 +785,12 @@ def test_packed_subblob_split_matches_unsplit(dfs):
                 codec,
                 max_rows_per_blob=cap,
             )
-            res = merge_fragment_topk(
-                cluster_scan_topk(
-                    packed, qids, qmat, pmap, "l2", K, codec=codec
-                ),
+            res = partition_driven_job(
+                packed_units(packed, pmap, None, len(qmat)),
+                bcq,
+                (pmap, None),
+                packed_scan_unit("l2", K, codec),
                 K,
-                n_queries=len(qids),
             )
             results.append(
                 sorted(
@@ -864,7 +901,7 @@ def test_persisted_packed_partition_pruning(dfs, tmp_path):
     ]
     assert len(on_disk) == nlist  # layout really is hive-partitioned
 
-    # the exact projection+filter cluster_scan_topk builds (kernels.py)
+    # the exact projection+filter ivf.packed_units builds
     src = packed.select(
         F.col("cluster_id").cast("long").alias("cluster_id"),
         "n",

@@ -58,8 +58,9 @@ def test_temporal_empty_inputs(spark):
 
 def test_all_searchers_handle_empty_query_batch(spark):
     """Every index family must serve an empty batch as an empty result
-    (the exact paths regressed on this once — kernels.collect_vectors
-    and exact._collect_queries now return (0, 0) matrices safely)."""
+    on its broadcast and its past-gate plan (the exact paths regressed
+    on this once — kernels.collect_vectors and exact._collect_queries
+    now return (0, 0) matrices safely)."""
     import numpy as np
 
     from vectordb_retrieval_spark.operators.cluster_pruned import (
@@ -80,21 +81,34 @@ def test_all_searchers_handle_empty_query_batch(spark):
         "id long, vec array<float>",
     )
     q0 = spark.createDataFrame([], "qid long, vec array<float>")
-    searchers = [
-        LSHSearcher(max_candidates=50).attach(
-            LSHIndexer(dimension=8, num_tables=2, hash_size=6, seed=1).build(base)
+    # each family's broadcast plan, then its past-gate plan (the
+    # blob-shipping one where a node-local store exists)
+    past = {"broadcast_threshold": 0}
+    off = {**past, "node_local_cache": False}
+    families = [
+        (
+            LSHIndexer(dimension=8, num_tables=2, hash_size=6, seed=1),
+            lambda **kw: LSHSearcher(max_candidates=50, **kw),
+            past,
         ),
-        PQADCSearcher().attach(PQIndexer(m=4, ksub=16, seed=1).build(base)),
-        ClusterPrunedExactSearcher().attach(
-            ClusterPrunedExactIndexer(nlist=8, seed=1).build(base)
+        (PQIndexer(m=4, ksub=16, seed=1), PQADCSearcher, past),
+        (
+            ClusterPrunedExactIndexer(nlist=8, seed=1),
+            ClusterPrunedExactSearcher,
+            off,
         ),
-        GraphANNSearcher(ef_search=10).attach(
-            GraphANNIndexer(num_partitions=2, m=6, seed=1).build(base)
+        (
+            GraphANNIndexer(num_partitions=2, m=6, seed=1),
+            lambda **kw: GraphANNSearcher(ef_search=10, **kw),
+            off,
         ),
-        IVFSearcher(nprobe=3).attach(IVFIndexer(nlist=8, seed=1).build(base)),
+        (IVFIndexer(nlist=8, seed=1), lambda **kw: IVFSearcher(nprobe=3, **kw), off),
     ]
-    for s in searchers:
-        assert s.search(q0, 5).count() == 0, type(s).__name__
+    for indexer, searcher, gated in families:
+        art = indexer.build(base)
+        for kw in ({}, gated):
+            s = searcher(**kw).attach(art)
+            assert s.search(q0, 5).count() == 0, (type(s).__name__, kw)
 
 
 def _family(name):

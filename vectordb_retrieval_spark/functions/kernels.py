@@ -1,20 +1,16 @@
-"""Arrow-batched NumPy kernels shared by the searchers.
+"""Driver-side helpers and memos shared by the searchers.
 
-- ``cluster_scan_topk`` + ``merge_fragment_topk``: the IVF family's
-  partitioned scan over packed per-cluster blobs (the past-gate plan;
-  the broadcast plan is ``operators/serving.py``).  Its float64
-  arithmetic is ``distance.block_distances``.
-- ``attach_query_distance``: the LSH partitioned rerank — given
-  candidate rows (qid, id, vec) and a broadcast query matrix, it
-  appends the exact distance qid↔vec without materializing a q×n
-  matrix, one vectorized row-wise computation per Arrow batch.
 - the query and frame memos (``query_broadcast_cached``,
-  ``SearchPlanMemo``) the searchers share.
+  ``collect_or_chunk``, ``SearchPlanMemo``) every search path shares;
+- ``pack_assignment`` and the packed-table caches: the IVF family's
+  per-cluster blob transport, whose probed units the partition-driven
+  job scans (``ivf.packed_units`` / ``ivf.packed_scan_unit``; the job
+  is ``operators/serving.py``);
+- ``rowwise_distance``: float64 distance between aligned row pairs.
 """
 
 from __future__ import annotations
 
-import os
 import weakref
 from typing import Iterator
 
@@ -24,16 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vectordb_retrieval_spark import transport
-from vectordb_retrieval_spark.functions.distance import (
-    block_distances,
-    normalize_rows,
-    pairwise_distances,
-)
-from vectordb_retrieval_spark.operators.topk import (
-    RESULT_SCHEMA,
-    topk_groups,
-    topk_rows,
-)
+from vectordb_retrieval_spark.functions.distance import normalize_rows
 
 
 def collect_vectors(
@@ -335,62 +322,6 @@ def rowwise_distance(
     raise ValueError(f"unknown metric {metric!r}")
 
 
-def _decoded_shm(root: str, cid: int, sub: int, raw, cdc, metric: str):
-    """The float64 scan form of one packed blob, shared node-locally
-    (``transport.share``): the partitioned kernel used to re-decode
-    codes → f64 and recompute row norms on EVERY search (at 150k×384-d
-    that is ~0.5 GB of decode + norm traffic per search; 3 GB at 1M).
-    The decode is deterministic, so the first task to need a (cluster,
-    sub, metric) publishes its scan form next to the blob and everyone
-    maps one shared copy.  Returns (mat64, aux):
-
-    - l2:     mat64 = decoded f64 rows, aux = their squared norms —
-              exactly the ``(b*b).sum(axis=1)`` pairwise_distances
-              recomputes per call
-    - cosine: mat64 = normalize_rows(decoded), aux = None
-    - ip:     mat64 = decoded f64 rows, aux = None
-
-    Returns None when the store cannot hold it (publish failed: tmpfs
-    full) — caller decodes per call."""
-    n = raw.shape[0]
-    if n == 0:
-        # pack_assignment/pack_clusters never emit empty clusters, but
-        # this function guards its own input: a zero-row blob must not
-        # reach the width division below
-        return None
-
-    def build():
-        b64 = (
-            np.asarray(raw.astype(np.float32), dtype=np.float64)
-            if cdc is None
-            else np.asarray(cdc.decode(raw), dtype=np.float64)
-        )
-        if metric == "cosine":
-            return [normalize_rows(b64)]
-        if metric == "l2":
-            return [b64, (b64 * b64).sum(axis=1)]
-        return [b64]
-
-    mm = transport.share(root, f"{cid}-{sub}.{metric}.dec64", build)
-    if mm is None:
-        return None
-    # decoded width comes from the PUBLISHED blob, not raw.shape[1]:
-    # width-changing codecs (PCA reduced coordinates, PQ codes) decode
-    # to the full dimension, so the code width would mis-reshape the
-    # cached float64 payload
-    width = len(mm) // 8 // n - (1 if metric == "l2" else 0)
-    mat64 = np.frombuffer(mm, dtype=np.float64, count=n * width).reshape(
-        n, width
-    )
-    if metric == "l2":
-        aux = np.frombuffer(
-            mm, dtype=np.float64, count=n, offset=8 * n * width
-        )
-    else:
-        aux = None
-    return mat64, aux
-
-
 def pack_assignment(
     assignment: DataFrame,
     payload_col: str,
@@ -651,364 +582,3 @@ def packed_shm_cached(art, table: str = "assignment"):
 
     spark = art.tables[table].sparkSession
     return transport.published(art, "_packed_shm", spark, "packed", fill)
-
-
-def cluster_scan_topk(
-    packed: DataFrame,
-    qids: np.ndarray,
-    qmat: np.ndarray,
-    probe_map: dict[int, np.ndarray],
-    metric: str,
-    k: int,
-    accum=None,
-    codec=None,
-    n_tasks: int | None = None,
-    shm_root: str | None = None,
-    allowed: np.ndarray | None = None,
-    qbounds: np.ndarray | None = None,
-) -> DataFrame:
-    """Scan the probed clusters of a PACKED assignment table (see
-    ``pack_assignment``) and return fragment-local top-k rows
-    (qid, id, dist).
-
-    ``allowed`` (sorted int64 global ids) makes the scan PRE-filtered:
-    disallowed rows are masked out of each probed cluster before
-    scoring, so every emitted candidate satisfies the predicate — the
-    filtered-vector-search contract.  Partition pruning is unchanged
-    (the probe IN filter still drives it); the mask costs one
-    ``np.isin`` per probed cluster.
-
-    ``probe_map`` is cluster_id → query-row indices probing it.  Each
-    cluster blob deserializes with two ``np.frombuffer`` views; one
-    GEMM scores it against all its probing queries.  Fragment top-ks
-    are FUSED per task: the kernel folds every probed cluster a task
-    holds into one per-query running top-k and emits it once at task
-    end, so the caller's final window sees ≤ n_q × tasks_probed × k
-    rows instead of n_q × nprobe × k — the probe fan-in merge happens
-    map-side.  The probed ids double as a literal IN filter, which
-    becomes a static partition filter on a cluster_id-partitioned
-    index.  ``accum`` counts exact distance computations (the
-    reference's ``ndis``).
-
-    ``qbounds`` (float64, indexed by query ROW) is an optional
-    per-query distance cutoff: candidates with dist > qbounds[qrow]
-    are dropped from the task's emission.  Caller contract: the bound
-    must provably exclude only rows that cannot enter the final
-    top-k (cluster-pruned passes its triangle-inequality T'_q / T_q,
-    which ≥ k candidates are ≤ by construction, so the merged result
-    is bit-identical) — the clip shrinks the fragment rows the merge
-    exchange carries, which on an index-partitioned scan is the whole
-    cross-task merge cost.  ``ndis`` accounting is unchanged (the clip
-    applies after distances are computed)."""
-    spark = packed.sparkSession
-    probed_ids = sorted(int(c) for c in probe_map)
-    bc = spark.sparkContext.broadcast(
-        (qids, qmat, codec, probe_map, allowed, qbounds)
-    )
-
-    def kernel(batches):
-        # Arrow-native: blob cells are read as zero-copy buffer views
-        # (mapInPandas would copy every blob into Python bytes during
-        # the pandas conversion — ~the whole index per search).
-        import pyarrow as pa
-
-        q_ids, q_mat, cdc, probes, allow, qb = bc.value
-        acc_q: list[np.ndarray] = []
-        acc_i: list[np.ndarray] = []
-        acc_d: list[np.ndarray] = []
-        for rb in batches:
-            cids = rb.column(0).to_numpy(zero_copy_only=False)
-            ns = rb.column(1).to_numpy(zero_copy_only=False)
-            if shm_root is None:
-                ids_col = rb.column(2)
-                pay_col = rb.column(3)
-                widths = rb.column(4).to_numpy(zero_copy_only=False)
-                dts = rb.column(5).to_pylist()
-            else:
-                widths = rb.column(2).to_numpy(zero_copy_only=False)
-                dts = rb.column(3).to_pylist()
-                subs = rb.column(4).to_numpy(zero_copy_only=False)
-            for i in range(rb.num_rows):
-                qrows = probes.get(int(cids[i]))
-                if qrows is None or ns[i] == 0:
-                    continue
-                if shm_root is None:
-                    ids = np.frombuffer(ids_col[i].as_buffer(), dtype=np.int64)
-                    raw = np.frombuffer(
-                        pay_col[i].as_buffer(), dtype=dts[i]
-                    ).reshape(int(ns[i]), int(widths[i]))
-                else:
-                    # node-local blob: two frombuffer views on a shared
-                    # read-only mmap (see packed_shm_cached) — zero
-                    # per-search blob bytes through Arrow
-                    mm = transport.mmap_file(
-                        os.path.join(
-                            shm_root, f"{int(cids[i])}-{int(subs[i])}.bin"
-                        )
-                    )
-                    n_i = int(ns[i])
-                    ids = np.frombuffer(mm, dtype=np.int64, count=n_i)
-                    raw = np.frombuffer(
-                        mm, dtype=dts[i],
-                        count=n_i * int(widths[i]),
-                        offset=8 * n_i,
-                    ).reshape(n_i, int(widths[i]))
-                fmask = None
-                if allow is not None:
-                    fmask = np.isin(ids, allow)
-                    if not fmask.any():
-                        continue
-                    if fmask.all():
-                        fmask = None
-                    else:
-                        ids = ids[fmask]
-                dec = (
-                    _decoded_shm(
-                        shm_root, int(cids[i]), int(subs[i]), raw, cdc, metric
-                    )
-                    if shm_root is not None
-                    and metric in ("l2", "cosine", "ip")
-                    else None
-                )
-                if dec is not None and fmask is not None:
-                    # the shm cache holds the UNfiltered cluster form;
-                    # the filter mask gathers a per-search view
-                    mat64, aux = dec
-                    dec = (
-                        mat64[fmask],
-                        aux[fmask] if aux is not None else None,
-                    )
-                if dec is not None:
-                    # shm-cached scan form: the base-side decode and
-                    # norms (already normalized for cosine) come from
-                    # the shared cache instead of being recomputed per
-                    # search; the query side is prepared exactly as
-                    # pairwise_distances prepares it
-                    mat64, aux = dec
-                    q = np.asarray(q_mat[qrows], dtype=np.float64)
-                    if metric == "cosine":
-                        q = normalize_rows(q)
-                    qsq = (q * q).sum(axis=1) if metric == "l2" else None
-                    d = block_distances(q, qsq, mat64, aux, metric)
-                else:
-                    if fmask is not None:
-                        raw = raw[fmask]
-                    bvecs = (
-                        raw.astype(np.float32)
-                        if cdc is None
-                        else cdc.decode(raw)
-                    )
-                    d = pairwise_distances(q_mat[qrows], bvecs, metric)
-                if accum is not None:
-                    accum.add(int(d.size))
-                kk = min(k, d.shape[1])
-                od, oi = topk_rows(d, ids, kk)
-                rq = np.repeat(qrows, kk)
-                fi = oi.ravel()
-                fd = od.ravel()
-                if qb is not None:
-                    keepb = fd <= qb[rq]
-                    if not keepb.all():
-                        rq, fi, fd = rq[keepb], fi[keepb], fd[keepb]
-                        if len(rq) == 0:
-                            continue
-                acc_q.append(rq)
-                acc_i.append(fi)
-                acc_d.append(fd)
-        if not acc_q:
-            return
-        aq, ai, ad, _ = topk_groups(
-            np.concatenate(acc_q),
-            np.concatenate(acc_i),
-            np.concatenate(acc_d),
-            k,
-        )
-        # one LIST row per (task, query): the downstream merge shuffle
-        # then moves ~n_q × tasks rows instead of n_q × tasks × k —
-        # at 150k×384-d the flat form's 300k-row window merge cost more
-        # than the whole scan stage
-        qs = np.r_[0, np.nonzero(np.diff(aq))[0] + 1]
-        offsets = np.r_[qs, len(aq)].astype(np.int32)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(q_ids[aq[qs]]),
-                pa.ListArray.from_arrays(pa.array(offsets), pa.array(ai)),
-                pa.ListArray.from_arrays(pa.array(offsets), pa.array(ad)),
-            ],
-            names=["qid", "ids", "dists"],
-        )
-
-    # Pin column ORDER and the partition column's width before the
-    # Arrow kernel: the kernel reads record-batch columns positionally,
-    # and a packed table loaded from a cluster_id-PARTITIONED parquet
-    # artifact comes back with cluster_id moved to the tail of the
-    # schema (and narrowed to int by partition-column inference) —
-    # without this select a loaded artifact would scan garbage.  The
-    # select is a zero-cost projection; the isin filter still reaches
-    # the scan as a static partition filter (plan-pinned in
-    # tests/test_ann_operators.py::test_persisted_packed_partition_pruning).
-    if shm_root is None:
-        src = packed.select(
-            F.col("cluster_id").cast("long").alias("cluster_id"),
-            "n",
-            "ids",
-            "payload",
-            "width",
-            "dt",
-            "sub",
-        ).filter(F.col("cluster_id").isin(probed_ids))
-    else:
-        # shm mode: ``packed`` is the blob-free metadata table
-        # (packed_shm_cached) — the scan moves a few hundred ints; the
-        # kernel mmaps blob bytes node-locally
-        src = packed.select(
-            F.col("cluster_id").cast("long").alias("cluster_id"),
-            "n",
-            "width",
-            "dt",
-            "sub",
-        ).filter(F.col("cluster_id").isin(probed_ids))
-    if n_tasks is not None:
-        # small serving batches: the per-task python dispatch (~4-8 ms
-        # on this pool) rivals the per-task kernel, so a one-partition-
-        # per-core layout pays ~2× the whole stage in handshakes.
-        # coalesce is a narrow dependency — each task reads several
-        # cached/pruned blob partitions locally, no shuffle; the greedy
-        # bin-packing keeps merged loads near-even.  Unconditional:
-        # coalesce to >= current partitions is a no-op, and asking the
-        # RDD for its partition count would force a plan conversion on
-        # every search just to decide whether to skip a no-op.
-        src = src.coalesce(n_tasks)
-    return src.mapInArrow(
-        kernel, schema="qid long, ids array<long>, dists array<double>"
-    )
-
-
-def merge_fragment_topk(
-    frag: DataFrame, k: int, n_queries: int | None = None
-) -> DataFrame:
-    """Global per-query merge of ``cluster_scan_topk`` fragment rows
-    (qid, ids list, dists list) → (qid, id, dist, rank), rank 1..k
-    ascending by (dist, id) — the same contract as
-    ``topk.topk_per_query``, as a numpy kernel over a qid-hashed
-    exchange instead of a row-per-candidate window sort.
-
-    Merge parallelism scales with the query count (one task per ~1024
-    queries, capped at defaultParallelism): the kernel is a single
-    lexsort over n_q × tasks_probed rows, so at serving batch sizes
-    task DISPATCH dominates — this container measured ~8 ms/task
-    beyond 16 in-flight python tasks, i.e. a 32-task merge stage cost
-    more than the merge itself.
-
-    Small batches (≤ 4096 queries) merge JVM-side instead: explode the
-    fragment lists and row_number over (dist, id) — identical
-    lexicographic output, but the merge stage carries no python-worker
-    handshake at all (a JVM-only stage costs ~0.07 s on this pool vs
-    ~0.15-0.28 s for a python one), which is most of a small-batch
-    search's wall.  Candidate counts there are bounded by
-    n_q × scan_tasks × k, so the exchange stays tiny — and the
-    fragment LIST rows are repartitioned by qid BEFORE the explode
-    (guide §3.3: explode before an exchange multiplies it — here by
-    k), so the shuffle moves n_q × tasks packed rows, not
-    n_q × tasks × k exploded ones; the window then reuses that
-    partitioning (same key) instead of adding its own exchange."""
-    if n_queries is not None and n_queries <= 4096:
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        par_ = frag.sparkSession.sparkContext.defaultParallelism
-        n_tasks_ = max(2, min(par_, -(-n_queries // 256)))
-        w = Window.partitionBy("qid").orderBy(
-            F.col("dist").asc(), F.col("id").asc()
-        )
-        return (
-            frag.repartition(n_tasks_, "qid")
-            .select(
-                "qid", F.explode(F.arrays_zip("ids", "dists")).alias("z")
-            )
-            .select(
-                "qid",
-                F.col("z.ids").alias("id"),
-                F.col("z.dists").alias("dist"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        acc_q: list[np.ndarray] = []
-        acc_i: list[np.ndarray] = []
-        acc_d: list[np.ndarray] = []
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            qid = rb.column(0).to_numpy(zero_copy_only=False)
-            ids_l = rb.column(1)
-            ds_l = rb.column(2)
-            lens = ids_l.value_lengths().to_numpy(zero_copy_only=False)
-            acc_q.append(np.repeat(qid, lens))
-            acc_i.append(
-                ids_l.flatten().to_numpy(zero_copy_only=False)
-            )
-            acc_d.append(ds_l.flatten().to_numpy(zero_copy_only=False))
-        if not acc_q:
-            return
-        aq, ai, ad, rank = topk_groups(
-            np.concatenate(acc_q),
-            np.concatenate(acc_i),
-            np.concatenate(acc_d),
-            k,
-        )
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(aq), pa.array(ai), pa.array(ad), pa.array(rank)],
-            names=["qid", "id", "dist", "rank"],
-        )
-
-    par = frag.sparkSession.sparkContext.defaultParallelism
-    # ≥2 tasks: a single reducer serializes the whole shuffle fetch
-    # behind one python worker (measured 36% slower than 4 tasks)
-    n_tasks = (
-        max(2, min(par, -(-n_queries // 256))) if n_queries else par
-    )
-    return frag.repartition(n_tasks, "qid").mapInArrow(
-        kernel, schema=RESULT_SCHEMA
-    )
-
-
-def attach_query_distance(
-    candidates: DataFrame,
-    query_ids: np.ndarray,
-    query_mat: np.ndarray,
-    metric: str,
-    qid_col: str = "qid",
-    id_col: str = "id",
-    vec_col: str = "vec",
-) -> DataFrame:
-    """candidates(qid, id, vec, ...) → (qid, id, dist) with the exact
-    query↔vector distance, computed batch-vectorized against the
-    broadcast query matrix."""
-    spark = candidates.sparkSession
-    bc = spark.sparkContext.broadcast((query_ids, query_mat))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids, q_mat = bc.value
-        lookup = {int(q): i for i, q in enumerate(q_ids)}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = pdf[qid_col].map(lookup).to_numpy(dtype=np.int64)
-            bvecs = np.vstack(pdf[vec_col].to_numpy()).astype(np.float32)
-            dist = rowwise_distance(q_mat[rows], bvecs, metric)
-            yield pd.DataFrame(
-                {
-                    "qid": pdf[qid_col].to_numpy(dtype=np.int64),
-                    "id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "dist": dist,
-                }
-            )
-
-    return candidates.select(qid_col, id_col, vec_col).mapInPandas(
-        kernel, schema="qid long, id long, dist double"
-    )

@@ -33,12 +33,14 @@ from vectordb_retrieval_spark.functions.distance import (
     pairwise_distances,
 )
 from vectordb_retrieval_spark.functions.kernels import (
-    cluster_scan_topk,
-    merge_fragment_topk,
     packed_assignment_cached,
     packed_shm_cached,
 )
-from vectordb_retrieval_spark.operators.ivf import IVFIndexer
+from vectordb_retrieval_spark.operators.ivf import (
+    IVFIndexer,
+    packed_scan_unit,
+    packed_units,
+)
 from vectordb_retrieval_spark.operators import serving
 from vectordb_retrieval_spark.operators.searcher import Searcher
 from vectordb_retrieval_spark.operators.topk import topk_groups, topk_rows
@@ -56,14 +58,6 @@ from vectordb_retrieval_spark.operators.topk import topk_groups, topk_rows
 # the budget and the two-phase pruning plan is chosen — the decision
 # scales with the data, not with local[32].
 CP_FUSE_EXTRA_FLOPS = 1e10
-
-
-def _scan_tasks(n_queries: int) -> int | None:
-    """Partitioned-scan stage width for a serving batch — module-level
-    so the policy is A/B-able per kernel.  Small batches shrink the
-    stage so per-task python dispatch doesn't dominate; past 4096
-    queries the scan keeps the index's own partitioning."""
-    return max(8, n_queries // 64) if n_queries <= 4096 else None
 
 
 def _cluster_sizes_cached(art) -> np.ndarray | None:
@@ -249,7 +243,7 @@ class ClusterPrunedExactSearcher(Searcher):
                 ),
             )
 
-        qids, qmat, done = self._queries(
+        bcq, qmat, done = self._queries(
             query_df,
             qid_col,
             vec_col,
@@ -258,6 +252,7 @@ class ClusterPrunedExactSearcher(Searcher):
         )
         if done is not None:
             return done
+        n_q = len(qmat)
         qc = pairwise_distances(qmat, cents, "l2")  # (n_q, nlist)
 
         nprobe = min(self.nprobe, qc.shape[1])
@@ -266,29 +261,22 @@ class ClusterPrunedExactSearcher(Searcher):
         shm = packed_shm_cached(art) if self.node_local_cache else None
         packed = packed_assignment_cached(art) if shm is None else shm[1]
         shm_root = None if shm is None else shm[0]
+        # ndis counts every exact distance computed, parity with the
+        # reference's record_operation counter
+        unit_fn = packed_scan_unit(
+            "l2", k, shm_root=shm_root, accum=accum,
+            normalize=metric == "cosine",
+        )
 
-        def to_map(qrows: np.ndarray, cids: np.ndarray) -> dict[int, np.ndarray]:
-            return {int(c): qrows[cids == c] for c in np.unique(cids)}
-
-        # small serving batches: shrink the scan stage so per-task
-        # python dispatch doesn't dominate (same rationale as
-        # IVFSearcher; merge_fragment_topk takes its JVM path too)
-        scan_tasks = _scan_tasks(len(qids))
-
-        def scan(
-            probe_map: dict[int, np.ndarray], bounds: np.ndarray | None = None
-        ) -> DataFrame:
-            # per-cluster GEMM + fragment-local top-k (see kernels.py);
-            # ndis counts every exact distance computed, parity with the
-            # reference's record_operation counter.  ``bounds`` clips
-            # fragment emission at the per-query triangle-inequality
-            # bound — candidates above it provably miss the final top-k
-            # (≥ k members sit at or under the bound), so the merge
-            # exchange carries fewer rows and the result is unchanged.
-            return cluster_scan_topk(
-                packed, qids, qmat, probe_map, "l2", k, accum=accum,
-                n_tasks=scan_tasks, shm_root=shm_root, qbounds=bounds,
-            )
+        def scan(flat_q, flat_c, bounds, job=serving.partition_fragments):
+            # ``bounds`` clips emission at the per-query triangle-
+            # inequality bound — candidates above it provably miss the
+            # final top-k (≥ k members sit at or under the bound), so
+            # the merge exchange carries fewer rows and the result is
+            # unchanged
+            probe_map = serving.group_probes(flat_q, flat_c)
+            units = packed_units(packed, probe_map, shm_root, n_q)
+            return job(units, bcq, (probe_map, bounds), unit_fn, k)
 
         # --- fused single-job plan (scale-adaptive; guide §1.2/§2.4) ---
         # A driver-computable upper bound on the true kth-NN distance:
@@ -318,7 +306,7 @@ class ClusterPrunedExactSearcher(Searcher):
             pos = np.argmax(csum >= k, axis=1)
             ub_sorted = np.take_along_axis(ub, order_ub, axis=1)
             t_prime = np.where(
-                has_k, ub_sorted[np.arange(len(qids)), pos], np.inf
+                has_k, ub_sorted[np.arange(n_q), pos], np.inf
             )
             need1 = (qc - radii[None, :]) <= t_prime[:, None]
             dim = qmat.shape[1]
@@ -326,14 +314,16 @@ class ClusterPrunedExactSearcher(Searcher):
             probed_rows = float(sizes[probed].sum())
             extra_flops = 2.0 * dim * (fused_rows - probed_rows)
             if extra_flops <= CP_FUSE_EXTRA_FLOPS:
-                fq, fc = np.nonzero(need1)
                 # clip fragment emission at T'_q: ≥ k members sit at or
                 # under it, so dropped rows cannot reach the top-k
-                scanned = scan(to_map(fq, fc), bounds=t_prime)
                 return self._plan_put(
                     query_df,
                     mk,
-                    merge_fragment_topk(scanned, k, n_queries=len(qids)),
+                    scan(
+                        *np.nonzero(need1),
+                        t_prime,
+                        job=serving.partition_driven_job,
+                    ),
                     shm_root,
                 )
 
@@ -343,16 +333,15 @@ class ClusterPrunedExactSearcher(Searcher):
         # set — fewer than k survivors ⇒ inf, and the admission bound
         # falls back to T'_q, so exactness is unchanged either way.
         scored1 = scan(
-            to_map(np.repeat(np.arange(len(qids)), nprobe), probed.reshape(-1)),
-            bounds=t_prime,
+            np.repeat(np.arange(n_q), nprobe), probed.reshape(-1), t_prime
         ).cache()
-        top1 = merge_fragment_topk(scored1, k, n_queries=len(qids))
+        top1 = serving.merge_fragment_topk(scored1, k, n_q)
         # per-query exact upper bound T_q = kth-best distance so far
         tq_rows = (
             top1.groupBy("qid").agg(F.max("dist").alias("t"), F.count("*").alias("n")).collect()
         )
         tq = {int(r["qid"]): (r["t"] if r["n"] >= k else np.inf) for r in tq_rows}
-        t_arr = np.array([tq.get(int(q), np.inf) for q in qids])
+        t_arr = np.array([tq.get(int(q), np.inf) for q in bcq.value[0]])
         if t_prime is not None:
             # both are valid upper bounds on the true kth distance
             # (T_q: k measured candidates at ≤ it; T'_q: ≥ k members at
@@ -363,12 +352,11 @@ class ClusterPrunedExactSearcher(Searcher):
         # lower bound per (query, cluster): d(q, c) − r_c; prune if > T_q
         lower = qc - radii[None, :]
         need = lower <= t_arr[:, None]
-        need[np.arange(len(qids))[:, None], probed] = False  # already scanned
+        need[np.arange(n_q)[:, None], probed] = False  # already scanned
         extra_q, extra_c = np.nonzero(need)
         if len(extra_q) == 0:
             return top1
-        scored2 = scan(to_map(extra_q, extra_c), bounds=t_arr)
-        result = merge_fragment_topk(
-            scored1.unionByName(scored2), k, n_queries=len(qids)
+        scored2 = scan(extra_q, extra_c, t_arr)
+        return serving.merge_fragment_topk(
+            scored1.unionByName(scored2), k, n_q
         )
-        return result

@@ -16,8 +16,9 @@ routed queries through the graph together, every beam step one
 vectorized NumPy gather + einsum across queries instead of a per-query
 Python loop.  When the shard blobs are broadcast or node-local the
 search is the shared query-driven serving job with no shuffle at all;
-otherwise the only shuffle is the final candidates→top-k merge
-(probed_partitions × k rows per query).
+otherwise the search is the partition-driven job over the shard rows,
+whose only shuffle is the fragment merge (one list row per task and
+query).
 When ``ef_search`` ≥ partition size the kernel short-circuits to
 ``_brute_topk`` (one GEMM), which is the same answer the saturated beam
 would produce.
@@ -92,12 +93,11 @@ from vectordb_retrieval_spark.functions.hashing import (
     sign_buckets,
 )
 from vectordb_retrieval_spark.operators.searcher import Searcher
-from vectordb_retrieval_spark.operators.serving import query_driven_job
-from vectordb_retrieval_spark.operators.topk import (
-    topk_groups,
-    topk_per_query,
-    topk_rows,
+from vectordb_retrieval_spark.operators.serving import (
+    partition_driven_job,
+    query_driven_job,
 )
+from vectordb_retrieval_spark.operators.topk import topk_groups, topk_rows
 
 
 def _pad_adjacency(adj: list[np.ndarray]) -> np.ndarray:
@@ -221,7 +221,7 @@ def _batched_beam(
 
     Distances run in float32 (ranking only — the exact path
     ``_brute_topk`` and the final ranking, ``topk_groups`` per task
-    then ``topk_per_query`` across tasks, rank by (dist, id)); per wave
+    then the fragment merge across tasks, rank by (dist, id)); per wave
     they come from one GEMM against the wave's unique frontier
     neighbors when that is cheaper than the scattered per-pair gather
     (small shards), else from the gather (large shards, where the
@@ -230,7 +230,7 @@ def _batched_beam(
     Returns (dists, nodes): (n_q, ef) ascending by dist per query,
     padded with (inf, -1).  Within-wave ties keep beam-arrival order —
     tie ranking is NOT id-canonical here; callers that need a total
-    order (they all do) re-rank via ``topk_groups`` / ``topk_per_query``.
+    order (they all do) re-rank via ``topk_groups``.
     """
     n = len(mat)
     n_q = len(qmat)
@@ -1032,10 +1032,11 @@ class GraphANNSearcher(Searcher):
       task takes a slice of the query batch, routes it, beams it through
       its routed shards and merges in-task;
     - **partitioned** (over the threshold when the node-local store is
-      off or unavailable — the multi-executor plan): the driver routes
-      the collected batch and broadcasts it with the routing; each
-      (shard, query chunk) task beams its shard's queries, and the window
-      top-k merges the candidates.
+      off or unavailable — the multi-executor plan):
+      ``serving.partition_driven_job`` over the graph table's shard
+      rows — the driver routes the collected batch, each task beams its
+      shards' routed queries (read from the memoized query broadcast)
+      and folds their candidates, and the fragment merge ranks them.
 
     ``probe_partitions=p`` routes each query to its p nearest shards by
     centroid distance — for kmeans artifacts a shard's distance is the
@@ -1200,6 +1201,25 @@ class GraphANNSearcher(Searcher):
                 np.concatenate(out_d),
             )
 
+        def routed_cands(qmat: np.ndarray, route, shards):
+            """Flat (query row, id, dist) candidates of every
+            ``(pid, blob, skey)`` shard for its routed rows of ``qmat``
+            (cosine: already normalized), or None."""
+            every = np.arange(len(qmat))
+            acc = []
+            for pid, blob, skey in shards:
+                sel = every if route is None else route[int(pid)]
+                lr, ci, cd = shard_cands(qmat[sel], blob, skey)
+                acc.append((sel[lr], ci, cd))
+            if not acc:
+                return None
+            return tuple(np.concatenate(col) for col in zip(*acc))
+
+        def normalized(qmat: np.ndarray) -> np.ndarray:
+            if metric != "cosine":
+                return qmat
+            return normalize_rows(qmat.astype(np.float64)).astype(np.float32)
+
         # Small index ⇒ broadcast the packed shards (same decision
         # Spark makes for broadcast joins); over the threshold on a
         # single-node master, the node-local shard store.  Either way
@@ -1223,10 +1243,7 @@ class GraphANNSearcher(Searcher):
                 shm_root, shard_pids = shm_shards
 
             def batch_fn(qids: np.ndarray, qmat: np.ndarray):
-                if metric == "cosine":
-                    qmat = normalize_rows(qmat.astype(np.float64)).astype(
-                        np.float32
-                    )
+                qmat = normalized(qmat)
                 if shm_root is None:
                     get_blob = bc_shards.value.__getitem__
                     key_base = ("bc", state_token)
@@ -1238,28 +1255,18 @@ class GraphANNSearcher(Searcher):
 
                     key_base = ("shm", shm_root)
                 route = _route_shards(qmat, cent, cpids, probe, metric)
-                every = np.arange(len(qids))
-                acc_q: list[np.ndarray] = []
-                acc_i: list[np.ndarray] = []
-                acc_d: list[np.ndarray] = []
-                for pid in shard_pids:
-                    sel = every if route is None else route.get(int(pid))
-                    if sel is None:
-                        continue
-                    lr, ci, cd = shard_cands(
-                        qmat[sel], get_blob(pid), skey=key_base + (pid,)
-                    )
-                    acc_q.append(sel[lr])
-                    acc_i.append(ci)
-                    acc_d.append(cd)
-                if not acc_q:
-                    return None
-                gq, gi, gd, rank = topk_groups(
-                    np.concatenate(acc_q),
-                    np.concatenate(acc_i),
-                    np.concatenate(acc_d),
-                    k,
+                cand = routed_cands(
+                    qmat,
+                    route,
+                    (
+                        (pid, get_blob(pid), key_base + (pid,))
+                        for pid in shard_pids
+                        if route is None or int(pid) in route
+                    ),
                 )
+                if cand is None:
+                    return None
+                gq, gi, gd, rank = topk_groups(*cand, k)
                 return pd.DataFrame(
                     {"qid": qids[gq], "id": gi, "dist": gd, "rank": rank}
                 )
@@ -1277,10 +1284,10 @@ class GraphANNSearcher(Searcher):
             )
 
         # Blob-shipping partitioned plan (multi-executor master, or
-        # node_local_cache=False): shuffle-replicate the blob rows per
-        # query chunk (shard_count × chunks rows — still the index,
-        # never the base data) and merge with the window top-k.
-        qids, qmat, done = self._queries(
+        # node_local_cache=False): the partition-driven job over the
+        # graph table's shard rows — each task beams its shards' routed
+        # queries, and the fragment merge ranks the candidates.
+        bcq, qmat, done = self._queries(
             query_df,
             qid_col,
             vec_col,
@@ -1289,76 +1296,27 @@ class GraphANNSearcher(Searcher):
         )
         if done is not None:
             return done
-        route = _route_shards(qmat, cent, cpids, probe, metric)
 
-        # fan the query batch out across (shard × chunk) tasks: the
-        # per-task kernel is CPU-bound NumPy, so shard count alone
-        # under-uses a wide executor pool on big batches.  Chunk count
-        # targets ~2 tasks per core with ≥128 queries per task.
-        # When routing is active, the chunk count is sized from the
-        # ACTIVE shard count and per-shard routed query counts (both
-        # known on the driver), and each task takes a stride of its
-        # shard's own routed list — otherwise probing 2 of 32 shards
-        # would leave 15/16 of the task slots as no-ops.
-        n_q = len(qids)
-        n_parts = art.params["num_partitions"]
-        par = spark.sparkContext.defaultParallelism
-        if route is not None:
-            avg = max(1, int(np.mean([len(v) for v in route.values()])))
-            n_active = max(1, len(route))
-            chunks = max(1, min(-(-avg // 64), -(-2 * par // n_active)))
-        else:
-            n_active = n_parts
-            chunks = max(1, min(-(-n_q // 128), -(-2 * par // n_parts)))
-        # chunk fan-out pays a shuffle that replicates every shard blob
-        # per chunk; when the shard count already covers the executor
-        # pool, chunks=1 keeps the search a narrow zero-shuffle scan of
-        # the cached graph table instead (for a 150k x 384-d 32-shard
-        # index, chunks=2 was moving ~560 MB of blobs per search to cut
-        # task count from 32 to 64)
-        if n_active >= par:
-            chunks = 1
-        bounds = np.linspace(0, n_q, chunks + 1).astype(np.int64)
+        def shard_unit(rb, q_mat, rt):
+            pids = rb.column(0).to_numpy(zero_copy_only=False)
+            return routed_cands(
+                normalized(q_mat),
+                rt,
+                (
+                    (pid, blob.as_buffer(), None)
+                    for pid, blob in zip(pids, rb.column(1))
+                    if rt is None or int(pid) in rt
+                ),
+            )
 
-        bc = spark.sparkContext.broadcast((qids, qmat, route, bounds, chunks))
-
-        def search_shard(
-            pid: int, qc_ix: int, blob: bytes
-        ) -> Iterator[pd.DataFrame]:
-            q_ids, q_mat, rt, bnds, nck = bc.value
-            if rt is not None:
-                sel = rt.get(int(pid))
-                if sel is None:
-                    return
-                # stride over THIS shard's routed list: every chunk
-                # index gets an even share no matter how routing
-                # distributed queries across shards
-                sel = sel[qc_ix::nck]
-            else:
-                lo, hi = bnds[qc_ix], bnds[qc_ix + 1]
-                sel = np.arange(lo, hi)
-            if not len(sel):
-                return
-            lr, ci, cd = shard_cands(q_mat[sel], blob)
-            yield pd.DataFrame({"qid": q_ids[sel[lr]], "id": ci, "dist": cd})
-
-        tasks = art.tables["graph"].select("pid", "blob")
-        if chunks > 1:
-            tasks = tasks.withColumn(
-                "qchunk",
-                F.explode(F.array(*[F.lit(i) for i in range(chunks)])),
-            ).repartition(n_parts * chunks, "pid", "qchunk")
-        else:
-            tasks = tasks.withColumn("qchunk", F.lit(0))
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for pid, qc_ix, blob in zip(
-                    pdf["pid"], pdf["qchunk"], pdf["blob"]
-                ):
-                    yield from search_shard(int(pid), int(qc_ix), blob)
-
-        cands = tasks.mapInPandas(
-            kernel, schema="qid long, id long, dist double"
+        return self._plan_put(
+            query_df,
+            mk,
+            partition_driven_job(
+                art.tables["graph"].select("pid", "blob"),
+                bcq,
+                _route_shards(qmat, cent, cpids, probe, metric),
+                shard_unit,
+                k,
+            ),
         )
-        return self._plan_put(query_df, mk, topk_per_query(cands, k))

@@ -17,10 +17,10 @@ re-design (SURVEY.md §7.1 step 6):
   ``broadcast_threshold`` is packed and broadcast once
   (operators/serving.py): one query-driven job, each task probing,
   scanning and ranking its own queries' top-k.  A larger index keeps
-  the partitioned scan (``kernels.cluster_scan_topk``): the probed ids
-  prune the cluster-partitioned packed blob table, each task folds its
-  clusters into per-query top-k fragments, and
-  ``merge_fragment_topk`` merges them by (dist, id).
+  the partition-driven job (``serving.partition_driven_job``): the
+  probed ids prune the cluster-partitioned packed blob table, each task
+  folds its clusters into per-query top-k fragments, and
+  ``serving.merge_fragment_topk`` merges them by (dist, id).
 
 Optional ``codec`` (SQ8/PQ from operators.quant) stores compressed codes
 in the assignment table; the searcher decodes inside the distance
@@ -33,6 +33,7 @@ ordering (reference normalizes at the same points, modular.py:159-166).
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 import numpy as np
@@ -40,15 +41,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectordb_retrieval_spark import transport
 from vectordb_retrieval_spark.artifacts import IndexArtifact
 from vectordb_retrieval_spark.functions.distance import (
     assign_nearest,
+    block_distances,
     normalize_rows,
     pairwise_distances,
 )
 from vectordb_retrieval_spark.functions.kernels import (
-    cluster_scan_topk,
-    merge_fragment_topk,
     pack_assignment,
     packed_assignment_cached,
     packed_shm_cached,
@@ -556,6 +557,228 @@ def ivf_delete(
     )
 
 
+def _decoded_shm(root: str, cid: int, sub: int, raw, cdc, metric: str):
+    """The float64 scan form of one packed blob, shared node-locally
+    (``transport.share``): the partitioned kernel used to re-decode
+    codes → f64 and recompute row norms on EVERY search (at 150k×384-d
+    that is ~0.5 GB of decode + norm traffic per search; 3 GB at 1M).
+    The decode is deterministic, so the first task to need a (cluster,
+    sub, metric) publishes its scan form next to the blob and everyone
+    maps one shared copy.  Returns (mat64, aux):
+
+    - l2:     mat64 = decoded f64 rows, aux = their squared norms —
+              exactly the ``(b*b).sum(axis=1)`` pairwise_distances
+              recomputes per call
+    - cosine: mat64 = normalize_rows(decoded), aux = None
+    - ip:     mat64 = decoded f64 rows, aux = None
+
+    Returns None when the store cannot hold it (publish failed: tmpfs
+    full) — caller decodes per call."""
+    n = raw.shape[0]
+    if n == 0:
+        # pack_assignment/pack_clusters never emit empty clusters, but
+        # this function guards its own input: a zero-row blob must not
+        # reach the width division below
+        return None
+
+    def build():
+        b64 = (
+            np.asarray(raw.astype(np.float32), dtype=np.float64)
+            if cdc is None
+            else np.asarray(cdc.decode(raw), dtype=np.float64)
+        )
+        if metric == "cosine":
+            return [normalize_rows(b64)]
+        if metric == "l2":
+            return [b64, (b64 * b64).sum(axis=1)]
+        return [b64]
+
+    mm = transport.share(root, f"{cid}-{sub}.{metric}.dec64", build)
+    if mm is None:
+        return None
+    # decoded width comes from the PUBLISHED blob, not raw.shape[1]:
+    # width-changing codecs (PCA reduced coordinates, PQ codes) decode
+    # to the full dimension, so the code width would mis-reshape the
+    # cached float64 payload
+    width = len(mm) // 8 // n - (1 if metric == "l2" else 0)
+    mat64 = np.frombuffer(mm, dtype=np.float64, count=n * width).reshape(
+        n, width
+    )
+    if metric == "l2":
+        aux = np.frombuffer(
+            mm, dtype=np.float64, count=n, offset=8 * n * width
+        )
+    else:
+        aux = None
+    return mat64, aux
+
+
+def packed_units(
+    packed: DataFrame,
+    probe_map: dict,
+    shm_root: str | None,
+    n_queries: int,
+) -> DataFrame:
+    """The probed unit rows of a packed assignment table (see
+    ``kernels.pack_assignment``) for ``packed_scan_unit``: blob rows, or
+    with ``shm_root`` the blob-free metadata rows of
+    ``kernels.packed_shm_cached`` (a few hundred ints per search; the
+    unit maps blob bytes node-locally).
+
+    The select pins column ORDER and the partition column's width: the
+    unit reads Arrow columns positionally, and a packed table loaded
+    from a cluster_id-PARTITIONED parquet artifact comes back with
+    cluster_id moved to the schema tail (and narrowed to int by
+    partition-column inference).  The select is a zero-cost projection;
+    the probed-id IN filter reaches the scan as a static partition
+    filter (plan-pinned in
+    tests/test_ann_operators.py::test_persisted_packed_partition_pruning).
+
+    Small serving batches (≤ 4096 queries) coalesce the stage to
+    max(8, n_q / 64) tasks: kernel time per task is a few ms, so a
+    one-partition-per-core layout pays ~2× the whole stage in python
+    dispatch.  coalesce is narrow — each task reads several cached or
+    pruned blob partitions locally, no shuffle; the greedy bin-packing
+    keeps merged loads near-even."""
+    cols = ("n", "width", "dt", "sub") if shm_root else (
+        "n", "ids", "payload", "width", "dt", "sub"
+    )
+    src = packed.select(
+        F.col("cluster_id").cast("long").alias("cluster_id"), *cols
+    ).filter(F.col("cluster_id").isin(sorted(probe_map)))
+    if n_queries <= 4096:
+        src = src.coalesce(max(8, n_queries // 64))
+    return src
+
+
+def packed_scan_unit(
+    metric: str,
+    k: int,
+    codec=None,
+    shm_root: str | None = None,
+    accum=None,
+    allowed_bc=None,
+    normalize: bool | None = None,
+):
+    """The IVF family's ``unit_fn`` for ``serving.partition_driven_job``
+    over ``packed_units`` rows.  ``route`` is ``(probe_map, qbounds)``:
+    cluster_id → the query rows probing it, and an optional per-query
+    distance cutoff.
+
+    Each cluster blob deserializes with two ``np.frombuffer`` views
+    (Arrow buffers, or a node-local mmap under ``shm_root``); one GEMM
+    scores it against its probing queries, and the blob's per-query
+    ``topk_rows`` are its candidates.  Under ``shm_root`` the base-side
+    float64 decode and norms come from the shared
+    ``_decoded_shm`` cache instead of being recomputed per
+    search.  ``accum`` counts exact distance computations (the
+    reference's ``ndis``).
+
+    ``allowed_bc`` (a broadcast of sorted int64 ids) PRE-filters: rows
+    whose id is not allowed are masked out of each blob before scoring,
+    so every candidate satisfies the predicate.  ``normalize`` (default:
+    metric == 'cosine') L2-normalizes each blob's probing query rows
+    first — cluster-pruned scores cosine indexes in l2 over normalized
+    queries.
+
+    ``qbounds`` (float64, indexed by query row) drops candidates with
+    dist > qbounds[row].  Caller contract: the bound must provably
+    exclude only rows that cannot enter the final top-k (cluster-pruned
+    passes its triangle-inequality T'_q / T_q, which ≥ k candidates are
+    ≤ by construction, so the merged result is bit-identical); the clip
+    shrinks the fragment rows the merge exchange carries."""
+
+    norm_q = metric == "cosine" if normalize is None else normalize
+
+    def unit(rb, qmat, route):
+        probes, qb = route
+        allow = None if allowed_bc is None else allowed_bc.value
+        cids = rb.column(0).to_numpy(zero_copy_only=False)
+        ns = rb.column(1).to_numpy(zero_copy_only=False)
+        if shm_root is None:
+            ids_col, pay_col = rb.column(2), rb.column(3)
+            widths = rb.column(4).to_numpy(zero_copy_only=False)
+            dts = rb.column(5).to_pylist()
+        else:
+            widths = rb.column(2).to_numpy(zero_copy_only=False)
+            dts = rb.column(3).to_pylist()
+            subs = rb.column(4).to_numpy(zero_copy_only=False)
+        out_q: list[np.ndarray] = []
+        out_i: list[np.ndarray] = []
+        out_d: list[np.ndarray] = []
+        for i in range(rb.num_rows):
+            qrows = probes.get(int(cids[i]))
+            n_i = int(ns[i])
+            if qrows is None or n_i == 0:
+                continue
+            if shm_root is None:
+                ids = np.frombuffer(ids_col[i].as_buffer(), dtype=np.int64)
+                raw = np.frombuffer(pay_col[i].as_buffer(), dtype=dts[i])
+            else:
+                mm = transport.mmap_file(
+                    os.path.join(shm_root, f"{int(cids[i])}-{int(subs[i])}.bin")
+                )
+                ids = np.frombuffer(mm, dtype=np.int64, count=n_i)
+                raw = np.frombuffer(
+                    mm, dtype=dts[i], count=n_i * int(widths[i]), offset=8 * n_i
+                )
+            raw = raw.reshape(n_i, int(widths[i]))
+            fmask = None
+            if allow is not None:
+                fmask = np.isin(ids, allow)
+                if not fmask.any():
+                    continue
+                if fmask.all():
+                    fmask = None
+                else:
+                    ids = ids[fmask]
+            q = qmat[qrows]
+            if norm_q:
+                q = normalize_rows(q.astype(np.float64)).astype(np.float32)
+            dec = (
+                _decoded_shm(
+                    shm_root, int(cids[i]), int(subs[i]), raw, codec, metric
+                )
+                if shm_root is not None and metric in ("l2", "cosine", "ip")
+                else None
+            )
+            if dec is not None:
+                # the shm cache holds the UNfiltered cluster form (already
+                # normalized for cosine); the filter mask gathers a
+                # per-search view, and the query side is prepared exactly
+                # as pairwise_distances prepares it
+                mat64, aux = dec
+                if fmask is not None:
+                    mat64 = mat64[fmask]
+                    aux = aux[fmask] if aux is not None else None
+                q = np.asarray(q, dtype=np.float64)
+                if metric == "cosine":
+                    q = normalize_rows(q)
+                qsq = (q * q).sum(axis=1) if metric == "l2" else None
+                d = block_distances(q, qsq, mat64, aux, metric)
+            else:
+                if fmask is not None:
+                    raw = raw[fmask]
+                bvecs = raw.astype(np.float32) if codec is None else codec.decode(raw)
+                d = pairwise_distances(q, bvecs, metric)
+            if accum is not None:
+                accum.add(int(d.size))
+            kk = min(k, d.shape[1])
+            od, oi = topk_rows(d, ids, kk)
+            rq, fi, fd = np.repeat(qrows, kk), oi.ravel(), od.ravel()
+            if qb is not None:
+                keep = fd <= qb[rq]
+                rq, fi, fd = rq[keep], fi[keep], fd[keep]
+            out_q.append(rq)
+            out_i.append(fi)
+            out_d.append(fd)
+        if not out_q:
+            return None
+        return np.concatenate(out_q), np.concatenate(out_i), np.concatenate(out_d)
+
+    return unit
+
+
 class IVFSearcher(Searcher):
     """nprobe-pruned candidate scan + exact (or decoded) rerank.
 
@@ -567,9 +790,11 @@ class IVFSearcher(Searcher):
       broadcast, each task emits its queries' final top-k.  One job, no
       shuffle; the broadcast is built once per artifact and reused
       across searches.
-    - larger → partitioned candidate scan (``cluster_scan_topk``):
-      probe lists prune the cluster-partitioned assignment table and
-      fragment top-ks merge in a window — the 100 TB plan.
+    - larger → the partition-driven job (``serving.partition_driven_job``
+      over ``packed_units`` rows, scored by ``packed_scan_unit``): probe
+      lists prune the cluster-partitioned packed table, each task folds
+      its clusters into per-query top-k fragments, and one fragment
+      merge ranks them — the 100 TB plan.
 
     Both plans produce identical results (same probe selection, float64
     distances, (dist, id) tie-breaks)."""
@@ -588,21 +813,6 @@ class IVFSearcher(Searcher):
         # (kernels.packed_shm_cached).  False forces the blob-shipping
         # partitioned plan — the multi-executor path, kept testable.
         self.node_local_cache = node_local_cache
-
-    def probe_clusters(self, qids: np.ndarray, qmat: np.ndarray) -> pd.DataFrame:
-        """(qid, cluster_id) pairs: nprobe nearest centroids per query
-        (ties by cluster_id asc)."""
-        art = self.artifact
-        cents = art.params["centroids"]
-        d = pairwise_distances(qmat, cents, "l2")
-        nprobe = min(self.nprobe, d.shape[1])
-        order = topk_rows(d, np.arange(d.shape[1]), nprobe)[1]
-        return pd.DataFrame(
-            {
-                "qid": np.repeat(qids, nprobe),
-                "cluster_id": order.reshape(-1).astype(np.int32),
-            }
-        )
 
     def search(
         self,
@@ -676,7 +886,7 @@ class IVFSearcher(Searcher):
                 ),
             )
 
-        qids, qmat, done = self._queries(
+        bcq, qmat, done = self._queries(
             query_df,
             qid_col,
             vec_col,
@@ -687,58 +897,31 @@ class IVFSearcher(Searcher):
         )
         if done is not None:
             return done
-        probe = self.probe_clusters(qids, qmat)
-
-        # No per-query fan-out join: cluster_scan_topk scores each
-        # probed cluster blob against all its probing queries in one
-        # GEMM and emits only fragment-local top-k (see kernels.py).
-        # The assignment is packed to per-cluster blobs once per
-        # artifact — frombuffer views instead of per-row Arrow list
-        # decode of the whole probed payload on every search.
-        # small serving batches: kernel time per task is a few ms, so
-        # the one-partition-per-core scan layout is dispatch-bound —
-        # shrink the stage (≥8-way keeps the GEMM parallel) and let
-        # merge_fragment_topk take its JVM small-batch path
-        scan_tasks = (
-            max(8, len(qids) // 64) if len(qids) <= 4096 else None
+        # each probed cluster blob is scored against all its probing
+        # queries in one GEMM (packed_scan_unit) — no per-query fan-out
+        # join
+        probed = serving.nearest_clusters(
+            qmat, art.params["centroids"], self.nprobe
         )
-        shm = (
-            packed_shm_cached(art) if self.node_local_cache else None
+        probe_map = serving.group_probes(
+            np.repeat(np.arange(len(qmat)), probed.shape[1]), probed.ravel()
         )
-        scored = cluster_scan_topk(
+        shm = packed_shm_cached(art) if self.node_local_cache else None
+        shm_root = None if shm is None else shm[0]
+        units = packed_units(
             packed_assignment_cached(art) if shm is None else shm[1],
-            qids,
-            qmat,
-            self._probe_rows(probe, len(qids)),
-            metric,
-            k,
-            accum=accum,
-            codec=codec,
-            n_tasks=scan_tasks,
-            shm_root=None if shm is None else shm[0],
-            allowed=allowed,
+            probe_map,
+            shm_root,
+            len(qmat),
+        )
+        unit_fn = packed_scan_unit(
+            metric, k, codec, shm_root, accum, allowed_bc
         )
         return self._plan_put(
             query_df,
             memo_key,
-            merge_fragment_topk(scored, k, n_queries=len(qids)),
-            None if shm is None else shm[0],
+            serving.partition_driven_job(
+                units, bcq, (probe_map, None), unit_fn, k
+            ),
+            shm_root,
         )
-
-    @staticmethod
-    def _probe_rows(probe: pd.DataFrame, n_queries: int) -> dict[int, np.ndarray]:
-        """cluster_id → array of query-row indices probing that cluster.
-        probe rows are (qid, cluster_id) laid out query-major, so the
-        query row index is position // nprobe.  One stable argsort +
-        unique-split instead of a per-cluster mask scan (which is
-        O(nlist × n_q × nprobe) and driver-side)."""
-        nprobe = len(probe) // n_queries if n_queries else 1
-        rows = np.arange(len(probe)) // max(nprobe, 1)
-        cids = probe["cluster_id"].to_numpy()
-        so = np.argsort(cids, kind="stable")
-        sc, sr = cids[so], rows[so]
-        ucs, starts = np.unique(sc, return_index=True)
-        bounds = np.r_[starts, len(sc)]
-        return {
-            int(c): sr[bounds[i] : bounds[i + 1]] for i, c in enumerate(ucs)
-        }

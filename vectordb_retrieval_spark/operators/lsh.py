@@ -7,11 +7,14 @@ Reference semantics reproduced Spark-first (src/algorithms/lsh.py:27-362):
   cluster scale this table is written partitioned/bucketed by
   (table_id, bucket) so the candidate join co-locates.
 - search (lsh.py:144-298): hash queries per table → equi-join on
-  (table_id, bucket) → vote count per (qid, id) — the reference's
+  (table_id, bucket) → vote count per (query, id) — the reference's
   ``Counter.most_common`` becomes groupBy().count() — → cap candidates
   at max(k, ceil(multiplier·k)) (vote desc, id asc) → exact rerank of
-  the survivors against the original vectors → window top-k → queries
-  with zero candidates fall back to exact search (lsh.py:289-298).
+  the survivors against the original vectors and per-query top-k in
+  the partition-driven job (``serving.partition_driven_job``) →
+  queries with zero candidates fall back to exact search
+  (lsh.py:289-298).  An index under the serving gate runs the whole
+  pipeline inside the query-driven job instead.
 
 The query side of every join is broadcast; the only shuffle that scales
 with base size is the bucket-table groupBy, whose cardinality is
@@ -36,16 +39,14 @@ from vectordb_retrieval_spark.functions.hashing import (
     make_projections,
     sign_buckets,
 )
-from vectordb_retrieval_spark.functions.kernels import (
-    attach_query_distance,
-)
+from vectordb_retrieval_spark.functions.kernels import rowwise_distance
 from vectordb_retrieval_spark.operators.exact import exact_knn
 from vectordb_retrieval_spark.operators.searcher import Searcher
-from vectordb_retrieval_spark.operators.topk import (
-    topk_groups,
-    topk_per_query,
-    topk_rows,
+from vectordb_retrieval_spark.operators.serving import (
+    partition_driven_job,
+    query_driven_job,
 )
+from vectordb_retrieval_spark.operators.topk import topk_groups, topk_rows
 
 
 class LSHIndexer:
@@ -277,9 +278,6 @@ class LSHSearcher(Searcher):
         )
         n_probes = self.n_probes
         fallback = self.exact_fallback
-        from vectordb_retrieval_spark.operators.serving import (
-            query_driven_job,
-        )
 
         def batch_fn(qids: np.ndarray, qmat: np.ndarray):
             from vectordb_retrieval_spark.functions.distance import (
@@ -289,10 +287,6 @@ class LSHSearcher(Searcher):
                 e2lsh_multiprobe_buckets,
                 sign_multiprobe_buckets,
             )
-            from vectordb_retrieval_spark.functions.kernels import (
-                rowwise_distance,
-            )
-
             idx: PackedLSH = bc_index.value
             indexer = idx.indexer
             n_q = len(qids)
@@ -362,7 +356,7 @@ class LSHSearcher(Searcher):
                 )
                 have_cand[uq] = True
                 # exact rerank — same float64 row-wise arithmetic as
-                # attach_query_distance
+                # the past-gate plan's rerank
                 rows = np.searchsorted(idx.ids, ui)
                 dist = rowwise_distance(qmat[uq], idx.vecs[rows], metric)
                 tq, ti, td, rank = topk_groups(uq, ui, dist, k)
@@ -428,7 +422,7 @@ class LSHSearcher(Searcher):
                 self._broadcast_search(query_df, bc_index, k, qid_col, vec_col),
             )
 
-        qids, qmat, done = self._queries(
+        bcq, qmat, done = self._queries(
             query_df,
             qid_col,
             vec_col,
@@ -436,6 +430,9 @@ class LSHSearcher(Searcher):
         )
         if done is not None:
             return done
+        # candidates are keyed by query ROW (an index into the query
+        # broadcast), so the rerank reads its query vector directly
+        n_q = len(qmat)
         if self.n_probes > 1:
             from vectordb_retrieval_spark.functions.hashing import (
                 e2lsh_multiprobe_buckets,
@@ -464,17 +461,17 @@ class LSHSearcher(Searcher):
             n_p = self.n_probes
             qb_pdf = pd.DataFrame(
                 {
-                    "qid": np.repeat(qids.astype(np.int64), n_tables * n_p),
+                    "qrow": np.repeat(np.arange(n_q), n_tables * n_p),
                     "table_id": np.tile(
                         np.repeat(np.arange(n_tables, dtype=np.int32), n_p),
-                        len(qids),
+                        n_q,
                     ),
                     "bucket": probes.reshape(-1).astype(str),
                     "probe": np.tile(
-                        np.arange(n_p, dtype=np.int32), len(qids) * n_tables
+                        np.arange(n_p, dtype=np.int32), n_q * n_tables
                     ),
                 }
-            ).groupby(["qid", "table_id", "bucket"], as_index=False, sort=True)[
+            ).groupby(["qrow", "table_id", "bucket"], as_index=False, sort=True)[
                 "probe"
             ].min()
         else:
@@ -482,16 +479,16 @@ class LSHSearcher(Searcher):
             n_tables = qbuckets.shape[1]
             qb_pdf = pd.DataFrame(
                 {
-                    "qid": np.repeat(qids.astype(np.int64), n_tables),
+                    "qrow": np.repeat(np.arange(n_q), n_tables),
                     "table_id": np.tile(
-                        np.arange(n_tables, dtype=np.int32), len(qids)
+                        np.arange(n_tables, dtype=np.int32), n_q
                     ),
                     "bucket": qbuckets.reshape(-1).astype(str),
-                    "probe": np.zeros(len(qids) * n_tables, dtype=np.int32),
+                    "probe": np.zeros(n_q * n_tables, dtype=np.int32),
                 }
             )
         qb_df = spark.createDataFrame(
-            qb_pdf, "qid long, table_id int, bucket string, probe int"
+            qb_pdf, "qrow long, table_id int, bucket string, probe int"
         )
 
         # the default candidate budget scales with the probe budget —
@@ -504,20 +501,39 @@ class LSHSearcher(Searcher):
         votes = (
             art.tables["buckets"]
             .join(F.broadcast(qb_df), ["table_id", "bucket"])
-            .groupBy("qid", "id")
+            .groupBy("qrow", "id")
             .agg(F.count("*").alias("votes"), F.min("probe").alias("best_probe"))
         )
         # best_probe is constant 0 single-probe (ordering unchanged);
         # multi-probe it ranks base-bucket hits above far perturbations
-        w = Window.partitionBy("qid").orderBy(
+        w = Window.partitionBy("qrow").orderBy(
             F.desc("votes"), F.asc("best_probe"), F.asc("id")
         )
         capped = votes.withColumn("_rn", F.row_number().over(w)).filter(
             F.col("_rn") <= cap
         )
-        cand_vecs = capped.join(art.tables["vectors"], "id").select("qid", "id", "vec")
-        scored = attach_query_distance(cand_vecs, qids, qmat, metric)
-        result = topk_per_query(scored, k)
+        cand_vecs = capped.join(art.tables["vectors"], "id").select(
+            "qrow", "id", "vec"
+        )
+
+        def rerank(rb, q_mat, _route):
+            """Exact float64 distance of each capped (query row, id,
+            vec) candidate row — row-wise, no q×n matrix."""
+            rows = rb.column(0).to_numpy(zero_copy_only=False)
+            vecs = (
+                rb.column(2)
+                .flatten()
+                .to_numpy(zero_copy_only=False)
+                .reshape(rb.num_rows, -1)
+                .astype(np.float32)
+            )
+            return (
+                rows,
+                rb.column(1).to_numpy(zero_copy_only=False),
+                rowwise_distance(q_mat[rows], vecs, metric),
+            )
+
+        result = partition_driven_job(cand_vecs, bcq, None, rerank, k)
 
         if self.exact_fallback:
             # the zero-candidate check is an action on the candidate

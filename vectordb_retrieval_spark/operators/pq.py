@@ -1,28 +1,36 @@
 """Standalone PQ index: exhaustive ADC scan (reference "PQ64" row,
 configs/benchmark_config.yaml:61-72).
 
-Build encodes every base vector to m sub-codes; search broadcasts a per
--query (m × ksub) LUT of partial squared distances and scans the code
-table with per-partition top-k — the same candidate-free exhaustive ADC
-the reference gets from FAISS, expressed as a mapInPandas fold so the
-scan parallelizes across partitions and shuffles only
-n_partitions × n_queries × k rows.
+Build encodes every base vector to m sub-codes.  A code table under the
+serving gate is searched by the broadcast-index plan
+(operators/serving.py); past it, ``serving.partition_driven_job`` scans
+the code table: each task decodes its batches of codes, scores them
+against every query and folds per-query top-k fragments, so the merge
+exchange carries only tasks × n_queries fragment rows — the same
+candidate-free exhaustive ADC the reference gets from FAISS.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vectordb_retrieval_spark import transport
 from vectordb_retrieval_spark.artifacts import IndexArtifact
+from vectordb_retrieval_spark.functions.distance import (
+    normalize_rows,
+    pairwise_distances,
+)
 from vectordb_retrieval_spark.operators.quant import PQCodec
 from vectordb_retrieval_spark.operators.searcher import Searcher
-from vectordb_retrieval_spark.operators.topk import topk_per_query, topk_rows
+from vectordb_retrieval_spark.operators.serving import (
+    broadcast_probe_search,
+    pack_clusters,
+    packed_index_bytes,
+    partition_driven_job,
+)
+from vectordb_retrieval_spark.operators.topk import topk_rows
 
 
 class PQIndexer:
@@ -89,19 +97,14 @@ class PQADCSearcher(Searcher):
         self.broadcast_threshold = broadcast_threshold
 
     def _serving_broadcast(self, spark):
-        from vectordb_retrieval_spark.operators.serving import pack_clusters
-
         art = self.artifact
         codec: PQCodec = art.params["codec"]
 
         def estimate() -> int:
-            n = art.tables["codes"].count()
-            width = codec.m * (1 if codec.ksub <= 256 else 2)
-            # packed codes + ids PLUS the per-worker float64 decode cache
-            # (8 bytes x dim per row) — same gate as
-            # serving.artifact_serving_broadcast
-            decoded = 8 * codec.codebooks.shape[0] * codec.codebooks.shape[2]
-            return n * (width + decoded + 8)
+            # the worker-side decode is the packed scan state, the same
+            # gate as serving.artifact_serving_broadcast
+            m, _, dsub = codec.codebooks.shape
+            return packed_index_bytes(art.tables["codes"].count(), codec, m * dsub)
 
         def pack(_threshold):
             packed = pack_clusters(
@@ -130,10 +133,6 @@ class PQADCSearcher(Searcher):
 
         bc_index = self._serving_broadcast(spark)
         if bc_index is not None:
-            from vectordb_retrieval_spark.operators.serving import (
-                broadcast_probe_search,
-            )
-
             # ADC runs in L2 over decoded vectors; cosine is absorbed
             # by the codec's normalize flag, so the queries normalize
             # exactly when the codec does
@@ -152,7 +151,7 @@ class PQADCSearcher(Searcher):
                 ),
             )
 
-        qids, qmat, done = self._queries(
+        bcq, _, done = self._queries(
             query_df,
             qid_col,
             vec_col,
@@ -160,112 +159,93 @@ class PQADCSearcher(Searcher):
         )
         if done is not None:
             return done
-        q64 = qmat.astype(np.float64)
-        if codec.normalize:
-            from vectordb_retrieval_spark.functions.distance import normalize_rows
 
-            q64 = normalize_rows(q64)
-        bc = spark.sparkContext.broadcast((qids, q64, codec))
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from vectordb_retrieval_spark.functions.distance import (
-                pairwise_distances,
+        def adc_unit(rb, qmat, _route):
+            """One Arrow batch of code rows → each query's top-k of it."""
+            qm = qmat.astype(np.float64)
+            if codec.normalize:
+                qm = normalize_rows(qm)
+            n_q = len(qm)
+            ids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+            n_b = len(ids)
+            codes = (
+                rb.column(1)
+                .flatten()
+                .to_numpy(zero_copy_only=False)
+                .reshape(n_b, -1)
+                .astype(np.int64)
             )
+            # ADC distance with exact codebook arithmetic == L2 to the
+            # decoded vector, so decode once per block and let one GEMM
+            # replace m gather-accumulate passes (the m=64 FAISS-parity
+            # config is ~50× faster this way; the LUT form only wins
+            # when codes are scanned many times per materialized decode,
+            # which an exhaustive scan isn't)
+            dec = codec.decode(codes)
 
-            q_ids, qm, cdc = bc.value
-            n_q = len(q_ids)
-            cand_d: list[np.ndarray] = []
-            cand_i: list[np.ndarray] = []
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ids = pdf["id"].to_numpy(dtype=np.int64)
-                codes = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)
-                # ADC distance with exact codebook arithmetic == L2 to
-                # the decoded vector, so decode once per block and let
-                # one GEMM replace m gather-accumulate passes (the m=64
-                # FAISS-parity config is ~50× faster this way; the LUT
-                # form only wins when codes are scanned many times per
-                # materialized decode, which an exhaustive scan isn't)
-                dec = cdc.decode(codes)
-                n_b = len(ids)
-                # Selection must be deterministic across serving batch
-                # shapes: BLAS GEMM blocking varies with the batch's row
-                # count, so two logically-tied candidates (identical
-                # decoded vectors — routine under quantization) can land
-                # ULPs apart in one shape and exactly equal in another,
-                # flipping which survives pruning.  The elementwise
-                # squared-diff sum below is a fixed-depth pairwise
-                # reduction over dim — bitwise shape-independent — so
-                # the kept candidates and their dists are stable, and
-                # ties resolve by the (dist, id) contract
-                # (topk.topk_rows).
-                def det_rows(qrows: np.ndarray, cand: np.ndarray) -> np.ndarray:
-                    # (len(qrows), cand.shape[1]) deterministic dists;
-                    # tiled so the (q, cand, dim) cube stays ~40 MB
-                    out = np.empty(cand.shape[:2])
-                    step = max(1, 40_000_000 // (cand.shape[1] * qm.shape[1] * 8))
-                    for s in range(0, len(qrows), step):
-                        e = min(len(qrows), s + step)
-                        diff = qm[qrows[s:e], None, :] - dec[cand[s:e]]
-                        out[s:e] = (diff * diff).sum(-1)
-                    return np.sqrt(out)
+            # Selection must be deterministic across serving batch
+            # shapes: BLAS GEMM blocking varies with the batch's row
+            # count, so two logically-tied candidates (identical decoded
+            # vectors — routine under quantization) can land ULPs apart
+            # in one shape and exactly equal in another, flipping which
+            # survives pruning.  The elementwise squared-diff sum below
+            # is a fixed-depth pairwise reduction over dim — bitwise
+            # shape-independent — so the kept candidates and their dists
+            # are stable, and ties resolve by the (dist, id) contract
+            # (topk.topk_rows).
+            def det_rows(qrows: np.ndarray, cand: np.ndarray) -> np.ndarray:
+                # (len(qrows), cand.shape[1]) deterministic dists; tiled
+                # so the (q, cand, dim) cube stays ~40 MB
+                out = np.empty(cand.shape[:2])
+                step = max(1, 40_000_000 // (cand.shape[1] * qm.shape[1] * 8))
+                for s in range(0, len(qrows), step):
+                    e = min(len(qrows), s + step)
+                    diff = qm[qrows[s:e], None, :] - dec[cand[s:e]]
+                    out[s:e] = (diff * diff).sum(-1)
+                return np.sqrt(out)
 
-                all_rows = np.arange(n_q)
-                margin = 16
-                if n_b > k + margin:
-                    dmat = pairwise_distances(qm, dec, "l2")  # prune scores
-                    m_sl = k + margin
-                    # one selection: columns [:m_sl] are kept, column
-                    # m_sl is the smallest EXCLUDED prune score
-                    part = np.argpartition(dmat, m_sl, axis=1)
-                    excl_min = np.take_along_axis(
-                        dmat, part[:, m_sl : m_sl + 1], axis=1
-                    )[:, 0]
-                    part = part[:, :m_sl]
-                    det = det_rows(all_rows, part)
-                    bd, bi = topk_rows(det, ids[part], k)
-                    # certify the prune: an excluded candidate could only
-                    # beat the kth refined dist if the boundary gap is
-                    # inside GEMM's fp noise — those rows re-rank against
-                    # the full block deterministically (rare; common only
-                    # under degenerate tiny-codebook configs)
-                    eps = 1e-7 * (1.0 + np.abs(excl_min))
-                    unsafe = np.nonzero(bd[:, -1] >= excl_min - eps)[0]
-                    if len(unsafe):
-                        full = det_rows(
-                            unsafe,
-                            np.broadcast_to(
-                                np.arange(n_b), (len(unsafe), n_b)
-                            ),
-                        )
-                        fd, fi = topk_rows(full, ids, k)
-                        bd[unsafe], bi[unsafe] = fd, fi
-                    cand_d.append(bd)
-                    cand_i.append(bi)
-                else:
-                    det = det_rows(
-                        all_rows,
-                        np.broadcast_to(np.arange(n_b), (n_q, n_b)),
+            all_rows = np.arange(n_q)
+            margin = 16
+            if n_b > k + margin:
+                dmat = pairwise_distances(qm, dec, "l2")  # prune scores
+                m_sl = k + margin
+                # one selection: columns [:m_sl] are kept, column
+                # m_sl is the smallest EXCLUDED prune score
+                part = np.argpartition(dmat, m_sl, axis=1)
+                excl_min = np.take_along_axis(
+                    dmat, part[:, m_sl : m_sl + 1], axis=1
+                )[:, 0]
+                part = part[:, :m_sl]
+                det = det_rows(all_rows, part)
+                bd, bi = topk_rows(det, ids[part], k)
+                # certify the prune: an excluded candidate could only
+                # beat the kth refined dist if the boundary gap is
+                # inside GEMM's fp noise — those rows re-rank against
+                # the full block deterministically (rare; common only
+                # under degenerate tiny-codebook configs)
+                eps = 1e-7 * (1.0 + np.abs(excl_min))
+                unsafe = np.nonzero(bd[:, -1] >= excl_min - eps)[0]
+                if len(unsafe):
+                    full = det_rows(
+                        unsafe,
+                        np.broadcast_to(
+                            np.arange(n_b), (len(unsafe), n_b)
+                        ),
                     )
-                    bd, bi = topk_rows(det, ids, k)
-                    cand_d.append(bd)
-                    cand_i.append(bi)
-            if not cand_d:
-                return
-            dall, iall = topk_rows(
-                np.concatenate(cand_d, axis=1), np.concatenate(cand_i, axis=1), k
-            )
-            kk = dall.shape[1]
-            yield pd.DataFrame(
-                {
-                    "qid": np.repeat(q_ids, kk),
-                    "id": iall.reshape(-1),
-                    "dist": dall.reshape(-1),
-                }
-            )
+                    fd, fi = topk_rows(full, ids, k)
+                    bd[unsafe], bi[unsafe] = fd, fi
+            else:
+                det = det_rows(
+                    all_rows,
+                    np.broadcast_to(np.arange(n_b), (n_q, n_b)),
+                )
+                bd, bi = topk_rows(det, ids, k)
+            return np.repeat(all_rows, bd.shape[1]), bi.ravel(), bd.ravel()
 
-        scored = art.tables["codes"].select("id", "codes").mapInPandas(
-            kernel, schema="qid long, id long, dist double"
+        return self._plan_put(
+            query_df,
+            mk,
+            partition_driven_job(
+                art.tables["codes"].select("id", "codes"), bcq, None, adc_unit, k
+            ),
         )
-        return self._plan_put(query_df, mk, topk_per_query(scored, k))

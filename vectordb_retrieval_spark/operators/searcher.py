@@ -67,12 +67,15 @@ class Searcher:
         return plan
 
     def _queries(self, query_df, qid_col, vec_col, recurse, normalize=False):
-        """Partitioned-path prologue: ``(qids, qmat, None)`` for a frame
-        under the query-collect gate, else ``(None, None, result)`` —
-        the chunked union of ``recurse(chunk)`` for a past-gate frame
-        (no serving path holds an unbounded query frame on the driver),
-        or the empty result for an empty batch.  ``normalize``
-        L2-normalizes the query rows (cosine)."""
+        """Partitioned-path prologue: ``(bcq, qmat, None)`` for a frame
+        under the query-collect gate — ``bcq`` is the memoized
+        ``(qids, qmat)`` query broadcast the partition-driven job's
+        tasks read, ``qmat`` its matrix for driver-side routing,
+        L2-normalized when ``normalize`` (cosine; tasks normalize their
+        own rows the same way) — else ``(None, None, result)``: the
+        chunked union of ``recurse(chunk)`` for a past-gate frame (no
+        serving path holds an unbounded query frame on the driver), or
+        the empty result for an empty batch."""
         bcq, chunked = kernels.collect_or_chunk(
             query_df, qid_col, vec_col, recurse
         )
@@ -84,4 +87,4 @@ class Searcher:
             return None, None, empty
         if normalize:
             qmat = normalize_rows(qmat.astype(np.float64)).astype(np.float32)
-        return qids, qmat, None
+        return bcq, qmat, None

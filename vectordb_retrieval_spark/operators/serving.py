@@ -1,31 +1,33 @@
-"""Broadcast-index serving — the small-index fast path for the IVF
-family and standalone PQ.
+"""The two serving jobs every ANN family's search runs on.
 
-The partitioned scan (``kernels.cluster_scan_topk``) is the at-scale
-plan: the assignment table is the big side, probe lists prune its
-partitions, and fragment top-ks shuffle into a global per-query merge.
-But when the PACKED index (per-cluster id arrays + code/vector
-matrices) fits under ``broadcast_threshold`` bytes — always true for
-the reference's in-RAM configurations (modular.py:341-385), and true at
-cluster scale for compressed codes over sharded or per-tenant corpora —
-that dataflow is upside down: the index is smaller than the candidate
-traffic it generates.  This module flips it, the same inversion Spark's
-broadcast-join threshold encodes and the same one graph_ann.py applies
-to its shard blobs: broadcast the packed index once, scan the QUERY
-table, and run each query's entire probe → decode → scan → top-k
-pipeline inside a single task.  One narrow mapInArrow job driven by the
-query batch (``query_driven_job``, which the LSH, cluster-pruned and
-graph kernels share), zero shuffle, exactly k rows out per query.
+- ``partition_driven_job`` — the at-scale plan for an index past its
+  broadcast gate: the index is the big side and stays partitioned.
+  Each task reads its index units (IVF/cluster-pruned packed blobs,
+  graph shards, PQ codes, LSH capped candidates), its queries from the
+  memoized query broadcast and its routing from one small per-search
+  broadcast, folds its candidates into per-query top-k fragments, and
+  one ``merge_fragment_topk`` ranks them.
+- ``query_driven_job`` — when the packed index fits under
+  ``broadcast_threshold`` bytes (always true for the reference's in-RAM
+  configurations, modular.py:341-385, and true at cluster scale for
+  compressed codes over sharded or per-tenant corpora) the partitioned
+  dataflow is upside down: the index is smaller than the candidate
+  traffic it generates.  The job flips it, the same inversion Spark's
+  broadcast-join threshold encodes: broadcast the packed index once,
+  scan the QUERY table, and run each query's entire probe → decode →
+  scan → top-k pipeline inside a single task.  One narrow mapInArrow
+  job driven by the query batch, zero shuffle, exactly k rows out per
+  query.
 
 Result parity: probe selection (nprobe nearest centroids, ties by
 cluster id), decode, float64 distance arithmetic
-(``distance.block_distances``), and (dist, id) tie-breaks replicate
-``cluster_scan_topk`` + ``topk_per_query`` exactly, so the oracle hash
-checks hold on either path: every selection here runs through
-``topk.topk_rows`` / ``topk.topk_groups``, the numpy form of the
-window's (dist, id) contract.  ``exact_block_scan`` is the one exact
-float64 scan of a probe plan; the serving exact path and both phases of
-cluster-pruned's broadcast kernel run on it.
+(``distance.block_distances``), and (dist, id) tie-breaks are the same
+in both jobs, so the oracle hash checks hold on either path: every
+selection runs through ``topk.topk_rows`` / ``topk.topk_groups`` or the
+merge window, all of them the (dist, id) contract.  ``exact_block_scan``
+is the one exact float64 scan of a broadcast probe plan; the serving
+exact path and both phases of cluster-pruned's broadcast kernel run on
+it.
 
 Per-worker warm cache: the broadcast value lives inside each reused
 Python worker across jobs, and the packed scan state
@@ -43,7 +45,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vectordb_retrieval_spark import transport
@@ -290,6 +292,35 @@ def pack_clusters_from_packed(
     )
 
 
+def packed_index_bytes(n: int, codec, dim: int) -> int:
+    """The serving gate's size of an ``n``-row packed index of
+    ``dim``-d vectors: what one worker holds, counted before any
+    collect.  Per row that is the packed payload (float32 vectors or
+    the codec's codes), its int64 id, and the packed scan state
+    ``PackedClusters.packed_scan`` builds from them (float64 matrix,
+    float32 copy and norms: 12·dim + 12 bytes).  Gating on packed bytes
+    alone let a 57 MB SQ8 index through whose decode is 460 MB — every
+    worker then paid a one-shot full-index decode and the "fast path"
+    ran 30x slower than the partitioned scan."""
+    from vectordb_retrieval_spark.operators.quant import (
+        PCACodec,
+        PQCodec,
+        SQfp16Codec,
+    )
+
+    if codec is None:
+        width = 4 * dim
+    elif isinstance(codec, PQCodec):
+        width = codec.m * (1 if codec.ksub <= 256 else 2)
+    elif isinstance(codec, PCACodec):
+        width = 4 * codec.dim_out  # float32 reduced coordinates
+    elif isinstance(codec, SQfp16Codec):
+        width = 2 * dim  # fp16 bit patterns
+    else:
+        width = dim  # SQ8: one byte per dim packed
+    return n * (width + 8 + 12 * dim + 12)
+
+
 def artifact_serving_broadcast(
     art,
     spark,
@@ -302,35 +333,13 @@ def artifact_serving_broadcast(
     would exceed ``threshold`` — size is ESTIMATED from row count ×
     payload width before any collect, so the driver never materializes
     an over-threshold index."""
-    from vectordb_retrieval_spark.operators.quant import (
-        PCACodec,
-        PQCodec,
-        SQfp16Codec,
-    )
-
     codec = art.params.get("codec")
     cents = art.params["centroids"]
 
     def estimate() -> int:
-        n = art.tables[table].count()
-        if codec is None:
-            width = 4 * cents.shape[1]
-        elif isinstance(codec, PQCodec):
-            width = codec.m * (1 if codec.ksub <= 256 else 2)
-        elif isinstance(codec, PCACodec):
-            width = 4 * codec.dim_out  # float32 reduced coordinates
-        elif isinstance(codec, SQfp16Codec):
-            width = 2 * cents.shape[1]  # fp16 bit patterns
-        else:
-            width = cents.shape[1]  # SQ8: one byte per dim packed
-        # gate on what a worker actually holds: packed payload + ids PLUS
-        # the packed scan state (float64 matrix + float32 downcast +
-        # norms, ~12 bytes × dim per row).  Gating on packed bytes alone
-        # let a 57 MB SQ8 index through whose decode is 460 MB — every
-        # worker then pays a one-shot full-index decode and the "fast
-        # path" ran 30x slower than the partitioned scan.
-        decoded = 12 * cents.shape[1] + 12
-        return n * (width + decoded + 8)
+        return packed_index_bytes(
+            art.tables[table].count(), codec, cents.shape[1]
+        )
 
     def pack(_threshold):
         if (
@@ -382,23 +391,37 @@ _PAD_POS = np.int32(np.iinfo(np.int32).max)
 BLOCK_ROWS = 8192
 
 
-def probe_groups(
-    idx: PackedClusters, flat_q: np.ndarray, flat_c: np.ndarray
-) -> list:
+def nearest_clusters(qmat: np.ndarray, cents, nprobe: int) -> np.ndarray:
+    """Each query's ``nprobe`` nearest centroids by float64 L2, ties by
+    cluster id: an (n_q, min(nprobe, nlist)) cluster-id matrix — the
+    probe selection of both IVF plans."""
+    d2c = pairwise_distances(qmat, cents, "l2")
+    return topk_rows(d2c, np.arange(d2c.shape[1]), min(nprobe, d2c.shape[1]))[1]
+
+
+def group_probes(flat_q: np.ndarray, flat_c: np.ndarray) -> dict:
     """Flat (query row, cluster id) probe pairs grouped per cluster:
-    (cluster slot, probing query rows) items in ascending cluster-id
-    order, query rows in pair order.  Ids absent from ``idx`` (no rows
-    packed) are skipped."""
+    cluster id → its probing query rows, in ascending cluster-id order
+    with query rows in pair order.  The one probe grouping: the
+    broadcast probe plan (``probe_groups``) and the partitioned probe
+    maps of IVF and cluster-pruned all use it."""
     so = np.argsort(flat_c, kind="stable")
     fc, fq = flat_c[so], flat_q[so]
     ucs, starts = np.unique(fc, return_index=True)
     bounds = np.r_[starts, len(fc)]
-    plan = []
-    for j, c in enumerate(ucs):
-        bi = idx.index.get(int(c))
-        if bi is not None:
-            plan.append((bi, fq[bounds[j] : bounds[j + 1]]))
-    return plan
+    return {int(c): fq[bounds[j] : bounds[j + 1]] for j, c in enumerate(ucs)}
+
+
+def probe_groups(
+    idx: PackedClusters, flat_q: np.ndarray, flat_c: np.ndarray
+) -> list:
+    """``group_probes`` as (cluster slot, probing query rows) items of
+    ``idx``; ids absent from ``idx`` (no rows packed) are skipped."""
+    return [
+        (idx.index[c], rows)
+        for c, rows in group_probes(flat_q, flat_c).items()
+        if c in idx.index
+    ]
 
 
 def _query_operands(qmat: np.ndarray, metric: str):
@@ -484,12 +507,8 @@ def _probe_plan(
     if cents is None or nprobe is None or nprobe >= len(cents):
         plan = [(bi, None) for bi in range(len(idx.cids))]
         return (plan, 0) if split_primary else plan
-    # identical probe selection to IVFSearcher.probe_clusters:
-    # nprobe nearest centroids by float64 L2, ties by cluster id
-    d2c = pairwise_distances(qmat, cents, "l2")
-    npb = min(nprobe, d2c.shape[1])
-    order = topk_rows(d2c, np.arange(d2c.shape[1]), npb)[1]
-
+    order = nearest_clusters(qmat, cents, nprobe)
+    npb = order.shape[1]
     qs = np.arange(n_q)
     if not split_primary:
         return probe_groups(idx, np.repeat(qs, npb), order.ravel())
@@ -1020,6 +1039,151 @@ def query_driven_job(
             yield from _arrow_result(batch_fn(qids, qmat))
 
     return q.mapInArrow(kernel_scan, schema=RESULT_SCHEMA)
+
+
+def partition_fragments(
+    units_df: DataFrame, bcq, route, unit_fn, k: int
+) -> DataFrame:
+    """The scan stage of ``partition_driven_job``: per-task fragment
+    top-k rows (qid, ids list, dists list), one row per (task, query).
+
+    Each task reads its index units from ``units_df`` (Arrow batches,
+    columns read positionally by ``unit_fn``), its queries from the
+    memoized ``(qids, qmat)`` query broadcast ``bcq`` and its routing
+    from one broadcast of ``route`` (None ships nothing).
+    ``unit_fn(batch, qmat, route)`` scores a batch of units and returns
+    flat (query row, id, float64 dist) candidates, or None; the task
+    folds all of them with one ``topk_groups`` and emits each query's
+    kept candidates as one LIST row, so the merge exchange moves
+    ~n_q × tasks rows instead of n_q × tasks × k (at 150k×384-d the flat
+    form's 300k-row window merge cost more than the whole scan stage)."""
+    bc_route = (
+        None
+        if route is None
+        else units_df.sparkSession.sparkContext.broadcast(route)
+    )
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        qids, qmat = bcq.value
+        rt = None if bc_route is None else bc_route.value
+        parts = []
+        for rb in batches:
+            if rb.num_rows:
+                cand = unit_fn(rb, qmat, rt)
+                if cand is not None and len(cand[0]):
+                    parts.append(cand)
+        if not parts:
+            return
+        aq, ai, ad, _ = topk_groups(
+            *(np.concatenate(col) for col in zip(*parts)), k
+        )
+        qs = np.r_[0, np.nonzero(np.diff(aq))[0] + 1]
+        offsets = pa.array(np.r_[qs, len(aq)].astype(np.int32))
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(qids[aq[qs]]),
+                pa.ListArray.from_arrays(offsets, pa.array(ai)),
+                pa.ListArray.from_arrays(offsets, pa.array(ad)),
+            ],
+            names=["qid", "ids", "dists"],
+        )
+
+    return units_df.mapInArrow(
+        kernel, schema="qid long, ids array<long>, dists array<double>"
+    )
+
+
+def partition_driven_job(
+    units_df: DataFrame, bcq, route, unit_fn, k: int
+) -> DataFrame:
+    """The index-driven serving job — the past-gate plan of every ANN
+    family, where the index is the big side and stays partitioned: IVF
+    and cluster-pruned scan packed blob (or node-local metadata) rows,
+    graph its shard rows, PQ its code rows and LSH its capped candidate
+    rows.  ``partition_fragments`` folds each task's candidates into
+    per-query fragments and one ``merge_fragment_topk`` ranks them:
+    (qid, id, dist, rank), rank 1..k ascending by (dist, id) — the
+    contract ``query_driven_job`` meets for the broadcast plans."""
+    return merge_fragment_topk(
+        partition_fragments(units_df, bcq, route, unit_fn, k),
+        k,
+        len(bcq.value[0]),  # driver-side broadcast read: no job
+    )
+
+
+def merge_fragment_topk(frag: DataFrame, k: int, n_queries: int) -> DataFrame:
+    """Global per-query merge of ``partition_fragments`` rows
+    (qid, ids list, dists list) → (qid, id, dist, rank), rank 1..k
+    ascending by (dist, id).
+
+    Small batches (≤ 4096 queries) merge JVM-side: explode the fragment
+    lists and row_number over (dist, id) — the merge stage carries no
+    python-worker handshake at all (a JVM-only stage costs ~0.07 s on
+    this pool vs ~0.15-0.28 s for a python one), which is most of a
+    small-batch search's wall.  The fragment LIST rows are repartitioned
+    by qid BEFORE the explode (an explode before an exchange multiplies
+    it — here by k), and the window reuses that partitioning instead of
+    adding its own exchange.
+
+    Larger batches merge in a numpy kernel over the same qid-hashed
+    exchange: one ``topk_groups`` over n_q × tasks_probed rows per task.
+
+    Merge parallelism scales with the query count (one task per 256
+    queries, at least 2 — a single reducer serializes the whole shuffle
+    fetch behind one python worker, measured 36% slower than 4 — capped
+    at defaultParallelism): at serving batch sizes task DISPATCH
+    dominates, ~8 ms/task beyond 16 in-flight python tasks."""
+    par = frag.sparkSession.sparkContext.defaultParallelism
+    merged = frag.repartition(max(2, min(par, -(-n_queries // 256))), "qid")
+    if n_queries <= 4096:
+        w = Window.partitionBy("qid").orderBy(
+            F.col("dist").asc(), F.col("id").asc()
+        )
+        return (
+            merged.select(
+                "qid", F.explode(F.arrays_zip("ids", "dists")).alias("z")
+            )
+            .select(
+                "qid",
+                F.col("z.ids").alias("id"),
+                F.col("z.dists").alias("dist"),
+            )
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+        )
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        acc_q: list[np.ndarray] = []
+        acc_i: list[np.ndarray] = []
+        acc_d: list[np.ndarray] = []
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            ids_l = rb.column(1)
+            lens = ids_l.value_lengths().to_numpy(zero_copy_only=False)
+            acc_q.append(
+                np.repeat(rb.column(0).to_numpy(zero_copy_only=False), lens)
+            )
+            acc_i.append(ids_l.flatten().to_numpy(zero_copy_only=False))
+            acc_d.append(rb.column(2).flatten().to_numpy(zero_copy_only=False))
+        if not acc_q:
+            return
+        aq, ai, ad, rank = topk_groups(
+            np.concatenate(acc_q),
+            np.concatenate(acc_i),
+            np.concatenate(acc_d),
+            k,
+        )
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(aq), pa.array(ai), pa.array(ad), pa.array(rank)],
+            names=["qid", "id", "dist", "rank"],
+        )
+
+    return merged.mapInArrow(kernel, schema=RESULT_SCHEMA)
 
 
 def broadcast_probe_search(

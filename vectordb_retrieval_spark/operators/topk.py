@@ -17,6 +17,15 @@ the lower id before the window ever sees it.
   distance block.
 - ``topk_groups``: flat grouped selection over (query, id, dist)
   candidate triples.
+
+Limit of the tie contract: it orders the distances it is given, and
+float64 GEMM distances depend on the BLAS thread count.  The same exact
+search run with ``OMP_NUM_THREADS=1`` and ``=4`` returned the same ids
+and ranks but distances up to 7e-15 apart (ip) and 6e-8 apart (an l2
+self-match, where the square root magnifies a ~1e-15 squared
+distance).  Executors are pinned to one thread (``session.get_spark``),
+so in-job results repeat; driver-side kernels are not pinned, so a
+near-tie scored on the driver and on an executor can rank differently.
 """
 
 from __future__ import annotations
