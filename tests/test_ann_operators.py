@@ -265,6 +265,248 @@ def test_ivf_append_equals_full_build(dfs, exact_ids):
     assert "codes" in merged_c.tables["assignment"].columns
 
 
+# carry-forward append fixtures: 9 well-separated blobs; the seed index
+# holds blobs 0-7 only, so blob 8's cluster is empty until an append
+# lands rows in it
+BLOB_DIM, BLOB_SCALE = 16, 10.0
+
+
+def _blob_rows(rng, centers, counts, first_id):
+    ids, vecs = [], []
+    for c, n in counts:
+        vecs.append(centers[c] + rng.randn(n, BLOB_DIM).astype(np.float32))
+        ids.append(np.arange(first_id, first_id + n, dtype=np.int64))
+        first_id += n
+    return np.concatenate(ids), np.vstack(vecs)
+
+
+@pytest.fixture(scope="module")
+def blobs():
+    rng = np.random.RandomState(41)
+    unit = rng.randn(9, BLOB_DIM)
+    unit /= np.linalg.norm(unit, axis=1, keepdims=True)
+    centers = (BLOB_SCALE * unit).astype(np.float32)
+    base = _blob_rows(rng, centers, [(c, 40) for c in range(8)], 0)
+    batches, nxt = [], 320
+    for counts in (
+        [(0, 15), (3, 15)],
+        [(8, 20), (5, 10)],  # blob 8: a previously empty cluster
+        [(1, 10), (8, 10), (6, 10)],
+    ):
+        batches.append(_blob_rows(rng, centers, counts, nxt))
+        nxt += sum(n for _, n in counts)
+    qs = centers[rng.randint(0, 9, 12)] + rng.randn(12, BLOB_DIM).astype(np.float32)
+    return unit, base, batches, qs
+
+
+def _frame(spark, ids, mat, id_name="id"):
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame({id_name: ids, "vec": list(mat)}),
+        f"{id_name} long, vec array<float>",
+    )
+
+
+def _answers(art, query_df, searcher=None):
+    from vectordb_retrieval_spark.operators.ivf import IVFSearcher
+
+    s = (searcher or IVFSearcher(nprobe=3)).attach(art)
+    return sorted(
+        (r["qid"], r["id"], r["rank"], r["dist"])
+        for r in s.search(query_df, K).collect()
+    )
+
+
+def _blob_index(blobs, metric, codec):
+    unit, base, batches, qs = blobs
+    cents = unit if metric == "cosine" else BLOB_SCALE * unit
+    from vectordb_retrieval_spark.operators.ivf import FixedCentroidIVFIndexer
+
+    return FixedCentroidIVFIndexer(cents, metric=metric, codec=codec), base, batches, qs
+
+
+@pytest.mark.parametrize("metric, sq8", [("cosine", True), ("l2", False)])
+def test_ivf_append_carry_forward_equals_rebuild_and_full_build(
+    spark, blobs, metric, sq8
+):
+    """Served index, appended 3× (the second append lands rows in a
+    previously empty cluster): every append takes the carry-forward
+    path, and the answers equal the rebuild path's (the same appends on
+    an index never served) and one full build's over every row, on
+    (qid, id, rank, dist)."""
+    from vectordb_retrieval_spark.operators.ivf import IVFSearcher, ivf_append
+    from vectordb_retrieval_spark.operators.quant import SQ8Codec
+
+    codec = SQ8Codec() if sq8 else None
+    idx, base, batches, qs = _blob_index(blobs, metric, codec)
+    query_df = _frame(spark, np.arange(len(qs)), qs, "qid")
+    served = idx.build(_frame(spark, *base))
+    rebuilt = idx.build(_frame(spark, *base))
+    searcher = IVFSearcher(nprobe=3).attach(served)
+    searcher.search(query_df, K).collect()
+    assert 8 not in served.params["_serving_bc"].bc.value.index
+    for ids, mat in batches:
+        served = ivf_append(served, _frame(spark, ids, mat))
+        rebuilt = ivf_append(rebuilt, _frame(spark, ids, mat))
+        assert "_append_chain" in served.params
+        assert "_serving_bc" not in rebuilt.params
+        got = _answers(served, query_df, searcher)
+    bundle = served.params["_serving_bc"].bc.value
+    assert len(bundle.ids[bundle.index[8]]) == 30
+    all_ids = np.concatenate([base[0]] + [b[0] for b in batches])
+    all_mat = np.vstack([base[1]] + [b[1] for b in batches])
+    full = idx.build(_frame(spark, all_ids, all_mat))
+    assert got == _answers(rebuilt, query_df) == _answers(full, query_df)
+    assert served.tables["assignment"].count() == len(all_ids)
+
+
+def test_ivf_append_past_room_rebuilds(spark, blobs, caplog):
+    """An append with more new rows than the room left under the
+    admitting threshold takes the rebuild path (logged at DEBUG) and
+    answers as the full build does."""
+    import logging
+
+    from vectordb_retrieval_spark.operators.ivf import IVFSearcher, ivf_append
+    from vectordb_retrieval_spark.operators.quant import SQ8Codec
+    from vectordb_retrieval_spark.operators.serving import packed_index_bytes
+
+    idx, base, batches, qs = _blob_index(blobs, "cosine", SQ8Codec())
+    query_df = _frame(spark, np.arange(len(qs)), qs, "qid")
+    art = idx.build(_frame(spark, *base))
+    room = len(batches[0][0]) - 1
+    searcher = IVFSearcher(
+        nprobe=3,
+        broadcast_threshold=packed_index_bytes(
+            len(base[0]) + room, idx.codec, BLOB_DIM
+        ),
+    ).attach(art)
+    searcher.search(query_df, K).collect()
+    with caplog.at_level(logging.DEBUG, logger="vectordb_retrieval_spark.operators.ivf"):
+        art = ivf_append(art, _frame(spark, *batches[0]))
+    assert "_serving_bc" not in art.params and "_append_chain" not in art.params
+    assert any("exceed the serving room" in r.getMessage() for r in caplog.records)
+    full = idx.build(
+        _frame(
+            spark,
+            np.concatenate([base[0], batches[0][0]]),
+            np.vstack([base[1], batches[0][1]]),
+        )
+    )
+    assert _answers(art, query_df) == _answers(full, query_df)
+
+
+def test_ivf_append_foreach_batch_chain_stays_shallow(spark, blobs, tmp_path):
+    """foreachBatch ivf_append with a search between micro-batches: each
+    append carries the served bundle forward, the final answers equal
+    the full build's, and the assignment table is ONE union of two
+    children however many micro-batches ran."""
+    from vectordb_retrieval_spark.operators.ivf import IVFSearcher, ivf_append
+    from vectordb_retrieval_spark.streaming.serving import await_or_raise
+
+    idx, base, batches, qs = _blob_index(blobs, "l2", None)
+    query_df = _frame(spark, np.arange(len(qs)), qs, "qid").cache()
+    searcher = IVFSearcher(nprobe=3)
+    holder = [idx.build(_frame(spark, *base))]
+    searcher.attach(holder[0]).search(query_df, K).collect()
+    vdir = str(tmp_path / "ingest")
+    for b, (ids, mat) in enumerate(batches):
+        _frame(spark, ids, mat).coalesce(1).write.parquet(f"{vdir}/batch={b}")
+    stream = (
+        spark.readStream.schema("id long, vec array<float>")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(vdir + "/batch=*")
+    )
+    paths = []
+
+    def sink(df, epoch_id):
+        holder[0] = ivf_append(holder[0], df)
+        paths.append("_append_chain" in holder[0].params)
+        searcher.attach(holder[0]).search(query_df, K).collect()
+
+    q = (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_or_raise(q, 300)
+    assert paths == [True] * len(batches)
+    plan = holder[0].tables["assignment"]._jdf.queryExecution().logical()
+    assert plan.nodeName() == "Union" and plan.children().size() == 2
+    assert plan.toString().count("Union") == 1
+    all_ids = np.concatenate([base[0]] + [b[0] for b in batches])
+    all_mat = np.vstack([base[1]] + [b[1] for b in batches])
+    full = idx.build(_frame(spark, all_ids, all_mat))
+    assert _answers(holder[0], query_df, searcher) == _answers(full, query_df)
+
+
+def test_ivf_append_served_runs_one_job_and_next_read_packs_nothing(
+    spark, blobs, monkeypatch
+):
+    """Job-group count: a carry-forward append is one job, and the next
+    read is the one query-driven job — no pack collect."""
+    from vectordb_retrieval_spark.operators import serving
+    from vectordb_retrieval_spark.operators.ivf import IVFSearcher, ivf_append
+    from vectordb_retrieval_spark.operators.quant import SQ8Codec
+
+    idx, base, batches, qs = _blob_index(blobs, "cosine", SQ8Codec())
+    query_df = _frame(spark, np.arange(len(qs)), qs, "qid")
+    art = idx.build(_frame(spark, *base))
+    searcher = IVFSearcher(nprobe=3).attach(art)
+    searcher.search(query_df, K).collect()
+    new_df = _frame(spark, *batches[1])
+
+    def refuse(*a, **k):
+        raise AssertionError("the carried-forward index was repacked")
+
+    monkeypatch.setattr(serving, "pack_clusters", refuse)
+    monkeypatch.setattr(serving, "pack_clusters_from_packed", refuse)
+    sc = spark.sparkContext
+
+    def jobs(group, step):
+        sc.setJobGroup(group, group)
+        try:
+            out = step()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    derived, n_append = jobs("carry-forward-append", lambda: ivf_append(art, new_df))
+    rows, n_read = jobs(
+        "carry-forward-read",
+        lambda: searcher.attach(derived).search(query_df, K).collect(),
+    )
+    assert (n_append, n_read) == (1, 1)
+    assert len(rows) == len(qs) * K
+
+
+@pytest.mark.parametrize("codec_name", ["sq8", "pq"])
+@pytest.mark.parametrize("normalize", [True, False])
+def test_fused_assign_kernel_equals_three_stage_chain(dfs, codec_name, normalize):
+    """The fused ``_assign_df`` (normalize → assign → encode in one
+    pass) emits the same (cluster_id, id, codes) rows as the chain it
+    replaced: ``_norm_df`` → assign-only ``_assign_df`` →
+    ``quant.encode_df``."""
+    from vectordb_retrieval_spark.operators.ivf import _assign_df, _norm_df
+    from vectordb_retrieval_spark.operators.quant import PQCodec, SQ8Codec, encode_df
+
+    base_df, _ = dfs
+    base = base_df.select("id", "vec")
+    prepped = _norm_df(base, "vec") if normalize else base
+    cents = np.vstack([r.vec for r in prepped.orderBy("id").limit(8).collect()])
+    codec = SQ8Codec() if codec_name == "sq8" else PQCodec(m=4, ksub=16, seed=2)
+    codec.fit(prepped, "vec")
+    chain = encode_df(codec, _assign_df(prepped, cents), "vec")
+    fused = _assign_df(base, cents, normalize=normalize, codec=codec)
+    assert fused.columns == chain.columns == ["cluster_id", "id", "codes"]
+
+    def rows(df):
+        return sorted((r[0], r[1], tuple(r[2])) for r in df.collect())
+
+    assert rows(fused) == rows(chain)
+
+
 def test_ivf_delete_exhaustive_equals_exact_over_survivors(dfs):
     from pyspark.sql import functions as F
 
@@ -746,6 +988,26 @@ def test_lsh_broadcast_path_equals_pipeline_path(dfs):
             assert abs(v - sd[kk_]) <= 1e-9 * max(1.0, abs(v)), (build_kw, kk_)
 
 
+def test_lsh_past_gate_fallback_holds_one_persisted_result(spark, dfs, vecs):
+    """The past-gate exact-fallback check persists its result; three
+    distinct query frames through one searcher leave at most one more
+    persisted RDD than before (the searcher releases its previous one)."""
+    from vectordb_retrieval_spark.operators.lsh import LSHIndexer, LSHSearcher
+
+    base_df, _ = dfs
+    _, queries = vecs
+    art = LSHIndexer(DIM, num_tables=2, hash_size=8, metric="cosine", seed=5).build(
+        base_df
+    )
+    searcher = LSHSearcher(broadcast_threshold=0).attach(art)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for lo in (0, 4, 8):
+        frame = make_vector_df(spark, queries[lo : lo + 4], id_name="qid")
+        searcher.search(frame, K).collect()
+    assert jsc.getPersistentRDDs().size() - before <= 1
+
+
 def test_packed_subblob_split_matches_unsplit(dfs):
     """pack_assignment splits big clusters into several blob rows and
     bin-packs them across partitions; the partitioned scan + fragment
@@ -844,7 +1106,7 @@ def test_loaded_artifact_partitioned_search_equals_fresh(dfs, tmp_path):
     """Regression pin: a packed table loaded from a cluster_id-PARTITIONED
     parquet artifact comes back with cluster_id moved to the schema tail
     (and narrowed to int by partition-column inference); the scan kernel
-    reads Arrow columns positionally, so without cluster_scan_topk's
+    reads Arrow columns positionally, so without ``ivf.packed_units``'
     explicit column-order select a loaded artifact silently scanned
     garbage.  Partitioned search on save→load must be bit-identical to
     the fresh build."""

@@ -1158,13 +1158,13 @@ def q_pca_fixed_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     sq8_calibration): project md5-derived INTEGER 16-d vectors through
     a preset orthonormal rotation (4 Hadamard rows / 4 — entries ±0.25,
     so every coordinate is an exact multiple of 0.25) via
-    PCACodec.encode_df, and emit the 4x-scaled integer coordinates.
+    quant.encode_df, and emit the 4x-scaled integer coordinates.
     Exercises the exact encode path IVF-PCA serving decodes."""
     import numpy as np
     from pyspark.sql import functions as F
 
     from vectordb_retrieval_spark.operators.dedup import hash60
-    from vectordb_retrieval_spark.operators.quant import PCACodec
+    from vectordb_retrieval_spark.operators.quant import PCACodec, encode_df
 
     def comp(i: int):
         return (
@@ -1183,7 +1183,7 @@ def q_pca_fixed_project(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in (1, 2, 4, 8)
         ]
     )
-    enc = PCACodec(PCA_OUT, rotation=rot).encode_df(e, "vec")
+    enc = encode_df(PCACodec(PCA_OUT, rotation=rot), e, "vec")
     return enc.select(
         "doc_id",
         *[

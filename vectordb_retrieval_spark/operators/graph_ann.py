@@ -579,18 +579,16 @@ class GraphANNIndexer:
 
             base = base.withColumn("pid", lsh_pid(F.col("vec")))
         elif self.partition_by == "kmeans":
-            if metric == "cosine":
-                # directional data: cluster on the sphere, or euclidean
-                # KMeans merges clusters by norm and shard sizes collapse
-                # (observed 49% of rows in one shard on raw vectors)
-                from vectordb_retrieval_spark.operators.ivf import _norm_df
-
-                base = _norm_df(base, "vec")
             from vectordb_retrieval_spark.operators.ivf import (
                 _assign_df,
+                _norm_df,
                 _sampled_kmeans_train,
             )
 
+            # directional data: cluster on the sphere, or euclidean
+            # KMeans merges clusters by norm and shard sizes collapse
+            # (observed 49% of rows in one shard on raw vectors)
+            norm = metric == "cosine"
             # Over-partition + bin-pack (the SPANN/DiskANN balanced-
             # posting-list design): k = n_parts KMeans inherits the
             # data's cluster-mass skew directly — observed 17% of a
@@ -617,8 +615,9 @@ class GraphANNIndexer:
             # sample gate.  That is the conservative direction (it
             # refuses a driver collect, never admits a bigger one), and
             # the documented escape is a smaller num_partitions.
+            prepped = _norm_df(base, "vec") if norm else base
             sub_cents = _sampled_kmeans_train(
-                base, 4 * n_parts, self.seed, 10, "k-means||"
+                prepped, 4 * n_parts, self.seed, 10, "k-means||"
             )
             k_sub = len(sub_cents)
             # cache + materialize via the sizes aggregate: the ball
@@ -631,7 +630,7 @@ class GraphANNIndexer:
             # measured slower on the cluster-pruned sibling — the
             # Python stage outweighs the tiny JVM count exchange — so
             # the groupBy count stays here too.)
-            assigned = _assign_df(base, sub_cents).cache()
+            assigned = _assign_df(base, sub_cents, normalize=norm).cache()
             sizes = {
                 int(r["cluster_id"]): int(r["count"])
                 for r in assigned.groupBy("cluster_id").count().collect()

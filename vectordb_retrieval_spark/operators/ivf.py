@@ -33,6 +33,7 @@ ordering (reference normalizes at the same points, modular.py:159-166).
 
 from __future__ import annotations
 
+import logging
 import os
 from typing import Iterator
 
@@ -55,8 +56,11 @@ from vectordb_retrieval_spark.functions.kernels import (
     packed_shm_cached,
 )
 from vectordb_retrieval_spark.operators import serving
+from vectordb_retrieval_spark.operators.quant import codes_type, lloyd_kmeans
 from vectordb_retrieval_spark.operators.searcher import Searcher
 from vectordb_retrieval_spark.operators.topk import topk_rows
+
+log = logging.getLogger(__name__)
 
 
 def _norm_df(df: DataFrame, vec_col: str) -> DataFrame:
@@ -99,8 +103,6 @@ TRAIN_POINTS_PER_CENTROID = 256
 def _sampled_kmeans_train(
     base: DataFrame, nlist: int, seed: int, max_iter: int, init_mode: str
 ) -> np.ndarray:
-    from vectordb_retrieval_spark.operators.quant import lloyd_kmeans
-
     n_train = TRAIN_POINTS_PER_CENTROID * nlist
     # The driver-collect cell gate (advisor r12: nlist=1024 on 1536-d
     # embeddings must not collect ~3 GiB ungated) is enforced INSIDE
@@ -141,32 +143,50 @@ def _sampled_kmeans_train(
 
 
 def _assign_df(
-    base: DataFrame, centroids: np.ndarray, with_dist: bool = False
+    base: DataFrame,
+    centroids: np.ndarray,
+    with_dist: bool = False,
+    normalize: bool = False,
+    codec=None,
 ) -> DataFrame:
     """Distributed nearest-centroid assignment under broadcast centroids
     (argmin-only chunked kernel — see functions/distance.assign_nearest
-    for why the full (batch, k) distance matrix is never materialized).
+    for why the full (batch, k) distance matrix is never materialized),
+    over ``(id, vec)`` rows.  One Arrow-batched pass also does what used
+    to be separate stages: ``normalize`` L2-normalizes the vectors first
+    (float64 math, stored as float32 — the values ``_norm_df`` gives),
+    and a fitted ``codec`` replaces ``vec`` with its ``codes``.
     ``with_dist`` adds the member→centroid L2 distance ``r`` (float64
     math on the stored float32 vectors), letting cluster-pruned's
     covering-radii aggregate ride the same kernel pass."""
     spark = base.sparkSession
-    bc = spark.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
+    bc = spark.sparkContext.broadcast(
+        (np.asarray(centroids, dtype=np.float64), codec)
+    )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents = bc.value
+        cents, cdc = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.vstack(pdf["vec"].to_numpy()).astype(np.float32)
+            mat = np.vstack(pdf["vec"].to_numpy())
+            if normalize:
+                mat = normalize_rows(mat.astype(np.float64))
+            mat = mat.astype(np.float32)
             cid = assign_nearest(mat, cents)
-            pdf = pdf[["id", "vec"]].copy()
-            pdf.insert(0, "cluster_id", cid)
+            out = pd.DataFrame({"cluster_id": cid, "id": pdf["id"].to_numpy()})
+            if cdc is None:
+                out["vec"] = list(mat)
+            else:
+                out["codes"] = list(cdc.encode(mat))
             if with_dist:
                 diff = mat.astype(np.float64) - cents[cid]
-                pdf["r"] = np.sqrt((diff * diff).sum(axis=1))
-            yield pdf
+                out["r"] = np.sqrt((diff * diff).sum(axis=1))
+            yield out
 
-    schema = "cluster_id int, id long, vec array<float>"
+    schema = "cluster_id int, id long, " + (
+        "vec array<float>" if codec is None else f"codes {codes_type(codec)}"
+    )
     if with_dist:
         schema += ", r double"
     return base.mapInPandas(kernel, schema=schema)
@@ -200,37 +220,34 @@ class IVFIndexer:
         train: bool,
         with_dist: bool = False,
     ) -> DataFrame:
-        """The assignment lineage both builds share: normalize (cosine)
-        → train the centroids (``train``; else the fixed ones) → assign
-        → fit the codec if unfitted → encode.  Lazy: the caller's
+        """The assignment lineage both builds share: train the centroids
+        (``train``; else the fixed ones) and fit the codec if unfitted,
+        both on the normalized (cosine) vectors, then one fused
+        normalize → assign → encode pass.  Lazy: the caller's
         materializing action runs it."""
         base = base_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-        if self.metric == "cosine":
-            base = _norm_df(base, "vec")
+        norm = self.metric == "cosine"
+        prepped = _norm_df(base, "vec") if norm else base
         if train:
             self.centroids = _sampled_kmeans_train(
-                base, self.nlist, self.seed, self.max_iter, self.init_mode
+                prepped, self.nlist, self.seed, self.max_iter, self.init_mode
             )
-        assigned = _assign_df(base, self.centroids, with_dist=with_dist)
-        if self.codec is None:
-            return assigned
-        if not self.codec.is_fitted():
+        if self.codec is not None and not self.codec.is_fitted():
             # plan-invariant codecs (SQ8's exact min/max) calibrate on
-            # the raw base: same vectors, same result, but the
-            # calibration pass no longer re-executes the nearest-
-            # centroid assignment GEMM buried in ``assigned``'s lineage
-            # (guide §1.2 — at corpus scale that GEMM is nlist x dim
-            # FLOPs per row, the build's priciest step).  Sample-based
-            # codecs (PQ) keep the assigned input: a different plan
-            # could surface different sample rows.
+            # the normalized base: same vectors, same result, but the
+            # calibration pass skips the nearest-centroid assignment
+            # GEMM (guide §1.2 — at corpus scale that GEMM is nlist x
+            # dim FLOPs per row, the build's priciest step).
+            # Sample-based codecs (PQ) keep the assigned input: a
+            # different plan could surface different sample rows.
             fit_src = (
-                base
+                prepped
                 if getattr(self.codec, "fit_plan_invariant", False)
-                else assigned
+                else _assign_df(base, self.centroids, normalize=norm)
             )
             self.codec.fit(fit_src, vec_col="vec")
-        return self.codec.encode_df(assigned, vec_col="vec").select(
-            "cluster_id", "id", "codes"
+        return _assign_df(
+            base, self.centroids, with_dist, normalize=norm, codec=self.codec
         )
 
     def build(
@@ -486,43 +503,108 @@ def ivf_append(
 ) -> IndexArtifact:
     """Incremental ingestion: assign new vectors to the artifact's
     EXISTING coarse quantizer and append them to the assignment table —
-    no retrain, no rebuild (FAISS ``index.add`` semantics).
+    no retrain, no rebuild (FAISS ``index.add`` semantics).  The new
+    rows run through one fused ``_assign_df`` pass: normalize (cosine),
+    assign, encode with the artifact's fitted codec.
 
-    Scale shape: the append is embarrassingly parallel (per-row argmin
-    against broadcast centroids, plus codec encode if the index is
-    compressed) and lands in the same cluster_id partitioning, so on a
-    persisted index it is a partition-directory file append — existing
-    data is never rewritten, and searchers see the union with identical
-    plans.  Centroids drift as the corpus grows; rebuild cadence is the
-    caller's policy knob (same trade-off the reference's batch builds
-    imply)."""
-    idx = FixedCentroidIVFIndexer(
-        artifact.params["centroids"],
-        metric=artifact.params["metric"],
-        codec=artifact.params["codec"],
-    )
-    add = idx.build(new_df, id_col=id_col, vec_col=vec_col).tables["assignment"]
+    Eager at construction: the derivative is materialized before it
+    returns, so no search re-runs the append.  Two paths:
+
+    - **carry-forward** (one job) — the predecessor is served from a
+      broadcast (its ``_serving_bc`` holds the packed bundle) and the
+      new rows fit the room left under the threshold that admitted it
+      (rows × ``serving.packed_index_bytes`` per row).  The job collects
+      at most room + 1 new ``(cluster_id, id, codes)`` rows; the driver
+      appends them per cluster to the predecessor's bundle and seeds
+      the derivative's ``_serving_bc`` with it (fresh broadcast and
+      share_key), so the next read packs nothing.  The assignment
+      table is the chain's root table ∪ one driver-built frame of every
+      row appended since that root (``_append_chain``): no shuffle, no
+      cache, and the plan stays two children deep along a foreachBatch
+      chain.
+    - **rebuild** — every other case (no live broadcast, or more new
+      rows than the room): the union with the previous table is
+      repartitioned on cluster_id and cached.  This is the at-scale
+      plan: on a persisted index it is a partition-directory file
+      append, existing data is never rewritten.
+
+    Centroids drift as the corpus grows; rebuild cadence is the caller's
+    policy knob (same trade-off the reference's batch builds imply)."""
+    cents = artifact.params["centroids"]
+    codec = artifact.params["codec"]
+    spark = new_df.sparkSession
+    src = new_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+
+    def assigned(df: DataFrame) -> DataFrame:
+        return _assign_df(
+            df, cents, normalize=artifact.params["metric"] == "cosine", codec=codec
+        )
+
     prev = artifact.tables["assignment"]
-    merged = prev.unionByName(add).repartition("cluster_id").cache()
+    # (root table, whether it is an appended artifact's cache, the rows
+    # appended since it as a pandas frame) — runtime-only, like every
+    # "_" param
+    root, root_appended, rows = artifact.params.get(
+        "_append_chain", (prev, bool(artifact.metadata.get("appended")), None)
+    )
+    params = {k: v for k, v in artifact.params.items() if not k.startswith("_")}
+    metadata = {**artifact.metadata, "appended": True}
+    memo = artifact.params.get("_serving_bc")
+    if memo is None or memo.bc is None:
+        log.debug("ivf_append: rebuild, the index has no live serving broadcast")
+    else:
+        idx = memo.bc.value
+        row_bytes = serving.packed_index_bytes(1, codec, cents.shape[1])
+        room = memo.threshold // row_bytes - sum(len(i) for i in idx.ids)
+        # one input partition: the limit is then one job of one task —
+        # one Python runner (a coalesce above the kernel would start one
+        # per input partition, in series) and no shuffle to a single
+        # partition — and it stops reading once room + 1 rows are out
+        add = assigned(src.coalesce(1))
+        got = add.limit(max(room, 0) + 1).toPandas()
+        if len(got) > room:
+            log.debug(
+                "ivf_append: rebuild, %d+ new rows exceed the serving room of %d",
+                len(got),
+                room,
+            )
+        else:
+            log.debug("ivf_append: carry-forward of %d rows", len(got))
+            col = "vec" if codec is None else "codes"
+            bundle = idx.appended(
+                got["cluster_id"].to_numpy(dtype=np.int64),
+                got["id"].to_numpy(dtype=np.int64),
+                np.vstack(got[col].to_numpy()) if len(got) else np.zeros((0, 0)),
+            )
+            rows = got if rows is None else pd.concat([rows, got], ignore_index=True)
+            params["_serving_bc"] = transport.IndexBroadcast(
+                row_bytes * sum(len(i) for i in bundle.ids),
+                spark.sparkContext.broadcast(bundle),
+                memo.threshold,
+            )
+            params["_append_chain"] = (root, root_appended, rows)
+            frame = spark.createDataFrame(rows, add.schema)
+            return IndexArtifact(
+                kind="ivf",
+                tables={"assignment": root.unionByName(frame)},
+                params=params,
+                metadata=metadata,
+            )
+    merged = prev.unionByName(assigned(src)).repartition("cluster_id").cache()
     merged.count()
     # Continuous-ingestion memory bound: once the merged table is
-    # materialized, the PREDECESSOR's cached copy is dead weight — a
+    # materialized, the chain root's cached copy is dead weight — a
     # foreachBatch ivf_append chain would otherwise pin one full cached
-    # assignment per micro-batch.  Only intermediate (appended)
-    # artifacts are evicted; the caller's original build keeps its
-    # cache (they may still be serving it).
-    if artifact.metadata.get("appended"):
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
+    # assignment per micro-batch.  Only intermediate (appended) tables
+    # are evicted; the caller's original build keeps its cache (they may
+    # still be serving it).
+    if root_appended:
+        root.unpersist()
     return IndexArtifact(
         kind="ivf",
         tables={"assignment": merged},
-        # drop runtime-only "_" params (e.g. the serving broadcast):
-        # they were packed from the PRE-append assignment
-        params={k: v for k, v in artifact.params.items() if not k.startswith("_")},
-        metadata={**artifact.metadata, "appended": True},
+        params=params,
+        metadata=metadata,
     )
 
 

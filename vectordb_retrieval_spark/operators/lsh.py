@@ -184,6 +184,9 @@ class LSHSearcher(Searcher):
         # fallback is unaffordable (the 100 TB operating point).
         self.n_probes = n_probes
         self.broadcast_threshold = broadcast_threshold
+        # the past-gate result the exact-fallback check persisted: at
+        # most one per searcher, released by the next such search
+        self._persisted = None
 
     def _serving_broadcast(self, spark):
         """Memoized PackedLSH broadcast, or None over the threshold.
@@ -539,8 +542,14 @@ class LSHSearcher(Searcher):
             # the zero-candidate check is an action on the candidate
             # pipeline; persist the (tiny, ≤ n_q×k rows) result first so
             # the hash→vote→rerank subtree executes once, not once for
-            # the check and again for the consumer's materialization
-            result = result.persist()
+            # the check and again for the consumer's materialization.
+            # The previous search's entry is released first — before
+            # the persist, so a repeated frame (same plan, same cache
+            # entry) keeps its own — and a frame returned earlier
+            # recomputes if it is read again.
+            if self._persisted is not None:
+                self._persisted.unpersist()
+            result = self._persisted = result.persist()
             missing = (
                 query_df.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("_v"))
                 .join(result.select("qid").distinct(), "qid", "left_anti")

@@ -22,7 +22,7 @@ from vectordb_retrieval_spark.functions.distance import (
     normalize_rows,
     pairwise_distances,
 )
-from vectordb_retrieval_spark.operators.quant import PQCodec
+from vectordb_retrieval_spark.operators.quant import PQCodec, encode_df
 from vectordb_retrieval_spark.operators.searcher import Searcher
 from vectordb_retrieval_spark.operators.serving import (
     broadcast_probe_search,
@@ -76,7 +76,7 @@ class PQIndexer:
             self.codec.fit(base, "vec")
         # cache + eager count: the m-byte code table IS the index (tiny
         # vs the vectors); encode runs once at build, searches scan codes
-        codes = self.codec.encode_df(base, "vec").cache()
+        codes = encode_df(self.codec, base, "vec").cache()
         codes.count()
         return IndexArtifact(
             kind="pq",

@@ -17,7 +17,7 @@ Re-designed for Spark:
   broadcast, and candidate distance = sum of LUT entries — a gather +
   sum per Arrow batch, never reconstructing the vectors.
 
-Both codecs expose fit / encode_df / decode so IVF composes with them
+Both codecs expose fit / encode / decode so IVF composes with them
 (IVF-SQ8, IVF-PQ) and standalone exhaustive scans (SQ8/PQ flat) reuse
 the same code.
 """
@@ -94,30 +94,6 @@ class SQ8Codec:
         # to a SQL double oracle, so decoded-distance orderings agree
         return self.vmin + codes.astype(np.float64) * self.scale
 
-    def encode_df(self, df: DataFrame, vec_col: str = "vec") -> DataFrame:
-        spark = df.sparkSession
-        bc = spark.sparkContext.broadcast((self.vmin, self.scale))
-        other = [c for c in df.columns if c != vec_col]
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            vmin, scale = bc.value
-            codec = SQ8Codec()
-            codec.vmin, codec.scale = vmin, scale
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                codes = codec.encode(_stack(pdf[vec_col]))
-                out = pdf[other].copy()
-                out["codes"] = list(codes)
-                yield out
-
-        schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in df.schema.fields
-            if f.name != vec_col
-        )
-        return df.mapInPandas(kernel, schema=f"{schema}, codes array<smallint>")
-
 
 class SQfp16Codec:
     """Per-value IEEE-754 half-precision scalar quantizer (FAISS
@@ -125,7 +101,7 @@ class SQfp16Codec:
     2 bytes/dim, half the float32 footprint, no calibration pass and
     no data-dependent state (unlike SQ8's per-dimension [min,max]).
     Plugs into the same duck-typed codec slot as SQ8Codec/PQCodec
-    (fit / is_fitted / encode / decode / encode_df)."""
+    (fit / is_fitted / encode / decode)."""
 
     fit_plan_invariant = True  # fit is a no-op
 
@@ -144,26 +120,6 @@ class SQfp16Codec:
         # the astype restores the original int16 values either way
         raw = np.ascontiguousarray(np.asarray(codes).astype(np.int16))
         return raw.view(np.float16).astype(np.float64)
-
-    def encode_df(self, df: DataFrame, vec_col: str = "vec") -> DataFrame:
-        other = [c for c in df.columns if c != vec_col]
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            codec = SQfp16Codec()
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                codes = codec.encode(_stack(pdf[vec_col]))
-                out = pdf[other].copy()
-                out["codes"] = list(codes)
-                yield out
-
-        schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in df.schema.fields
-            if f.name != vec_col
-        )
-        return df.mapInPandas(kernel, schema=f"{schema}, codes array<smallint>")
 
 
 def _kpp_init(
@@ -323,27 +279,6 @@ class PQCodec:
         parts = [self.codebooks[j][codes[:, j]] for j in range(self.m)]
         return self._post(np.concatenate(parts, axis=1))
 
-    def encode_df(self, df: DataFrame, vec_col: str = "vec") -> DataFrame:
-        spark = df.sparkSession
-        bc = spark.sparkContext.broadcast(self)
-        other = [c for c in df.columns if c != vec_col]
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            codec = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                codes = codec.encode(_stack(pdf[vec_col]))
-                out = pdf[other].copy()
-                out["codes"] = list(codes)
-                yield out
-
-        schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in df.schema.fields
-            if f.name != vec_col
-        )
-        return df.mapInPandas(kernel, schema=f"{schema}, codes array<smallint>")
 
     def adc_luts(self, qmat: np.ndarray) -> np.ndarray:
         """(n_q, m, ksub) partial squared-L2 tables for ADC scoring.
@@ -397,8 +332,8 @@ def pq_refine(
     base = base_df.select(F.col(vec_col).alias("vec"))
     for _ in range(iters):
         # one job per iteration (the ivf.lloyd_refine construction):
-        # encode with the codec's own argmin (ties to the lowest code,
-        # identical to encode_df) and accumulate per-(subspace, code)
+        # encode with the codec's own argmin (``PQCodec.encode``, ties to
+        # the lowest code) and accumulate per-(subspace, code)
         # float64 partial sums inside the same kernel — each partition
         # emits ≤ m × ksub compact rows.  The old plan ran an encode
         # job, an id-equi-join, and a DOUBLE posexplode (n × dim rows
@@ -560,7 +495,7 @@ class PCACodec:
     store the reduced float32 coordinates as the code; decode
     back-projects to the original space (the rank-d' reconstruction).
     Plugs into the same duck-typed codec slot as SQ8/PQ (fit /
-    is_fitted / encode / decode / encode_df), so ``IVFIndexer(codec=
+    is_fitted / encode / decode), so ``IVFIndexer(codec=
     PCACodec(64))`` serves through every existing IVF plan untouched —
     4 bytes x dim_out per vector instead of 4 x dim.
 
@@ -647,25 +582,33 @@ class PCACodec:
     def decode(self, codes: np.ndarray) -> np.ndarray:
         return self.mean + np.asarray(codes, dtype=np.float64) @ self.rotation
 
-    def encode_df(self, df: DataFrame, vec_col: str = "vec") -> DataFrame:
-        spark = df.sparkSession
-        bc = spark.sparkContext.broadcast((self.rotation, self.mean, self.dim_out))
-        other = [c for c in df.columns if c != vec_col]
 
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            rot, mean, dim_out = bc.value
-            codec = PCACodec(dim_out, rotation=rot, mean=mean)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                codes = codec.encode(_stack(pdf[vec_col]))
-                out = pdf[other].copy()
-                out["codes"] = list(codes)
-                yield out
+def codes_type(codec) -> str:
+    """Spark SQL type of ``codec.encode``'s rows: PCA's float32 reduced
+    coordinates, the int16 codes of every other codec."""
+    return "array<float>" if isinstance(codec, PCACodec) else "array<smallint>"
 
-        schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in df.schema.fields
-            if f.name != vec_col
-        )
-        return df.mapInPandas(kernel, schema=f"{schema}, codes array<float>")
+
+def encode_df(codec, df: DataFrame, vec_col: str = "vec") -> DataFrame:
+    """``df`` with ``vec_col`` replaced by a ``codes`` column: one
+    Arrow-batched ``codec.encode`` pass under one broadcast of the
+    fitted codec, for every codec."""
+    bc = df.sparkSession.sparkContext.broadcast(codec)
+    other = [c for c in df.columns if c != vec_col]
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cdc = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            out = pdf[other].copy()
+            out["codes"] = list(cdc.encode(_stack(pdf[vec_col])))
+            yield out
+
+    schema = [
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in df.schema.fields
+        if f.name != vec_col
+    ]
+    schema.append(f"codes {codes_type(codec)}")
+    return df.mapInPandas(kernel, schema=", ".join(schema))

@@ -187,6 +187,59 @@ class PackedClusters:
     def nbytes(self) -> int:
         return sum(p.nbytes + i.nbytes for p, i in zip(self.payloads, self.ids))
 
+    def appended(
+        self, cids: np.ndarray, ids: np.ndarray, payload: np.ndarray
+    ) -> "PackedClusters":
+        """A new bundle: this one with the rows ``(cids, ids, payload)``
+        appended to their clusters (a cluster new to the index joins in
+        cluster-id order) — the bundle ``pack_clusters`` (this, on an
+        empty bundle) collects from the appended table, up to row order
+        within a cluster, which no result depends on (distances are per row, selection ties
+        break on (dist, id)).  Untouched clusters share their arrays
+        with this bundle; the new one gets a fresh share_key.  Integer
+        codes that all fit a byte (SQ8, PQ with ksub <= 256) are stored
+        as uint8; float payloads (flat vectors, PCA coordinates) keep
+        their dtype."""
+        if (
+            self.codec is not None
+            and payload.size
+            and not np.issubdtype(payload.dtype, np.floating)
+            and 0 <= payload.min()
+            and payload.max() < 256
+        ):
+            payload = payload.astype(np.uint8)
+        order = np.argsort(cids, kind="stable")
+        cids, ids, payload = cids[order], ids[order], payload[order]
+        ucids, starts = np.unique(cids, return_index=True)
+        bounds = np.r_[starts, len(cids)]
+        new = {
+            int(c): (ids[bounds[j] : bounds[j + 1]], payload[bounds[j] : bounds[j + 1]])
+            for j, c in enumerate(ucids)
+        }
+        all_cids = np.union1d(self.cids, ucids).astype(np.int64)
+        out_ids: list[np.ndarray] = []
+        out_pays: list[np.ndarray] = []
+        for c in all_cids:
+            i = self.index.get(int(c))
+            add = new.get(int(c))
+            if add is None:
+                out_ids.append(self.ids[i])
+                out_pays.append(self.payloads[i])
+            elif i is None:
+                out_ids.append(add[0])
+                out_pays.append(add[1])
+            else:
+                out_ids.append(np.concatenate([self.ids[i], add[0]]))
+                out_pays.append(np.concatenate([self.payloads[i], add[1]]))
+        return PackedClusters(
+            all_cids,
+            out_ids,
+            out_pays,
+            self.codec,
+            self.centroids,
+            share_key=uuid.uuid4().hex,
+        )
+
     def filtered(self, allowed: np.ndarray) -> "PackedClusters":
         """PRE-filtering view: a derived PackedClusters holding only the
         rows whose global id is in ``allowed`` — the vector-DB filtered-
@@ -230,26 +283,11 @@ def pack_clusters(
     Caller is responsible for the size gate (estimate first, collect
     only under the threshold)."""
     pdf = assignment.select("cluster_id", "id", payload_col).toPandas()
-    cid = pdf["cluster_id"].to_numpy(dtype=np.int64)
-    order = np.argsort(cid, kind="stable")
-    cid = cid[order]
-    ids_all = pdf["id"].to_numpy(dtype=np.int64)[order]
-    payload = np.vstack(pdf[payload_col].to_numpy())[order]
-    if (
-        codec is not None
-        and payload.size
-        and not np.issubdtype(payload.dtype, np.floating)
-        and 0 <= payload.min()
-        and payload.max() < 256
-    ):
-        payload = payload.astype(np.uint8)  # SQ8 / PQ(ksub<=256) codes
-        # (float-coded codecs like PCA keep their float payload)
-    ucids, starts = np.unique(cid, return_index=True)
-    bounds = np.r_[starts, len(cid)]
-    ids = [ids_all[bounds[i] : bounds[i + 1]] for i in range(len(ucids))]
-    pays = [payload[bounds[i] : bounds[i + 1]] for i in range(len(ucids))]
-    return PackedClusters(
-        ucids, ids, pays, codec, centroids, share_key=uuid.uuid4().hex
+    empty = PackedClusters(np.zeros(0, dtype=np.int64), [], [], codec, centroids)
+    return empty.appended(
+        pdf["cluster_id"].to_numpy(dtype=np.int64),
+        pdf["id"].to_numpy(dtype=np.int64),
+        np.vstack(pdf[payload_col].to_numpy()),
     )
 
 

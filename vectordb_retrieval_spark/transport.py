@@ -33,13 +33,18 @@ Store rules:
   only, so a dropped index unmaps.
 
 Runtime artifact params kept here (leading ``_``: never persisted, and
-dropped by append/delete derivatives, which therefore repack and
-republish against their own rows):
+dropped by delete derivatives and by the append derivatives that
+rebuild their table, which therefore repack and republish against their
+own rows):
 
 - ``_serving_bc`` — ``IndexBroadcast`` of the IVF-family, PQ or LSH
   packed index.  Valid for the artifact's lifetime; its size is compared
   with each caller's threshold, and a caller whose threshold admits an
-  index no one has packed yet packs it then.
+  index no one has packed yet packs it then.  ``ivf.ivf_append`` carries
+  it forward: when the predecessor is served and the new rows fit under
+  the threshold that admitted it, the derivative's entry is the
+  predecessor's bundle with the new rows appended per cluster, under a
+  fresh broadcast and ``share_key``, so the next read packs nothing.
 - ``_shard_bc`` — the same for the graph shard blobs; ``meta`` holds
   ``(token, sorted shard ids)``, the token keying the shard scan-state
   memo of this broadcast's blobs (``graph_ann._shard_state``).
@@ -78,14 +83,16 @@ _FAILED: set = set()
 class IndexBroadcast:
     """Memo entry of a packed-index broadcast.  ``size`` is the byte
     count the gate compares — a lower bound until the index is packed —
-    ``bc`` the broadcast once some caller's threshold admitted it, and
-    ``meta`` driver-side data the packer returned with it."""
+    ``bc`` the broadcast once some caller's threshold admitted it,
+    ``threshold`` that caller's threshold, and ``meta`` driver-side data
+    the packer returned with it."""
 
-    __slots__ = ("size", "bc", "meta")
+    __slots__ = ("size", "bc", "threshold", "meta")
 
-    def __init__(self, size: int) -> None:
+    def __init__(self, size: int, bc=None, threshold: int | None = None) -> None:
         self.size = size
-        self.bc = None
+        self.bc = bc
+        self.threshold = threshold
         self.meta = None
 
 
@@ -112,6 +119,7 @@ def broadcast_cached(art, key: str, spark, threshold: int, pack, estimate=None):
         if memo.size > threshold:
             return None
         memo.bc = spark.sparkContext.broadcast(value)
+        memo.threshold = threshold
     return memo
 
 
