@@ -1928,3 +1928,40 @@ def test_lsh_serving_bucket_verify_guard(spark, monkeypatch):
     s = LSHSearcher().attach(art)
     bc = s._serving_broadcast(spark)
     assert bc is not None  # guard ran without raising
+
+
+@pytest.mark.parametrize("metric", ["l2", "cosine", "ip"])
+def test_packed_scan_maps_a_published_copy(monkeypatch, metric):
+    """A worker whose bundle's scan state another worker already
+    published maps that copy instead of building its own, and gets the
+    same arrays and norm bound the build gives."""
+    import pickle
+    import shutil
+
+    from vectordb_retrieval_spark import transport
+    from vectordb_retrieval_spark.operators.serving import PackedClusters
+
+    rng = np.random.RandomState(3)
+    n, d = 6000, 64
+    empty = PackedClusters(np.zeros(0, dtype=np.int64), [], [], None, None)
+    first = empty.appended(
+        rng.randint(0, 9, n).astype(np.int64),
+        rng.permutation(n).astype(np.int64),
+        rng.randn(n, d).astype(np.float32),
+    )
+    second = pickle.loads(pickle.dumps(first))
+    try:
+        built = first.packed_scan(metric)
+
+        def refuse(_metric):
+            raise AssertionError("a published scan state was built again")
+
+        monkeypatch.setattr(second, "_build_scan", refuse)
+        mapped = second.packed_scan(metric)
+        for a, b in zip(built, mapped):
+            if isinstance(a, np.ndarray):
+                assert a.dtype == b.dtype and np.array_equal(a, b)
+            else:
+                assert a == b
+    finally:
+        shutil.rmtree(f"{transport.SHM_ROOT}/scan-{first.share_key}", ignore_errors=True)

@@ -108,53 +108,59 @@ class PackedClusters:
         norms in both precisions (l2), global ids, per-cluster row
         offsets, and the max row norm (the ip error bound's scale).
 
-        Built once per (index, metric) inside each worker and memoized;
-        above ``_SHM_MIN_BYTES`` the arrays are one node-local copy."""
+        Memoized per (index, metric) inside each worker.  Above
+        ``_SHM_MIN_BYTES`` the arrays are one node-local copy: the
+        first worker to need them builds and publishes it, and every
+        other worker maps it instead of building its own."""
         got = self._scan.get(metric)
         if got is None:
-            # decode cluster-by-cluster into the preallocated packed
-            # matrix: holding every per-cluster float64 decode while
-            # concatenating (then normalizing a further copy for
-            # cosine) peaked construction RSS at ~2.5× the steady
-            # state the serving size gate budgets for; this form peaks
-            # at the packed matrix plus one cluster transient.  The
-            # per-cluster decode cache is consumed (popped) as it goes.
-            offs = np.r_[
-                np.int64(0),
-                np.cumsum([len(i) for i in self.ids], dtype=np.int64),
-            ]
-            total = int(offs[-1])
-            F = None
-            for i in range(len(self.cids)):
-                dec = self.decoded(i)
-                del self._dec[i]
-                if metric == "cosine":
-                    dec = normalize_rows(dec)
-                if F is None:
-                    F = np.empty((total, dec.shape[1]), dtype=np.float64)
-                F[offs[i] : offs[i + 1]] = dec
-            if F is None:
-                F = np.zeros((0, 0), dtype=np.float64)
-            raw_sq = (F * F).sum(axis=1)
-            sq = raw_sq if metric == "l2" else None
-            gids = (
-                np.concatenate(self.ids)
-                if self.ids
-                else np.zeros(0, dtype=np.int64)
+            got = self._mapped_scan(metric) or self._share_scan(
+                self._build_scan(metric), metric
             )
-            norm_max = float(np.sqrt(raw_sq.max())) if len(F) else 0.0
-            got = (
-                F,
-                sq,
-                F.astype(np.float32),
-                sq.astype(np.float32) if sq is not None else None,
-                gids,
-                offs,
-                norm_max,
-            )
-            got = self._share_scan(got, metric)
             self._scan[metric] = got
         return got
+
+    def _build_scan(self, metric: str):
+        # decode cluster-by-cluster into the preallocated packed
+        # matrix: holding every per-cluster float64 decode while
+        # concatenating (then normalizing a further copy for
+        # cosine) peaked construction RSS at ~2.5× the steady
+        # state the serving size gate budgets for; this form peaks
+        # at the packed matrix plus one cluster transient.  The
+        # per-cluster decode cache is consumed (popped) as it goes.
+        offs = np.r_[
+            np.int64(0),
+            np.cumsum([len(i) for i in self.ids], dtype=np.int64),
+        ]
+        total = int(offs[-1])
+        F = None
+        for i in range(len(self.cids)):
+            dec = self.decoded(i)
+            del self._dec[i]
+            if metric == "cosine":
+                dec = normalize_rows(dec)
+            if F is None:
+                F = np.empty((total, dec.shape[1]), dtype=np.float64)
+            F[offs[i] : offs[i + 1]] = dec
+        if F is None:
+            F = np.zeros((0, 0), dtype=np.float64)
+        raw_sq = (F * F).sum(axis=1)
+        sq = raw_sq if metric == "l2" else None
+        gids = (
+            np.concatenate(self.ids)
+            if self.ids
+            else np.zeros(0, dtype=np.int64)
+        )
+        norm_max = float(np.sqrt(raw_sq.max())) if len(F) else 0.0
+        return (
+            F,
+            sq,
+            F.astype(np.float32),
+            sq.astype(np.float32) if sq is not None else None,
+            gids,
+            offs,
+            norm_max,
+        )
 
     def _share_scan(self, got, metric: str):
         """Swap the packed scan arrays for read-only views of one
@@ -166,16 +172,50 @@ class PackedClusters:
         unchanged when sharing is off (no share_key, tiny index, no
         /dev/shm, any I/O error).  Every worker computes byte-identical
         arrays from the same broadcast, so whichever publish wins is
-        equivalent."""
+        equivalent.  The copy starts with a (width, norm_max) header
+        that ``_mapped_scan`` reads."""
         F, sq, F32, sq32, gids, offs, norm_max = got
         if self.share_key is None or F.nbytes + F32.nbytes < _SHM_MIN_BYTES:
             return got
+        head = np.array([F.shape[1], norm_max], dtype=np.float64)
         shared = transport.share_arrays(
-            f"scan-{self.share_key}", f"{metric}.bin", [F, sq, F32, sq32, gids]
+            f"scan-{self.share_key}", f"{metric}.bin", [head, F, sq, F32, sq32, gids]
         )
         if shared is None:
             return got
-        return (*shared, offs, norm_max)
+        return (*shared[1:], offs, norm_max)
+
+    def _mapped_scan(self, metric: str):
+        """The scan state another worker of this node published
+        (``_share_scan``), mapped instead of built, or None when there
+        is none.  After an append each worker meets a new bundle, and
+        without this every one of them decoded the whole index again on
+        its first read of it."""
+        if self.share_key is None:
+            return None
+        n = sum(len(i) for i in self.ids)
+        l2 = metric == "l2"
+
+        def layout(mm):
+            width = int(np.frombuffer(mm, dtype=np.float64, count=1)[0])
+            return [
+                (np.float64, (2,)),
+                (np.float64, (n, width)),
+                (np.float64, (n,)) if l2 else None,
+                (np.float32, (n, width)),
+                (np.float32, (n,)) if l2 else None,
+                (np.int64, (n,)),
+            ]
+
+        shared = transport.shared_arrays(
+            f"scan-{self.share_key}", f"{metric}.bin", layout
+        )
+        if shared is None:
+            return None
+        offs = np.r_[
+            np.int64(0), np.cumsum([len(i) for i in self.ids], dtype=np.int64)
+        ]
+        return (*shared[1:], offs, float(shared[0][1]))
 
     def __getstate__(self):
         state = self.__dict__.copy()
@@ -194,8 +234,8 @@ class PackedClusters:
         appended to their clusters (a cluster new to the index joins in
         cluster-id order) — the bundle ``pack_clusters`` (this, on an
         empty bundle) collects from the appended table, up to row order
-        within a cluster, which no result depends on (distances are per row, selection ties
-        break on (dist, id)).  Untouched clusters share their arrays
+        within a cluster, which no result depends on (distances are per
+        row, selection ties break on (dist, id)).  Untouched clusters share their arrays
         with this bundle; the new one gets a fresh share_key.  Integer
         codes that all fit a byte (SQ8, PQ with ksub <= 256) are stored
         as uint8; float payloads (flat vectors, PCA coordinates) keep

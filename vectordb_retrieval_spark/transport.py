@@ -9,7 +9,8 @@ Every ANN searcher ships its index through one of two carriers:
 - **node-local store** under ``SHM_ROOT``: on a single-node master
   index blobs are published once per artifact
   (``published`` + ``publish``), and per-node derived scan arrays once
-  per node (``share`` / ``share_arrays``).  Tasks then map one read-only
+  per node (``share`` / ``share_arrays``; ``shared_arrays`` maps a copy
+  another task published without deriving it).  Tasks then map one read-only
   copy through the page cache instead of receiving index bytes through
   Arrow on every search.  On a multi-executor master a publish would
   land each blob on one node only, so the searchers keep their
@@ -29,8 +30,8 @@ Store rules:
 - files read on every search are mapped once per process
   (``mmap_file``): a map must outlive every NumPy view taken on it, and
   it stays readable after its file is unlinked.  Derived scan state its
-  owner memoizes (``share_arrays``) is mapped for the owner's lifetime
-  only, so a dropped index unmaps.
+  owner memoizes (``share_arrays`` / ``shared_arrays``) is mapped for
+  the owner's lifetime only, so a dropped index unmaps.
 
 Runtime artifact params kept here (leading ``_``: never persisted, and
 dropped by delete derivatives and by the append derivatives that
@@ -226,17 +227,32 @@ def share_arrays(entry: str, name: str, arrays: list):
         mm = _map(os.path.join(root, name))
     except (OSError, ValueError):
         return None
+    return _views(mm, [None if a is None else (a.dtype, a.shape) for a in arrays])
+
+
+def shared_arrays(entry: str, name: str, layout):
+    """Read-only views of the arrays ``share_arrays`` published under
+    ``SHM_ROOT/entry/name``, or None when none are published.
+    ``layout(mm)`` gives, from the mapped bytes, each array's
+    ``(dtype, shape)`` in publish order (None for an absent one).  Same
+    lifetime rule as ``share_arrays``."""
+    try:
+        mm = _map(os.path.join(SHM_ROOT, entry, name))
+    except (OSError, ValueError):
+        return None
+    return _views(mm, layout(mm))
+
+
+def _views(mm, layout) -> list:
     out, off = [], 0
-    for a in arrays:
-        if a is None:
+    for spec in layout:
+        if spec is None:
             out.append(None)
             continue
-        out.append(
-            np.frombuffer(mm, dtype=a.dtype, count=a.size, offset=off).reshape(
-                a.shape
-            )
-        )
-        off += a.nbytes
+        dt, shape = np.dtype(spec[0]), spec[1]
+        count = int(np.prod(shape))
+        out.append(np.frombuffer(mm, dtype=dt, count=count, offset=off).reshape(shape))
+        off += count * dt.itemsize
     return out
 
 
