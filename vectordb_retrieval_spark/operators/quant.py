@@ -19,7 +19,8 @@ Re-designed for Spark:
 
 Both codecs expose fit / encode / decode so IVF composes with them
 (IVF-SQ8, IVF-PQ) and standalone exhaustive scans (SQ8/PQ flat) reuse
-the same code.
+the same code; ``encode_df(codec, df)`` is the one Spark encode pass
+for every codec.
 """
 
 from __future__ import annotations
