@@ -499,8 +499,8 @@ def main() -> int:
     # r12 multi-executor realism twin (see the graph nofastpath row):
     # the same cluster-pruned artifact served WITHOUT the packed-index
     # broadcast (threshold=0) and /dev/shm node-local blobs — the
-    # partitioned two-phase scan a real cluster would run, exactness
-    # unchanged (recall must stay 1.0)
+    # partition-driven scan of the bound-admitted clusters a real
+    # cluster would run, exactness unchanged (recall must stay 1.0)
     saved_cp_bc = cp_art.params.pop("_serving_bc", None)
     cpn_res, t_cpn = timed_search(
         ClusterPrunedExactSearcher(

@@ -205,10 +205,17 @@ def test_cluster_pruned_exact_prunes_clustered_data(spark):
         want.setdefault(r["qid"], set()).add(r["id"])
 
     art = ClusterPrunedExactIndexer(nlist=30, seed=3).build(base_df)
-    searcher = ClusterPrunedExactSearcher(nprobe=2).attach(art)
-    res = searcher.search(query_df, K).collect()
-    assert recall_of(res, want) == 1.0
-    assert searcher.ndis_accum.value < 10 * 1200 * 0.5
+    # the broadcast kernel, then the partitioned plan on node-local
+    # blobs and on shipped blobs: each must prune, not just the first
+    for kwargs in (
+        {},
+        {"broadcast_threshold": 0},
+        {"broadcast_threshold": 0, "node_local_cache": False},
+    ):
+        searcher = ClusterPrunedExactSearcher(nprobe=2, **kwargs).attach(art)
+        res = searcher.search(query_df, K).collect()
+        assert recall_of(res, want) == 1.0, kwargs
+        assert searcher.ndis_accum.value < 10 * 1200 * 0.5, kwargs
 
 
 def test_composite_registry_roundtrip(dfs, exact_ids):
@@ -479,6 +486,49 @@ def test_ivf_append_served_runs_one_job_and_next_read_packs_nothing(
     )
     assert (n_append, n_read) == (1, 1)
     assert len(rows) == len(qs) * K
+
+
+def test_released_bundles_remove_their_scan_entries(spark):
+    """Every served bundle of a carry-forward append chain publishes its
+    packed scan state under its own node-local entry; once the driver
+    drops an intermediate artifact, that bundle's entry is removed
+    while the live bundles' entries stay."""
+    import gc
+    import os
+    import shutil
+
+    from vectordb_retrieval_spark import transport
+    from vectordb_retrieval_spark.operators.ivf import (
+        FixedCentroidIVFIndexer,
+        IVFSearcher,
+        ivf_append,
+    )
+    from vectordb_retrieval_spark.operators.quant import SQ8Codec
+
+    # 6000 × 64-d: the float64 + float32 scan state is over the 4 MB
+    # floor below which a worker keeps it private
+    rng = np.random.RandomState(17)
+    n, d = 6000, 64
+    mat = rng.randn(n + 150, d).astype(np.float32)
+    query_df = _frame(spark, np.arange(8), mat[:8], "qid")
+    idx = FixedCentroidIVFIndexer(mat[:8] * 2.0, metric="l2", codec=SQ8Codec())
+    arts = [idx.build(_frame(spark, np.arange(n), mat[:n]))]
+    for s in range(n, n + 150, 50):
+        arts.append(ivf_append(arts[-1], _frame(spark, np.arange(s, s + 50), mat[s : s + 50])))
+    entries = []
+    try:
+        for art in arts:
+            IVFSearcher(nprobe=2).attach(art).search(query_df, K).collect()
+            bundle = art.params["_serving_bc"].bc.value
+            entries.append(f"{transport.SHM_ROOT}/scan-{bundle.share_key}")
+        assert all(os.path.isdir(e) for e in entries)
+        del art, bundle
+        del arts[1:3]
+        gc.collect()
+        assert [os.path.isdir(e) for e in entries] == [True, False, False, True]
+    finally:
+        for e in entries:
+            shutil.rmtree(e, ignore_errors=True)
 
 
 @pytest.mark.parametrize("codec_name", ["sq8", "pq"])
@@ -911,31 +961,6 @@ def test_cluster_pruned_broadcast_path_equals_partitioned_path(dfs):
         == sorted(map(tuple, shm))
         == sorted(map(tuple, slow))
     )
-    # force the TWO-PHASE partitioned plan (fused admission budget =
-    # -inf: ``extra_flops <= budget`` is then false for EVERY dataset —
-    # a 0.0 budget still picks the fused plan whenever the T'_q-admitted
-    # rows happen not to exceed the probed rows, which is data-dependent
-    # — advisor r13) so the T'_q-clipped phase-1 scan, the min(T_q,
-    # T'_q) admission bound and the clipped phase-2 scan are all
-    # exercised — the triangle-inequality clip must never drop a true
-    # top-k member
-    from vectordb_retrieval_spark.operators import cluster_pruned as cp_mod
-
-    saved = cp_mod.CP_FUSE_EXTRA_FLOPS
-    cp_mod.CP_FUSE_EXTRA_FLOPS = float("-inf")
-    try:
-        two_phase = (
-            ClusterPrunedExactSearcher(
-                nprobe=2, broadcast_threshold=0, node_local_cache=False
-            )
-            .attach(art)
-            .search(query_df, K)
-            .select("qid", "id", "rank")
-            .collect()
-        )
-    finally:
-        cp_mod.CP_FUSE_EXTRA_FLOPS = saved
-    assert sorted(map(tuple, fast)) == sorted(map(tuple, two_phase))
 
 
 def test_lsh_broadcast_path_equals_pipeline_path(dfs):

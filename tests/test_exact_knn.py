@@ -42,14 +42,35 @@ def test_exact_knn_matches_numpy_oracle(spark, tiny_vectors, metric):
 
 
 def test_exact_knn_expr_agrees_with_kernel(spark, tiny_vectors):
-    base, queries = tiny_vectors
-    base_df = make_vector_df(spark, base)
-    query_df = make_vector_df(spark, queries, id_name="qid")
-    a = exact_knn(base_df, query_df, 4, "l2").orderBy("qid", "rank").collect()
-    b = exact_knn_expr(base_df, query_df, 4, "l2").orderBy("qid", "rank").collect()
-    assert [(r["qid"], r["id"]) for r in a] == [(r["qid"], r["id"]) for r in b]
-    for ra, rb in zip(a, b):
-        assert ra["dist"] == pytest.approx(rb["dist"], abs=1e-9)
+    """The kernel equals the declarative oracle on the tiny fixture, and
+    where each task folds many Arrow batches (3 base partitions, 2-row
+    batches, k = 4) holding a pile of duplicate vectors spread across
+    the partitions.  The pile's small integer coordinates make every
+    distance exact in float64, so its ties order by id."""
+    rng = np.random.RandomState(5)
+    pile = rng.randint(-3, 4, size=(40, 4)).astype(np.float32)
+    pile[rng.choice(40, size=9, replace=False)] = pile[0]
+    pile_queries = np.vstack([pile[:1], rng.randint(-3, 4, size=(4, 4))])
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    for base, queries, parts, batch_rows in (
+        (*tiny_vectors, None, saved),
+        (pile, pile_queries.astype(np.float32), 3, "2"),
+    ):
+        base_df = make_vector_df(spark, base)
+        if parts:
+            base_df = base_df.repartition(parts)
+        query_df = make_vector_df(spark, queries, id_name="qid")
+        spark.conf.set(conf, batch_rows)
+        try:
+            a = exact_knn(base_df, query_df, 4, "l2").orderBy("qid", "rank").collect()
+            b = exact_knn_expr(base_df, query_df, 4, "l2").orderBy("qid", "rank").collect()
+        finally:
+            spark.conf.set(conf, saved)
+        assert len(a) == len(queries) * 4
+        assert [(r["qid"], r["id"]) for r in a] == [(r["qid"], r["id"]) for r in b]
+        for ra, rb in zip(a, b):
+            assert ra["dist"] == pytest.approx(rb["dist"], abs=1e-9)
 
 
 def test_padding_when_k_exceeds_base(spark, tiny_vectors):

@@ -40,19 +40,14 @@ def _pred_gt_labeled(
 
     The previous shape ran two independent ``exact_knn`` plans, so the
     base table was scanned twice, the query batch collected twice, and
-    two separate candidate windows shuffled.  Here a single mapInPandas
-    kernel scores each Arrow batch against the broadcast queries with
-    BOTH distance views (the truncated view slices the same float32
-    matrices, so values are bit-identical to scoring a materialized
-    trunc column), emits labeled per-partition top-K candidates, and
-    one window ranks them per (which, qid).  pred and gt are two
-    filters of that one ranked frame — Spark's ReuseExchange then
-    executes the scan + kernel + candidate shuffle ONCE even though
-    both sides feed the downstream metric join."""
-    from typing import Iterator
-
+    two separate candidate windows shuffled.  Here one
+    ``serving.partition_driven_job`` scores each Arrow batch against the
+    broadcast queries with BOTH distance views (the truncated view
+    slices the same float32 matrices, so values are bit-identical to
+    scoring a materialized trunc column): view v of query row r is the
+    job's query row v·n + r, labeled qid 2·qid + v, so one merge ranks
+    both views.  pred and gt are two filters of that one ranked frame."""
     import numpy as np
-    import pandas as pd
 
     from vectordb_retrieval_spark.functions.distance import (
         pairwise_distances,
@@ -62,9 +57,12 @@ def _pred_gt_labeled(
     )
     from vectordb_retrieval_spark.operators.exact import (
         SCORE_TILE_ELEMS,
+        base_batch,
         block_topk,
     )
-    from vectordb_retrieval_spark.operators.topk import topk_rows
+    from vectordb_retrieval_spark.operators.serving import (
+        partition_driven_job,
+    )
 
     base = emb(spark, sf_dir)
     qs = emb_queries(spark, sf_dir)
@@ -81,62 +79,45 @@ def _pred_gt_labeled(
             id_col="vec_id", vec_col="embedding", qid_col="vec_id",
         )
         return None, pred, gt
-    k, tile_elems, td = K, SCORE_TILE_ELEMS, TRUNC_DIM
+    q_ids, q_mat = bc.value
+    labeled = spark.sparkContext.broadcast(
+        (np.concatenate([2 * q_ids, 2 * q_ids + 1]), q_mat)
+    )
+    k, tile_elems, td, n = K, SCORE_TILE_ELEMS, TRUNC_DIM, len(q_ids)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids, q_mat = bc.value
+    def unit(rb, qm, _route):
         # view 0 = full vectors (gt), view 1 = first td dims (pred)
-        cand: dict[int, tuple[list, list]] = {0: ([], []), 1: ([], [])}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            block = np.vstack(pdf["embedding"].to_numpy()).astype(np.float32)
-            for which, (ds, is_) in cand.items():
-                dims = None if which == 0 else td
-                bd, bi = block_topk(
-                    q_mat[:, :dims],
-                    block[:, :dims],
-                    ids,
-                    k,
-                    pairwise_distances,  # default metric: l2
-                    tile_elems,
-                )
-                ds.append(bd)
-                is_.append(bi)
-        for which, (ds, is_) in cand.items():
-            if not ds:
-                continue
-            dall, iall = topk_rows(
-                np.concatenate(ds, axis=1), np.concatenate(is_, axis=1), k
+        ids, block = base_batch(rb)
+        out = []
+        for which, dims in ((0, None), (1, td)):
+            bd, bi = block_topk(
+                qm[:, :dims],
+                block[:, :dims],
+                ids,
+                k,
+                pairwise_distances,  # default metric: l2
+                tile_elems,
             )
-            kk = dall.shape[1]
-            yield pd.DataFrame(
-                {
-                    "which": np.full(len(q_ids) * kk, which, dtype=np.int32),
-                    "qid": np.repeat(q_ids, kk),
-                    "id": iall.reshape(-1),
-                    "dist": dall.reshape(-1),
-                }
-            )
+            rows = which * n + np.arange(n)
+            out.append((np.repeat(rows, bd.shape[1]), bi.ravel(), bd.ravel()))
+        return tuple(np.concatenate(col) for col in zip(*out))
 
-    from pyspark.sql import Window
-
-    cands = base.select("vec_id", "embedding").mapInPandas(
-        kernel, schema="which int, qid long, id long, dist double"
-    )
-    w = Window.partitionBy("which", "qid").orderBy(
-        F.col("dist").asc(), F.col("id").asc()
-    )
     ranked = (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K)
-        .select("which", "qid", "id", "dist", "rank")
+        partition_driven_job(
+            base.select("vec_id", "embedding"), labeled, None, unit, k
+        )
+        .select(
+            F.col("qid").bitwiseAND(1).cast("int").alias("which"),
+            F.shiftright("qid", 1).alias("qid"),
+            "id",
+            "dist",
+            "rank",
+        )
         # pin the shared subtree: the metric consumers reference the
         # ranked frame three times (pred, gt-sizes, gt-join) and
         # runtime exchange reuse does not fire across these branches
         # (verified on the final adaptive plan), so without the pin the
-        # scan + kernel + window executed three times.  localCheckpoint
+        # scan + kernel + merge executed three times.  localCheckpoint
         # materializes ≤ 2·K·n_queries rows once per invocation —
         # recomputed from parquet on every run, same convention as
         # text_retrieval.global_rank (lost blocks fail loudly rather

@@ -5,14 +5,22 @@ The reference's CoverTreeV2_2 (covertree_v2_2.py:1-624) provides *exact*
 kNN with a sub-linear number of distance computations via
 branch-and-bound over a pointer tree — inherently sequential and not
 Spark-shaped.  This operator delivers the same capability with the same
-bound family (triangle inequality, cf. covertree_v2_2.py:457-473) in a
-two-phase distributed plan:
+bound family (triangle inequality, cf. covertree_v2_2.py:457-473): a
+cluster c whose lower bound d(q, centroid_c) − radius_c exceeds an upper
+bound on the query's kth-neighbor distance provably holds no better
+neighbor and is skipped.  Two physical plans, picked by packed-index
+size like IVF:
 
-1. probe the ``nprobe`` nearest clusters exactly → per-query kth-best
-   distance T_q (an upper bound on the true kth-neighbor distance);
-2. every unprobed cluster c with lower bound
-   d(q, centroid_c) − radius_c > T_q provably contains no better
-   neighbor and is skipped; the rest are scanned and merged.
+- broadcast (one ``serving.query_driven_job``): each task runs two
+  phases for its queries — scan the ``nprobe`` nearest clusters exactly
+  to get T_q, the kth-best distance so far, then scan the unprobed
+  clusters the bound admits under T_q;
+- partitioned (one ``serving.partition_driven_job``): the driver
+  computes T'_q from centroid distances, radii and cluster sizes alone
+  (the cheapest prefix of clusters by d + r holding ≥ k members), and
+  one fused job scans every cluster the bound admits under T'_q.  T'_q
+  is looser than a measured T_q, so this plan may scan more rows than
+  the two-phase one, but it needs no phase barrier or driver collect.
 
 Result is bit-identical to exact search (recall 1.0) while scanning only
 the clusters the bound admits.  The scanned-vector count is surfaced
@@ -25,7 +33,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from vectordb_retrieval_spark.artifacts import IndexArtifact
 from vectordb_retrieval_spark.functions.distance import (
@@ -46,21 +53,7 @@ from vectordb_retrieval_spark.operators.searcher import Searcher
 from vectordb_retrieval_spark.operators.topk import topk_groups, topk_rows
 
 
-# Fused-plan admission budget for the PARTITIONED search (guide §1.2
-# step 1 / §2.4): the two-phase plan pays one extra Spark job, a cache
-# materialization and a driver collect barrier between the phases —
-# ≥ 0.1 s of fixed cost on any cluster.  When a driver-side upper bound
-# T'_q (see ClusterPrunedExactSearcher.search) admits so few extra
-# cluster rows that scanning them costs less than that barrier, ONE
-# job scanning the admitted superset is strictly faster and still
-# exact.  10 GFLOP of f32 GEMM is well under 0.1 s on any pool this
-# engine targets; at real corpus sizes the admitted work blows past
-# the budget and the two-phase pruning plan is chosen — the decision
-# scales with the data, not with local[32].
-CP_FUSE_EXTRA_FLOPS = 1e10
-
-
-def _cluster_sizes_cached(art) -> np.ndarray | None:
+def _cluster_sizes_cached(art) -> np.ndarray:
     """Per-cluster row counts as a dense array indexed by cluster_id —
     from the build's stats aggregate when fresh (zero extra actions),
     else derived ONCE from the packed metadata (nlist × sub tiny rows)
@@ -114,7 +107,7 @@ class ClusterPrunedExactIndexer(IVFIndexer):
 
 
 class ClusterPrunedExactSearcher(Searcher):
-    """Two-phase exact search with triangle-inequality cluster pruning.
+    """Exact search with triangle-inequality cluster pruning.
 
     Only supports L2 (the bound is metric-specific; cosine reduces to L2
     on normalized vectors, which ``IVFIndexer(metric='cosine')`` already
@@ -125,15 +118,11 @@ class ClusterPrunedExactSearcher(Searcher):
     kernel (operators/serving.py dataflow) — each task computes its
     queries' phase-1 scan, the T_q bound, the pruning decision, and the
     phase-2 scan locally, so a search is a single shuffle-free job with
-    no driver round-trip.  Over the threshold, the partitioned-scan
-    path runs phase 1, collects the (one row per query, bounded) T_q
-    thresholds, and launches the pruned phase-2 scan — the 100 TB plan,
-    where the T_q collect is the only driver traffic.
-
-    Plan memo: the broadcast plan and the FUSED partitioned plan (no
-    eager action) are memoized per query frame; the TWO-PHASE
-    partitioned plan is not (its phase-1 T_q collect is an eager
-    per-search action)."""
+    no driver round-trip.  Over the threshold, one partition-driven job
+    scans the clusters admitted by the driver-side bound T'_q (see the
+    module docstring) — the 100 TB plan, exact by construction.  Both
+    plans are memoized per query frame.  ``nprobe`` sets the broadcast
+    kernel's phase-1 probes; T'_q needs no probe scan."""
 
     def __init__(
         self,
@@ -252,111 +241,51 @@ class ClusterPrunedExactSearcher(Searcher):
         )
         if done is not None:
             return done
-        n_q = len(qmat)
         qc = pairwise_distances(qmat, cents, "l2")  # (n_q, nlist)
-
-        nprobe = min(self.nprobe, qc.shape[1])
-        probed = topk_rows(qc, np.arange(qc.shape[1]), nprobe)[1]
+        # A driver-computable upper bound T'_q on the true kth-NN
+        # distance: sort clusters by (d(q,c) + r_c) and take the
+        # cheapest prefix holding ≥ k members — every one of those
+        # members is within that prefix's max (d + r).  Clusters with
+        # d(q,c) − r_c > T'_q provably hold no top-k member (triangle
+        # inequality), so ONE scan of the admitted set is exact: no
+        # phase barrier, no cache, no driver collect.  An index with
+        # fewer than k rows gets T'_q = inf and scans everything.
+        sizes = _cluster_sizes_cached(art)
+        ub = qc + radii[None, :]
+        order_ub = np.argsort(ub, axis=1, kind="stable")
+        csum = np.cumsum(
+            np.take_along_axis(np.broadcast_to(sizes, ub.shape), order_ub, axis=1),
+            axis=1,
+        )
+        kth_ub = np.take_along_axis(ub, order_ub, axis=1)[
+            np.arange(len(qc)), np.argmax(csum >= k, axis=1)
+        ]
+        t_prime = np.where(csum[:, -1] >= k, kth_ub, np.inf)
+        probe_map = serving.group_probes(
+            *np.nonzero(qc - radii[None, :] <= t_prime[:, None])
+        )
 
         shm = packed_shm_cached(art) if self.node_local_cache else None
         packed = packed_assignment_cached(art) if shm is None else shm[1]
         shm_root = None if shm is None else shm[0]
         # ndis counts every exact distance computed, parity with the
-        # reference's record_operation counter
+        # reference's record_operation counter.  Fragment emission is
+        # clipped at T'_q: ≥ k members sit at or under it, so a dropped
+        # candidate cannot reach the top-k and the merge exchange
+        # carries fewer rows
         unit_fn = packed_scan_unit(
             "l2", k, shm_root=shm_root, accum=accum,
             normalize=metric == "cosine",
         )
-
-        def scan(flat_q, flat_c, bounds, job=serving.partition_fragments):
-            # ``bounds`` clips emission at the per-query triangle-
-            # inequality bound — candidates above it provably miss the
-            # final top-k (≥ k members sit at or under the bound), so
-            # the merge exchange carries fewer rows and the result is
-            # unchanged
-            probe_map = serving.group_probes(flat_q, flat_c)
-            units = packed_units(packed, probe_map, shm_root, n_q)
-            return job(units, bcq, (probe_map, bounds), unit_fn, k)
-
-        # --- fused single-job plan (scale-adaptive; guide §1.2/§2.4) ---
-        # A driver-computable upper bound on the true kth-NN distance:
-        # sort clusters by (d(q,c) + r_c) and take the cheapest prefix
-        # holding ≥ k members — every one of those members is within
-        # that prefix's max (d + r), so T'_q bounds the kth distance
-        # from above.  Clusters with d(q,c) − r_c > T'_q provably hold
-        # no top-k member (triangle inequality, same family as the
-        # phase-2 bound) — so ONE scan of the admitted set is exact,
-        # with no phase barrier, no cache materialization and no T_q
-        # collect.  T'_q is looser than phase-1's measured T_q, so the
-        # plan is only chosen when the extra admitted rows cost less
-        # than the barrier they remove (CP_FUSE_EXTRA_FLOPS); at real
-        # corpus sizes the estimate forces the two-phase pruning plan.
-        sizes = _cluster_sizes_cached(art)
-        t_prime = None
-        if sizes is not None and sizes.sum() > 0:
-            ub = qc + radii[None, :]
-            order_ub = np.argsort(ub, axis=1, kind="stable")
-            csum = np.cumsum(
-                np.take_along_axis(
-                    np.broadcast_to(sizes, ub.shape), order_ub, axis=1
-                ),
-                axis=1,
-            )
-            has_k = csum[:, -1] >= k
-            pos = np.argmax(csum >= k, axis=1)
-            ub_sorted = np.take_along_axis(ub, order_ub, axis=1)
-            t_prime = np.where(
-                has_k, ub_sorted[np.arange(n_q), pos], np.inf
-            )
-            need1 = (qc - radii[None, :]) <= t_prime[:, None]
-            dim = qmat.shape[1]
-            fused_rows = float((need1 @ sizes).sum())
-            probed_rows = float(sizes[probed].sum())
-            extra_flops = 2.0 * dim * (fused_rows - probed_rows)
-            if extra_flops <= CP_FUSE_EXTRA_FLOPS:
-                # clip fragment emission at T'_q: ≥ k members sit at or
-                # under it, so dropped rows cannot reach the top-k
-                return self._plan_put(
-                    query_df,
-                    mk,
-                    scan(
-                        *np.nonzero(need1),
-                        t_prime,
-                        job=serving.partition_driven_job,
-                    ),
-                    shm_root,
-                )
-
-        # phase 1 emission clipped at T'_q too (when available): a
-        # probed-cluster candidate above T'_q can't make the final
-        # top-k.  T_q below is then the kth-best of the CLIPPED probe
-        # set — fewer than k survivors ⇒ inf, and the admission bound
-        # falls back to T'_q, so exactness is unchanged either way.
-        scored1 = scan(
-            np.repeat(np.arange(n_q), nprobe), probed.reshape(-1), t_prime
-        ).cache()
-        top1 = serving.merge_fragment_topk(scored1, k, n_q)
-        # per-query exact upper bound T_q = kth-best distance so far
-        tq_rows = (
-            top1.groupBy("qid").agg(F.max("dist").alias("t"), F.count("*").alias("n")).collect()
-        )
-        tq = {int(r["qid"]): (r["t"] if r["n"] >= k else np.inf) for r in tq_rows}
-        t_arr = np.array([tq.get(int(q), np.inf) for q in bcq.value[0]])
-        if t_prime is not None:
-            # both are valid upper bounds on the true kth distance
-            # (T_q: k measured candidates at ≤ it; T'_q: ≥ k members at
-            # ≤ it by the triangle inequality) — the min is therefore a
-            # valid, tighter bound for admission AND emission clipping
-            t_arr = np.minimum(t_arr, t_prime)
-
-        # lower bound per (query, cluster): d(q, c) − r_c; prune if > T_q
-        lower = qc - radii[None, :]
-        need = lower <= t_arr[:, None]
-        need[np.arange(n_q)[:, None], probed] = False  # already scanned
-        extra_q, extra_c = np.nonzero(need)
-        if len(extra_q) == 0:
-            return top1
-        scored2 = scan(extra_q, extra_c, t_arr)
-        return serving.merge_fragment_topk(
-            scored1.unionByName(scored2), k, n_q
+        return self._plan_put(
+            query_df,
+            mk,
+            serving.partition_driven_job(
+                packed_units(packed, probe_map, shm_root, len(qc)),
+                bcq,
+                (probe_map, t_prime),
+                unit_fn,
+                k,
+            ),
+            shm_root,
         )

@@ -11,27 +11,28 @@ Spark-first design for the 100 TB case
 --------------------------------------
 The base table is the big side (billions of vectors, scanned once from
 Parquet, never shuffled).  The query set is the small side: it is
-collected and **broadcast** to every executor.  Each base partition then
-computes a dense (n_queries × block) float64 distance matrix per Arrow
-batch (one BLAS GEMM — the same vectorized gram-matrix math the
-reference uses single-node, distributed per partition) and keeps a
-running per-partition top-k.  Only ``n_partitions × n_queries × k``
-candidate triples are shuffled for the final per-query merge — the
-shuffle is independent of base-table size.
+collected and **broadcast** to every executor.  The search is
+``serving.partition_driven_job``, the index-driven top-k job the
+past-gate ANN plans run on, with the base rows as its units: each
+Arrow batch is scored as a dense (n_queries × batch) float64 distance
+matrix (one BLAS GEMM — the same vectorized gram-matrix math the
+reference uses single-node, distributed per partition) and reduced to
+its per-query top-k, each task folds its batches into per-query
+fragments, and one merge ranks them.  Only ~``n_tasks × n_queries``
+fragment rows are shuffled for the final per-query merge — the shuffle
+is independent of base-table size.
 
 This is a broadcast nested-loop theta-join + partial top-k, which is the
 plan Catalyst itself would pick for `ORDER BY dist LIMIT k` per query —
-expressed with a pandas kernel because a dense GEMM is ~100× the speed
-of per-row array expressions.
+expressed with a kernel because a dense GEMM is ~100× the speed of
+per-row array expressions.
 
 A pure column-expression variant (``exact_knn_expr``) is kept for plan
 inspection and as the declarative specification of the operator.
 
-Measured dead end: converting the base scan to ``mapInArrow``
-(flat-buffer vector decode, as operators/serving.py does for queries)
-gave no speedup — A/B at 150k×384-d showed the scan is GEMM-bound, so
-the pandas list-column decode is noise here.  Don't re-attempt without
-profiling evidence that decode has become the bottleneck.
+The base scan reads its batches through Arrow (``mapInArrow``) because
+the shared job does; an earlier A/B at 150k×384-d found the scan
+GEMM-bound, so the vector decode is not where its time goes.
 """
 
 from __future__ import annotations
@@ -50,9 +51,14 @@ from vectordb_retrieval_spark.functions.distance import (
     pairwise_distances,
     valid_metric,
 )
+from vectordb_retrieval_spark.functions.kernels import (
+    SearchPlanMemo,
+    collect_or_chunk,
+)
+from vectordb_retrieval_spark.operators.serving import partition_driven_job
 from vectordb_retrieval_spark.operators.topk import (
+    RESULT_SCHEMA,
     pad_topk,
-    topk_per_query,
     topk_rows,
 )
 
@@ -73,8 +79,9 @@ SCORE_TILE_ELEMS = 2_000_000
 # both; past-gate frames chunk and union (each chunk re-broadcasts;
 # the base table is scanned once per chunk — the scale-correct trade
 # vs a driver OOM).  Plans are memoized per (base, query frame, key)
-# so serving-rate callers pay plan construction once.
-_EXACT_PLANS = None  # lazy SearchPlanMemo (module import order)
+# so serving-rate callers pay plan construction once; the memo's guard
+# is the base frame, whose id() the key holds.
+_EXACT_PLANS = SearchPlanMemo()
 
 
 def block_topk(
@@ -106,15 +113,14 @@ def block_topk(
     )
 
 
-def _plans():
-    global _EXACT_PLANS
-    if _EXACT_PLANS is None:
-        from vectordb_retrieval_spark.functions.kernels import (
-            SearchPlanMemo,
-        )
-
-        _EXACT_PLANS = SearchPlanMemo()
-    return _EXACT_PLANS
+def base_batch(rb) -> tuple[np.ndarray, np.ndarray]:
+    """(int64 ids, float32 vectors) of an Arrow batch of base rows
+    (id, vec): the units ``exact_knn``'s partition-driven job scans."""
+    vals = rb.column(1).flatten().to_numpy(zero_copy_only=False)
+    return (
+        rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64),
+        vals.reshape(rb.num_rows, -1).astype(np.float32),
+    )
 
 
 def exact_knn(
@@ -141,24 +147,17 @@ def exact_knn(
     # registry)
     custom = CUSTOM_METRICS.get(metric)
     qvec_col = qvec_col or vec_col
-    spark = base_df.sparkSession
-    import weakref
-
-    from vectordb_retrieval_spark.functions.kernels import collect_or_chunk
-
     mk = (
         "knn", k, metric, id_col, vec_col, qid_col, qvec_col, pad,
         id(base_df), id(custom),
     )
-    hit = _plans().get(query_df, mk)
-    # id() keys can be recycled after GC — the stored weakref proves
-    # the plan's base frame (and custom metric) are the same objects
-    if hit is not None and hit[0]() is base_df:
-        return hit[1]
+    hit = _EXACT_PLANS.get(query_df, mk, guard=base_df)
+    if hit is not None:
+        return hit
     # past-threshold batch: never materialize the full query frame on
     # the driver — the chunk top-ks are unpadded and the union is padded
     # once
-    bc, chunked = collect_or_chunk(
+    bcq, chunked = collect_or_chunk(
         query_df,
         qid_col,
         qvec_col,
@@ -172,9 +171,8 @@ def exact_knn(
                 chunked, query_df.select(F.col(qid_col).alias("qid")), k
             )
         return chunked
-    qids, qmat = bc.value
-    if len(qids) == 0:  # empty serving batch: empty result, same schema
-        return spark.createDataFrame([], _CAND_SCHEMA + ", rank int")
+    if len(bcq.value[0]) == 0:  # empty serving batch: empty result
+        return base_df.sparkSession.createDataFrame([], RESULT_SCHEMA)
     tile_elems = SCORE_TILE_ELEMS  # driver-time capture, A/B-able
 
     def score(qc: np.ndarray, block: np.ndarray) -> np.ndarray:
@@ -184,45 +182,19 @@ def exact_knn(
             )
         return pairwise_distances(qc, block, metric)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids, q_mat = bc.value
-        cand_d: list[np.ndarray] = []
-        cand_i: list[np.ndarray] = []
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            bd, bi = block_topk(
-                q_mat,
-                np.vstack(pdf[vec_col].to_numpy()).astype(np.float32),
-                pdf[id_col].to_numpy(dtype=np.int64),
-                k,
-                score,
-                tile_elems,
-            )
-            cand_d.append(bd)
-            cand_i.append(bi)
-        if not cand_d:
-            return
-        dall, iall = topk_rows(
-            np.concatenate(cand_d, axis=1), np.concatenate(cand_i, axis=1), k
-        )
-        kk = dall.shape[1]
-        yield pd.DataFrame(
-            {
-                "qid": np.repeat(q_ids, kk),
-                "id": iall.reshape(-1),
-                "dist": dall.reshape(-1),
-            }
-        )
+    def unit(rb, q_mat, _route):
+        # one batch of base rows: its per-query top-k as flat (query
+        # row, id, dist) candidates
+        ids, block = base_batch(rb)
+        bd, bi = block_topk(q_mat, block, ids, k, score, tile_elems)
+        return np.repeat(np.arange(len(q_mat)), bd.shape[1]), bi.ravel(), bd.ravel()
 
-    candidates = base_df.select(
-        F.col(id_col).alias(id_col), F.col(vec_col).alias(vec_col)
-    ).mapInPandas(kernel, schema=_CAND_SCHEMA)
-    result = topk_per_query(candidates, k)
+    result = partition_driven_job(
+        base_df.select(F.col(id_col), F.col(vec_col)), bcq, None, unit, k
+    )
     if pad:
         result = pad_topk(result, query_df.select(F.col(qid_col).alias("qid")), k)
-    _plans().put(query_df, mk, (weakref.ref(base_df), result))
-    return result
+    return _EXACT_PLANS.put(query_df, mk, result, guard=base_df)
 
 
 def exact_range_search(
@@ -250,17 +222,13 @@ def exact_range_search(
         raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
     qvec_col = qvec_col or vec_col
     spark = base_df.sparkSession
-    import weakref
-
-    from vectordb_retrieval_spark.functions.kernels import collect_or_chunk
-
     mk = (
         "range", radius, metric, id_col, vec_col, qid_col, qvec_col,
         id(base_df),
     )
-    hit = _plans().get(query_df, mk)
-    if hit is not None and hit[0]() is base_df:
-        return hit[1]
+    hit = _EXACT_PLANS.get(query_df, mk, guard=base_df)
+    if hit is not None:
+        return hit
     bc, chunked = collect_or_chunk(
         query_df,
         qid_col,
@@ -324,8 +292,7 @@ def exact_range_search(
     result = base_df.select(
         F.col(id_col).alias(id_col), F.col(vec_col).alias(vec_col)
     ).mapInPandas(kernel, schema=_CAND_SCHEMA)
-    _plans().put(query_df, mk, (weakref.ref(base_df), result))
-    return result
+    return _EXACT_PLANS.put(query_df, mk, result, guard=base_df)
 
 
 def exact_knn_expr(
@@ -343,6 +310,8 @@ def exact_knn_expr(
     then window top-k.  Slower than the GEMM kernel (per-row array
     folds) but 100% Catalyst-visible; used in tests as a second,
     independently-built oracle."""
+    from vectordb_retrieval_spark.operators.topk import topk_per_query
+
     qvec_col = qvec_col or vec_col
     q = query_df.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("_qvec"))
     b = base_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("_bvec"))

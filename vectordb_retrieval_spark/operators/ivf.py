@@ -19,8 +19,8 @@ re-design (SURVEY.md §7.1 step 6):
   scanning and ranking its own queries' top-k.  A larger index keeps
   the partition-driven job (``serving.partition_driven_job``): the
   probed ids prune the cluster-partitioned packed blob table, each task
-  folds its clusters into per-query top-k fragments, and
-  ``serving.merge_fragment_topk`` merges them by (dist, id).
+  folds its clusters into per-query top-k fragments, and the job's
+  one merge ranks them by (dist, id).
 
 Optional ``codec`` (SQ8/PQ from operators.quant) stores compressed codes
 in the assignment table; the searcher decodes inside the distance
@@ -578,10 +578,8 @@ def ivf_append(
             )
             rows = got if rows is None else pd.concat([rows, got], ignore_index=True)
             params["_serving_bc"] = transport.IndexBroadcast(
-                row_bytes * sum(len(i) for i in bundle.ids),
-                spark.sparkContext.broadcast(bundle),
-                memo.threshold,
-            )
+                row_bytes * sum(len(i) for i in bundle.ids)
+            ).serve(spark, bundle, memo.threshold)
             params["_append_chain"] = (root, root_appended, rows)
             frame = spark.createDataFrame(rows, add.schema)
             return IndexArtifact(

@@ -1,12 +1,15 @@
-"""The two serving jobs every ANN family's search runs on.
+"""The two top-k jobs every vector search runs on.
 
-- ``partition_driven_job`` — the at-scale plan for an index past its
-  broadcast gate: the index is the big side and stays partitioned.
-  Each task reads its index units (IVF/cluster-pruned packed blobs,
-  graph shards, PQ codes, LSH capped candidates), its queries from the
+- ``partition_driven_job`` — the plan where the scanned side is big and
+  stays partitioned.  Each task reads its units, its queries from the
   memoized query broadcast and its routing from one small per-search
   broadcast, folds its candidates into per-query top-k fragments, and
-  one ``merge_fragment_topk`` ranks them.
+  one ``merge_fragment_topk`` ranks them.  Callers: ``exact.exact_knn``
+  and the retrieval-metrics driver queries' two-view scan
+  (``driver_queries.metricsq``; base rows), and the past-gate plans of
+  IVF and cluster-pruned
+  (packed blobs), graph (shard rows), PQ (code rows) and LSH (capped
+  candidate rows).
 - ``query_driven_job`` — when the packed index fits under
   ``broadcast_threshold`` bytes (always true for the reference's in-RAM
   configurations, modular.py:341-385, and true at cluster scale for
@@ -17,7 +20,8 @@
   scan the QUERY table, and run each query's entire probe → decode →
   scan → top-k pipeline inside a single task.  One narrow mapInArrow
   job driven by the query batch, zero shuffle, exactly k rows out per
-  query.
+  query.  Callers: the broadcast plans of IVF
+  (``broadcast_probe_search``), PQ, LSH, cluster-pruned and graph.
 
 Result parity: probe selection (nprobe nearest centroids, ties by
 cluster id), decode, float64 distance arithmetic
@@ -84,6 +88,14 @@ class PackedClusters:
         self._dec: dict[int, np.ndarray] = {}
         self._scan: dict = {}
         self._filt: dict = {}
+
+    @property
+    def shm_entry(self) -> str | None:
+        """The node-local store entry this bundle's scan state is
+        published under (``_share_scan``), or None for a private
+        bundle.  The driver-side broadcast memo removes it when it
+        releases the bundle (``transport.IndexBroadcast.serve``)."""
+        return None if self.share_key is None else f"scan-{self.share_key}"
 
     def decoded(self, i: int) -> np.ndarray:
         """Cluster ``i``'s float64 rows (float32 vectors upcast exactly;
@@ -179,7 +191,7 @@ class PackedClusters:
             return got
         head = np.array([F.shape[1], norm_max], dtype=np.float64)
         shared = transport.share_arrays(
-            f"scan-{self.share_key}", f"{metric}.bin", [head, F, sq, F32, sq32, gids]
+            self.shm_entry, f"{metric}.bin", [head, F, sq, F32, sq32, gids]
         )
         if shared is None:
             return got
@@ -207,9 +219,7 @@ class PackedClusters:
                 (np.int64, (n,)),
             ]
 
-        shared = transport.shared_arrays(
-            f"scan-{self.share_key}", f"{metric}.bin", layout
-        )
+        shared = transport.shared_arrays(self.shm_entry, f"{metric}.bin", layout)
         if shared is None:
             return None
         offs = np.r_[
@@ -1119,22 +1129,28 @@ def query_driven_job(
     return q.mapInArrow(kernel_scan, schema=RESULT_SCHEMA)
 
 
-def partition_fragments(
+def partition_driven_job(
     units_df: DataFrame, bcq, route, unit_fn, k: int
 ) -> DataFrame:
-    """The scan stage of ``partition_driven_job``: per-task fragment
-    top-k rows (qid, ids list, dists list), one row per (task, query).
+    """The index-driven serving job, where the index (or base table) is
+    the big side and stays partitioned: exact kNN scans the base rows,
+    and the past-gate plan of every ANN family its index units — IVF
+    and cluster-pruned packed blob (or node-local metadata) rows, graph
+    its shard rows, PQ its code rows and LSH its capped candidate rows.
+    Returns (qid, id, dist, rank), rank 1..k ascending by (dist, id) —
+    the contract ``query_driven_job`` meets for the broadcast plans.
 
-    Each task reads its index units from ``units_df`` (Arrow batches,
-    columns read positionally by ``unit_fn``), its queries from the
-    memoized ``(qids, qmat)`` query broadcast ``bcq`` and its routing
-    from one broadcast of ``route`` (None ships nothing).
+    Each task reads its units from ``units_df`` (Arrow batches, columns
+    read positionally by ``unit_fn``), its queries from the memoized
+    ``(qids, qmat)`` query broadcast ``bcq`` and its routing from one
+    broadcast of ``route`` (None ships nothing).
     ``unit_fn(batch, qmat, route)`` scores a batch of units and returns
     flat (query row, id, float64 dist) candidates, or None; the task
     folds all of them with one ``topk_groups`` and emits each query's
     kept candidates as one LIST row, so the merge exchange moves
     ~n_q × tasks rows instead of n_q × tasks × k (at 150k×384-d the flat
-    form's 300k-row window merge cost more than the whole scan stage)."""
+    form's 300k-row window merge cost more than the whole scan stage).
+    One ``merge_fragment_topk`` ranks the fragments."""
     bc_route = (
         None
         if route is None
@@ -1168,32 +1184,16 @@ def partition_fragments(
             names=["qid", "ids", "dists"],
         )
 
-    return units_df.mapInArrow(
+    frag = units_df.mapInArrow(
         kernel, schema="qid long, ids array<long>, dists array<double>"
     )
-
-
-def partition_driven_job(
-    units_df: DataFrame, bcq, route, unit_fn, k: int
-) -> DataFrame:
-    """The index-driven serving job — the past-gate plan of every ANN
-    family, where the index is the big side and stays partitioned: IVF
-    and cluster-pruned scan packed blob (or node-local metadata) rows,
-    graph its shard rows, PQ its code rows and LSH its capped candidate
-    rows.  ``partition_fragments`` folds each task's candidates into
-    per-query fragments and one ``merge_fragment_topk`` ranks them:
-    (qid, id, dist, rank), rank 1..k ascending by (dist, id) — the
-    contract ``query_driven_job`` meets for the broadcast plans."""
-    return merge_fragment_topk(
-        partition_fragments(units_df, bcq, route, unit_fn, k),
-        k,
-        len(bcq.value[0]),  # driver-side broadcast read: no job
-    )
+    # driver-side broadcast read: no job
+    return merge_fragment_topk(frag, k, len(bcq.value[0]))
 
 
 def merge_fragment_topk(frag: DataFrame, k: int, n_queries: int) -> DataFrame:
-    """Global per-query merge of ``partition_fragments`` rows
-    (qid, ids list, dists list) → (qid, id, dist, rank), rank 1..k
+    """Global per-query merge of ``partition_driven_job``'s fragment
+    rows (qid, ids list, dists list) → (qid, id, dist, rank), rank 1..k
     ascending by (dist, id).
 
     Small batches (≤ 4096 queries) merge JVM-side: explode the fragment
@@ -1278,8 +1278,9 @@ def broadcast_probe_search(
 ) -> DataFrame:
     """Search a broadcast PackedClusters index: each task probes and
     scans for its own queries and emits their final (qid, id, dist,
-    rank) top-k — rank 1..k ascending by (dist, id), the same contract
-    as ``topk_per_query``.  The job itself is ``query_driven_job``.
+    rank) top-k — rank 1..k ascending by (dist, id), the ranked-result
+    contract of ``topk.RESULT_SCHEMA``.  The job itself is
+    ``query_driven_job``.
 
     ``nprobe=None`` (or >= nlist, or no centroids) scans every cluster
     — the exhaustive form standalone PQ uses.  ``normalize_queries``

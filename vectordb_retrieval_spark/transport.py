@@ -20,7 +20,11 @@ Store rules:
 
 - every entry is a directory under ``SHM_ROOT``; making a new entry
   first removes entries idle for more than ``TTL_S`` (mtime age), so
-  abandoned entries cannot pin tmpfs;
+  abandoned entries — a dead driver's included — cannot pin tmpfs;
+- the scan-state entry of a broadcast bundle is removed as soon as the
+  driver releases the bundle's ``IndexBroadcast`` (``serve``), so a
+  superseded bundle (every carried-forward append) frees its entry
+  without waiting for the sweep;
 - a searcher refreshes the mtime of the entry it reads (``touch``) on
   every search, plan-memo hits included, so only entries idle for the
   whole TTL are swept; a swept entry is republished under a new root;
@@ -66,6 +70,7 @@ import shutil
 import tempfile
 import time
 import uuid
+import weakref
 
 import numpy as np
 import pandas as pd
@@ -88,13 +93,28 @@ class IndexBroadcast:
     ``threshold`` that caller's threshold, and ``meta`` driver-side data
     the packer returned with it."""
 
-    __slots__ = ("size", "bc", "threshold", "meta")
+    __slots__ = ("size", "bc", "threshold", "meta", "__weakref__")
 
-    def __init__(self, size: int, bc=None, threshold: int | None = None) -> None:
+    def __init__(self, size: int) -> None:
         self.size = size
-        self.bc = bc
-        self.threshold = threshold
+        self.bc = None
+        self.threshold = None
         self.meta = None
+
+    def serve(self, spark, value, threshold: int) -> "IndexBroadcast":
+        """Broadcast ``value``, admitted under ``threshold``.  The
+        node-local entry the workers publish its scan state under
+        (``value.shm_entry``, when it has one) is removed once the
+        driver releases this memo — a superseded bundle's entry would
+        otherwise stay until the ``TTL_S`` sweep."""
+        self.bc = spark.sparkContext.broadcast(value)
+        self.threshold = threshold
+        entry = getattr(value, "shm_entry", None)
+        if entry is not None:
+            weakref.finalize(
+                self, shutil.rmtree, os.path.join(SHM_ROOT, entry), True
+            )
+        return self
 
 
 def broadcast_cached(art, key: str, spark, threshold: int, pack, estimate=None):
@@ -119,8 +139,7 @@ def broadcast_cached(art, key: str, spark, threshold: int, pack, estimate=None):
         memo.size = max(memo.size, nbytes)
         if memo.size > threshold:
             return None
-        memo.bc = spark.sparkContext.broadcast(value)
-        memo.threshold = threshold
+        memo.serve(spark, value, threshold)
     return memo
 
 
