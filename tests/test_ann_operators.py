@@ -1698,13 +1698,22 @@ def _plan_case(case, base_df):
     return art, LSHSearcher(), {}
 
 
+def _ranked(res):
+    return sorted(map(tuple, res.select("qid", "id", "dist", "rank").collect()))
+
+
+def _plan_text(res):
+    return res._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.mark.parametrize("case", PLAN_CASES)
 def test_broadcast_query_plan_equals_scan_plan(spark, dfs, case):
     """The broadcast-query serving plan (queries shipped once as a
-    broadcast matrix, job driven by a range frame) and the past-gate
-    distributed query scan produce identical results for every
-    broadcast-index family — including under cosine normalization, a
-    pre-filter, and a batch large enough for several query slices."""
+    broadcast matrix, job driven by a range frame), the past-gate
+    distributed query scan and the in-place scan of a driver-local
+    frame produce identical results for every broadcast-index family —
+    including under cosine normalization, a pre-filter, and a batch
+    large enough for several query slices."""
     from vectordb_retrieval_spark.functions import kernels as K_mod
 
     base_df, query_df = dfs
@@ -1730,8 +1739,7 @@ def test_broadcast_query_plan_equals_scan_plan(spark, dfs, case):
             res = s.search(q, K, **kw)
             # the broadcast plan is the range-driven job; the scan plan
             # maps the query table itself
-            plan = res._jdf.queryExecution().executedPlan().toString()
-            assert ("Range" in plan) != force_scan
+            assert ("Range" in _plan_text(res)) != force_scan
             if case.endswith("1025q") and not force_scan:
                 # 512-row slices: one task per slice, up to the pool
                 par = spark.sparkContext.defaultParallelism
@@ -1741,7 +1749,99 @@ def test_broadcast_query_plan_equals_scan_plan(spark, dfs, case):
             )
         finally:
             K_mod.QUERY_BC_MAX_ROWS = old
-    assert outs[0] and outs[0] == outs[1]
+    # the same queries in a driver-local frame: scanned in place while
+    # they fit one task (every family's floor holds 12 queries), else
+    # broadcast as before
+    local = spark.createDataFrame(query_df.toPandas(), "qid long, vec array<float>")
+    res = s.search(local, K, **kw)
+    assert ("Range" in _plan_text(res)) == case.endswith("1025q")
+    outs.append(sorted(map(tuple, res.select("qid", "id", "rank").collect())))
+    assert outs[0] and outs[0] == outs[1] == outs[2]
+
+
+def test_local_frame_read_is_one_job_with_same_rows(spark, dfs):
+    """A small driver-local query frame (``createDataFrame`` over
+    pandas) is scanned in place: the whole read is one Spark job — no
+    query collect, no query broadcast — and answers as the broadcast
+    plan over the same queries in a non-local frame does.  An empty
+    local frame answers with no rows."""
+    import pyarrow as pa
+
+    base_df, _ = dfs
+    art, searcher, _ = _plan_case("ivf-l2", base_df)
+    s = searcher.attach(art)
+    qs = np.random.RandomState(5).randn(64, DIM).astype(np.float32)
+    s.search(_frame(spark, np.arange(4), qs[:4], "qid"), K).collect()  # packs
+    local = _frame(spark, np.arange(64), qs, "qid")
+    sc = spark.sparkContext
+    sc.setJobGroup("local-frame-read", "local-frame-read")
+    try:
+        res = s.search(local, K)
+        got = _ranked(res)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("local-frame-read")) == 1
+    assert "Range" not in _plan_text(res)
+    spread = s.search(local.repartition(2), K)
+    assert "Range" in _plan_text(spread)
+    assert len(got) == 64 * K and got == _ranked(spread)
+
+    empty = spark.createDataFrame(
+        pa.table(
+            {
+                "qid": pa.array([], pa.int64()),
+                "vec": pa.array([], pa.list_(pa.float32())),
+            }
+        )
+    )
+    assert s.search(empty, K).collect() == []
+
+
+def test_graph_local_frame_in_place_up_to_its_task_floor(spark, dfs):
+    """Graph's 32-row task floor: a 16-row local frame is scanned in
+    place, a 64-row one keeps the broadcast plan (two 32-row slices);
+    both answer as the same queries in a non-local frame do."""
+    base_df, _ = dfs
+    art, searcher, _ = _plan_case("graph", base_df)
+    s = searcher.attach(art)
+    qs = np.random.RandomState(6).randn(64, DIM).astype(np.float32)
+    for n, in_place in ((16, True), (64, False)):
+        local = _frame(spark, np.arange(n), qs[:n], "qid")
+        res = s.search(local, K)
+        assert ("Range" not in _plan_text(res)) == in_place
+        got = _ranked(res)
+        assert len(got) == n * K and got == _ranked(s.search(local.repartition(2), K))
+
+
+@pytest.mark.parametrize("plan", ["in-place local", "broadcast", "query scan"])
+def test_query_driven_job_logs_its_plan(spark, dfs, caplog, monkeypatch, plan):
+    """``query_driven_job`` names the plan it took at DEBUG, with the
+    row count and task floor where it knows them."""
+    import logging
+
+    from vectordb_retrieval_spark.functions import kernels as K_mod
+
+    base_df, query_df = dfs
+    art, searcher, _ = _plan_case("ivf-l2", base_df)
+    s = searcher.attach(art)
+    if plan == "in-place local":
+        qs = np.random.RandomState(2).randn(N_Q, DIM).astype(np.float32)
+        q = _frame(spark, np.arange(N_Q), qs, "qid")
+    else:
+        q = query_df.select("qid", "vec")  # a fresh, non-local frame
+    if plan == "query scan":
+        monkeypatch.setattr(K_mod, "QUERY_BC_MAX_ROWS", 0)
+    with caplog.at_level(
+        logging.DEBUG, logger="vectordb_retrieval_spark.operators.serving"
+    ):
+        rows = s.search(q, K).collect()
+    msgs = [
+        r.getMessage() for r in caplog.records if "query-driven plan" in r.getMessage()
+    ]
+    assert len(rows) == N_Q * K
+    assert len(msgs) == 1 and f"query-driven plan: {plan}" in msgs[0]
+    if plan != "query scan":
+        assert f"{N_Q} rows, floor 512" in msgs[0]
 
 
 def test_partitioned_paths_chunk_past_gate(dfs, monkeypatch):

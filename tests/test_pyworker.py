@@ -4,7 +4,9 @@
 its archive only when the archive's ``(st_mtime_ns, st_size)`` changed.
 These tests pin both halves of that rule, and check that the engine's
 session really starts its workers from that module, including for a
-driver that found the package only through ``sys.path``.
+driver that found the package only through ``sys.path``, and that the
+workers talk to the JVM over Unix-domain sockets unless the socket
+directory is too long for a socket path.
 """
 
 from __future__ import annotations
@@ -13,12 +15,14 @@ import importlib
 import os
 import subprocess
 import sys
+import tempfile
 import textwrap
 import zipfile
 
 import pyarrow as pa
 
 from vectordb_retrieval_spark.pyworker import StampedZipImporter
+from vectordb_retrieval_spark.session import worker_socket_conf
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -69,6 +73,47 @@ def test_session_workers_use_stamped_zip_importers(spark):
         .collect()
     ]
     assert got == ["vectordb_retrieval_spark.pyworker.StampedZipImporter"]
+
+
+def test_socket_dir_rule_keeps_tcp_past_60_chars():
+    """Spark refuses a socket directory of 61 chars or more (and a
+    socket path of the directory plus ``/.<uuid4>.sock`` must fit
+    ``sun_path``), so a directory of up to 60 chars gets Unix-domain
+    sockets and a longer one keeps TCP."""
+    enabled = "spark.python.unix.domain.socket.enabled"
+    fits = "/" + "d" * 59
+    assert worker_socket_conf(fits) == {
+        enabled: "true",
+        "spark.python.unix.domain.socket.dir": fits,
+    }
+    for longer in (fits + "d", fits + "d" * 5, "/" + "d" * 200):
+        assert worker_socket_conf(longer) == {enabled: "false"}
+
+
+def test_session_workers_use_unix_domain_sockets(spark):
+    """The session takes its worker sockets from the rule above for the
+    temp directory — Unix-domain sockets under a short ``TMPDIR`` such
+    as ``/tmp`` — and the daemon's tasks see the switch the stock daemon
+    reads (``PYTHON_UNIX_DOMAIN_ENABLED``)."""
+    conf = spark.sparkContext.getConf()
+    want = worker_socket_conf(tempfile.gettempdir())
+    for key, value in want.items():
+        assert conf.get(key) == value
+
+    def kernel(batches):
+        import os
+
+        for _ in batches:
+            flag = os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "")
+            yield pa.RecordBatch.from_pydict({"flag": [flag.lower()]})
+
+    got = [
+        r.flag
+        for r in spark.range(1, numPartitions=1)
+        .mapInArrow(kernel, "flag string")
+        .collect()
+    ]
+    assert got == [want["spark.python.unix.domain.socket.enabled"]]
 
 
 def test_driver_outside_repo_runs_python_udf(tmp_path):

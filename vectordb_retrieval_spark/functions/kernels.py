@@ -121,9 +121,12 @@ def _qbc_lru_touch(df: DataFrame, key) -> None:
 
 def query_broadcast_cached(df: DataFrame, qid_col: str, vec_col: str):
     """Broadcast[(int64 qids, float32 qmat)] for a serving query frame,
-    or None when the frame is past the row/byte gate (or empty).  The
-    probe collect is the plan's only extra job and doubles as the real
-    collect when the frame fits."""
+    or None when the frame is past the row/byte gate.  The probe
+    collect is one extra job per new frame (memoized on the frame) and
+    doubles as the real collect when the frame fits.  A broadcast-index
+    search skips it for a small driver-local frame:
+    ``serving.query_driven_job`` scans that frame in place, so the read
+    is one job."""
     key = (qid_col, vec_col)
     try:
         per_df = _qbc_memo.get(df)

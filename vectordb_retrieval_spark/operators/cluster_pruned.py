@@ -187,9 +187,8 @@ class ClusterPrunedExactSearcher(Searcher):
                 {"qid": qids[aq], "id": ai, "dist": ad, "rank": rank}
             )
 
-        # both phases run inside the generic query-driven job: gate-
-        # passing frames slice a broadcast query matrix (no per-search
-        # query Arrow transfer).  Task sizing is batch-adaptive: this
+        # both phases run inside the generic query-driven job (one job
+        # in any of its three shapes).  Task sizing is batch-adaptive: this
         # kernel is compute-heavy (exact scans over every bound-
         # admitted cluster), so mid-size batches must spread across the
         # pool — the default 512 floor left a 2048-query batch on 4 of

@@ -394,8 +394,7 @@ class LSHSearcher(Searcher):
             return None
 
         # the whole hash→probe→vote→cap→rerank pipeline runs inside the
-        # generic query-driven job: gate-passing frames slice a
-        # broadcast query matrix (no per-search query Arrow transfer)
+        # generic query-driven job (one job in any of its three shapes)
         return query_driven_job(query_df, qid_col, vec_col, batch_fn)
 
     def search(

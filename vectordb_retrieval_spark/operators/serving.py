@@ -44,6 +44,7 @@ throughput.
 
 from __future__ import annotations
 
+import logging
 import uuid
 from typing import Iterator
 
@@ -64,6 +65,8 @@ from vectordb_retrieval_spark.operators.topk import (
     topk_rows,
 )
 
+
+_log = logging.getLogger(__name__)
 
 # below this many packed-scan bytes, per-worker copies are cheap: the
 # scan state stays private instead of going through the node-local store
@@ -1040,6 +1043,17 @@ def _arrow_result(out) -> Iterator:
     )
 
 
+def _local_rows(df: DataFrame) -> int | None:
+    """Row count of a driver-local frame (``createDataFrame`` over pandas
+    or Arrow: an analyzed ``LocalRelation``), else None.  Reads the
+    analyzed plan only (~1 ms of py4j): the optimized plan would see
+    through projections too, but costs ~15 ms per search."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return None
+    return plan.data().size()
+
+
 def query_driven_job(
     query_df: DataFrame,
     qid_col: str,
@@ -1051,19 +1065,27 @@ def query_driven_job(
     PQ, LSH, cluster-pruned and graph (whose node-local shard plan runs
     here too) — of the shape
     ``batch_fn(qids, float32 qmat) -> pd.DataFrame(qid,id,dist,rank)``
-    (or None): gate-passing query frames broadcast their collected
-    matrix once (WeakKey memo) and the job is a range frame whose tasks
-    slice the broadcast — no query bytes cross the JVM→Python boundary
-    per search (an identity mapInArrow over a 65k-query batch measured
-    0.36 s of its 0.56 s search wall); past-gate frames scan the query
-    table.  Per-query results must be batch-independent (every
-    searcher kernel here is), so both plans return identical rows
-    (pinned in tests/test_ann_operators.py).
+    (or None).  One job in one of three shapes:
 
-    ``rows_per_task`` sets the per-task query-slice floor for the
-    broadcast plan — an int, or a callable ``n_queries -> int`` so a
-    kernel can pick the floor per batch size (the collected count is
-    only known here).  The 512 default amortizes Python-worker dispatch
+    - in-place local: a driver-local frame (``_local_rows``) of at most
+      one task's worth of rows is scanned where it stands, in one task —
+      no collect, no broadcast, no exchange.  This is the serving
+      read's shape: a small ``createDataFrame`` batch.
+    - broadcast: other gate-passing frames broadcast their collected
+      matrix once (WeakKey memo) and the job is a range frame whose
+      tasks slice the broadcast — no query bytes cross the JVM→Python
+      boundary per search (an identity mapInArrow over a 65k-query
+      batch measured 0.36 s of its 0.56 s search wall).
+    - query scan: past-gate frames scan the query table, spread over
+      the executor pool.
+
+    Per-query results must be batch-independent (every searcher kernel
+    here is), so all three return identical rows (pinned in
+    tests/test_ann_operators.py).
+
+    ``rows_per_task`` sets the per-task query-slice floor — an int, or a
+    callable ``n_queries -> int`` so a kernel can pick the floor per
+    batch size.  The 512 default amortizes Python-worker dispatch
     for CHEAP kernels (probe-few-clusters: sq8/IVF/PQ/LSH); compute-heavy
     kernels whose per-query work rivals an exact scan (cluster-pruned's
     two-phase bound search, graph's beam) pass a smaller floor so mid-size batches
@@ -1075,39 +1097,8 @@ def query_driven_job(
         query_broadcast_cached,
     )
 
-    spark = query_df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    bcq = query_broadcast_cached(query_df, qid_col, vec_col)
-    if bcq is not None:
-        n = len(bcq.value[0])  # driver-side broadcast read: no job
-        rpt = rows_per_task(n) if callable(rows_per_task) else rows_per_task
-        n_tasks = max(1, min(par, -(-n // max(1, rpt))))
-        rng = spark.range(0, n_tasks, 1, n_tasks)
-
-        def kernel(batches):
-            qids_all, qmat_all = bcq.value
-            for rb in batches:
-                for c in rb.column(0).to_pylist():
-                    s = (c * n) // n_tasks
-                    e = ((c + 1) * n) // n_tasks
-                    if e > s:
-                        yield from _arrow_result(
-                            batch_fn(qids_all[s:e], qmat_all[s:e])
-                        )
-
-        return rng.mapInArrow(kernel, schema=RESULT_SCHEMA)
-
-    q = query_df.select(
-        F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec")
-    )
-    # past-gate query frames keep the distributed scan: spreading the
-    # frame across the executor pool costs one round-robin exchange and
-    # sets the search's whole parallelism.  The partition count is read
-    # via a WeakKey memo on the caller's frame: a narrow select preserves
-    # partitioning, and the plain .rdd.getNumPartitions() is a
-    # DataFrame→RDD plan conversion paid per SEARCH otherwise
-    if num_partitions_cached(query_df) < par:
-        q = q.repartition(par)
+    def floor(n: int) -> int:
+        return max(1, rows_per_task(n) if callable(rows_per_task) else rows_per_task)
 
     def kernel_scan(batches):
         # the query vectors arrive as one flat float buffer per Arrow
@@ -1126,6 +1117,50 @@ def query_driven_job(
             )
             yield from _arrow_result(batch_fn(qids, qmat))
 
+    q = query_df.select(
+        F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec")
+    )
+    n = _local_rows(query_df)
+    if n is not None and n <= floor(n):
+        # one task: its rows (≤ the floor) reach the kernel as one
+        # Arrow batch, so batch_fn runs once per read
+        _log.debug("query-driven plan: in-place local, %d rows, floor %d", n, floor(n))
+        return q.coalesce(1).mapInArrow(kernel_scan, schema=RESULT_SCHEMA)
+
+    spark = query_df.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    bcq = query_broadcast_cached(query_df, qid_col, vec_col)
+    if bcq is not None:
+        n = len(bcq.value[0])  # driver-side broadcast read: no job
+        n_tasks = max(1, min(par, -(-n // floor(n))))
+        _log.debug(
+            "query-driven plan: broadcast, %d rows, floor %d, %d tasks",
+            n, floor(n), n_tasks,
+        )
+        rng = spark.range(0, n_tasks, 1, n_tasks)
+
+        def kernel(batches):
+            qids_all, qmat_all = bcq.value
+            for rb in batches:
+                for c in rb.column(0).to_pylist():
+                    s = (c * n) // n_tasks
+                    e = ((c + 1) * n) // n_tasks
+                    if e > s:
+                        yield from _arrow_result(
+                            batch_fn(qids_all[s:e], qmat_all[s:e])
+                        )
+
+        return rng.mapInArrow(kernel, schema=RESULT_SCHEMA)
+
+    # past-gate query frames keep the distributed scan: spreading the
+    # frame across the executor pool costs one round-robin exchange and
+    # sets the search's whole parallelism.  The partition count is read
+    # via a WeakKey memo on the caller's frame: a narrow select preserves
+    # partitioning, and the plain .rdd.getNumPartitions() is a
+    # DataFrame→RDD plan conversion paid per SEARCH otherwise
+    _log.debug("query-driven plan: query scan, past the query gate")
+    if num_partitions_cached(query_df) < par:
+        q = q.repartition(par)
     return q.mapInArrow(kernel_scan, schema=RESULT_SCHEMA)
 
 

@@ -11,7 +11,10 @@ and an unchanged one costs a ``stat``.
 
 ``session.get_spark`` selects this module through Spark's
 ``spark.python.daemon.module``; the workers forked by the daemon inherit
-the importers.
+the importers.  The session also turns on Unix-domain-socket workers;
+the stock ``daemon.manager`` this module runs reads that switch from
+``PYTHON_UNIX_DOMAIN_ENABLED``, so nothing here depends on the socket
+kind.
 """
 
 from __future__ import annotations

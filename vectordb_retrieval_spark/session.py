@@ -9,12 +9,33 @@ for every pandas-kernel boundary.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
 # the directory holding this package: Python workers need it on their
 # path to start the daemon module below, wherever the driver started
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Spark names a worker socket ``<dir>/.<uuid4>.sock`` (43 chars past the
+# directory) in a ``sun_path`` of 107, and itself rejects a socket
+# directory of 61 chars or more (at the first local-data transfer, not
+# at start-up), so a longer directory keeps TCP
+_SOCKET_DIR_MAX = 60
+
+
+def worker_socket_conf(sock_dir: str) -> dict:
+    """The Python-worker socket settings for ``sock_dir``: Unix-domain
+    sockets in that directory, or TCP when the directory is too long to
+    hold a socket path.  Over TCP the JVM's read of a task's result
+    stalls ~40 ms: a one-task ``mapInArrow`` job measured 84 ms over TCP
+    and 43 ms over a Unix socket (4-core box; JVM-only job 31 ms)."""
+    if len(sock_dir) > _SOCKET_DIR_MAX:
+        return {"spark.python.unix.domain.socket.enabled": "false"}
+    return {
+        "spark.python.unix.domain.socket.enabled": "true",
+        "spark.python.unix.domain.socket.dir": sock_dir,
+    }
 
 
 def get_spark(
@@ -30,9 +51,12 @@ def get_spark(
     over-parallelizes local runs), AQE + skew-join handling enabled so
     the same plans re-optimize at cluster scale.  Python workers start
     from :mod:`vectordb_retrieval_spark.pyworker`, which stops each task
-    re-reading Spark's zip archives; ``extra_conf`` can set
-    ``spark.python.daemon.module`` back to ``pyspark.daemon``, and a
-    ``spark.executorEnv.PYTHONPATH`` it gives is kept after this
+    re-reading Spark's zip archives, and talk to the JVM over Unix-domain
+    sockets in ``tempfile.gettempdir()`` (so ``TMPDIR`` decides where the
+    socket files live; a directory too long for a socket path keeps TCP,
+    see ``worker_socket_conf``).  ``extra_conf`` overrides any of these —
+    e.g. ``spark.python.daemon.module`` back to ``pyspark.daemon`` — and
+    a ``spark.executorEnv.PYTHONPATH`` it gives is kept after this
     package's directory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -79,7 +103,7 @@ def get_spark(
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
         .config("spark.python.daemon.module", "vectordb_retrieval_spark.pyworker")
     )
-    extra_conf = dict(extra_conf or {})
+    extra_conf = {**worker_socket_conf(tempfile.gettempdir()), **(extra_conf or {})}
     worker_path = [_PACKAGE_PARENT, extra_conf.pop("spark.executorEnv.PYTHONPATH", "")]
     builder = builder.config("spark.executorEnv.PYTHONPATH", os.pathsep.join(filter(None, worker_path)))
     for k, v in extra_conf.items():
