@@ -1,14 +1,16 @@
 """Standalone dedup-at-scale probe: the MinHash+LSH near-dup pipeline
 (signatures -> band buckets -> candidate pairs -> exact-Jaccard verify)
-over a synthetic corpus generated DISTRIBUTED (no driver text, no
-collect): every doc's words derive from xxhash64(source_id, position),
-so the generator is one narrow `spark.range` projection at any size.
+over bench.py's distributed dedup corpus (``synth_dedup_docs``).
 
 Planted structure: docs with id % 20 == 7 are near-duplicates of
 id - 7 (same 80 words + 3 extra), everything else is unique.  The
 probe times the full verified pipeline and reports planted-pair recall
 at the verify threshold — the correctness-at-scale signal — plus the
-docs/sec rate.
+docs/sec rate.  bench.py's scale-curve block takes the same verified
+point, and the pack / scrub rates of ``--pipeline``, at
+``SPARK_GRAFT_CURVE_DEDUP_N``; this probe adds ``--decontam``, the
+export shuffle, the composed curation pipeline and the embedding
+near-dup point.
 
     python scripts/dedup_scale_probe.py [n_docs]
 """
@@ -21,32 +23,8 @@ sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import synth_dedup_docs as synth_docs  # noqa: E402
 from vectordb_retrieval_spark.session import get_spark  # noqa: E402
-
-
-def synth_docs(spark, n_docs: int, words: int = 80, vocab: int = 20_000):
-    base = spark.range(n_docs).withColumnRenamed("id", "doc_id")
-    src = F.when(
-        (F.col("doc_id") % 20 == 7) & (F.col("doc_id") >= 7),
-        F.col("doc_id") - 7,
-    ).otherwise(F.col("doc_id"))
-    word = lambda seed_col, i: F.concat(  # noqa: E731
-        F.lit("w"), F.pmod(F.xxhash64(seed_col, i), F.lit(vocab))
-    )
-    body = F.concat_ws(
-        " ", F.transform(F.sequence(F.lit(1), F.lit(words)), lambda i: word(src, i))
-    )
-    extra = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(1001), F.lit(1003)), lambda i: word(F.col("doc_id"), i)
-        ),
-    )
-    text = F.when(
-        (F.col("doc_id") % 20 == 7) & (F.col("doc_id") >= 7),
-        F.concat_ws(" ", body, extra),
-    ).otherwise(body)
-    return base.select("doc_id", text.alias("text"))
 
 
 def main() -> int:

@@ -1,18 +1,13 @@
-"""Scale probes for the round-7 retrieval extensions.
+"""Filtered IVF at scale: a label predicate keeping 1/4 of a
+150k×384-d clustered corpus, searched through the pre-filter mask.
+Reports filtered vs unfiltered QPS and verifies the pre-filter
+contract (exhaustive-probe filtered search ≡ brute force over the
+allowed slice on a 20k sample).  bench.py's scale block times the
+filtered row at selectivity-scaled nprobe (``s150k_sq8f_1k``); this
+probe adds the contract check.  (The BM25 and hybrid points at corpus
+scale are bench.py scale-curve rows, ``SPARK_GRAFT_CURVE_BM25_N``.)
 
-1. BM25 at corpus scale: rank a fixed 5-term query over a synthetic
-   N-doc corpus (distributed xxhash64 generation, planted term hits so
-   the expected top docs are known).  Reports docs/sec through the full
-   tokenize → tf/df → score → top-k plan and checks the planted docs
-   own the top ranks.
-
-2. Filtered IVF at 150k×384-d: a label predicate keeping 1/4 of the
-   corpus, searched through the pre-filter mask at matched recall.
-   Reports filtered vs unfiltered QPS and verifies the pre-filter
-   contract (exhaustive-probe filtered search ≡ brute force over the
-   allowed slice on a 20k sample).
-
-    python scripts/retrieval_scale_probe.py [n_docs] [n_base]
+    python scripts/retrieval_scale_probe.py [n_base]
 """
 
 import json
@@ -25,134 +20,6 @@ import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from vectordb_retrieval_spark.session import get_spark  # noqa: E402
-
-
-def synth_docs(spark, n_docs: int, words: int = 80, vocab: int = 20_000):
-    """Unique docs of hash-derived words; docs with id % 1000 == 13
-    carry 8 'needle' tokens — the planted BM25 hits."""
-    base = spark.range(n_docs).withColumnRenamed("id", "doc_id")
-    word = lambda i: F.concat(  # noqa: E731
-        F.lit("w"), F.pmod(F.xxhash64(F.col("doc_id"), i), F.lit(vocab))
-    )
-    body = F.concat_ws(
-        " ", F.transform(F.sequence(F.lit(1), F.lit(words)), word)
-    )
-    needles = F.lit("needle " * 8)
-    text = F.when(
-        F.col("doc_id") % 1000 == 13, F.concat(needles, body)
-    ).otherwise(body)
-    return base.select("doc_id", text.alias("text"))
-
-
-def bm25_probe(spark, n_docs: int) -> dict:
-    from vectordb_retrieval_spark.operators.text_retrieval import (
-        BM25Indexer,
-        BM25Searcher,
-        bm25_rank,
-    )
-
-    docs = synth_docs(spark, n_docs).repartition(32).cache()
-    docs.count()
-    t0 = time.time()
-    top = bm25_rank(
-        docs, ["needle", "w17", "w23", "w99", "w4242"], top_n=100
-    ).collect()
-    wall = time.time() - t0
-    planted_in_top = sum(1 for r in top if r["doc_id"] % 1000 == 13)
-
-    # artifact path: build once (tokenize + aggregate), cache the
-    # tables, then serve query batches off the prebuilt postings —
-    # the per-batch wall drops to the matched-terms join
-    t0 = time.time()
-    art = BM25Indexer().build(docs)
-    for t in art.tables.values():
-        t.cache().count()
-    t_build = time.time() - t0
-    qdf = spark.createDataFrame(
-        [(0, ["needle", "w17"]), (1, ["w23", "w99"]), (2, ["w4242"])],
-        schema="qid long, terms array<string>",
-    )
-    searcher = BM25Searcher().attach(art)
-    searcher.search(qdf, 100).collect()  # warm plan
-    t0 = time.time()
-    res = searcher.search(qdf, 100).collect()
-    t_query = time.time() - t0
-    planted_idx = sum(
-        1 for r in res if r["qid"] == 0 and r["doc_id"] % 1000 == 13
-    )
-    for t in art.tables.values():
-        t.unpersist()
-
-    # hybrid (BM25 ∪ dense RRF) at the same corpus: synthetic 16-d
-    # embeddings as a distributed projection; planted docs share one
-    # vector that query 0 carries exactly, so both legs and the fusion
-    # must put planted docs on top
-    from vectordb_retrieval_spark.operators.text_retrieval import (
-        hybrid_search,
-    )
-
-    dim_h = 16
-    src_h = F.when(
-        F.col("doc_id") % 1000 == 13, F.lit(-1).cast("long")
-    ).otherwise(F.col("doc_id"))
-    comp_h = lambda i: (  # noqa: E731
-        F.pmod(F.xxhash64(src_h, F.lit(i)), F.lit(2001)) / 1000.0 - 1.0
-    )
-    emb_df = docs.select(
-        F.col("doc_id").alias("vec_id"),
-        F.array(*[comp_h(i) for i in range(dim_h)])
-        .cast("array<float>")
-        .alias("embedding"),
-    )
-    qrow = (
-        spark.range(1)
-        .select(
-            *[
-                (
-                    F.pmod(
-                        F.xxhash64(F.lit(-1).cast("long"), F.lit(i)),
-                        F.lit(2001),
-                    )
-                    / 1000.0
-                    - 1.0
-                ).alias(f"c{i}")
-                for i in range(dim_h)
-            ]
-        )
-        .collect()[0]
-    )
-    qvec = [float(qrow[f"c{i}"]) for i in range(dim_h)]
-    hq = spark.createDataFrame(
-        [
-            (0, ["needle", "w17"], qvec),
-            (1, ["w23", "w99"], qvec),
-            (2, ["w4242"], qvec),
-        ],
-        schema="qid long, terms array<string>, qvec array<float>",
-    )
-    t0 = time.time()
-    hres = hybrid_search(
-        docs, emb_df, hq, k=20, cand=50, metric="cosine"
-    ).collect()
-    wall_h = time.time() - t0
-    docs.unpersist()
-    return {
-        "bm25_n_docs": n_docs,
-        "bm25_wall_s": round(wall, 1),
-        "bm25_docs_per_s": round(n_docs / wall),
-        "bm25_planted_in_top100": planted_in_top,
-        "bm25_index_build_s": round(t_build, 1),
-        "bm25_index_docs_per_s": round(n_docs / t_build),
-        "bm25_indexed_batch_s": round(t_query, 3),
-        "bm25_indexed_planted_q0": planted_idx,
-        "hybrid_wall_s": round(wall_h, 1),
-        "hybrid_docs_per_s": round(n_docs / wall_h),
-        "hybrid_planted_top20_q0": sum(
-            1
-            for r in hres
-            if r["qid"] == 0 and r["doc_id"] % 1000 == 13
-        ),
-    }
 
 
 def filtered_probe(spark, n_base: int, dim: int = 384) -> dict:
@@ -224,13 +91,9 @@ def filtered_probe(spark, n_base: int, dim: int = 384) -> dict:
 
 
 def main() -> int:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    n_base = int(sys.argv[2]) if len(sys.argv) > 2 else 150_000
+    n_base = int(sys.argv[1]) if len(sys.argv) > 1 else 150_000
     spark = get_spark("retrieval_scale_probe", master="local[32]")
-    out = {}
-    out.update(bm25_probe(spark, n_docs))
-    out.update(filtered_probe(spark, n_base))
-    print(json.dumps(out))
+    print(json.dumps(filtered_probe(spark, n_base)))
     return 0
 
 

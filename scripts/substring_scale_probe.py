@@ -1,9 +1,12 @@
 """Substring-span dedup and SemDeDup at scale.
 
-Distributed synthetic corpus (no driver text): every doc is 80 words
-from xxhash64(doc_id, position).  Planted structure: docs with
-id % 20 == 7 copy tokens 30..39 from doc id-7, so each pair shares one
-identical 10-token run inside otherwise-unique text.  The probe times
+bench.py's distributed synthetic corpus (``synth_substring_docs``): every
+doc is 80 words from xxhash64(doc_id, position).  Planted structure:
+docs with id % 20 == 7 copy tokens 31..40 (1-based) from doc id-7, so
+each pair shares one identical 10-token run inside otherwise-unique
+text.  bench.py's scale-curve block takes the span rate and planted
+recall and the SemDeDup rate and drop recall; this probe adds the cut,
+the false-positive counts and the ``--hot`` skew case.  It times
 
   1. duplicated_spans(k=6): must find, in BOTH docs of every pair, a
      maximal span covering tokens 31..40 (1-based) — planted recall;
@@ -25,34 +28,9 @@ sys.path.insert(0, ".")
 import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import synth_substring_docs as synth_docs  # noqa: E402
+from bench import synth_vectors  # noqa: E402
 from vectordb_retrieval_spark.session import get_spark  # noqa: E402
-
-
-def synth_docs(spark, n_docs: int, words: int = 80, vocab: int = 20_000):
-    base = spark.range(n_docs).withColumnRenamed("id", "doc_id")
-    planted = (F.col("doc_id") % 20 == 7) & (F.col("doc_id") >= 7)
-    # token i comes from the partner doc (id-7) inside the planted
-    # window 31..40, from the doc itself everywhere else
-    text = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(1), F.lit(words)),
-            lambda i: F.concat(
-                F.lit("w"),
-                F.pmod(
-                    F.xxhash64(
-                        F.when(
-                            planted & (i >= 31) & (i <= 40),
-                            F.col("doc_id") - 7,
-                        ).otherwise(F.col("doc_id")),
-                        i,
-                    ),
-                    F.lit(vocab),
-                ),
-            ),
-        ),
-    )
-    return base.select("doc_id", text.alias("text"))
 
 
 def probe_substring(spark, n_docs: int) -> dict:
@@ -114,26 +92,6 @@ def probe_substring(spark, n_docs: int) -> dict:
         "unplanted_docs_with_removal": removed_on_unplanted,
         "planted_docs_under_removed": under_removed,
     }
-
-
-def synth_vectors(spark, n_vecs: int, dim: int = 32):
-    base = spark.range(n_vecs).withColumnRenamed("id", "vec_id")
-    cloned = (F.col("vec_id") % 10 == 3) & (F.col("vec_id") >= 3)
-    src = F.when(cloned, F.col("vec_id") - 3).otherwise(F.col("vec_id"))
-    unit = F.transform(
-        F.sequence(F.lit(1), F.lit(dim)),
-        lambda i: (F.pmod(F.xxhash64(src, i), F.lit(2001)) - 1000.0) / 1000.0,
-    )
-    noise = F.transform(
-        F.sequence(F.lit(1), F.lit(dim)),
-        lambda i: F.when(
-            cloned,
-            (F.pmod(F.xxhash64(F.col("vec_id"), i, F.lit(99)), F.lit(2001)) - 1000.0)
-            / 1_000_000.0,
-        ).otherwise(F.lit(0.0)),
-    )
-    vec = F.zip_with(unit, noise, lambda a, b: (a + b).cast("float"))
-    return base.select("vec_id", vec.alias("embedding"))
 
 
 def probe_semantic(spark, n_vecs: int, dim: int = 32) -> dict:

@@ -1302,6 +1302,32 @@ def test_broadcast_decision_follows_each_searchers_threshold(dfs, family):
     assert fast == shm
 
 
+@pytest.mark.parametrize("family", ("ivf", "graph"))
+def test_failed_executor_publish_falls_back_to_blob_shipping(
+    dfs, family, monkeypatch, tmp_path
+):
+    """A node-local publish whose writes fail in the executors (here the
+    root is a regular file, so every write raises NotADirectoryError in
+    the worker) reaches the driver as a failed job, not an OSError.  The
+    search must still answer, through the blob-shipping plan, with the
+    rows ``node_local_cache=False`` returns, and remember the failure."""
+    from vectordb_retrieval_spark import transport
+
+    base_df, query_df = dfs
+    art, make, param = _shm_family(family, base_df)
+    want = _rows(
+        make(broadcast_threshold=0, node_local_cache=False)
+        .attach(art)
+        .search(query_df, K)
+    )
+    blocker = tmp_path / "not-a-dir"
+    blocker.write_bytes(b"")
+    monkeypatch.setattr(transport, "make_root", lambda name: str(blocker))
+    got = _rows(make(broadcast_threshold=0).attach(art).search(query_df, K))
+    assert param in art.params and art.params[param] is None
+    assert got == want
+
+
 def test_compact_partitions_selective_rewrite(spark, tmp_path):
     """Persisted-index compaction: applying a delete set rewrites ONLY
     the cluster partitions holding deleted ids (untouched partitions

@@ -568,8 +568,7 @@ def packed_shm_cached(art, table: str = "assignment"):
 
     def fill(root: str) -> DataFrame:
         packed = packed_assignment_cached(art, table)
-        total_rows = packed.count()
-        keys = transport.publish(
+        transport.publish(
             packed.select(
                 F.format_string("%d-%d", "cluster_id", "sub").alias("key"),
                 "ids",
@@ -577,11 +576,11 @@ def packed_shm_cached(art, table: str = "assignment"):
             ),
             root,
         )
-        if len(keys) != total_rows:
-            raise OSError(f"published {len(keys)} of {total_rows} blobs")
-        meta = packed.select("cluster_id", "n", "width", "dt", "sub").cache()
-        meta.count()
-        return meta
+        # a projection, not a cache: the packed table is read as the
+        # blob-shipping plan reads it (cached when built or packed here),
+        # and under AQE a search reading an unfilled cache runs one more
+        # job (a table-cache query stage)
+        return packed.select("cluster_id", "n", "width", "dt", "sub")
 
     spark = art.tables[table].sparkSession
     return transport.published(art, "_packed_shm", spark, "packed", fill)

@@ -50,7 +50,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vectordb_retrieval_spark import transport
@@ -1229,19 +1229,9 @@ def partition_driven_job(
 def merge_fragment_topk(frag: DataFrame, k: int, n_queries: int) -> DataFrame:
     """Global per-query merge of ``partition_driven_job``'s fragment
     rows (qid, ids list, dists list) → (qid, id, dist, rank), rank 1..k
-    ascending by (dist, id).
-
-    Small batches (≤ 4096 queries) merge JVM-side: explode the fragment
-    lists and row_number over (dist, id) — the merge stage carries no
-    python-worker handshake at all (a JVM-only stage costs ~0.07 s on
-    this pool vs ~0.15-0.28 s for a python one), which is most of a
-    small-batch search's wall.  The fragment LIST rows are repartitioned
-    by qid BEFORE the explode (an explode before an exchange multiplies
-    it — here by k), and the window reuses that partitioning instead of
-    adding its own exchange.
-
-    Larger batches merge in a numpy kernel over the same qid-hashed
-    exchange: one ``topk_groups`` over n_q × tasks_probed rows per task.
+    ascending by (dist, id): the fragment lists are repartitioned by
+    qid and each task ranks its queries with one ``topk_groups`` over
+    n_q × tasks_probed rows.
 
     Merge parallelism scales with the query count (one task per 256
     queries, at least 2 — a single reducer serializes the whole shuffle
@@ -1250,22 +1240,6 @@ def merge_fragment_topk(frag: DataFrame, k: int, n_queries: int) -> DataFrame:
     dominates, ~8 ms/task beyond 16 in-flight python tasks."""
     par = frag.sparkSession.sparkContext.defaultParallelism
     merged = frag.repartition(max(2, min(par, -(-n_queries // 256))), "qid")
-    if n_queries <= 4096:
-        w = Window.partitionBy("qid").orderBy(
-            F.col("dist").asc(), F.col("id").asc()
-        )
-        return (
-            merged.select(
-                "qid", F.explode(F.arrays_zip("ids", "dists")).alias("z")
-            )
-            .select(
-                "qid",
-                F.col("z.ids").alias("id"),
-                F.col("z.dists").alias("dist"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
 
     def kernel(batches):
         import pyarrow as pa

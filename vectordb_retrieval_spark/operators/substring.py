@@ -74,8 +74,8 @@ def _dup_positions(
     """(id, pos) of every window whose gram hash repeats >= min_count
     times corpus-wide.  One shuffle (count window on the gram hash).
 
-    Plan choice measured, not assumed (interleaved A/B recorded in
-    COVERAGE.md, 300k docs x 75 grams): this count-window form 13.2s;
+    Plan choice measured, not assumed (interleaved A/B, 300k docs x 75
+    grams): this count-window form 13.2s;
     groupBy + join-back 24.4s (the join side recomputes the md5 gram
     pass, which dominates); groupBy + collect_list + slice-explode
     13.5s (same shuffle, heavier aggregate).  The window's sort is NOT the

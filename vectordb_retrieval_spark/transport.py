@@ -74,6 +74,7 @@ import weakref
 
 import numpy as np
 import pandas as pd
+from pyspark.errors import PythonException
 
 SHM_ROOT = "/dev/shm/vr_spark_shm"
 TTL_S = 3600.0
@@ -294,7 +295,9 @@ def published(art, key: str, spark, prefix: str, fill):
     (root, payload)``: ``fill(root)`` publishes into a fresh entry and
     returns the payload.  A live root is touched; a swept one is
     republished under a new root.  None — remembered — when node-local
-    publish is unavailable or failed."""
+    publish is unavailable or failed: on the driver (``OSError``) or in
+    the executors, whose failed writes fail the publish job
+    (``PythonException``)."""
     got = art.params.get(key, ())
     if got is None or (got and touch(got[0])):
         return got
@@ -304,7 +307,7 @@ def published(art, key: str, spark, prefix: str, fill):
         try:
             root = make_root(f"{prefix}-{uuid.uuid4().hex}")
             got = (root, fill(root))
-        except OSError:
+        except (OSError, PythonException):
             if root is not None:
                 shutil.rmtree(root, ignore_errors=True)
     art.params[key] = got
