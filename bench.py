@@ -570,7 +570,7 @@ def main(argv=None) -> int:
     ivf_art = IVFIndexer(nlist=100, seed=7, max_iter=10, init_mode="k-means||").build(
         base, id_col="id", vec_col="vec"
     )
-    materialize(ivf_art.tables["assignment"])
+    materialize(ivf_art.tables["packed"])
     t_ivf_build = time.time() - t0
     ivf_res, t_ivf_big = timed_search(
         IVFSearcher(nprobe=10).attach(ivf_art), big_queries, 20
@@ -638,7 +638,7 @@ def main(argv=None) -> int:
     sq8r_art = IVFIndexer(
         nlist=256, seed=7, max_iter=10, init_mode="k-means||", codec=SQ8Codec()
     ).build(base, id_col="id", vec_col="vec")
-    materialize(sq8r_art.tables["assignment"])
+    materialize(sq8r_art.tables["packed"])
     t_sq8r_build = time.time() - t0
     sq8r_res, t_sq8r = timed_search(
         IVFSearcher(nprobe=24).attach(sq8r_art), big_queries, 20
@@ -654,7 +654,7 @@ def main(argv=None) -> int:
         init_mode="k-means||",
         codec=PQCodec(m=64, ksub=256, seed=7),
     ).build(base, id_col="id", vec_col="vec")
-    materialize(ivfpq_art.tables["assignment"])
+    materialize(ivfpq_art.tables["packed"])
     t_ivfpq_build = time.time() - t0
     ivfpq_res, t_ivfpq = timed_search(
         IVFSearcher(nprobe=24).attach(ivfpq_art), big_queries, 20
@@ -675,7 +675,7 @@ def main(argv=None) -> int:
     cp_art = ClusterPrunedExactIndexer(
         nlist=64, seed=7, max_iter=10, init_mode="k-means||"
     ).build(base, id_col="id", vec_col="vec")
-    materialize(cp_art.tables["assignment"])
+    materialize(cp_art.tables["packed"])
     t_cp_build = time.time() - t0
     cp_res, t_cp = timed_search(
         ClusterPrunedExactSearcher(nprobe=8).attach(cp_art), big_queries, 20
@@ -967,7 +967,7 @@ def main(argv=None) -> int:
             init_mode="k-means||",
             codec=SQ8Codec(),
         ).build(base384, id_col="id", vec_col="vec")
-        materialize(sq8_art.tables["assignment"])
+        materialize(sq8_art.tables["packed"])
         t_sq8_build = time.time() - t0
         sq8_res, t_sq8 = timed_search(
             IVFSearcher(nprobe=10).attach(sq8_art), q384, 20
@@ -1162,7 +1162,7 @@ def main(argv=None) -> int:
             init_mode="k-means||",
             codec=SQ8Codec(),
         ).build(base_s, id_col="id", vec_col="vec")
-        materialize(sq8s_art.tables["assignment"])
+        materialize(sq8s_art.tables["packed"])
         scale_workload["ivf_sq8_build_s"] = round(time.time() - t0, 3)
 
         # the shard count grows with the corpus so per-shard beam
@@ -1374,7 +1374,7 @@ def main(argv=None) -> int:
             nlist=256, metric="cosine", seed=13, max_iter=5,
             init_mode="k-means||", codec=SQ8Codec(),
         ).build(base_c, id_col="id", vec_col="vec")
-        materialize(sq8c_art.tables["assignment"])
+        materialize(sq8c_art.tables["packed"])
         out["ann_ivf_sq8_build_s"] = round(time.time() - t0, 3)
         sq8c = IVFSearcher(nprobe=10).attach(sq8c_art)
         materialize(

@@ -51,7 +51,7 @@ def main() -> None:
     art = IVFIndexer(
         nlist=256, seed=7, max_iter=10, init_mode="k-means||", codec=SQ8Codec()
     ).build(base, id_col="id", vec_col="vec")
-    materialize(art.tables["assignment"])
+    materialize(art.tables["packed"])
     sq8 = IVFSearcher(nprobe=24).attach(art)
 
     runs = {

@@ -107,8 +107,8 @@ def test_sqfp16_roundtrip_is_fp16_rounding(vecs):
     assert codes.dtype == np.int16
     dec = codec.decode(codes)
     assert np.array_equal(dec, base.astype(np.float16).astype(np.float64))
-    # uint8-narrowed codes (pack_clusters fast path when every int16
-    # value of a cluster fits [0, 256)) decode to the same floats
+    # uint8-narrowed codes (the packers' narrowing when every int16
+    # value fits [0, 256)) decode to the same floats
     small = np.full((4, DIM), 1e-7, dtype=np.float32)  # tiny -> low bit patterns
     c = codec.encode(small)
     if c.min() >= 0 and c.max() < 256:
@@ -406,7 +406,7 @@ def test_ivf_append_past_room_rebuilds(spark, blobs, caplog):
 def test_ivf_append_foreach_batch_chain_stays_shallow(spark, blobs, tmp_path):
     """foreachBatch ivf_append with a search between micro-batches: each
     append carries the served bundle forward, the final answers equal
-    the full build's, and the assignment table is ONE union of two
+    the full build's, and the packed table is ONE union of two
     children however many micro-batches ran."""
     from vectordb_retrieval_spark.operators.ivf import IVFSearcher, ivf_append
     from vectordb_retrieval_spark.streaming.serving import await_or_raise
@@ -439,7 +439,7 @@ def test_ivf_append_foreach_batch_chain_stays_shallow(spark, blobs, tmp_path):
     )
     await_or_raise(q, 300)
     assert paths == [True] * len(batches)
-    plan = holder[0].tables["assignment"]._jdf.queryExecution().logical()
+    plan = holder[0].tables["packed"]._jdf.queryExecution().logical()
     assert plan.nodeName() == "Union" and plan.children().size() == 2
     assert plan.toString().count("Union") == 1
     all_ids = np.concatenate([base[0]] + [b[0] for b in batches])
@@ -467,7 +467,6 @@ def test_ivf_append_served_runs_one_job_and_next_read_packs_nothing(
     def refuse(*a, **k):
         raise AssertionError("the carried-forward index was repacked")
 
-    monkeypatch.setattr(serving, "pack_clusters", refuse)
     monkeypatch.setattr(serving, "pack_clusters_from_packed", refuse)
     sc = spark.sparkContext
 
@@ -529,6 +528,60 @@ def test_released_bundles_remove_their_scan_entries(spark):
     finally:
         for e in entries:
             shutil.rmtree(e, ignore_errors=True)
+
+
+def test_lazy_past_gate_result_outlives_its_artifact(spark):
+    """A past-gate search reads the artifact's packed blobs from a
+    node-local ``packed-*`` entry.  A lazy result returned from a
+    function whose artifact is then dropped and collected still reads
+    them: the entry is not tied to the artifact's lifetime."""
+    import gc
+    import os
+
+    from vectordb_retrieval_spark.operators.ivf import FixedCentroidIVFIndexer, IVFSearcher
+
+    rng = np.random.RandomState(23)
+    mat = rng.randn(400, 8).astype(np.float32)
+    query_df = _frame(spark, np.arange(4), mat[:4], "qid")
+    roots = []
+
+    def search():
+        art = FixedCentroidIVFIndexer(mat[:4].astype(np.float64)).build(
+            _frame(spark, np.arange(400), mat)
+        )
+        searcher = IVFSearcher(nprobe=2, broadcast_threshold=0).attach(art)
+        out = searcher.search(query_df, K)
+        roots.append(art.params["_packed_shm"][0])
+        return out.select("qid", "id")
+
+    lazy = search()
+    gc.collect()
+    assert os.path.isdir(roots[0])
+    assert len(lazy.collect()) == 4 * K
+
+
+def test_murmur3_preimages_match_spark_hash(spark):
+    """The numpy murmur3 behind blob placement is Spark's ``hash`` of
+    an int, so each preimage lands in its partition."""
+    from pyspark.sql import functions as F
+
+    from vectordb_retrieval_spark.operators.ivf import _murmur3_int, _preimages
+
+    rows = (
+        spark.range(-300, 300)
+        .select(F.col("id").cast("int").alias("b"))
+        .select("b", F.hash("b").alias("h"))
+        .collect()
+    )
+    assert _murmur3_int(np.array([r.b for r in rows])).tolist() == [r.h for r in rows]
+    for n in (1, 4, 7, 32):
+        pre = _preimages(n).tolist()
+        got = (
+            spark.createDataFrame([(b,) for b in pre], "b int")
+            .select(F.pmod(F.hash("b"), F.lit(n)).alias("p"))
+            .collect()
+        )
+        assert [r.p for r in got] == list(range(n))
 
 
 @pytest.mark.parametrize("codec_name", ["sq8", "pq"])
@@ -1034,18 +1087,16 @@ def test_lsh_past_gate_fallback_holds_one_persisted_result(spark, dfs, vecs):
 
 
 def test_packed_subblob_split_matches_unsplit(dfs):
-    """pack_assignment splits big clusters into several blob rows and
+    """pack_rows splits big clusters into several blob rows and
     bin-packs them across partitions; the partitioned scan + fragment
     merge must produce identical results at ANY split granularity
     (fragment top-ks per (task, query) then a global merge make the
     split invisible)."""
-    from vectordb_retrieval_spark.functions.kernels import (
-        pack_assignment,
-        query_broadcast_cached,
-    )
+    from vectordb_retrieval_spark.functions.kernels import query_broadcast_cached
     from vectordb_retrieval_spark.operators.ivf import (
         IVFIndexer,
         IVFSearcher,
+        pack_rows,
         packed_scan_unit,
         packed_units,
     )
@@ -1066,12 +1117,12 @@ def test_packed_subblob_split_matches_unsplit(dfs):
         pmap = group_probes(np.repeat(np.arange(len(qmat)), 3), probed.ravel())
         results = []
         for cap in (7, 10**9):  # forced sub-blob splits vs whole clusters
-            packed = pack_assignment(
+            packed = pack_rows(
                 art.tables["assignment"],
                 "vec" if codec is None else "codes",
-                codec,
-                max_rows_per_blob=cap,
-            )
+                8,
+                cap=cap,
+            ).cache()
             res = partition_driven_job(
                 packed_units(packed, pmap, None, len(qmat)),
                 bcq,
@@ -1101,7 +1152,7 @@ def test_packed_placement_balances_skewed_clusters(spark):
     the heaviest partition's row mass near the mean."""
     import numpy as np
 
-    from vectordb_retrieval_spark.functions.kernels import pack_assignment
+    from vectordb_retrieval_spark.operators.ivf import pack_rows
 
     rng = np.random.RandomState(7)
     n_hot, n_rest, n_clusters = 6000, 4000, 16
@@ -1114,7 +1165,8 @@ def test_packed_placement_balances_skewed_clusters(spark):
     assignment = spark.createDataFrame(
         rows, schema="id long, cluster_id int, vec array<float>"
     )
-    packed = pack_assignment(assignment, "vec", None, max_rows_per_blob=512)
+    sizes = [n_hot] + [n_rest // (n_clusters - 1)] * (n_clusters - 1)
+    packed = pack_rows(assignment, "vec", n_clusters, sizes, cap=512).cache()
     per_part = (
         packed.rdd.mapPartitions(lambda it: [sum(r["n"] for r in it)]).collect()
     )
@@ -1359,17 +1411,16 @@ def test_compact_partitions_selective_rewrite(spark, tmp_path):
     pts = np.vstack([c + 0.5 * rng.randn(10, 2) for c in cents])
     base = make_vector_df(spark, pts)
     art = FixedCentroidIVFIndexer(cents, metric="l2").build(base)
-    art.metadata["partition_by"] = {"assignment": ["cluster_id"]}
     path = str(tmp_path / "ivf_art")
     save_artifact(art, path)
 
-    adir = os.path.join(path, "tables", "assignment")
+    adir = os.path.join(path, "tables", "packed")
     untouched = sorted(os.listdir(os.path.join(adir, "cluster_id=3")))
 
     # delete 3 ids from cluster 0 and ALL of cluster 1 (ids 10..19)
     del_ids = [0, 1, 2] + list(range(10, 20))
     dels = spark.createDataFrame([(i,) for i in del_ids], "id long")
-    n = compact_partitions(spark, path, "assignment", dels)
+    n = compact_partitions(spark, path, dels)
     assert n == 2  # clusters 0 and 1 touched, 2 and 3 not
 
     assert sorted(os.listdir(os.path.join(adir, "cluster_id=3"))) == untouched
@@ -1417,11 +1468,10 @@ def test_compact_partitions_failed_write_leaves_artifact_intact(
     pts = np.vstack([c + 0.5 * rng.randn(8, 2) for c in cents])
     base = make_vector_df(spark, pts)
     art = FixedCentroidIVFIndexer(cents, metric="l2").build(base)
-    art.metadata["partition_by"] = {"assignment": ["cluster_id"]}
     path = str(tmp_path / "ivf_art")
     save_artifact(art, path)
 
-    adir = os.path.join(path, "tables", "assignment")
+    adir = os.path.join(path, "tables", "packed")
     before = {
         p: sorted(os.listdir(os.path.join(adir, p)))
         for p in os.listdir(adir)
@@ -1438,7 +1488,7 @@ def test_compact_partitions_failed_write_leaves_artifact_intact(
     monkeypatch.setattr(rw.DataFrameWriter, "parquet", boom)
     dels = spark.createDataFrame([(0,), (8,)], "id long")
     with pytest.raises(RuntimeError, match="injected"):
-        compact_partitions(spark, path, "assignment", dels)
+        compact_partitions(spark, path, dels)
     monkeypatch.undo()
 
     after = {
@@ -1450,6 +1500,78 @@ def test_compact_partitions_failed_write_leaves_artifact_intact(
     assert not os.path.exists(adir + ".compact-tmp")
     art2 = load_artifact(spark, path)
     assert art2.tables["assignment"].count() == 16
+
+
+@pytest.mark.parametrize("threshold", [128 << 20, 0])
+def test_compacted_saved_ivf_artifact_returns_no_deleted_id(dfs, tmp_path, threshold):
+    """A saved IVFIndexer artifact is one ``tables/packed`` directory
+    and its build caches one table; compacting the saved blobs and
+    loading them back returns no deleted id, under the broadcast plan
+    and the partitioned one."""
+    import os
+
+    from vectordb_retrieval_spark.operators.ivf import IVFIndexer, IVFSearcher
+    from vectordb_retrieval_spark.persistence import (
+        compact_partitions,
+        load_artifact,
+        save_artifact,
+    )
+
+    base_df, query_df = dfs
+    spark = base_df.sparkSession
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    art = IVFIndexer(nlist=4, seed=1).build(base_df)
+    assert jsc.getPersistentRDDs().size() - before == 1
+    path = str(tmp_path / "ivf_art")
+    save_artifact(art, path)
+    assert os.listdir(os.path.join(path, "tables")) == ["packed"]
+    n = base_df.count()
+    del_ids = list(range(0, n, 5))
+    dels = spark.createDataFrame([(i,) for i in del_ids], "id long")
+    assert compact_partitions(spark, path, dels) > 0
+    art2 = load_artifact(spark, path)
+    assert art2.tables["assignment"].count() == n - len(del_ids)
+    got = (
+        IVFSearcher(nprobe=4, broadcast_threshold=threshold)
+        .attach(art2)
+        .search(query_df, K)
+        .collect()
+    )
+    assert got and not set(del_ids) & {r["id"] for r in got}
+
+
+def test_row_table_save_loads_as_fresh_build(spark, blobs, tmp_path):
+    """A saved artifact holding only the row table (the fixed-centroid
+    saves' layout before the packed table was the one persisted) is
+    packed once at load and answers as a fresh build does, with the
+    same rows."""
+    from vectordb_retrieval_spark.artifacts import IndexArtifact
+    from vectordb_retrieval_spark.operators.quant import SQ8Codec
+    from vectordb_retrieval_spark.persistence import load_artifact, save_artifact
+
+    for codec in (None, SQ8Codec()):
+        idx, base, _, qs = _blob_index(blobs, "l2", codec)
+        query_df = _frame(spark, np.arange(len(qs)), qs, "qid")
+        fresh = idx.build(_frame(spark, *base))
+        old = IndexArtifact(
+            kind="ivf",
+            tables={"assignment": fresh.tables["assignment"]},
+            params={k: v for k, v in fresh.params.items() if not k.startswith("_")},
+            metadata={"nlist": idx.nlist, "metric": "l2", "fixed": True},
+        )
+        path = str(tmp_path / f"rows_{codec is None}")
+        save_artifact(old, path)
+        loaded = load_artifact(spark, path)
+        assert set(loaded.tables) == {"packed", "assignment"}
+
+        def rows(a):
+            return sorted(
+                (r[0], r[1], tuple(r[2])) for r in a.tables["assignment"].collect()
+            )
+
+        assert rows(loaded) == rows(fresh)
+        assert _answers(loaded, query_df) == _answers(fresh, query_df)
 
 
 def _anisotropic_df(spark, n=3000, d=16, seed=11):

@@ -119,6 +119,19 @@ def test_connected_components_min_label(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
+def test_connected_components_raises_when_unconverged(spark):
+    """A 5-edge path needs more than 3 rounds: with max_iter=3 the last
+    round still changes labels, so the call raises instead of returning
+    unconverged labels."""
+    from vectordb_retrieval_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(5)], "a long, b long")
+    with pytest.raises(RuntimeError, match="max_iter=3"):
+        connected_components(pairs, max_iter=3)
+    got = {r.id: r.component for r in connected_components(pairs).collect()}
+    assert got == {i: 0 for i in range(6)}
+
+
 def test_near_dup_dedup_keeps_canonical_and_unpaired(spark):
     from vectordb_retrieval_spark.operators.dedup import near_dup_dedup
 

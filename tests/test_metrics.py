@@ -278,6 +278,33 @@ def test_labeled_sweep_matches_generic(spark):
         assert all(r[1] == 3 for r in a)
 
 
+def test_metric_means_do_not_depend_on_partitioning(spark):
+    """The same pred/gt rows under two partitionings give bit-equal
+    metric rows: the per-k means are exact sums, not float additions in
+    partition order."""
+    import random
+
+    from vectordb_retrieval_spark.metrics import retrieval_metrics_multi
+
+    rng = random.Random(5)
+    gt_rows, pred_rows = [], []
+    for q in range(600):
+        gt_rows += [(q, q * 100 + i, i + 1) for i in range(7)]
+        ids = rng.sample(range(q * 100, q * 100 + 12), 7)
+        pred_rows += [(q, x, r + 1) for r, x in enumerate(ids)]
+    gt, pred = make_ranked(spark, gt_rows), make_ranked(spark, pred_rows)
+    runs = [
+        [
+            tuple(r)
+            for r in retrieval_metrics_multi(
+                pred.repartition(n, "id"), gt.repartition(m), [1, 3, 7]
+            ).collect()
+        ]
+        for n, m in ((1, 1), (7, 5), (13, 3))
+    ]
+    assert runs[0] == runs[1] == runs[2]
+
+
 def test_labeled_single_k_matches_retrieval_metrics(spark):
     """The at-10 slot's labeled fast path: multi-labeled at one cutoff
     equals the classic retrieval_metrics frame."""

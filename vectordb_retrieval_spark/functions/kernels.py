@@ -2,20 +2,18 @@
 
 - the query and frame memos (``query_broadcast_cached``,
   ``collect_or_chunk``, ``SearchPlanMemo``) every search path shares;
-- ``pack_assignment`` and the packed-table caches: the IVF family's
-  per-cluster blob transport, whose probed units the partition-driven
-  job scans (``ivf.packed_units`` / ``ivf.packed_scan_unit``; the job
-  is ``operators/serving.py``);
+- ``packed_shm_cached``: the node-local copy of an IVF-family packed
+  table, whose probed units the partition-driven job scans
+  (``ivf.packed_units`` / ``ivf.packed_scan_unit``; the job is
+  ``operators/serving.py``);
 - ``rowwise_distance``: float64 distance between aligned row pairs.
 """
 
 from __future__ import annotations
 
 import weakref
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -325,249 +323,24 @@ def rowwise_distance(
     raise ValueError(f"unknown metric {metric!r}")
 
 
-def pack_assignment(
-    assignment: DataFrame,
-    payload_col: str,
-    codec,
-    max_rows_per_blob: int = 512,
-    cluster_sizes: dict[int, int] | None = None,
-    pre_partitioned: bool = False,
-) -> DataFrame:
-    """Assignment/code table → one row per cluster with flat binary
-    blobs: (cluster_id, n, ids int64-bytes, payload matrix-bytes,
-    width, dt).  ``dt`` is the payload's NumPy dtype char — float32
-    for raw vectors AND float-coded codecs (PCA reduced coordinates),
-    uint8 for SQ8/PQ(ksub≤256) codes, int16 for other integer codes.
-
-    This is the at-scale transport format for the partitioned scan
-    (the same ``_pack_shard`` inversion graph_ann.py applies to its
-    shard blobs): a search task recovers a whole cluster with two
-    zero-copy ``np.frombuffer`` views (~µs) instead of re-assembling
-    n Arrow list rows per probe — measured as the dominant cost of
-    the partitioned IVF scan at 150k×384-d (every search re-crossed
-    all 150k payload rows through per-row Arrow list decode).  Packing
-    is one shuffle of the compact codes, paid once per artifact; at
-    cluster scale the packed table persists partitioned by cluster_id
-    so probe filters prune partitions.
-
-    Clusters larger than ``max_rows_per_blob`` are split into several
-    blob rows (same cluster_id, distinct ``sub`` index).  This bounds
-    per-unit work: probed cluster mass is skewed twice over (big
-    clusters AND popular clusters — on the 150k clustered corpus one
-    task held 7.5× the mean distance count and its straggler tail was
-    ~45% of the search wall), and splitting a hot cluster lets its
-    scan spread over several tasks.  Fragment top-ks per (task, query)
-    then a global merge make the split invisible to results.  The cap
-    also keeps every blob far under Arrow's 2 GB binary-cell limit.
-
-    Placement is load-balanced, not hashed: blob units are greedily
-    bin-packed into exactly ``defaultParallelism`` partitions by n²
-    weight (expected scan work per cluster is rows × probing-query
-    count, and popularity tracks mass for distribution-matched
-    queries, so n² is the static proxy).  Hash placement binned whole
-    clusters so unevenly that the straggler task dominated search wall;
-    round-robin still clumped popular clusters ~2-4×.  The bin-packed
-    bucket ids are murmur3 PREIMAGES (_identity_preimages), so a plain
-    ``repartition(n, bucket)`` realizes the placement exactly — one
-    action, no RDD round-trip.  The unit list is derived driver-side
-    from per-cluster sizes (≤ nlist × ceil(max_cluster/cap) units —
-    driver-small for any sane nlist), passed in by build-time callers
-    that already aggregated them; at cluster scale the persisted
-    cluster_id-partitioned layout plus AQE skew handling replace this
-    in-memory placement."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        for cid, grp in pdf.groupby("cluster_id", sort=False):
-            ids = grp["id"].to_numpy(dtype=np.int64)
-            raw = np.vstack(grp[payload_col].to_numpy())
-            if codec is None or np.issubdtype(raw.dtype, np.floating):
-                # raw vectors, or float-coded codecs (PCA reduced
-                # coordinates) — integer truncation would corrupt them
-                mat = raw.astype(np.float32)
-                dt = "f4"
-            elif raw.size and raw.min() >= 0 and raw.max() < 256:
-                mat = raw.astype(np.uint8)
-                dt = "u1"
-            else:
-                mat = raw.astype(np.int16)
-                dt = "i2"
-            for sub, s in enumerate(range(0, len(ids), max_rows_per_blob)):
-                e = min(len(ids), s + max_rows_per_blob)
-                yield pd.DataFrame(
-                    {
-                        "cluster_id": [int(cid)],
-                        "n": [e - s],
-                        "ids": [ids[s:e].tobytes()],
-                        "payload": [
-                            np.ascontiguousarray(mat[s:e]).tobytes()
-                        ],
-                        "width": [int(mat.shape[1])],
-                        "dt": [dt],
-                        "sub": [sub],
-                    }
-                )
-
-    spark = assignment.sparkSession
-    n_parts = max(1, spark.sparkContext.defaultParallelism)
-    if cluster_sizes is None:
-        # lazy path (derived artifacts): one extra aggregate to learn
-        # cluster masses; build-time callers pass the sizes they already
-        # collected while materializing the assignment cache, making
-        # packing a SINGLE action
-        cluster_sizes = {
-            int(r["cluster_id"]): int(r["n"])
-            for r in assignment.groupBy("cluster_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-    units = []
-    for cid, n in cluster_sizes.items():
-        for sub, s in enumerate(range(0, n, max_rows_per_blob)):
-            units.append((cid, sub, min(n - s, max_rows_per_blob)))
-    order = sorted(units, key=lambda u: (-(u[2] ** 2), u[0], u[1]))
-    loads = [0] * n_parts
-    pre = _identity_preimages(spark, n_parts)
-    bucket: dict[tuple[int, int], int] = {}
-    for cid, sub, n in order:
-        b = min(range(n_parts), key=lambda i: (loads[i], i))
-        bucket[(cid, sub)] = pre[b]
-        loads[b] += n * n
-    bc = spark.sparkContext.broadcast(bucket)
-
-    def kernel_b(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bmap = bc.value
-        # .get with a deterministic fallback (advisor r12): if the
-        # caller-passed cluster_sizes ever disagreed with the rows the
-        # kernel actually sees, a missing (cluster, sub) unit degrades
-        # to hash-of-cluster placement (imbalanced but correct) instead
-        # of killing the whole pack job with an executor KeyError
-        n_pre = len(pre)
-        for pdf in kernel(batches):
-            pdf = pdf.copy()
-            pdf["bucket"] = [
-                bmap.get((int(c), int(s)), pre[int(c) % n_pre])
-                for c, s in zip(pdf["cluster_id"], pdf["sub"])
-            ]
-            yield pdf
-
-    src = assignment.select("cluster_id", "id", payload_col)
-    if not pre_partitioned:
-        # whole clusters per task — packing needs every row of a
-        # cluster in one partition regardless of the input's layout.
-        # Build-time callers whose assignment cache is already
-        # cluster_id-hash-partitioned pass pre_partitioned=True and
-        # skip this full-payload exchange outright (guide §2.4: the
-        # data is already partitioned as the operation needs).
-        src = src.repartition("cluster_id")
-    placed = (
-        src.mapInPandas(
-            kernel_b,
-            schema=(
-                "cluster_id long, n long, ids binary, payload binary, "
-                "width int, dt string, sub int, bucket int"
-            ),
-        )
-        # bucket values are murmur3 preimages, so this hash repartition
-        # IS the greedy bin-packed placement (identity bucket→partition)
-        # — all-DataFrame, no RDD pickle round-trip, one action total
-        .repartition(n_parts, "bucket")
-        .drop("bucket")
-        .cache()
-    )
-    placed.count()
-    return placed
-
-
-# memo: partition-count → murmur3 preimage bucket ids (see
-# _identity_preimages); driver-side, tiny
-_HASH_PREIMAGES: dict[int, list[int]] = {}
-
-
-def _identity_preimages(spark, n: int) -> list[int]:
-    """For each partition p in 0..n-1, the smallest int b with
-    ``pmod(murmur3(b), n) == p`` — using b as a bucket value makes
-    ``repartition(n, col)`` place bucket p exactly in partition p
-    (hash placement turned into identity placement).  Evaluated with
-    Spark's own ``F.hash`` over a local relation (ConvertToLocalRelation
-    folds it driver-side: no job)."""
-    got = _HASH_PREIMAGES.get(n)
-    if got is not None:
-        return got
-    pre: list[int | None] = [None] * n
-    found, cand = 0, 0
-    while found < n:
-        batch = list(range(cand, cand + 8 * n))
-        cand += 8 * n
-        rows = (
-            spark.createDataFrame([(b,) for b in batch], "b int")
-            .select("b", F.pmod(F.hash("b"), F.lit(n)).alias("p"))
-            .collect()
-        )
-        for r in rows:
-            if pre[r["p"]] is None:
-                pre[r["p"]] = r["b"]
-                found += 1
-            if found == n:
-                break
-    _HASH_PREIMAGES[n] = pre  # type: ignore[assignment]
-    return pre  # type: ignore[return-value]
-
-
-def packed_assignment_cached(art, table: str = "assignment") -> DataFrame:
-    """The packed form of an artifact's assignment table.  Build-time
-    artifacts carry it as the first-class ``packed`` table (persisted
-    parquet-partitioned by cluster_id, so probed searches prune blob
-    partitions at the scan); otherwise (derived artifacts: append /
-    delete, pre-packed-era saves) it is packed lazily on first
-    partitioned search and memoized (underscore param: runtime-only,
-    never persisted, dropped by further derivatives so they repack
-    against their own rows)."""
-    pre = art.tables.get("packed")
-    if pre is not None:
-        return pre
-    cached = art.params.get("_packed_df")
-    if cached is not None:
-        return cached
-    codec = art.params.get("codec")
-    payload_col = "vec" if codec is None else "codes"
-    # pack_assignment returns the placed table already cached + counted.
-    # _pack_pre_partitioned is a runtime-only marker set by builders
-    # whose IN-MEMORY assignment cache is cluster_id-hash-partitioned
-    # (a LOADED dir-partitioned parquet does NOT qualify: a big cluster
-    # spans several scan splits there); derivatives drop it with the
-    # other underscore params, so they re-shuffle their own rows.
-    packed = pack_assignment(
-        art.tables[table],
-        payload_col,
-        codec,
-        pre_partitioned=bool(art.params.get("_pack_pre_partitioned"))
-        and table == "assignment",
-    )
-    art.params["_packed_df"] = packed
-    return packed
-
-
-def packed_shm_cached(art, table: str = "assignment"):
-    """Node-local form of the packed assignment (``transport.published``
-    under ``_packed_shm``, the same serving architecture as graph_ann's
-    shard store): on a single-node master each (cluster_id, sub) blob is
-    published ONCE as ids bytes + payload bytes (one distributed pass
-    over the packed table), and searches then scan a blob-free METADATA
-    table — per-search Arrow traffic drops from the probed payload bytes
-    to a few hundred metadata ints, and the page cache holds one
-    physical copy of the index per node.  The metadata DataFrame is a
-    narrow projection of the placed packed table, so it inherits the
-    load-balanced task placement.
+def packed_shm_cached(art):
+    """Node-local form of an IVF-family artifact's packed table
+    (``transport.published`` under ``_packed_shm``, the same serving
+    architecture as graph_ann's shard store): on a single-node master
+    each (cluster_id, sub) blob is published ONCE as ids bytes +
+    payload bytes (one distributed pass over the packed table), and
+    searches then scan a blob-free METADATA table — per-search Arrow
+    traffic drops from the probed payload bytes to a few hundred
+    metadata ints, and the page cache holds one physical copy of the
+    index per node.  The metadata DataFrame is a narrow projection of
+    the placed packed table, so it inherits the load-balanced task
+    placement.
 
     Returns (shm_root, metadata DataFrame) or None when gated off
     (multi-executor master, no /dev/shm, publish failure)."""
+    packed = art.tables["packed"]
 
     def fill(root: str) -> DataFrame:
-        packed = packed_assignment_cached(art, table)
         transport.publish(
             packed.select(
                 F.format_string("%d-%d", "cluster_id", "sub").alias("key"),
@@ -577,10 +350,9 @@ def packed_shm_cached(art, table: str = "assignment"):
             root,
         )
         # a projection, not a cache: the packed table is read as the
-        # blob-shipping plan reads it (cached when built or packed here),
-        # and under AQE a search reading an unfilled cache runs one more
-        # job (a table-cache query stage)
+        # blob-shipping plan reads it, and under AQE a search reading
+        # an unfilled cache runs one more job (a table-cache query
+        # stage)
         return packed.select("cluster_id", "n", "width", "dt", "sub")
 
-    spark = art.tables[table].sparkSession
-    return transport.published(art, "_packed_shm", spark, "packed", fill)
+    return transport.published(art, "_packed_shm", packed.sparkSession, "packed", fill)

@@ -233,16 +233,24 @@ def _metrics_from_lists(
         "qid",
         F.explode(F.array(*[_metrics_struct(k) for k in ks])).alias("m"),
     ).select("qid", "m.*")
+
+    def mean(col: str):
+        # the mean of per-query ratios, summed exactly: each double is
+        # rounded once to 18 decimals, and decimal addition does not
+        # depend on the order partitions arrive in, so the same rows give
+        # bit-equal means under any physical plan
+        return F.avg(F.col(col).cast("decimal(38,18)")).cast("double")
+
     return (
         perq.groupBy("k")
         .agg(
             F.count("*").alias("n_queries"),
-            F.avg("recall").alias("recall"),
-            F.avg("precision").alias("precision"),
-            F.avg("ap").alias("map"),
-            F.avg("ndcg").alias("ndcg"),
-            F.avg("any_hit").alias("hit_rate"),
-            F.avg("rr").alias("mrr"),
+            mean("recall").alias("recall"),
+            mean("precision").alias("precision"),
+            mean("ap").alias("map"),
+            mean("ndcg").alias("ndcg"),
+            mean("any_hit").alias("hit_rate"),
+            mean("rr").alias("mrr"),
         )
         .orderBy("k")
     )

@@ -39,42 +39,16 @@ from vectordb_retrieval_spark.functions.distance import (
     normalize_rows,
     pairwise_distances,
 )
-from vectordb_retrieval_spark.functions.kernels import (
-    packed_assignment_cached,
-    packed_shm_cached,
-)
+from vectordb_retrieval_spark.functions.kernels import packed_shm_cached
 from vectordb_retrieval_spark.operators.ivf import (
     IVFIndexer,
+    blob_stats,
     packed_scan_unit,
     packed_units,
 )
 from vectordb_retrieval_spark.operators import serving
 from vectordb_retrieval_spark.operators.searcher import Searcher
 from vectordb_retrieval_spark.operators.topk import topk_groups, topk_rows
-
-
-def _cluster_sizes_cached(art) -> np.ndarray:
-    """Per-cluster row counts as a dense array indexed by cluster_id —
-    from the build's stats aggregate when fresh (zero extra actions),
-    else derived ONCE from the packed metadata (nlist × sub tiny rows)
-    and memoized.  Underscore param: runtime-only, dropped by
-    append/delete derivatives so they re-derive against their own
-    rows."""
-    nlist = len(art.params["centroids"])
-    sizes = art.params.get("_cluster_sizes")
-    if sizes is None:
-        packed = packed_assignment_cached(art)
-        rows = packed.select("cluster_id", "n").collect()
-        sizes = {}
-        for r in rows:
-            c = int(r["cluster_id"])
-            sizes[c] = sizes.get(c, 0) + int(r["n"])
-        art.params["_cluster_sizes"] = sizes
-    arr = np.zeros(nlist, dtype=np.float64)
-    for c, n in sizes.items():
-        if 0 <= c < nlist:
-            arr[c] = n
-    return arr
 
 
 class ClusterPrunedExactIndexer(IVFIndexer):
@@ -93,9 +67,9 @@ class ClusterPrunedExactIndexer(IVFIndexer):
             codec=None, init_mode=init_mode,
         )
 
-    # covering radii ride the assignment kernel + the build's
-    # materializing aggregate (ivf.IVFIndexer.build) — no separate
-    # distance pass over the assignment table
+    # covering radii ride the assignment kernel into each blob's rmax
+    # and the build's metadata collect (ivf.IVFIndexer._build) — no
+    # separate distance pass
     _radii_in_assign = True
 
     def build(
@@ -249,7 +223,7 @@ class ClusterPrunedExactSearcher(Searcher):
         # inequality), so ONE scan of the admitted set is exact: no
         # phase barrier, no cache, no driver collect.  An index with
         # fewer than k rows gets T'_q = inf and scans everything.
-        sizes = _cluster_sizes_cached(art)
+        sizes = blob_stats(art)[0].astype(np.float64)
         ub = qc + radii[None, :]
         order_ub = np.argsort(ub, axis=1, kind="stable")
         csum = np.cumsum(
@@ -265,7 +239,7 @@ class ClusterPrunedExactSearcher(Searcher):
         )
 
         shm = packed_shm_cached(art) if self.node_local_cache else None
-        packed = packed_assignment_cached(art) if shm is None else shm[1]
+        packed = art.tables["packed"] if shm is None else shm[1]
         shm_root = None if shm is None else shm[0]
         # ndis counts every exact distance computed, parity with the
         # reference's record_operation counter.  Fragment emission is

@@ -296,6 +296,8 @@ def connected_components(
     ``localCheckpoint`` truncates the lineage so round N's plan doesn't
     replay rounds 1..N−1.  (For adversarial long-chain graphs the
     large-star/small-star variant halves rounds; not needed for dedup.)
+    Raises RuntimeError when the ``max_iter``-th round still changed a
+    label: unconverged labels are never returned.
     """
     edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     edges = edges.union(
@@ -332,6 +334,11 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: labels still changed after max_iter="
+            f"{max_iter} rounds; the pair graph's diameter exceeds it"
+        )
     return labels.select(F.col("src").alias("id"), F.col("label").alias("component"))
 
 
@@ -674,14 +681,19 @@ def semantic_dedup(
     """
     if pair_plan not in ("gemm", "fold"):
         raise ValueError(f"unknown pair_plan {pair_plan!r}")
-    from vectordb_retrieval_spark.operators.ivf import FixedCentroidIVFIndexer
+    from vectordb_retrieval_spark.operators.ivf import _assign_df
 
-    art = FixedCentroidIVFIndexer(centroids, metric="l2").build(
-        df, id_col=id_col, vec_col=vec_col
+    # rows, not an index: the assignment kernel's (cluster_id, id, vec)
+    # rows, cluster_id-partitioned and cached
+    rows = (
+        _assign_df(
+            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
+            centroids,
+        )
+        .repartition("cluster_id")
+        .cache()
     )
-    assign = art.tables["assignment"].select(
-        "id", F.col("cluster_id").cast("int").alias("cluster_id")
-    )
+    assign = rows.select("id", F.col("cluster_id").cast("int").alias("cluster_id"))
     if not allow_quadratic:
         # the pair stage is quadratic PER CLUSTER; a runaway cluster
         # (too few centroids for the corpus) silently turns it into an
@@ -698,13 +710,13 @@ def semantic_dedup(
                 "count (SemDeDup scales clusters with corpus size) or "
                 "pass allow_quadratic=True to force the join"
             )
-    # the assignment table ALREADY carries each vector (float32 — cast
-    # to double is exact, identical to casting the source column), so
+    # the assigned rows ALREADY carry each vector (float32 — cast to
+    # double is exact, identical to casting the source column), so
     # re-joining the source frame by id just added two exchanges and an
     # SMJ; reading (id, cluster_id, v) straight off the cached
-    # cluster_id-partitioned assignment also lets the pair stage's
+    # cluster_id-partitioned rows also lets the pair stage's
     # groupBy(cluster_id) reuse that partitioning with no shuffle (r13)
-    sub_src = art.tables["assignment"].select(
+    sub_src = rows.select(
         "id",
         F.col("cluster_id").cast("int").alias("cluster_id"),
         F.col("vec").cast("array<double>").alias("v"),

@@ -7,11 +7,15 @@ re-design (SURVEY.md §7.1 step 6):
 - **build**: a seeded driver-side Lloyd on a deterministic bounded
   sample learns ``nlist`` centroids (the coarse quantizer — FAISS's
   own max_points_per_centroid=256 training contract; one table scan,
-  not a job per iteration); the base table becomes an assignment table
-  (cluster_id, id, vec-or-codes).  At cluster scale this table is
-  written Parquet-partitioned by ``cluster_id`` so probing prunes
-  partitions at the scan (Catalyst partition pruning) — locally it is
-  repartitioned on cluster_id, same plan shape.
+  not a job per iteration).  One Arrow pass then assigns (and, with a
+  codec, encodes) every row, and one shuffle packs the rows into
+  per-cluster blobs (``pack_rows``).  That packed table is the one
+  table an artifact caches and persists — parquet-partitioned by
+  ``cluster_id``, so probing prunes partitions at the scan.
+  ``tables["assignment"]`` is a lazy, uncached row view
+  ``(cluster_id, id, vec | codes)`` exploded from the blobs
+  (``row_view``).  Appends and deletes work on blobs
+  (``ivf_append``, ``ivf_delete``).
 - **search**: each query selects its ``nprobe`` nearest centroids
   (float64 L2, ties by cluster id).  An index under
   ``broadcast_threshold`` is packed and broadcast once
@@ -23,7 +27,7 @@ re-design (SURVEY.md §7.1 step 6):
   one merge ranks them by (dist, id).
 
 Optional ``codec`` (SQ8/PQ from operators.quant) stores compressed codes
-in the assignment table; the searcher decodes inside the distance
+in the blobs; the searcher decodes inside the distance
 kernel, so memory/scan cost matches the reference's compressed indexes.
 
 Cosine is handled FAISS-style: vectors and queries are L2-normalized at
@@ -39,6 +43,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -50,11 +55,7 @@ from vectordb_retrieval_spark.functions.distance import (
     normalize_rows,
     pairwise_distances,
 )
-from vectordb_retrieval_spark.functions.kernels import (
-    pack_assignment,
-    packed_assignment_cached,
-    packed_shm_cached,
-)
+from vectordb_retrieval_spark.functions.kernels import packed_shm_cached
 from vectordb_retrieval_spark.operators import serving
 from vectordb_retrieval_spark.operators.quant import codes_type, lloyd_kmeans
 from vectordb_retrieval_spark.operators.searcher import Searcher
@@ -101,8 +102,17 @@ TRAIN_POINTS_PER_CENTROID = 256
 
 
 def _sampled_kmeans_train(
-    base: DataFrame, nlist: int, seed: int, max_iter: int, init_mode: str
-) -> np.ndarray:
+    base: DataFrame,
+    nlist: int,
+    seed: int,
+    max_iter: int,
+    init_mode: str,
+    with_sizes: bool = False,
+):
+    """The trained centroids; ``with_sizes`` also returns the blob
+    placement's rows-per-centroid estimate: the sample's counts, scaled
+    when the sample is not the whole table by its k-minimum-values table
+    size (k − 1) / u_k, u_k the k-th smallest hash in [0, 1)."""
     n_train = TRAIN_POINTS_PER_CENTROID * nlist
     # The driver-collect cell gate (advisor r12: nlist=1024 on 1536-d
     # embeddings must not collect ~3 GiB ungated) is enforced INSIDE
@@ -124,22 +134,31 @@ def _sampled_kmeans_train(
         ),
     )
     pdf = (
-        base.select("id", "vec")
-        .orderBy(F.xxhash64(F.col("id"), F.lit(int(seed))), F.col("id"))
+        base.select("id", "vec", F.xxhash64("id", F.lit(int(seed))).alias("h"))
+        .orderBy("h", "id")
         .limit(n_train)
         .filter(
             F.assert_true(
                 F.size("vec") <= F.lit(int(max_dim)), gate_msg
             ).isNull()
         )
-        .select("vec")
+        .select("vec", "h")
         .toPandas()
     )
     if len(pdf) == 0:
         raise ValueError("IVF build: empty base table")
     mat = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
     init = "++" if init_mode in ("k-means||", "k-means++", "++") else "random"
-    return lloyd_kmeans(mat, nlist, seed, iters=max_iter, init=init)
+    cents = lloyd_kmeans(mat, nlist, seed, iters=max_iter, init=init)
+    if not with_sizes:
+        return cents
+    sizes = np.bincount(
+        assign_nearest(mat.astype(np.float32), cents), minlength=len(cents)
+    )
+    if len(pdf) == n_train > 1:
+        u_k = (pdf["h"].iloc[-1] + 2.0**63) / 2.0**64  # the largest hash, in [0, 1)
+        sizes = sizes * max(1.0, (n_train - 1) / u_k / n_train)
+    return cents, sizes
 
 
 def _assign_df(
@@ -192,8 +211,306 @@ def _assign_df(
     return base.mapInPandas(kernel, schema=schema)
 
 
+# The packed blob table, the one table an IVF-family artifact caches and
+# persists (``tables["packed"]``): one row per blob of at most BLOB_ROWS
+# rows of one cluster, ``ids`` holding its n int64 ids and ``payload``
+# its (n, width) matrix of dtype ``dt`` (float32 for vectors and float
+# codes such as PCA coordinates, uint8 for codes that fit a byte, else
+# int16), so a scan task reads a blob as two ``np.frombuffer`` views.
+# ``sub`` ids tell one cluster's blobs apart (unique, not dense).  The
+# cap spreads a hot cluster over several scan tasks (the fragment merge
+# hides the split) and keeps blobs far under Arrow's 2 GB cell limit.
+BLOB_ROWS = 512
+PACKED_SCHEMA = (
+    "cluster_id long, n long, ids binary, payload binary, width int,"
+    " dt string, sub int"
+)
+
+
+def _blob_frame(cids, ids, mat, r=None, sub0=0, stride=1, cap=BLOB_ROWS):
+    """The numpy packer: rows ``(cids, ids, mat)`` as ``PACKED_SCHEMA``
+    rows.  Each cluster's rows, in input order, are cut into runs of at
+    most ``cap``; a cluster's j-th blob gets sub ``sub0 + stride · j``.
+    With ``r`` (member → centroid distances) each blob gets its ``rmax``."""
+    if mat.dtype.kind == "f":
+        mat, dt = mat.astype(np.float32), "f4"
+    elif mat.size == 0 or (mat.min() >= 0 and mat.max() < 256):
+        mat, dt = mat.astype(np.uint8), "u1"
+    else:
+        mat, dt = mat.astype(np.int16), "i2"
+    order = np.argsort(cids, kind="stable")
+    cids, ids, mat = cids[order], ids[order], mat[order]
+    j = np.arange(len(cids)) - np.searchsorted(cids, cids)  # row within cluster
+    s = np.flatnonzero(j % cap == 0)
+    e = np.r_[s[1:], len(cids)]
+    out = pd.DataFrame(
+        {
+            "cluster_id": cids[s].astype(np.int64),
+            "n": (e - s).astype(np.int64),
+            "ids": [ids[a:b].tobytes() for a, b in zip(s, e)],
+            "payload": [mat[a:b].tobytes() for a, b in zip(s, e)],
+            "width": np.full(len(s), mat.shape[1], dtype=np.int32),
+            "dt": [dt] * len(s),
+            "sub": (sub0 + stride * (j[s] // cap)).astype(np.int32),
+        }
+    )
+    if r is not None:
+        out["rmax"] = np.maximum.reduceat(r[order], s) if len(s) else []
+    return out
+
+
+def _murmur3_int(x: np.ndarray) -> np.ndarray:
+    """Spark's ``hash`` of int values (Murmur3_x86_32.hashInt, seed
+    42), as int32."""
+    m = np.uint64(0xFFFFFFFF)
+
+    def rotl(v, r):
+        return ((v << np.uint64(r)) | (v >> np.uint64(32 - r))) & m
+
+    k = ((x.astype(np.uint64) & m) * np.uint64(0xCC9E2D51)) & m
+    k = (rotl(k, 15) * np.uint64(0x1B873593)) & m
+    h = (rotl(np.uint64(42) ^ k, 13) * np.uint64(5) + np.uint64(0xE6546B64)) & m
+    h ^= np.uint64(4)
+    h = ((h ^ (h >> np.uint64(16))) * np.uint64(0x85EBCA6B)) & m
+    h = ((h ^ (h >> np.uint64(13))) * np.uint64(0xC2B2AE35)) & m
+    h ^= h >> np.uint64(16)
+    return h.astype(np.uint32).view(np.int32)
+
+
+def _preimages(n: int) -> np.ndarray:
+    """For each partition p < n, the smallest int b ≥ 0 that
+    ``repartition(n, col)`` sends to p (pmod(hash(b), n) == p): a row
+    whose placement column holds b lands in partition p, so hash
+    placement becomes a chosen one.  Computed in numpy: evaluating
+    Spark's ``hash`` over a driver-built frame costs a job."""
+    pre = np.full(n, -1, dtype=np.int64)
+    lo = 0
+    while (pre < 0).any():
+        b = np.arange(lo, lo + 64 * n, dtype=np.int64)
+        part, first = np.unique(np.mod(_murmur3_int(b), n), return_index=True)
+        miss = pre[part] < 0
+        pre[part[miss]] = b[first[miss]]
+        lo += 64 * n
+    return pre
+
+
+def _placement(sizes, nlist: int, n_parts: int, cap: int):
+    """The placement column of ``pack_rows``' shuffle.  A cluster of
+    (estimated) n rows is cut into ceil(n / cap) units and its rows are
+    spread over them by id hash; units are bin-packed greedily into
+    ``n_parts`` partitions by n² weight, heaviest first (scan work per
+    unit is rows × probing queries, and popularity tracks mass for
+    distribution-matched queries, so n² is the static proxy).  Without
+    sizes every cluster is one unit of weight 1.  One SQL expression:
+    the per-cluster tables are array literals."""
+    est = np.ones(nlist) if sizes is None else np.asarray(sizes, dtype=np.float64)
+    groups = np.maximum(1, np.ceil(est / cap)).astype(np.int64)
+    offs = np.r_[0, np.cumsum(groups)[:-1]]
+    unit_c = np.repeat(np.arange(nlist), groups)
+    weight = (est / groups)[unit_c] ** 2
+    pre = _preimages(n_parts)
+    loads = np.zeros(n_parts)
+    bucket = np.empty(len(unit_c), dtype=np.int64)
+    for u in np.lexsort((unit_c, -weight)):
+        b = int(np.argmin(loads))
+        bucket[u] = pre[b]
+        loads[b] += weight[u]
+
+    def arr(a) -> str:
+        return "array(" + ", ".join(str(int(x)) for x in a) + ")"
+
+    return F.expr(
+        f"cast(element_at({arr(bucket)}, cast(element_at({arr(offs)},"
+        f" cluster_id + 1) + pmod(xxhash64(id), element_at({arr(groups)},"
+        " cluster_id + 1)) + 1 as int)) as int)"
+    )
+
+
+def pack_rows(rows, payload_col, nlist: int, sizes=None, sub0=0, cap=BLOB_ROWS):
+    """A row table ``(cluster_id, id, payload_col[, r])`` as a lazy blob
+    table (``PACKED_SCHEMA``, plus ``rmax`` with ``r``): one shuffle
+    places the rows (``_placement``; ``sizes``, rows per cluster, is an
+    estimate that steers speed only) and one ``_blob_frame`` per
+    partition packs them, sub ids offset by ``sub0`` plus the partition
+    index and strided by the partition count so no two partitions'
+    blobs collide."""
+    n_parts = max(1, rows.sparkSession.sparkContext.defaultParallelism)
+    extra = ["r"] if "r" in rows.columns else []
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        parts = [p for p in batches if len(p)]
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True)
+        yield _blob_frame(
+            pdf["cluster_id"].to_numpy(dtype=np.int64),
+            pdf["id"].to_numpy(dtype=np.int64),
+            np.vstack(pdf[payload_col].to_numpy()),
+            pdf["r"].to_numpy() if extra else None,
+            sub0 + TaskContext.get().partitionId(),
+            n_parts,
+            cap,
+        )
+
+    return (
+        rows.select("cluster_id", "id", payload_col, *extra)
+        .repartition(n_parts, _placement(sizes, nlist, n_parts, cap))
+        .mapInPandas(kernel, schema=PACKED_SCHEMA + (", rmax double" if extra else ""))
+    )
+
+
+def _blob_meta(blobs: DataFrame, nlist: int):
+    """ONE collect of the blobs' ``(cluster_id, sub, n[, rmax])``
+    projection: their ``_blob_stats`` (rows per cluster, first unused
+    sub id) and, when blobs carry ``rmax``, the per-cluster covering
+    radii (else None)."""
+    has_r = "rmax" in blobs.columns
+    cols = ["cluster_id", "sub", "n"] + (["rmax"] if has_r else [])
+    meta = blobs.select(*cols).toPandas()
+    cid = meta["cluster_id"].to_numpy(dtype=np.int64)
+    sizes = np.bincount(cid, meta["n"].to_numpy(np.float64), nlist).astype(np.int64)
+    radii = None
+    if has_r:
+        radii = np.zeros(nlist)
+        np.fmax.at(radii, cid, meta["rmax"].to_numpy())  # appended blobs: NaN
+    return (sizes, int(meta["sub"].max()) + 1 if len(meta) else 0), radii
+
+
+def _materialize(blobs: DataFrame, nlist: int):
+    """``blobs`` cached, the cache filled by ``_blob_meta``'s collect:
+    (cached table, stats, radii).  The cache is registered from a clone
+    of the session with AQE off, leaving the caller's conf untouched:
+    the shuffle has an explicit partition count, so there is nothing to
+    adapt, and an adaptive cached plan fills in three jobs (shuffle,
+    table-cache stage, result) where a static one fills in one."""
+    static = blobs.sparkSession._jsparkSession.cloneSession()
+    static.conf().set("spark.sql.adaptive.enabled", "false")
+    plan = blobs._jdf.queryExecution().logical()
+    blobs.sparkSession._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        static, plan
+    ).cache()
+    return (blobs, *_blob_meta(blobs, nlist))
+
+
+def blob_stats(art: IndexArtifact):
+    """``art``'s ``_blob_stats``, memoized: runtime-only, set by the
+    build and every derivative; a loaded artifact pays one collect."""
+    if "_blob_stats" not in art.params:
+        nlist = len(art.params["centroids"])
+        art.params["_blob_stats"] = _blob_meta(art.tables["packed"], nlist)[0]
+    return art.params["_blob_stats"]
+
+
+def row_view(packed: DataFrame, codec) -> DataFrame:
+    """The row view ``(cluster_id, id, vec | codes)`` of a packed
+    table, exploded from its blobs by one kernel.  Lazy and never
+    cached: readers that want rows (tests, ``ivf_fixed_assign``, row
+    counts) pay one pass over the blobs."""
+    col = "vec" if codec is None else "codes"
+    ctype = "array<float>" if codec is None else codes_type(codec)
+    out_dt = np.float32 if ctype == "array<float>" else np.int16
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ns = pdf["n"].to_numpy(dtype=np.int64)
+            blobs = zip(pdf["ids"], pdf["payload"], pdf["dt"], ns, pdf["width"])
+            ids, mats = zip(
+                *(
+                    (np.frombuffer(b, np.int64), np.frombuffer(p, dt).reshape(n, w))
+                    for b, p, dt, n, w in blobs
+                )
+            )
+            yield pd.DataFrame(
+                {
+                    "cluster_id": np.repeat(pdf["cluster_id"].to_numpy(np.int32), ns),
+                    "id": np.concatenate(ids),
+                    col: list(np.vstack(mats).astype(out_dt)),
+                }
+            )
+
+    schema = f"cluster_id int, id long, {col} {ctype}"
+    cols = ("cluster_id", "n", "ids", "payload", "width", "dt")
+    return packed.select(*cols).mapInPandas(kernel, schema=schema)
+
+
+def drop_ids(packed: DataFrame, ids: np.ndarray) -> DataFrame:
+    """The blob filter of ``ivf_delete`` and
+    ``persistence.compact_partitions``: ``packed`` (any column order)
+    without the rows whose id is in ``ids``; blobs left empty are
+    dropped.  Lazy."""
+    bc = packed.sparkSession.sparkContext.broadcast(
+        np.unique(np.asarray(ids, dtype=np.int64))
+    )
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        gone = bc.value
+        for pdf in batches:
+            keep_blob = np.ones(len(pdf), dtype=bool)
+            pdf = pdf.copy()
+            for i, (b, p, dt, w) in enumerate(
+                zip(pdf["ids"], pdf["payload"], pdf["dt"], pdf["width"])
+            ):
+                ids_i = np.frombuffer(b, dtype=np.int64)
+                keep = ~np.isin(ids_i, gone)
+                if keep.all():
+                    continue
+                keep_blob[i] = keep.any()
+                mat = np.frombuffer(p, dtype=dt).reshape(len(ids_i), w)
+                pdf.at[i, "ids"] = ids_i[keep].tobytes()
+                pdf.at[i, "payload"] = mat[keep].tobytes()
+                pdf.at[i, "n"] = int(keep.sum())
+            if keep_blob.any():
+                yield pdf[keep_blob]
+
+    return packed.mapInPandas(kernel, schema=packed.schema)
+
+
+def clusters_holding(packed: DataFrame, ids: np.ndarray) -> list[int]:
+    """The sorted cluster ids of the blobs of ``packed`` that hold an id
+    in ``ids``: one pass over ``(cluster_id, ids)``, payloads unread."""
+    gone = np.unique(np.asarray(ids, dtype=np.int64))
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            hit = [np.isin(np.frombuffer(b, np.int64), gone).any() for b in pdf["ids"]]
+            yield pdf.loc[np.asarray(hit, dtype=bool), ["cluster_id"]]
+
+    hits = packed.select(F.col("cluster_id").cast("long"), "ids")
+    rows = hits.mapInPandas(kernel, "cluster_id long").distinct().collect()
+    return sorted(r.cluster_id for r in rows)
+
+
+def _ivf_artifact(packed: DataFrame, stats, params, metadata) -> IndexArtifact:
+    """An IVF-family artifact over its packed table, with the row view
+    beside it and ``_blob_stats`` set."""
+    return IndexArtifact(
+        kind="ivf",
+        tables={"packed": packed, "assignment": row_view(packed, params["codec"])},
+        params={**params, "_blob_stats": stats},
+        metadata=metadata,
+    )
+
+
+def loaded(art: IndexArtifact) -> IndexArtifact:
+    """An IVF-family artifact read back from disk: its packed table,
+    packed once here by ``pack_rows`` when the save holds only the row
+    table, and the row view beside it."""
+    codec = art.params.get("codec")
+    packed = art.tables.get("packed")
+    if packed is None:
+        nlist = len(art.params["centroids"])
+        col = "vec" if codec is None else "codes"
+        packed, art.params["_blob_stats"], _ = _materialize(
+            pack_rows(art.tables["assignment"], col, nlist), nlist
+        )
+    art.tables = {"packed": packed, "assignment": row_view(packed, codec)}
+    return art
+
+
 class IVFIndexer:
-    """KMeans coarse quantizer + cluster-assigned base table."""
+    """KMeans coarse quantizer + the packed blob table."""
 
     def __init__(
         self,
@@ -219,18 +536,20 @@ class IVFIndexer:
         vec_col: str,
         train: bool,
         with_dist: bool = False,
-    ) -> DataFrame:
+    ):
         """The assignment lineage both builds share: train the centroids
         (``train``; else the fixed ones) and fit the codec if unfitted,
         both on the normalized (cosine) vectors, then one fused
-        normalize → assign → encode pass.  Lazy: the caller's
-        materializing action runs it."""
+        normalize → assign → encode pass.  Returns the lazy row table
+        and the cluster sizes the training sample estimates (None
+        without training)."""
         base = base_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
         norm = self.metric == "cosine"
         prepped = _norm_df(base, "vec") if norm else base
+        sizes = None
         if train:
-            self.centroids = _sampled_kmeans_train(
-                prepped, self.nlist, self.seed, self.max_iter, self.init_mode
+            self.centroids, sizes = _sampled_kmeans_train(
+                prepped, self.nlist, self.seed, self.max_iter, self.init_mode, True
             )
         if self.codec is not None and not self.codec.is_fitted():
             # plan-invariant codecs (SQ8's exact min/max) calibrate on
@@ -246,94 +565,59 @@ class IVFIndexer:
                 else _assign_df(base, self.centroids, normalize=norm)
             )
             self.codec.fit(fit_src, vec_col="vec")
-        return _assign_df(
+        rows = _assign_df(
             base, self.centroids, with_dist, normalize=norm, codec=self.codec
         )
+        return rows, sizes
 
     def build(
         self, base_df: DataFrame, id_col: str = "id", vec_col: str = "vec"
     ) -> IndexArtifact:
-        with_dist = self._radii_in_assign and self.codec is None
-        assigned = self._assignment(
-            base_df, id_col, vec_col, train=True, with_dist=with_dist
+        return self._build(
+            base_df,
+            id_col,
+            vec_col,
+            True,
+            {"nlist": self.nlist, "seed": self.seed, "metric": self.metric},
         )
-        # partition by cluster so probe joins scan only probed clusters;
-        # cache + eager materialization so the build lineage (normalize
-        # → assign → encode) runs exactly once AT BUILD TIME (build
-        # timing stays honest, searches never re-run it) — the persisted
-        # form (save_artifact → parquet partitioned by cluster_id) is
-        # the cluster-scale equivalent.  The materializing action is a
-        # per-cluster stats aggregate, not a bare count: the cluster
-        # sizes feed pack_assignment's placement (sparing it its own
-        # collect) and, for cluster-pruned builds, max(r) IS the
-        # covering-radii aggregate — one action does all three jobs.
-        # (r14: a shuffle-free mapInPandas partial-fold variant cut 1-2
-        # AQE jobs here but interleave-measured ~0.2 s SLOWER — the
-        # Python-worker stage costs more than the tiny JVM map-side-
-        # combined exchange it removed — so the groupBy stays.)
-        assigned = assigned.repartition("cluster_id").cache()
-        aggs = [F.count(F.lit(1)).alias("n")]
-        if with_dist:
-            aggs.append(F.max("r").alias("rmax"))
-        stats = assigned.groupBy("cluster_id").agg(*aggs).collect()
-        sizes = {int(r["cluster_id"]): int(r["n"]) for r in stats}
-        radii = None
-        if with_dist:
-            radii = np.zeros(len(self.centroids))
-            for r in stats:
-                radii[r["cluster_id"]] = r["rmax"]
-            # strip r from the exposed assignment (a projection over the
-            # same cache — downstream append/delete/pack schemas stay
-            # radius-free)
-            assigned = assigned.drop("r")
-        # packed per-cluster blobs — the partitioned scan's transport
-        # format (kernels.pack_assignment, returned cached + placed) and
-        # the fast source for the broadcast-serving collect; persisted
-        # parquet-partitioned by cluster_id so probed searches prune
-        # blob partitions on disk
-        packed = pack_assignment(
-            assigned,
-            "vec" if self.codec is None else "codes",
-            self.codec,
-            cluster_sizes=sizes,
-            # the cache above IS cluster_id-hash-partitioned; the pack
-            # kernel reads it in place instead of re-shuffling the
-            # whole payload (guide §2.4)
-            pre_partitioned=True,
+
+    def _build(
+        self, base_df: DataFrame, id_col: str, vec_col: str, train: bool, metadata: dict
+    ) -> IndexArtifact:
+        """Train (``train``), fit the codec, then one assign + encode
+        pass and one shuffle into blobs (``pack_rows``), cached and
+        filled by one collect of the blob metadata (``_materialize``),
+        which also gives the cluster sizes and, for cluster-pruned
+        builds, the covering radii (the assign kernel's member →
+        centroid distances ride into each blob's ``rmax``).  Placement
+        uses the sizes the training sample estimates.  The persisted
+        form is the same table, parquet-partitioned by cluster_id so
+        probed searches prune blob partitions on disk."""
+        rows, sizes = self._assignment(
+            base_df,
+            id_col,
+            vec_col,
+            train,
+            with_dist=self._radii_in_assign and self.codec is None,
         )
-        art = IndexArtifact(
-            kind="ivf",
-            tables={"assignment": assigned, "packed": packed},
-            params={
-                "centroids": self.centroids,
-                "metric": self.metric,
-                "codec": self.codec,
-            },
-            metadata={
-                "nlist": self.nlist,
-                "seed": self.seed,
-                "metric": self.metric,
-                "partition_by": {
-                    "assignment": ["cluster_id"],
-                    "packed": ["cluster_id"],
-                },
-            },
+        nlist = len(self.centroids)
+        packed, stats, radii = _materialize(
+            pack_rows(rows, "vec" if self.codec is None else "codes", nlist, sizes),
+            nlist,
         )
+        params = {"centroids": self.centroids, "metric": self.metric, "codec": self.codec}
         if radii is not None:
-            art.params["radii"] = radii
-        # driver-side cluster sizes (nlist ints — driver-small at any
-        # scale): the partitioned cluster-pruned search derives its
-        # fused-plan admission bound from them without an extra action.
-        # Underscore param: runtime-only, dropped by append/delete
-        # derivatives (whose sizes change) and never persisted — loaded
-        # or derived artifacts re-derive it from their own packed
-        # metadata (see cluster_pruned._cluster_sizes_cached).
-        art.params["_cluster_sizes"] = sizes
-        return art
+            params["radii"] = radii
+        return _ivf_artifact(
+            packed,
+            stats,
+            params,
+            {**metadata, "partition_by": {"packed": ["cluster_id"]}},
+        )
 
     # subclass hook (ClusterPrunedExactIndexer): compute covering radii
-    # inside the assignment kernel + materializing aggregate instead of
-    # a separate post-build pass
+    # inside the assignment kernel + the blob metadata collect instead
+    # of a separate post-build pass
     _radii_in_assign = False
 
 
@@ -468,7 +752,9 @@ def lloyd_refine(
 
 class FixedCentroidIVFIndexer(IVFIndexer):
     """IVF with caller-supplied centroids (no KMeans) — used for
-    SQL-reproducible correctness checks and for pre-trained quantizers."""
+    SQL-reproducible correctness checks and for pre-trained quantizers.
+    With no training sample, blob placement treats every cluster as
+    one unit."""
 
     def __init__(self, centroids: np.ndarray, metric: str = "l2", codec=None):
         super().__init__(nlist=len(centroids), metric=metric, codec=codec)
@@ -477,22 +763,23 @@ class FixedCentroidIVFIndexer(IVFIndexer):
     def build(
         self, base_df: DataFrame, id_col: str = "id", vec_col: str = "vec"
     ) -> IndexArtifact:
-        assigned = self._assignment(base_df, id_col, vec_col, train=False)
-        assigned = assigned.repartition("cluster_id").cache()
-        return IndexArtifact(
-            kind="ivf",
-            tables={"assignment": assigned},
-            params={
-                "centroids": self.centroids,
-                "metric": self.metric,
-                "codec": self.codec,
-                # in-memory cache above is cluster_id-hash-partitioned:
-                # a lazy pack may read it in place (runtime-only marker,
-                # see packed_assignment_cached)
-                "_pack_pre_partitioned": True,
-            },
-            metadata={"nlist": self.nlist, "metric": self.metric, "fixed": True},
+        return self._build(
+            base_df,
+            id_col,
+            vec_col,
+            False,
+            {"nlist": self.nlist, "metric": self.metric, "fixed": True},
         )
+
+
+def _row_arrays(pdf: pd.DataFrame, col: str):
+    """(cluster ids, ids, payload matrix) of a collected row frame."""
+    mat = np.vstack(pdf[col].to_numpy()) if len(pdf) else np.zeros((0, 0))
+    return (
+        pdf["cluster_id"].to_numpy(dtype=np.int64),
+        pdf["id"].to_numpy(dtype=np.int64),
+        mat,
+    )
 
 
 def ivf_append(
@@ -502,9 +789,9 @@ def ivf_append(
     vec_col: str = "vec",
 ) -> IndexArtifact:
     """Incremental ingestion: assign new vectors to the artifact's
-    EXISTING coarse quantizer and append them to the assignment table —
-    no retrain, no rebuild (FAISS ``index.add`` semantics).  The new
-    rows run through one fused ``_assign_df`` pass: normalize (cosine),
+    EXISTING coarse quantizer and add them to the packed table — no
+    retrain, no rebuild (FAISS ``index.add`` semantics).  The new rows
+    run through one fused ``_assign_df`` pass: normalize (cosine),
     assign, encode with the artifact's fitted codec.
 
     Eager at construction: the derivative is materialized before it
@@ -517,21 +804,22 @@ def ivf_append(
       at most room + 1 new ``(cluster_id, id, codes)`` rows; the driver
       appends them per cluster to the predecessor's bundle and seeds
       the derivative's ``_serving_bc`` with it (fresh broadcast and
-      share_key), so the next read packs nothing.  The assignment
-      table is the chain's root table ∪ one driver-built frame of every
-      row appended since that root (``_append_chain``): no shuffle, no
-      cache, and the plan stays two children deep along a foreachBatch
-      chain.
+      share_key), so the next read packs nothing.  The packed table is
+      the chain's root table ∪ one driver-built blob frame of every row
+      appended since that root (``_append_chain``; the numpy packer,
+      sub ids past the root's): no shuffle, no cache, and the plan
+      stays two children deep along a foreachBatch chain.
     - **rebuild** — every other case (no live broadcast, or more new
-      rows than the room): the union with the previous table is
-      repartitioned on cluster_id and cached.  This is the at-scale
-      plan: on a persisted index it is a partition-directory file
-      append, existing data is never rewritten.
+      rows than the room): the predecessor's blobs ∪ the new rows
+      packed (``pack_rows``, sub ids past the predecessor's), cached.
+      The old rows are not shuffled again; on a persisted index this is
+      a partition-directory file append.
 
     Centroids drift as the corpus grows; rebuild cadence is the caller's
     policy knob (same trade-off the reference's batch builds imply)."""
     cents = artifact.params["centroids"]
     codec = artifact.params["codec"]
+    col = "vec" if codec is None else "codes"
     spark = new_df.sparkSession
     src = new_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
 
@@ -540,12 +828,14 @@ def ivf_append(
             df, cents, normalize=artifact.params["metric"] == "cosine", codec=codec
         )
 
-    prev = artifact.tables["assignment"]
+    prev = artifact.tables["packed"]
+    stats = blob_stats(artifact)
     # (root table, whether it is an appended artifact's cache, the rows
-    # appended since it as a pandas frame) — runtime-only, like every
-    # "_" param
-    root, root_appended, rows = artifact.params.get(
-        "_append_chain", (prev, bool(artifact.metadata.get("appended")), None)
+    # appended since it as a pandas frame, the root's _blob_stats) —
+    # runtime-only, like every "_" param
+    root, root_appended, rows, root_stats = artifact.params.get(
+        "_append_chain",
+        (prev, bool(artifact.metadata.get("appended")), None, stats),
     )
     params = {k: v for k, v in artifact.params.items() if not k.startswith("_")}
     metadata = {**artifact.metadata, "appended": True}
@@ -560,8 +850,7 @@ def ivf_append(
         # one Python runner (a coalesce above the kernel would start one
         # per input partition, in series) and no shuffle to a single
         # partition — and it stops reading once room + 1 rows are out
-        add = assigned(src.coalesce(1))
-        got = add.limit(max(room, 0) + 1).toPandas()
+        got = assigned(src.coalesce(1)).limit(max(room, 0) + 1).toPandas()
         if len(got) > room:
             log.debug(
                 "ivf_append: rebuild, %d+ new rows exceed the serving room of %d",
@@ -570,40 +859,39 @@ def ivf_append(
             )
         else:
             log.debug("ivf_append: carry-forward of %d rows", len(got))
-            col = "vec" if codec is None else "codes"
-            bundle = idx.appended(
-                got["cluster_id"].to_numpy(dtype=np.int64),
-                got["id"].to_numpy(dtype=np.int64),
-                np.vstack(got[col].to_numpy()) if len(got) else np.zeros((0, 0)),
-            )
+            bundle = idx.appended(*_row_arrays(got, col))
             rows = got if rows is None else pd.concat([rows, got], ignore_index=True)
+            cids, ids, mat = _row_arrays(rows, col)
             params["_serving_bc"] = transport.IndexBroadcast(
                 row_bytes * sum(len(i) for i in bundle.ids)
             ).serve(spark, bundle, memo.threshold)
-            params["_append_chain"] = (root, root_appended, rows)
-            frame = spark.createDataFrame(rows, add.schema)
-            return IndexArtifact(
-                kind="ivf",
-                tables={"assignment": root.unionByName(frame)},
-                params=params,
-                metadata=metadata,
+            params["_append_chain"] = (root, root_appended, rows, root_stats)
+            sizes0, sub0 = root_stats
+            blobs = _blob_frame(cids, ids, mat, sub0=sub0)
+            frame = spark.createDataFrame(blobs, PACKED_SCHEMA)
+            stats = (
+                sizes0 + np.bincount(cids, minlength=len(sizes0)),
+                int(blobs["sub"].max()) + 1 if len(blobs) else sub0,
             )
-    merged = prev.unionByName(assigned(src)).repartition("cluster_id").cache()
-    merged.count()
+            return _ivf_artifact(
+                root.unionByName(frame, allowMissingColumns=True),
+                stats,
+                params,
+                metadata,
+            )
+    new = pack_rows(assigned(src), col, len(cents), sub0=stats[1])
+    merged, stats, _ = _materialize(
+        prev.unionByName(new, allowMissingColumns=True), len(cents)
+    )
     # Continuous-ingestion memory bound: once the merged table is
     # materialized, the chain root's cached copy is dead weight — a
     # foreachBatch ivf_append chain would otherwise pin one full cached
-    # assignment per micro-batch.  Only intermediate (appended) tables
-    # are evicted; the caller's original build keeps its cache (they may
+    # table per micro-batch.  Only intermediate (appended) tables are
+    # evicted; the caller's original build keeps its cache (they may
     # still be serving it).
     if root_appended:
         root.unpersist()
-    return IndexArtifact(
-        kind="ivf",
-        tables={"assignment": merged},
-        params=params,
-        metadata=metadata,
-    )
+    return _ivf_artifact(merged, stats, params, metadata)
 
 
 def ivf_delete(
@@ -611,29 +899,27 @@ def ivf_delete(
     ids_df: DataFrame,
     id_col: str = "id",
 ) -> IndexArtifact:
-    """Remove vectors from the index by id — a broadcast anti-join on
-    the assignment table (delete sets are tiny relative to the corpus).
+    """Remove vectors from the index by id: the delete set is collected
+    (delete sets are tiny relative to the corpus) and ``drop_ids``
+    filters it out of every blob; the result is cached.
 
     Scale shape: with a persisted partitioned index this is the classic
-    tombstone/compact trade — the anti-join applied at read time is the
+    tombstone/compact trade — the filter applied at read time is the
     tombstone form; rewriting only the affected cluster_id partitions
-    (never the whole index) is the compaction.  Centroids are untouched:
-    deletion never degrades assignment of the survivors."""
-    dels = ids_df.select(F.col(id_col).alias("id")).distinct()
-    kept = (
-        artifact.tables["assignment"]
-        .join(F.broadcast(dels), "id", "left_anti")
-        .repartition("cluster_id")
-        .cache()
+    (never the whole index, ``persistence.compact_partitions``) is the
+    compaction.  Centroids are untouched: deletion never degrades
+    assignment of the survivors."""
+    gone = ids_df.select(F.col(id_col).alias("id")).toPandas()["id"].to_numpy()
+    kept, stats, _ = _materialize(
+        drop_ids(artifact.tables["packed"], gone), len(artifact.params["centroids"])
     )
-    kept.count()
-    return IndexArtifact(
-        kind="ivf",
-        tables={"assignment": kept},
+    return _ivf_artifact(
+        kept,
+        stats,
         # drop runtime-only "_" params — a serving broadcast packed
         # before the delete would still carry the deleted rows
-        params={k: v for k, v in artifact.params.items() if not k.startswith("_")},
-        metadata={**artifact.metadata, "deleted": True},
+        {k: v for k, v in artifact.params.items() if not k.startswith("_")},
+        {**artifact.metadata, "deleted": True},
     )
 
 
@@ -656,8 +942,8 @@ def _decoded_shm(root: str, cid: int, sub: int, raw, cdc, metric: str):
     full) — caller decodes per call."""
     n = raw.shape[0]
     if n == 0:
-        # pack_assignment/pack_clusters never emit empty clusters, but
-        # this function guards its own input: a zero-row blob must not
+        # the packers never emit empty blobs, but this function guards
+        # its own input: a zero-row blob must not
         # reach the width division below
         return None
 
@@ -699,8 +985,8 @@ def packed_units(
     shm_root: str | None,
     n_queries: int,
 ) -> DataFrame:
-    """The probed unit rows of a packed assignment table (see
-    ``kernels.pack_assignment``) for ``packed_scan_unit``: blob rows, or
+    """The probed unit rows of a packed table (``PACKED_SCHEMA``) for
+    ``packed_scan_unit``: blob rows, or
     with ``shm_root`` the blob-free metadata rows of
     ``kernels.packed_shm_cached`` (a few hundred ints per search; the
     unit maps blob bytes node-locally).
@@ -912,7 +1198,7 @@ class IVFSearcher(Searcher):
         PackedClusters view, the partitioned scan through a per-cluster
         ``np.isin`` mask.  The id set is collected + broadcast once per
         filter frame (WeakKey memo).  At 100 TB scale prefer predicates
-        that prune at the source (partition columns on the assignment
+        that prune at the source (partition columns on the packed
         table); an id allowlist broadcast is the general fallback.
 
         Recall note: under a selective filter the allowed neighbors are
@@ -989,7 +1275,7 @@ class IVFSearcher(Searcher):
         shm = packed_shm_cached(art) if self.node_local_cache else None
         shm_root = None if shm is None else shm[0]
         units = packed_units(
-            packed_assignment_cached(art) if shm is None else shm[1],
+            art.tables["packed"] if shm is None else shm[1],
             probe_map,
             shm_root,
             len(qmat),

@@ -25,8 +25,8 @@ from vectordb_retrieval_spark.functions.distance import (
 from vectordb_retrieval_spark.operators.quant import PQCodec, encode_df
 from vectordb_retrieval_spark.operators.searcher import Searcher
 from vectordb_retrieval_spark.operators.serving import (
+    PackedClusters,
     broadcast_probe_search,
-    pack_clusters,
     packed_index_bytes,
     partition_driven_job,
 )
@@ -107,11 +107,14 @@ class PQADCSearcher(Searcher):
             return packed_index_bytes(art.tables["codes"].count(), codec, m * dsub)
 
         def pack(_threshold):
-            packed = pack_clusters(
-                art.tables["codes"].withColumn("cluster_id", F.lit(0)),
-                "codes",
-                None,
-                codec,
+            # the code table as one cluster of a PackedClusters bundle
+            pdf = art.tables["codes"].select("id", "codes").toPandas()
+            packed = PackedClusters(
+                np.zeros(0, dtype=np.int64), [], [], codec, None
+            ).appended(
+                np.zeros(len(pdf), dtype=np.int64),
+                pdf["id"].to_numpy(dtype=np.int64),
+                np.vstack(pdf["codes"].to_numpy()),
             )
             return packed, packed.nbytes(), None
 

@@ -117,7 +117,7 @@ class SQfp16Codec:
 
     def decode(self, codes: np.ndarray) -> np.ndarray:
         # serving may hand back uint8 when a cluster's int16 codes all
-        # happened to fit [0, 256) (pack_clusters' SQ8/PQ fast path);
+        # happened to fit [0, 256) (the packers' uint8 narrowing);
         # the astype restores the original int16 values either way
         raw = np.ascontiguousarray(np.asarray(codes).astype(np.int16))
         return raw.view(np.float16).astype(np.float64)

@@ -245,11 +245,10 @@ class PackedClusters:
     ) -> "PackedClusters":
         """A new bundle: this one with the rows ``(cids, ids, payload)``
         appended to their clusters (a cluster new to the index joins in
-        cluster-id order) — the bundle ``pack_clusters`` (this, on an
-        empty bundle) collects from the appended table, up to row order
-        within a cluster, which no result depends on (distances are per
-        row, selection ties break on (dist, id)).  Untouched clusters share their arrays
-        with this bundle; the new one gets a fresh share_key.  Integer
+        cluster-id order, row order within a cluster kept, which no
+        result depends on: distances are per row, selection ties break
+        on (dist, id)).  Untouched clusters share their arrays with
+        this bundle; the new one gets a fresh share_key.  Integer
         codes that all fit a byte (SQ8, PQ with ksub <= 256) are stored
         as uint8; float payloads (flat vectors, PCA coordinates) keep
         their dtype."""
@@ -329,57 +328,27 @@ class PackedClusters:
         return got
 
 
-def pack_clusters(
-    assignment: DataFrame, payload_col: str, centroids, codec
-) -> PackedClusters:
-    """Collect an assignment/code table into a PackedClusters bundle.
-    Caller is responsible for the size gate (estimate first, collect
-    only under the threshold)."""
-    pdf = assignment.select("cluster_id", "id", payload_col).toPandas()
-    empty = PackedClusters(np.zeros(0, dtype=np.int64), [], [], codec, centroids)
-    return empty.appended(
-        pdf["cluster_id"].to_numpy(dtype=np.int64),
-        pdf["id"].to_numpy(dtype=np.int64),
-        np.vstack(pdf[payload_col].to_numpy()),
-    )
-
-
 def pack_clusters_from_packed(
     packed_df: DataFrame, centroids, codec
 ) -> PackedClusters:
-    """PackedClusters from a per-cluster blob table
-    (kernels.pack_assignment): one nlist-row collect + frombuffer views
-    per cluster, instead of re-assembling every Arrow list row of the
-    assignment table on the driver.  Same bundle, same cluster order
-    (ascending cluster_id), same dtypes as ``pack_clusters``."""
+    """PackedClusters from a packed blob table (``ivf.PACKED_SCHEMA``):
+    one collect of the blob rows, two frombuffer views per blob, and the
+    rows appended to an empty bundle (``appended``)."""
     rows = packed_df.select(
         "cluster_id", "n", "ids", "payload", "width", "dt"
     ).collect()
-    rows.sort(key=lambda r: r["cluster_id"])
-    cids: list[int] = []
-    ids: list[np.ndarray] = []
-    pays: list[np.ndarray] = []
-    for r in rows:
-        rid = np.frombuffer(bytes(r["ids"]), dtype=np.int64)
-        rp = np.frombuffer(bytes(r["payload"]), dtype=r["dt"]).reshape(
-            int(r["n"]), int(r["width"])
-        )
-        if cids and cids[-1] == r["cluster_id"]:
-            # sub-blob of the previous cluster (pack_assignment splits
-            # big clusters) — merge back into one per-cluster matrix
-            ids[-1] = np.concatenate([ids[-1], rid])
-            pays[-1] = np.concatenate([pays[-1], rp])
-        else:
-            cids.append(int(r["cluster_id"]))
-            ids.append(rid)
-            pays.append(rp)
-    return PackedClusters(
-        np.asarray(cids, dtype=np.int64),
-        ids,
-        pays,
-        codec,
-        centroids,
-        share_key=uuid.uuid4().hex,
+    empty = PackedClusters(np.zeros(0, dtype=np.int64), [], [], codec, centroids)
+    if not rows:
+        return empty
+    return empty.appended(
+        np.repeat([r["cluster_id"] for r in rows], [r["n"] for r in rows]),
+        np.concatenate([np.frombuffer(r["ids"], dtype=np.int64) for r in rows]),
+        np.vstack(
+            [
+                np.frombuffer(r["payload"], dtype=r["dt"]).reshape(r["n"], r["width"])
+                for r in rows
+            ]
+        ),
     )
 
 
@@ -412,58 +381,25 @@ def packed_index_bytes(n: int, codec, dim: int) -> int:
     return n * (width + 8 + 12 * dim + 12)
 
 
-def artifact_serving_broadcast(
-    art,
-    spark,
-    threshold: int,
-    table: str = "assignment",
-):
+def artifact_serving_broadcast(art, spark, threshold: int):
     """Packed-index broadcast for an IVF-family artifact (flat, SQ8 or
     PQ payload), memoized under ``_serving_bc`` by
     ``transport.broadcast_cached``.  Returns None when the packed index
-    would exceed ``threshold`` — size is ESTIMATED from row count ×
-    payload width before any collect, so the driver never materializes
-    an over-threshold index."""
+    would exceed ``threshold`` — size is ESTIMATED from the blobs' row
+    count (``ivf.blob_stats``) × payload width before any collect, so
+    the driver never materializes an over-threshold index."""
+    from vectordb_retrieval_spark.operators.ivf import blob_stats
+
     codec = art.params.get("codec")
     cents = art.params["centroids"]
 
     def estimate() -> int:
         return packed_index_bytes(
-            art.tables[table].count(), codec, cents.shape[1]
+            int(blob_stats(art)[0].sum()), codec, cents.shape[1]
         )
 
     def pack(_threshold):
-        if (
-            art.tables.get("packed") is not None
-            or art.params.get("_packed_df") is not None
-        ):
-            from vectordb_retrieval_spark.functions.kernels import (
-                packed_assignment_cached,
-            )
-
-            packed = pack_clusters_from_packed(
-                packed_assignment_cached(art, table), cents, codec
-            )
-        else:
-            # fixed-centroid / derived artifacts carry no prebuilt blob
-            # table: collect the assignment rows directly — ONE action —
-            # instead of first materializing a packed blob DataFrame the
-            # broadcast immediately collects anyway (the lazy
-            # pack_assignment route costs a sizes aggregate + the pack
-            # shuffle + a cache count + the blob collect: four driver
-            # round-trips; r13 measured them as most of the fixed-
-            # centroid search wall at catalogue scale).  Bundle contents
-            # are identical (same dtypes, ascending cluster ids; within-
-            # cluster row order is irrelevant to results — distances are
-            # per-row and selection ties break on (dist, id)).  The
-            # over-threshold partitioned scan still packs lazily via
-            # packed_assignment_cached.
-            packed = pack_clusters(
-                art.tables[table],
-                "vec" if codec is None else "codes",
-                cents,
-                codec,
-            )
+        packed = pack_clusters_from_packed(art.tables["packed"], cents, codec)
         return packed, packed.nbytes(), None
 
     got = transport.broadcast_cached(

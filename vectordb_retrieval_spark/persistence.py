@@ -109,7 +109,14 @@ def save_artifact(
     tmp = tempfile.mkdtemp(prefix=".artifact-", dir=parent)
     try:
         part_cols: dict[str, list[str]] = artifact.metadata.get("partition_by", {})
-        for name, df in artifact.tables.items():
+        # an IVF-family artifact's row view is re-derived from its
+        # packed blobs at load: only the blobs are written
+        tables = {
+            name: df
+            for name, df in artifact.tables.items()
+            if name != "assignment" or "packed" not in artifact.tables
+        }
+        for name, df in tables.items():
             writer = df.write.mode("overwrite")
             # tables partitioned on disk keep their pruning column at
             # cluster scale (probe joins prune partitions at the scan)
@@ -120,7 +127,7 @@ def save_artifact(
         manifest = {
             "schema_version": SCHEMA_VERSION,
             "kind": artifact.kind,
-            "tables": sorted(artifact.tables),
+            "tables": sorted(tables),
             "param_kinds": kinds,
             "metadata": artifact.metadata,
             "fingerprint": fingerprint,
@@ -149,55 +156,47 @@ def artifact_size_bytes(path: str) -> int:
 
 
 def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    table: str,
-    ids_df,
-    id_col: str = "id",
-    part_col: str = "cluster_id",
+    spark: SparkSession, path: str, ids_df, id_col: str = "id"
 ) -> int:
-    """Apply a delete set to a PERSISTED partitioned table by rewriting
-    only the partitions that contain deleted ids — the compaction half
-    of the tombstone/compact trade ``ivf_delete`` documents.  Returns
-    the number of partitions rewritten (0 = nothing touched).
+    """Apply a delete set (``ids_df``'s ``id_col``) to a PERSISTED
+    IVF-family artifact's packed blob table by rewriting only the
+    ``cluster_id`` partitions that hold deleted ids — the compaction
+    half of the tombstone/compact trade ``ivf_delete`` documents.
+    Returns the number of partitions rewritten (0 = nothing touched).
 
-    Mechanics: one broadcast semi-join finds the affected partition
-    values; the survivors of those partitions are written to a sibling
-    temp directory, then each affected partition dir is swapped in with
-    an os.rename (untouched partitions keep their files byte-for-byte);
-    a partition whose every row is deleted is removed outright.  The
-    source directory is never read and written in the same job — a
-    failed write leaves the artifact untouched (round-8 advisor
-    finding: the previous in-place dynamic overwrite could recompute
-    from partially overwritten files on cache eviction).  Renames are
-    atomic on a single filesystem; at cluster scale a table format
+    Mechanics: the delete set is collected; one pass over the blobs'
+    ids (``ivf.clusters_holding``) finds the affected partitions, and
+    ``ivf.drop_ids`` (the blob filter ``ivf_delete`` runs) filters
+    their blobs into a sibling temp directory; then each affected
+    partition dir is swapped in with an os.rename (untouched
+    partitions keep their files byte-for-byte); a partition whose
+    every row is deleted is removed outright.  The source directory is
+    never read and written in the same job — a failed write leaves the
+    artifact untouched (an in-place overwrite could recompute from
+    partially overwritten files on cache eviction).  Renames are atomic
+    on a single filesystem; at cluster scale a table format
     (Iceberg/Delta) gives the same selective rewrite transactionally —
     this is the plain-Parquet form with the artifact's sentinel as the
     guard."""
     from pyspark.sql import functions as F
 
-    tdir = os.path.join(path, "tables", table)
+    from vectordb_retrieval_spark.operators.ivf import clusters_holding, drop_ids
+
+    part_col = "cluster_id"
+    tdir = os.path.join(path, "tables", "packed")
     if not os.path.exists(os.path.join(path, SENTINEL)):
         raise FileNotFoundError(f"{path}: not a complete artifact")
     df = spark.read.parquet(tdir)
     if part_col not in df.columns:
         raise ValueError(
-            f"{table} is not partitioned by {part_col!r}; "
+            f"packed is not partitioned by {part_col!r}; "
             "compaction needs the partitioned layout"
         )
-    dels = ids_df.select(F.col(id_col).alias(id_col)).distinct()
-    affected = [
-        r[part_col]
-        for r in df.join(F.broadcast(dels), id_col)
-        .select(part_col)
-        .distinct()
-        .collect()
-    ]
+    gone = ids_df.select(F.col(id_col)).toPandas()[id_col].to_numpy()
+    affected = clusters_holding(df, gone)
     if not affected:
         return 0
-    survivors = df.filter(F.col(part_col).isin(affected)).join(
-        F.broadcast(dels), id_col, "left_anti"
-    )
+    survivors = drop_ids(df.filter(F.col(part_col).isin(affected)), gone)
     tmp = tdir + ".compact-tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     try:
@@ -246,9 +245,14 @@ def load_artifact(
         for name in manifest["tables"]
     }
     params = _read_params(os.path.join(path, "params"), manifest["param_kinds"])
-    return IndexArtifact(
+    art = IndexArtifact(
         kind=manifest["kind"],
         tables=tables,
         params=params,
         metadata=manifest.get("metadata", {}),
     )
+    if art.kind == "ivf":
+        from vectordb_retrieval_spark.operators.ivf import loaded
+
+        art = loaded(art)
+    return art

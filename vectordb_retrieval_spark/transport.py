@@ -54,9 +54,9 @@ own rows):
   ``(token, sorted shard ids)``, the token keying the shard scan-state
   memo of this broadcast's blobs (``graph_ann._shard_state``).
 - ``_packed_shm`` — ``(root, metadata DataFrame)`` of the published
-  IVF-family packed blobs, or None when node-local publish is
-  unavailable or failed (not retried).  A swept root is republished
-  under a fresh root on next use.
+  IVF-family packed blobs (``kernels.packed_shm_cached``), or None when
+  node-local publish is unavailable or failed (not retried).  A swept
+  root is republished under a fresh root on next use.
 - ``_shm_shards`` — ``(root, sorted shard ids)`` of the published graph
   shard blobs; same rule.
 """
@@ -294,10 +294,11 @@ def published(art, key: str, spark, prefix: str, fill):
     """The artifact's node-local copy, memoized as ``art.params[key] =
     (root, payload)``: ``fill(root)`` publishes into a fresh entry and
     returns the payload.  A live root is touched; a swept one is
-    republished under a new root.  None — remembered — when node-local
-    publish is unavailable or failed: on the driver (``OSError``) or in
-    the executors, whose failed writes fail the publish job
-    (``PythonException``)."""
+    republished under a new root.  The entry is left to the ``TTL_S``
+    sweep: a lazy search result still reads it after ``art`` is gone.
+    None — remembered — when node-local publish is unavailable or
+    failed: on the driver (``OSError``) or in the executors, whose
+    failed writes fail the publish job (``PythonException``)."""
     got = art.params.get(key, ())
     if got is None or (got and touch(got[0])):
         return got
